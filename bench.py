@@ -75,7 +75,7 @@ HEADLINE = [
     "events_sessionize",    # gaps-and-islands sessions, single data shuffle
     "events_retention",     # cohort retention, repartition-reuse plan
     "dedup_span_ngram",     # positioned-gram inverted index + span merge
-    "scan_snapshot",        # MVCC as-of read across data/ + archive/
+    "scan_snapshot",        # MVCC as-of read of an older manifest's file list
     "stream_upsert_sink",   # multi-batch foreachBatch LWW merge into keyed table
     "mview_incremental",    # materialized view kept current by manifest-diff merge
     "sink_partitioned_prune",  # hive-partitioned write + directory-pruned agg

@@ -6,7 +6,7 @@ engine is MVCC — ``READ_AT_SNAPSHOT`` scans, diff scans (Kudu's
 incremental-backup primitive) and the ancient-history mark
 (``--tablet_history_max_age_sec``) are first-class Kudu capabilities the
 reference inherits.  The managed table layer reproduces them with
-per-mutation version manifests + a file archive
+per-mutation version manifests over immutable data files
 (:mod:`hivekudu_handler_spark.sources.table_store`); these keys drive the
 same golden scenario as the DDL/DML keys (``README.md:22-43``) through a
 mutation sequence and check the point-in-time results.
@@ -62,9 +62,9 @@ def _mutated_store(spark: SparkSession):
 )
 def scan_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """READ_AT_SNAPSHOT: the table exactly as of version 1, after later
-    upserts rewrote bucket files and a delete removed a row — the
-    displaced files are read from the archive, untouched ones from
-    ``data/``."""
+    upserts rewrote bucket files and a delete removed a row — a read
+    of version 1's manifest, whose replaced files stay in ``data/``
+    beside the current ones."""
     operate, cleanup = scan_snapshot_phases(spark, sf_dir)
     try:
         return operate()
@@ -428,8 +428,8 @@ def sql_timestamp_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sql_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``VACUUM t RETAIN 0 VERSIONS`` on the SQL surface: drops the
     three pre-current manifests (the statement reports 3), and the live
-    table remains byte-identical — the GC may only ever delete archive
-    files no retained manifest references."""
+    table remains byte-identical — the GC may only ever delete files
+    no retained manifest lists."""
     from hivekudu_handler_spark.sources.sql_ddl import execute
 
     store, d = _mutated_store(spark)
@@ -484,7 +484,7 @@ def sql_show_partitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def table_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ancient-history mark: vacuum to the current version only, then
     prove the live table is untouched (the GC may only ever delete
-    archive files no retained manifest references)."""
+    files no retained manifest lists)."""
     store, d = _mutated_store(spark)
     try:
         store.vacuum("snap", keep_last=0)
@@ -694,7 +694,7 @@ def mview_incremental_phases(spark: SparkSession, sf_dir: str):
 
 def scan_snapshot_phases(spark: SparkSession, sf_dir: str):
     """Bench phase-split for ``scan_snapshot``: ``operate()`` is the
-    as-of-version read alone (archive + data file resolution and scan);
+    as-of-version read alone (manifest file-list read and scan);
     the mutation-history scaffold is built here, untimed."""
     store, d = _mutated_store(spark)
 
@@ -730,8 +730,8 @@ def mview_recover(spark: SparkSession, sf_dir: str) -> DataFrame:
     lands in the view (a wrong row for one group — standing in for any
     torn half-applied delta).  The next REBUILD must (a) see the
     marker, (b) roll the view back to the recorded pre-merge snapshot
-    via ``insert_overwrite`` + ``scan_snapshot`` — exercising the
-    displaced-file archive path — and (c) re-apply the whole delta,
+    via ``insert_overwrite`` + ``scan_snapshot`` — reading files the
+    current version no longer lists — and (c) re-apply the whole delta,
     yielding the exact recomputed aggregate.  If recovery is broken the
     poison row survives (or deltas double-apply) and the oracle hash
     mismatches."""

@@ -1011,9 +1011,9 @@ def dedup_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "other_in_batch",
             )
         )
-        # materialize BEFORE the upsert: the pair plan reads the store's
-        # pre-upsert file listing, which the upsert's bucket rewrite
-        # archives out from under a lazy plan
+        # materialize BEFORE the upsert: the pair plan is bound to the
+        # pre-upsert version's files, which stop being current with the
+        # upsert and are deleted by the next vacuum
         result = _materialize(spark, pairs)
         # the store stays complete: next batch sees this one's signatures
         store.upsert("sig_store", batch_sigs)

@@ -35,45 +35,54 @@ Spark analogue of Kudu's tablets (``HiveKuduTableInputFormat.java:
   sorted on the range key within each directory so Parquet row-group
   min/max stats prune further inside it.
 
-Either way every mutation touches only the directories its keys land in:
+Either way every mutation touches only the tablets its keys land in:
 
-* INSERT appends new files to affected buckets (existing files are never
+* INSERT adds new files to affected buckets (existing files are never
   rewritten; dup-key checks anti-join only the affected buckets' rows via
   partition pruning).
-* UPSERT/DELETE rewrite only the affected bucket directories; untouched
-  buckets stay byte-identical — O(batch + affected buckets) I/O instead of
-  O(table) write amplification per mutation.
-* INSERT OVERWRITE is the one whole-table op by definition (tmp + swap).
+* UPSERT/DELETE rewrite only the affected tablets; untouched tablets keep
+  their files — O(batch + affected buckets) I/O instead of O(table) write
+  amplification per mutation.
+* INSERT OVERWRITE is the one whole-table op by definition.
 
 On a cluster the same code paths run unchanged; per-bucket file lists and
 bucket ids (bounded by the bucket count, never by data volume) are the
 only driver-side state.
 
-**MVCC snapshots** (Kudu's ``READ_AT_SNAPSHOT`` scan mode — the scanner
-the reference builds at ``HiveKuduTableInputFormat.java:449-517`` reads
-through exactly this Kudu MVCC layer): every mutation commits a numbered
-version manifest (``versions/v<N>.json``, the full data-file listing at
-that version), and files displaced by a rewrite move to ``archive/``
-*keeping their data-relative path* instead of being deleted (Parquet part
-file names embed a task UUID, so relative paths are unique across the
-table's lifetime and never collide in the archive).  ``scan(..,
-as_of=N)`` resolves manifest ``N``'s listing against ``data/`` then
-``archive/`` and reads exactly those files — a consistent point-in-time
-snapshot regardless of later upserts/deletes/compactions.  ``diff()`` is
-Kudu's *diff scan* (key-level changes between two snapshots, the
-incremental-backup primitive); ``vacuum()`` is Kudu's ancient-history
-mark (``--tablet_history_max_age_sec``): drop manifests older than the
-last *K* and GC archive files no kept manifest references.  Manifests
-are O(files), written once per mutation — no per-row versioning cost,
-and current-state scans don't consult the version log at all.
+**Storage vs metadata** (Kudu's ``READ_AT_SNAPSHOT`` scan mode — the
+scanner the reference builds at ``HiveKuduTableInputFormat.java:449-517``
+reads through exactly this Kudu MVCC layer).  Data files live under ONE
+root, ``data/``, and never move or change once committed; the numbered
+version manifests (``versions/v<N>.json``, each the full data-relative
+file list of its version) alone decide what a reader sees.  A write
+stages its Spark output in a directory private to that writer, moves
+the new part files into ``data/`` once (part names embed a per-write
+UUID, so they never collide), and commits ``v<base+1>`` = the base
+manifest's files, minus those of the tablets it replaces, plus the ones
+it added.  The manifest is created exclusively, so of two writers from
+the same base exactly one commits and the other gets
+:class:`CommitConflict`; a writer that dies before its commit leaves
+only unlisted files.  Every read — current state, as-of, diff,
+changefeed, bloom sidecar — is a read of one manifest's file list with
+``basePath=data/`` (:meth:`TableStore._read_files`), so a reader sees
+exactly one committed version.  ``diff()`` is Kudu's *diff scan*
+(key-level changes between two snapshots, the incremental-backup
+primitive); ``vacuum()`` is Kudu's ancient-history mark
+(``--tablet_history_max_age_sec``): drop manifests older than the last
+*K* and delete the files in ``data/`` that no kept manifest lists.
+Manifests are O(files), written once per mutation — no per-row
+versioning cost.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import re
 import shutil
 import time
+import uuid
+from collections import Counter
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -97,6 +106,11 @@ class TableExistsError(TableStoreError):
 
 class NoSuchTableError(TableStoreError):
     pass
+
+
+class CommitConflict(TableStoreError):
+    """Another writer committed the version after this write's base
+    first; nothing of this write is visible (re-run it)."""
 
 
 @dataclass
@@ -364,7 +378,7 @@ class TableStore:
             self._dir(name).mkdir(parents=True, exist_ok=True)
             self._data_dir(name).mkdir(parents=True, exist_ok=True)
             self._meta_path(name).write_text(meta.to_json())
-            self._commit_version(meta, "create")
+            self._commit_version(meta, None, "create", [])
         except Exception:
             # rollback mirrors KuduStorageHandler.java:313-330
             shutil.rmtree(self._dir(name), ignore_errors=True)
@@ -856,19 +870,8 @@ class TableStore:
     def _versions_dir(self, name: str) -> Path:
         return self._dir(name) / "versions"
 
-    def _archive_dir(self, name: str) -> Path:
-        return self._dir(name) / "archive"
-
     def _manifest_path(self, name: str, version: int) -> Path:
         return self._versions_dir(name) / f"v{version:08d}.json"
-
-    def _list_data_files(self, name: str) -> list[str]:
-        """Current data files as paths relative to ``data/`` (the
-        identity that survives archival)."""
-        data = self._data_dir(name)
-        return sorted(
-            str(p.relative_to(data)) for p in data.rglob("*.parquet")
-        )
 
     def _version_numbers(self, name: str) -> list[int]:
         vdir = self._versions_dir(name)
@@ -892,20 +895,23 @@ class TableStore:
             )
         return versions[-1]
 
-    def _commit_version(self, meta: TableMeta, op: str) -> int:
-        """Record the post-mutation state as the next version manifest.
+    def _head(self, name: str) -> tuple[int, list[str]]:
+        """(latest version, its file list): what a current-state read
+        reads and what a writer builds on as its base."""
+        version = self.current_version(name)
+        return version, self._read_manifest(self._norm_name(name), version)["files"]
 
-        O(files in table) driver-side listing, once per mutation batch —
-        the same cost class as the bucket-id collection the write itself
-        already does; never O(rows)."""
-        # any data mutation stale-marks the ANALYZE profile by dropping
-        # it (Hive's stale-stats rule; a stale n_rows would silently skew
-        # join_with_stats' broadcast choice).  Compaction and rebucketing
-        # rewrite files but not rows, so the profile survives both.
-        if op not in ("create", "compact", "rebucket"):
-            self._stats_path(meta.name).unlink(missing_ok=True)
-        versions = self._version_numbers(meta.name)
-        nxt = (versions[-1] + 1) if versions else 0
+    def _commit_version(
+        self, meta: TableMeta, base: int | None, op: str, files: list[str]
+    ) -> int:
+        """Commit ``files`` (data-relative paths) as version ``base + 1``
+        (0 for a new table) and return it.
+
+        The manifest is created exclusively from a temp name private to
+        this writer, so it can never overwrite another commit: a writer
+        whose base already has a successor gets :class:`CommitConflict`,
+        and the files it staged stay unlisted until :meth:`vacuum`."""
+        nxt = 0 if base is None else base + 1
         # commit wall-clock (epoch seconds): what TIMESTAMP AS OF
         # resolves against — Kudu's scans are themselves
         # timestamp-addressed (READ_AT_SNAPSHOT at a HybridTime).
@@ -918,21 +924,30 @@ class TableStore:
         # file-manifest log the clamp is the whole fix (r17 advice,
         # shipped r19).
         ts = time.time()
-        if versions:
-            prev_ts = self._read_manifest(meta.name, versions[-1]).get("ts")
+        if base is not None:
+            prev_ts = self._read_manifest(meta.name, base).get("ts")
             if prev_ts is not None:
                 ts = max(ts, float(prev_ts))
-        manifest = {
-            "version": nxt,
-            "op": op,
-            "ts": ts,
-            "files": self._list_data_files(meta.name),
-        }
+        manifest = {"version": nxt, "op": op, "ts": ts, "files": sorted(files)}
         vdir = self._versions_dir(meta.name)
         vdir.mkdir(parents=True, exist_ok=True)
-        tmp = vdir / f".v{nxt:08d}.json.tmp"
+        tmp = vdir / f".v{nxt:08d}.{uuid.uuid4().hex}.tmp"
         tmp.write_text(json.dumps(manifest))
-        tmp.rename(self._manifest_path(meta.name, nxt))
+        try:
+            os.link(tmp, self._manifest_path(meta.name, nxt))
+        except FileExistsError:
+            raise CommitConflict(
+                f"{meta.name!r}: version {nxt} was committed by another "
+                f"writer while this {op} was based on v{base}"
+            ) from None
+        finally:
+            tmp.unlink()
+        # any data mutation stale-marks the ANALYZE profile by dropping
+        # it (Hive's stale-stats rule; a stale n_rows would silently skew
+        # join_with_stats' broadcast choice).  Compaction and rebucketing
+        # rewrite files but not rows, so the profile survives both.
+        if op not in ("create", "compact", "rebucket"):
+            self._stats_path(meta.name).unlink(missing_ok=True)
         return nxt
 
     def _read_manifest(self, name: str, version: int) -> dict:
@@ -946,31 +961,6 @@ class TableStore:
                 )
             raise TableStoreError(f"no such version of {name!r}: {version}")
         return json.loads(p.read_text())
-
-    def _archive_displaced(self, meta: TableMeta, root: Path) -> None:
-        """Move every parquet file under ``root`` into the archive,
-        keeping its path relative to ``root`` (= its original
-        data-relative path), then drop the emptied tree.  This is the ONLY
-        way files leave ``data/`` short of DROP/vacuum — deletion is
-        deferred to :meth:`vacuum` so older manifests stay readable."""
-        arch = self._archive_dir(meta.name)
-        for p in sorted(root.rglob("*")):
-            if not p.is_file():
-                continue
-            if p.suffix == ".parquet":
-                dest = arch / p.relative_to(root)
-                dest.parent.mkdir(parents=True, exist_ok=True)
-                if dest.exists():
-                    # parquet part names embed a task UUID; a collision
-                    # means the uniqueness invariant broke — fail loudly
-                    # rather than silently overwrite a snapshot's bytes.
-                    raise TableStoreError(
-                        f"archive collision for {dest} (corrupt version log?)"
-                    )
-                p.rename(dest)
-            else:
-                p.unlink()  # _SUCCESS / .crc markers carry no data
-        shutil.rmtree(root, ignore_errors=True)
 
     def history(self, name: str) -> DataFrame:
         """The table's committed version log as (version, op, n_files) —
@@ -992,58 +982,6 @@ class TableStore:
             rows, "version int, op string, n_files int"
         )
 
-    def _snapshot_df(
-        self,
-        meta: TableMeta,
-        version: int,
-        rels: list[str] | None = None,
-    ) -> DataFrame:
-        """Read the exact file set of manifest ``version`` (resolving each
-        data-relative path against ``data/`` first, ``archive/`` second)
-        as a DataFrame of the logical columns.  ``rels`` restricts the
-        read to a subset of the manifest's files (diff pruning)."""
-        manifest = self._read_manifest(meta.name, version)
-        data = self._data_dir(meta.name)
-        arch = self._archive_dir(meta.name)
-        # data.displaced is the in-flight staging dir of _replace_buckets:
-        # a crash between displacing and archiving leaves files there —
-        # still valid snapshot bytes, resolved third so crash recovery
-        # (mview rollback) can read the pre-merge snapshot (r6 advice)
-        disp = self._dir(meta.name) / "data.displaced"
-        by_root: dict[Path, list[str]] = {data: [], arch: [], disp: []}
-        wanted = manifest["files"] if rels is None else rels
-        for rel in wanted:
-            live, archived, displaced = data / rel, arch / rel, disp / rel
-            if live.exists():
-                by_root[data].append(str(live))
-            elif archived.exists():
-                by_root[arch].append(str(archived))
-            elif displaced.exists():
-                by_root[disp].append(str(displaced))
-            else:
-                raise TableStoreError(
-                    f"file {rel} of {meta.name!r}@v{version} is gone "
-                    "(vacuumed past this snapshot?)"
-                )
-        parts = []
-        # one read per root so `basePath` makes partition-dir parsing
-        # (kb=/kr=/partition_by columns) work identically in both trees
-        for root, files in by_root.items():
-            if files:
-                parts.append(
-                    self.spark.read.schema(self._read_schema(meta))
-                    .option("basePath", str(root))
-                    .parquet(*files)
-                )
-        if not parts:
-            return self._to_logical(
-                self.spark.createDataFrame([], self._read_schema(meta)), meta
-            )
-        df = parts[0]
-        for other in parts[1:]:
-            df = df.unionByName(other)
-        return self._to_logical(df, meta)
-
     def scan_snapshot(
         self,
         name: str,
@@ -1056,15 +994,15 @@ class TableStore:
         stack rides on).  Projection and predicate push into the Parquet
         reads like a current-state scan.
 
-        File paths are resolved (data/ vs archive/) at CONSTRUCTION
-        time: execute or re-derive the DataFrame after any further
-        mutation of the table, don't hold it across mutations."""
+        The read is manifest ``version``'s file list — the same read a
+        current-state :meth:`scan` makes of the latest version.  The
+        files stay valid until :meth:`vacuum` drops the version."""
         meta = self.table_meta(name)
         if meta.external:
             raise TableStoreError("external tables have no snapshots")
-        df = self._snapshot_df(meta, version).select(
-            *[f.name for f in meta.schema.fields]
-        )
+        df = self._read_files(
+            meta, self._read_manifest(meta.name, version)["files"]
+        ).select(*[f.name for f in meta.schema.fields])
         if predicate is not None:
             df = df.filter(
                 F.expr(predicate) if isinstance(predicate, str) else predicate
@@ -1114,16 +1052,12 @@ class TableStore:
         # columns are nullable, so presence on each side is tracked with an
         # explicit pre-join marker literal.
         old_m = (
-            self._snapshot_df(
-                meta, from_version, [f for f in a_files if f not in common]
-            )
+            self._read_files(meta, [f for f in a_files if f not in common])
             .select(*logical)
             .withColumn("_o", F.lit(1))
         )
         new_m = (
-            self._snapshot_df(
-                meta, to_version, [f for f in b_files if f not in common]
-            )
+            self._read_files(meta, [f for f in b_files if f not in common])
             .select(*logical)
             .withColumn("_n", F.lit(1))
         )
@@ -1320,8 +1254,12 @@ class TableStore:
     def vacuum(self, name: str, keep_last: int = 1) -> dict:
         """Kudu's ancient-history mark: retain only the last ``keep_last``
         versions *before* the current one (current is always kept), drop
-        older manifests, and delete archive files no retained manifest
-        references.  Returns ``{"dropped_versions": [...],
+        older manifests, and delete the files in ``data/`` that no
+        retained manifest lists — replaced files, and the orphans of
+        writes that lost a :class:`CommitConflict` or died before their
+        commit.  A write in flight has its files in ``data/`` unlisted
+        between their move and its commit, so run vacuum with no writer
+        in that window.  Returns ``{"dropped_versions": [...],
         "deleted_files": N}``."""
         meta = self.table_meta(name)
         if meta.external:
@@ -1348,21 +1286,12 @@ class TableStore:
             referenced.update(self._read_manifest(meta.name, v)["files"])
         for v in dropped:
             self._manifest_path(meta.name, v).unlink()
-        arch = self._archive_dir(meta.name)
+        data = self._data_dir(meta.name)
         deleted = 0
-        if arch.exists():
-            for p in sorted(arch.rglob("*.parquet")):
-                if str(p.relative_to(arch)) not in referenced:
-                    p.unlink()
-                    deleted += 1
-            # prune emptied directories bottom-up
-            for d in sorted(
-                (d for d in arch.rglob("*") if d.is_dir()), reverse=True
-            ):
-                try:
-                    d.rmdir()
-                except OSError:
-                    pass
+        for p in sorted(data.rglob("*.parquet")):
+            if str(p.relative_to(data)) not in referenced:
+                p.unlink()
+                deleted += 1
         return {"dropped_versions": dropped, "deleted_files": deleted}
 
     # ------------------------------------------------- tablets (hash/range)
@@ -1531,23 +1460,23 @@ class TableStore:
             df = df.withColumnRenamed(lg, ph)
         return df
 
-    def _has_data(self, meta: TableMeta) -> bool:
-        return any(self._data_dir(meta.name).rglob("*.parquet"))
+    def _read_files(self, meta: TableMeta, rels: list[str]) -> DataFrame:
+        """The one read path: exactly the data-relative files ``rels``
+        (a manifest's list, or part of one) as the logical columns plus
+        the layout's partition columns.  With ``basePath=data/``
+        partition discovery fills ``kb``/``kr`` from each file's path, so
+        a filter on them lands in PartitionFilters and skips every other
+        tablet's files unopened."""
+        schema = self._read_schema(meta)
+        if not rels:
+            return self._to_logical(self.spark.createDataFrame([], schema), meta)
+        data = self._data_dir(meta.name)
+        reader = self.spark.read.schema(schema).option("basePath", str(data))
+        return self._to_logical(reader.parquet(*[str(data / r) for r in rels]), meta)
 
     def _scan_raw(self, meta: TableMeta) -> DataFrame:
-        """Scan a managed table INCLUDING the bucket column (partition
-        discovery fills ``kb`` from the directory names, so a filter on it
-        prunes whole bucket directories from the scan)."""
-        if not self._has_data(meta):
-            return self._to_logical(
-                self.spark.createDataFrame([], self._read_schema(meta)), meta
-            )
-        return self._to_logical(
-            self.spark.read.schema(self._read_schema(meta)).parquet(
-                str(self._data_dir(meta.name))
-            ),
-            meta,
-        )
+        """The latest version INCLUDING the partition columns."""
+        return self._read_files(meta, self._head(meta.name)[1])
 
     # ------------------------------------------------------------------ reads
     def scan(
@@ -1556,8 +1485,9 @@ class TableStore:
         columns: list[str] | None = None,
         predicate: Column | str | None = None,
     ) -> DataFrame:
-        """Scan with projection/predicate; Catalyst pushes both into the
-        Parquet scan (the reference transported these to its scanner at
+        """Scan of the latest committed version with projection/predicate;
+        Catalyst pushes both into the Parquet scan (the reference
+        transported these to its scanner at
         ``HiveKuduTableInputFormat.java:303-323,465-469``)."""
         meta = self.table_meta(name)
         if meta.external:
@@ -2225,12 +2155,7 @@ class TableStore:
 
         if not rel_files:
             return self.spark.createDataFrame([], "file string, bits array<int>")
-        phys = meta.phys_name(col)
-        dtype = next(f.dataType for f in meta.schema.fields if f.name == col)
         data = self._data_dir(meta.name)
-        df = self.spark.read.schema(
-            T.StructType([T.StructField(phys, dtype, True)])
-        ).parquet(*[str(data / f) for f in rel_files])
         # file identity = path relative to data/ (matches the manifests
         # and survives URI-scheme differences in _metadata.file_path)
         rel = F.regexp_replace(
@@ -2238,9 +2163,9 @@ class TableStore:
             "^.*?" + re.escape(str(data.resolve())) + "/",
             "",
         )
-        exploded = df.select(
+        exploded = self._read_files(meta, rel_files).select(
             rel.alias("file"),
-            F.explode(F.array(*probe_positions(F.col(phys)))).alias("pos"),
+            F.explode(F.array(*probe_positions(F.col(col)))).alias("pos"),
         )
         return exploded.groupBy("file").agg(
             F.sort_array(F.collect_set("pos")).alias("bits")
@@ -2351,18 +2276,8 @@ class TableStore:
         )
 
     def _read_bloom_candidates(self, meta: TableMeta, files: list[str]) -> DataFrame:
-        """Read exactly ``files`` with the physical schema, mapped back
-        to logical columns."""
-        data = self._data_dir(meta.name)
-        raw = self.spark.read.schema(
-            T.StructType(
-                [
-                    T.StructField(meta.phys_name(f.name), f.dataType, f.nullable)
-                    for f in meta.schema.fields
-                ]
-            )
-        ).parquet(*[str(data / f) for f in files])
-        return self._to_logical(raw, meta).select(
+        """Read exactly ``files`` as the logical columns."""
+        return self._read_files(meta, files).select(
             *[f.name for f in meta.schema.fields]
         )
 
@@ -2556,44 +2471,49 @@ class TableStore:
         parts = pcs + (meta.partition_by or [])
         out.write.mode(mode).partitionBy(*parts).parquet(str(path))
 
-    def _replace_buckets(
-        self, meta: TableMeta, bucket_ids: list[tuple], df: DataFrame
-    ) -> None:
-        """Rewrite ONLY the given tablet directories with ``df`` (which
-        must contain exactly the surviving rows of those tablets).  Every
-        other tablet's files are never read, written, or moved.  For a
-        composite layout the tablet is a kr=/kb= leaf directory; its
-        parent range directory is created when renaming into a range that
-        previously held no data."""
-        tmp = self._dir(meta.name) / "data.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._write_partitioned(meta, df, tmp, "overwrite")
+    def _stage(self, meta: TableMeta, df: DataFrame) -> list[str]:
+        """Write ``df`` in ``meta``'s layout to a staging directory private
+        to this writer, then move its part files into ``data/`` under the
+        same relative paths — the one move a data file ever makes (part
+        names embed a per-write UUID, so they never collide).  Returns
+        those data-relative paths; empty when ``df`` has no rows (empty
+        partitions write no part files)."""
+        stage = self._dir(meta.name) / "staging" / uuid.uuid4().hex
+        self._write_partitioned(meta, df, stage, "overwrite")
         data = self._data_dir(meta.name)
-        pcs = self._part_cols(meta)
-        arch_stage = self._dir(meta.name) / "data.displaced"
-        if arch_stage.exists():
-            # a previous run crashed between displacing and archiving:
-            # these files are the ONLY copy of their snapshot's bytes
-            # (already renamed out of data/, not yet in archive/) — an
-            # rmtree here would destroy them; finish the archival instead
-            # (r6 advice: recovery found 'file ... is gone')
-            self._archive_displaced(meta, arch_stage)
-        for tup in bucket_ids:
-            sub = Path(*[f"{c}={v}" for c, v in zip(pcs, tup)])
-            old = data / sub
-            new = tmp / sub
-            if old.exists():
-                # displaced files go to the archive (keeping their
-                # data-relative path) so older manifests stay readable
-                stage = arch_stage / sub
-                stage.parent.mkdir(parents=True, exist_ok=True)
-                old.rename(stage)
-            if new.exists():
-                old.parent.mkdir(parents=True, exist_ok=True)
-                new.rename(old)
-        if arch_stage.exists():
-            self._archive_displaced(meta, arch_stage)
-        shutil.rmtree(tmp, ignore_errors=True)
+        added = []
+        for p in sorted(stage.rglob("*.parquet")):
+            rel = p.relative_to(stage)
+            (data / rel).parent.mkdir(parents=True, exist_ok=True)
+            p.rename(data / rel)
+            added.append(str(rel))
+        shutil.rmtree(stage, ignore_errors=True)
+        return added
+
+    def _tablet_of(self, meta: TableMeta, rel: str) -> tuple:
+        """Tablet id of a data-relative file (its leading ``kr=``/``kb=``
+        path segments), as a tuple matching :meth:`_part_cols`."""
+        parts = Path(rel).parts[: len(self._part_cols(meta))]
+        return tuple(int(p.split("=", 1)[1]) for p in parts)
+
+    def _replace_buckets(
+        self,
+        meta: TableMeta,
+        base: int,
+        files: list[str],
+        bucket_ids: list[tuple],
+        df: DataFrame,
+        op: str,
+    ) -> None:
+        """Commit ``df`` (exactly the surviving rows of the tablets
+        ``bucket_ids``) as those tablets' new contents: version
+        ``base + 1`` lists base's ``files`` minus those tablets' files
+        plus the staged ones.  Every other tablet's files carry over
+        unread and unwritten."""
+        added = self._stage(meta, df)
+        replaced = {tuple(t) for t in bucket_ids}
+        kept = [f for f in files if self._tablet_of(meta, f) not in replaced]
+        self._commit_version(meta, base, op, kept + added)
 
     def insert(self, name: str, df: DataFrame) -> None:
         """INSERT with silent duplicate-key ignore
@@ -2603,21 +2523,19 @@ class TableStore:
         reads only the buckets the batch hashes into (partition pruning on
         ``kb``), and no existing file is ever rewritten."""
         meta = self._writable_meta(name)
-        if not self._has_data(meta):
+        base, files = self._head(meta.name)
+        if not files:
             # empty-table fast path (r21): with no existing rows the
             # anti-join is dead plan AND the bucket-id collect has no
             # pruning consumer — its only remaining use was the
             # empty-batch guard.  Write in ONE action (no persist:
             # nothing reads the batch twice), then commit only if the
             # write landed files — an empty batch writes no part files
-            # (dynamic partitioning skips empty partitions) and must not
-            # commit a version, exactly like the old early return.
+            # and must not commit a version.
             batch = self._dedup_batch(meta, self._validate_batch(meta, df))
-            self._write_partitioned(
-                meta, batch, self._data_dir(meta.name), "append"
-            )
-            if self._has_data(meta):
-                self._commit_version(meta, "insert")
+            added = self._stage(meta, batch)
+            if added:
+                self._commit_version(meta, base, "insert", added)
             return
         # persist the deduped batch: it feeds two actions (the bucket-id
         # collect and the write), and unpersisted the dedup window (and
@@ -2629,7 +2547,7 @@ class TableStore:
             if not affected:
                 return
             existing_keys = (
-                self._scan_raw(meta)
+                self._read_files(meta, files)
                 .filter(self._part_filter(meta, affected))
                 .select(*meta.key_columns)
             )
@@ -2639,10 +2557,8 @@ class TableStore:
             fresh = batch.join(
                 existing_keys, on=meta.key_columns, how="left_anti"
             )
-            self._write_partitioned(
-                meta, fresh, self._data_dir(meta.name), "append"
-            )
-            self._commit_version(meta, "insert")
+            added = self._stage(meta, fresh)
+            self._commit_version(meta, base, "insert", files + added)
         finally:
             batch.unpersist()
 
@@ -2670,6 +2586,7 @@ class TableStore:
         existing rows only.  Partition exprs derive from key columns, so
         key-only delete frames prune to their buckets like any batch."""
         meta = self._writable_meta(name)
+        base, files = self._head(meta.name)
         # persist: the deduped batch feeds three plan branches (bucket-id
         # collect, the anti-join key set, the rewritten-bucket union) —
         # unpersisted, the dedup window and the caller's upstream plan
@@ -2691,7 +2608,7 @@ class TableStore:
             if not affected:
                 return
             existing = (
-                self._scan_raw(meta)
+                self._read_files(meta, files)
                 .filter(self._part_filter(meta, affected))
                 .drop(*self._part_cols(meta))
             )
@@ -2699,38 +2616,22 @@ class TableStore:
             if drop is not None:
                 gone = gone.unionByName(drop)
             kept = existing.join(gone, on=meta.key_columns, how="left_anti")
-            self._replace_buckets(meta, affected, kept.unionByName(batch))
-            self._commit_version(meta, "upsert")
+            self._replace_buckets(
+                meta, base, files, affected, kept.unionByName(batch), "upsert"
+            )
         finally:
             batch.unpersist()
             if drop is not None:
                 drop.unpersist()
 
     def truncate(self, name: str) -> int:
-        """TRUNCATE TABLE: archive every data file and commit ONE new
-        version — even when the table is already empty (the committed
-        version IS the contract: callers may time-travel across the
-        truncate and rely on the version advancing).  O(files) metadata
-        work, no data read."""
+        """TRUNCATE TABLE: commit ONE new version listing no files — even
+        when the table is already empty (the committed version IS the
+        contract: callers may time-travel across the truncate and rely on
+        the version advancing).  A manifest write; no file is read, moved
+        or deleted (older versions keep theirs until :meth:`vacuum`)."""
         meta = self._writable_meta(name)
-        data = self._data_dir(meta.name)
-        arch = self._archive_dir(meta.name)
-        for f in sorted(data.rglob("*.parquet")):
-            dest = arch / f.relative_to(data)
-            dest.parent.mkdir(parents=True, exist_ok=True)
-            if dest.exists():
-                raise TableStoreError(
-                    f"archive collision for {dest} (corrupt version log?)"
-                )
-            f.rename(dest)
-        for sub in sorted(data.glob("*")):
-            # emptied tablet dirs (and their marker files) go with the
-            # data — partition discovery must not see ghost directories
-            if sub.is_dir():
-                shutil.rmtree(sub, ignore_errors=True)
-            else:
-                sub.unlink(missing_ok=True)
-        return self._commit_version(meta, "truncate")
+        return self._commit_version(meta, self._head(meta.name)[0], "truncate", [])
 
     def delete_where(self, name: str, predicate: Column | str) -> None:
         """DELETE (reference goal ``doc/DesignDocument.md:9,46-48``).
@@ -2740,11 +2641,12 @@ class TableStore:
         (``~pred`` alone would drop them).  Only buckets that contain at
         least one matching row are rewritten."""
         meta = self._writable_meta(name)
+        base, files = self._head(meta.name)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         # alias the (logical-named) scan with the table name so ANSI
         # correlated subqueries — EXISTS (SELECT .. WHERE other.k = t.k)
         # — resolve their outer references
-        raw = self._scan_raw(meta).alias(meta.name)
+        raw = self._read_files(meta, files).alias(meta.name)
         affected = [
             tuple(r)
             for r in raw.filter(F.coalesce(pred, F.lit(False)))
@@ -2759,8 +2661,7 @@ class TableStore:
             .filter(~F.coalesce(pred, F.lit(False)))
             .drop(*self._part_cols(meta))
         )
-        self._replace_buckets(meta, affected, remaining)
-        self._commit_version(meta, "delete")
+        self._replace_buckets(meta, base, files, affected, remaining, "delete")
 
     def compact(self, name: str, max_files_per_bucket: int = 8) -> list[int]:
         """Rewrite buckets whose file count exceeds the threshold into one
@@ -2770,26 +2671,18 @@ class TableStore:
         crowded buckets are rewritten (same bucket-scoped I/O bound as
         upsert/delete); returns the compacted bucket ids."""
         meta = self._writable_meta(name)
-        data = self._data_dir(name)
+        base, files = self._head(meta.name)
         pcs = self._part_cols(meta)
-        leaf_glob = "/".join(f"{c}=*" for c in pcs)
-        crowded = []
-        for bdir in data.glob(leaf_glob):
-            n_files = sum(1 for _ in bdir.rglob("*.parquet"))
-            if n_files > max_files_per_bucket:
-                parts = bdir.relative_to(data).parts
-                crowded.append(
-                    tuple(int(p.split("=", 1)[1]) for p in parts)
-                )
+        per_tablet = Counter(self._tablet_of(meta, f) for f in files)
+        crowded = [t for t, n in per_tablet.items() if n > max_files_per_bucket]
         if not crowded:
             return []
         rows = (
-            self._scan_raw(meta)
+            self._read_files(meta, files)
             .filter(self._part_filter(meta, crowded))
             .drop(*pcs)
         )
-        self._replace_buckets(meta, crowded, rows)
-        self._commit_version(meta, "compact")
+        self._replace_buckets(meta, base, files, crowded, rows, "compact")
         # single-level layouts keep the scalar-id public contract
         if len(pcs) == 1:
             return sorted(t[0] for t in crowded)
@@ -2805,14 +2698,13 @@ class TableStore:
         difference between a weekend migration and one command.
 
         By definition the one full-rewrite layout operation (every row
-        changes tablet), built on the insert_overwrite machinery: new
-        layout lands in a tmp dir first, the data-dir swap is a rename,
-        displaced files are archived so PRIOR snapshots keep reading
-        their own (old-layout) manifests.  The meta write follows the
-        swap; the sub-second window between them is the same one
-        insert_overwrite already carries (documented in SCALE.md "Known
-        harness-vs-cluster deltas" — a real deployment fronts both with
-        a catalog-service CAS).  Range-partitioned tables evolve their
+        changes tablet): the new layout's files are staged like any
+        write and committed as a version listing only them, so PRIOR
+        snapshots keep reading their own (old-layout) files.  The commit
+        and the meta write (the new bucket count) are two steps: a crash
+        between them leaves the sub-second window documented in SCALE.md
+        "Known harness-vs-cluster deltas" (a real deployment fronts both
+        with a catalog-service CAS).  Range-partitioned tables evolve their
         in-range bucket count via ``hash_in_range`` instead."""
         meta = self._writable_meta(name)
         if meta.range_splits:
@@ -2824,7 +2716,7 @@ class TableStore:
             raise TableStoreError(
                 f"new_buckets must be a positive int, got {new_buckets!r}"
             )
-        rows = self.scan(name)  # logical rows, no partition cols
+        base, files = self._head(meta.name)
         new_meta = TableMeta(
             meta.name,
             meta.schema,
@@ -2837,45 +2729,27 @@ class TableStore:
             physical=meta.physical,
             used_physical=meta.used_physical,
         )
-        tmp = self._dir(meta.name) / "data.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
         # write the NEW layout (bucket exprs come from new_meta)
-        self._write_partitioned(
-            new_meta, self._to_logical_batch(meta, rows), tmp, "overwrite"
+        rows = self._read_files(meta, files).select(
+            *[f.name for f in meta.schema.fields]
         )
-        old = self._data_dir(meta.name)
-        bak = self._dir(meta.name) / "data.bak"
-        if old.exists():
-            old.rename(bak)
-        tmp.rename(old)
-        if bak.exists():
-            self._archive_displaced(new_meta, bak)
+        added = self._stage(new_meta, rows)
+        # commit first: a CommitConflict leaves the meta untouched
+        self._commit_version(new_meta, base, "rebucket", added)
         self._write_meta(new_meta)
-        self._commit_version(new_meta, "rebucket")
         return new_meta
-
-    def _to_logical_batch(self, meta: TableMeta, df: DataFrame) -> DataFrame:
-        """A scan result as a writable batch (logical column order)."""
-        return df.select(*[f.name for f in meta.schema.fields])
 
     def insert_overwrite(self, name: str, df: DataFrame) -> None:
         """INSERT OVERWRITE (Hive staple): replace table contents with the
         batch (dup keys within the batch collapse deterministically, like
-        insert).  The one whole-table mutation by definition: write to a
-        tmp dir, swap, drop the old."""
+        insert).  The one whole-table mutation by definition: the batch
+        is staged like any write and committed as a version listing only
+        its files."""
         meta = self._writable_meta(name)
+        base = self._head(meta.name)[0]
         batch = self._dedup_batch(meta, self._validate_batch(meta, df))
-        tmp = self._dir(meta.name) / "data.tmp"
-        shutil.rmtree(tmp, ignore_errors=True)
-        self._write_partitioned(meta, batch, tmp, "overwrite")
-        old = self._data_dir(meta.name)
-        bak = self._dir(meta.name) / "data.bak"
-        if old.exists():
-            old.rename(bak)
-        tmp.rename(old)
-        if bak.exists():
-            self._archive_displaced(meta, bak)
-        self._commit_version(meta, "insert_overwrite")
+        added = self._stage(meta, batch)
+        self._commit_version(meta, base, "insert_overwrite", added)
 
 
 def _segment_runs(
@@ -2964,7 +2838,7 @@ def _changefeed_batched(
     parts = []
     for (a, b), rels in sorted(groups.items()):
         parts.append(
-            store._snapshot_df(meta, b, rels)
+            store._read_files(meta, rels)
             .select(*logical)
             .withColumn("_first_v", F.lit(a).cast("int"))
             .withColumn("_last_v", F.lit(b).cast("int"))

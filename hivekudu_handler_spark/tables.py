@@ -11,6 +11,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hivekudu_handler_spark.session import (
+    _DEFAULT_CONF,
+    EXCLUDED_RULES,
+    merge_excluded_rules,
+)
+
 TABLE_NAMES: tuple[str, ...] = (
     "region",
     "nation",
@@ -58,17 +64,14 @@ def ensure_session_confs(spark: SparkSession) -> None:
     # session too.  APPEND to the session's list rather than SET (r21
     # ADVICE): the conf is one comma-separated list, and overwriting it
     # clobbered any exclusions the embedding application configured.
-    rule = "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     try:
-        current = spark.conf.get("spark.sql.optimizer.excludedRules", None)
+        current = spark.conf.get(EXCLUDED_RULES, None)
     except Exception:  # pragma: no cover - conf locked by host
         current = None
-    rules = [r.strip() for r in (current or "").split(",") if r.strip()]
-    if rule not in rules:
+    merged = merge_excluded_rules(current, _DEFAULT_CONF[EXCLUDED_RULES])
+    if merged != current:
         try:
-            spark.conf.set(
-                "spark.sql.optimizer.excludedRules", ",".join(rules + [rule])
-            )
+            spark.conf.set(EXCLUDED_RULES, merged)
         except Exception:  # pragma: no cover - conf locked by host
             pass
 

@@ -37,27 +37,20 @@ def test_excluded_rules_appended_not_clobbered(spark):
 
 
 def test_get_spark_merges_caller_excluded_rules():
-    from hivekudu_handler_spark.session import _DEFAULT_CONF, get_spark
+    # get_spark and ensure_session_confs both merge through this helper;
+    # a fresh session per test is too slow, and the merge is pure code
+    from hivekudu_handler_spark.session import (
+        _DEFAULT_CONF,
+        merge_excluded_rules,
+    )
 
-    # get_spark returns the existing session (getOrCreate), but the conf
-    # merge happens before the builder call — exercise the merge logic by
-    # inspecting what the builder would receive via the module helper.
-    # (A fresh session per test is too slow; the merge is pure code.)
-    import hivekudu_handler_spark.session as sess
-
-    merged = dict(_DEFAULT_CONF)
-    extra = {_EXCL: "my.app.Rule"}
-    # replicate get_spark's merge branch
-    merged.update(extra)
-    k = _EXCL
-    combined = [
-        r.strip()
-        for r in f"{_DEFAULT_CONF[k]},{extra[k]}".split(",")
-        if r.strip()
-    ]
-    merged[k] = ",".join(dict.fromkeys(combined))
-    assert _RULE in merged[k] and "my.app.Rule" in merged[k]
-    assert sess  # imported for coverage of the module path
+    merged = merge_excluded_rules(_DEFAULT_CONF[_EXCL], "my.app.Rule")
+    assert merged.split(",") == [_RULE, "my.app.Rule"]
+    # the caller's own copy of the engine rule is not duplicated, blanks
+    # and a missing list drop out
+    assert merge_excluded_rules(_RULE, f" {_RULE} ,, my.app.Rule", None) == (
+        f"{_RULE},my.app.Rule"
+    )
 
 
 def test_pin_registry_releases_previous_generation(spark):

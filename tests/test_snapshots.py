@@ -76,14 +76,20 @@ def test_snapshot_predicate_and_projection(spark, store):
         store.scan_snapshot("t", v1, columns=["nope"])
 
 
-def test_displaced_files_actually_move_to_archive(spark, store, tmp_path):
+def _files(store, version):
+    return set(store._read_manifest("t", version)["files"])
+
+
+def test_replaced_files_stay_on_disk_listed_by_old_manifest(spark, store, tmp_path):
     meta = _mk(store, spark)
+    v1 = store.current_version("t")
     store.upsert("t", spark.createDataFrame([(1, "one")], meta.schema))
-    arch = tmp_path / "wh" / "t" / "archive"
-    archived = list(arch.rglob("*.parquet"))
-    assert archived, "upsert displaced no files into the archive"
-    # archived files keep their data-relative bucket path
-    assert any(p.parent.name.startswith("kb=") for p in archived)
+    replaced = _files(store, v1) - _files(store, v1 + 1)
+    assert replaced, "upsert replaced no files"
+    # replaced files keep their data-relative bucket path, on disk
+    assert all(p.startswith("kb=") for p in replaced)
+    data = tmp_path / "wh" / "t" / "data"
+    assert all((data / p).is_file() for p in replaced)
 
 
 def test_insert_overwrite_snapshot(spark, store):
@@ -137,12 +143,13 @@ def test_vacuum_gc_and_retention(spark, store, tmp_path):
     assert res["dropped_versions"] == [0, v1]
     with pytest.raises(TableStoreError, match="vacuumed"):
         store.scan_snapshot("t", v1).count()
-    # v2 must still resolve every file (archive keeps referenced ones)
+    # v2 must still resolve every file (vacuum keeps listed ones)
     assert (1, "one") in _rows(store.scan_snapshot("t", v2))
-    # a second vacuum down to current-only deletes the rest of the archive
+    # a second vacuum down to current-only deletes every other file
     store.vacuum("t", keep_last=0)
-    arch = tmp_path / "wh" / "t" / "archive"
-    assert not list(arch.rglob("*.parquet"))
+    table = tmp_path / "wh" / "t"
+    on_disk = {str(p.relative_to(table / "data")) for p in table.rglob("*.parquet")}
+    assert on_disk == _files(store, store.current_version("t"))
     assert (2, "two") in _rows(store.scan("t"))
 
 
@@ -177,8 +184,8 @@ def test_diff_reads_only_changed_tablets(spark, store, tmp_path):
     assert a & b, "expected untouched buckets to share files"
     d = store.diff("t", v1, v2)
     read = {f.split("/t/")[-1] for f in d.inputFiles()}
-    # normalize: inputFiles are absolute under data/ or archive/
-    read = {p.split("data/")[-1].split("archive/")[-1] for p in read}
+    # normalize: inputFiles are absolute under data/
+    read = {p.split("data/")[-1] for p in read}
     assert read == sym, (read, sym)
     got = {(r["id"], r["change_type"]) for r in d.collect()}
     assert got == {(1, "update")}
@@ -198,9 +205,9 @@ def test_diff_include_old_columns(spark, store):
 
 
 def test_snapshot_on_hive_partitioned_layout(spark, store):
-    """partition_by adds hive-style dirs under the bucket dirs; archived
-    files keep the full nested relative path, so as-of reads recover the
-    partition column from both trees."""
+    """partition_by adds hive-style dirs under the bucket dirs; manifests
+    list the full nested relative path, so as-of reads recover the
+    partition column from replaced files too."""
     store.create_table(
         "t", "id int, lang string, v string", ["id"], partition_by=["lang"]
     )
@@ -217,11 +224,11 @@ def test_snapshot_on_hive_partitioned_layout(spark, store):
     assert d == {1: "delete", 3: "delete"}
 
 
-def test_insert_append_never_archives(spark, store, tmp_path):
+def test_insert_append_manifest_is_superset(spark, store):
     _mk(store, spark)
+    v1 = store.current_version("t")
     store.insert_values("t", [(50, "fifty")])
-    arch = tmp_path / "wh" / "t" / "archive"
-    assert not list(arch.rglob("*.parquet")), "append must not displace files"
+    assert _files(store, v1) < _files(store, v1 + 1), "append must not replace files"
 
 
 # ---- changefeed (CDC read: Kudu diff scans, Delta-CDF row shape) ----------
@@ -332,7 +339,7 @@ def test_changefeed_reads_only_changed_tablets(spark, store):
     assert a & b, "expected untouched buckets to share files"
     feed = store.changefeed("t", v1, v2)
     read = {f.split("/t/")[-1] for f in feed.inputFiles()}
-    read = {p.split("data/")[-1].split("archive/")[-1] for p in read}
+    read = {p.split("data/")[-1] for p in read}
     assert read == sym, (read, sym)
 
 

@@ -162,11 +162,13 @@ def test_schema_mismatch_rejected(spark, store):
         store.insert("t", spark.createDataFrame([(1,)], "id int"))
 
 
-def _file_snapshot(root):
-    """{relative path: bytes} of every parquet file under root."""
+def _live_files(store, name):
+    """{data-relative path: bytes} of every file the table's current
+    version lists."""
+    data = store._data_dir(name)
     return {
-        str(p.relative_to(root)): p.read_bytes()
-        for p in root.rglob("*.parquet")
+        rel: (data / rel).read_bytes()
+        for rel in store._head(name)[1]
     }
 
 
@@ -184,11 +186,10 @@ def test_insert_is_append_only(spark, store, tmp_path):
     files to the buckets the batch hashes into (VERDICT r1 #4)."""
     store.create_table("t", "id int, name string", ["id"])
     store.insert_values("t", [(i, f"n{i}") for i in range(1, 9)])
-    data = store._data_dir("t")
-    before = _file_snapshot(data)
+    before = _live_files(store, "t")
     assert before
     store.insert_values("t", [(100, "new")])
-    after = _file_snapshot(data)
+    after = _live_files(store, "t")
     for path, blob in before.items():
         assert after[path] == blob, f"pre-existing file rewritten: {path}"
     assert len(after) > len(before)  # the new row landed in a new file
@@ -197,14 +198,13 @@ def test_insert_is_append_only(spark, store, tmp_path):
 def test_upsert_rewrites_only_affected_buckets(spark, store):
     store.create_table("t", "id int, name string", ["id"])
     store.insert_values("t", [(i, f"n{i}") for i in range(1, 9)])
-    data = store._data_dir("t")
-    before = _file_snapshot(data)
+    before = _live_files(store, "t")
     target = 3
     tb = _bucket_of(spark, [target])[target]
     store.upsert(
         "t", spark.createDataFrame([(target, "UP")], "id int, name string")
     )
-    after = _file_snapshot(data)
+    after = _live_files(store, "t")
     for path, blob in before.items():
         if not path.startswith(f"kb={tb}/"):
             assert path in after and after[path] == blob, (
@@ -224,12 +224,11 @@ def test_delete_rewrites_only_affected_buckets_and_keeps_null_rows(spark, store)
             [(1, "a"), (2, None), (3, "b"), (4, "a")], "id int, name string"
         ),
     )
-    data = store._data_dir("t")
-    before = _file_snapshot(data)
+    before = _live_files(store, "t")
     buckets = _bucket_of(spark, [1, 2, 3, 4])
     hit = {buckets[1], buckets[4]}
     store.delete_where("t", "name = 'a'")
-    after = _file_snapshot(data)
+    after = _live_files(store, "t")
     for path, blob in before.items():
         if not any(path.startswith(f"kb={b}/") for b in hit):
             assert path in after and after[path] == blob
@@ -263,12 +262,11 @@ def test_compact_merges_crowded_buckets_only(spark, store):
     store.create_table("t", "id int, name string", ["id"])
     for i in range(12):
         store.insert_values("t", [(i, f"n{i}")])
-    data = store._data_dir("t")
     before_rows = {(r["id"], r["name"]) for r in store.scan("t").collect()}
-    before_files = _file_snapshot(data)
+    before_files = _live_files(store, "t")
     compacted = store.compact("t", max_files_per_bucket=2)
     assert compacted  # 12 single-row inserts over 4 buckets must crowd some
-    after_files = _file_snapshot(data)
+    after_files = _live_files(store, "t")
     for path, blob in before_files.items():
         if not any(path.startswith(f"kb={b}/") for b in compacted):
             assert path in after_files and after_files[path] == blob
@@ -406,13 +404,9 @@ def test_range_layout_mutations_rewrite_only_affected_ranges(spark, store):
             [(i, f"v{i}") for i in range(30)], "k int, v string"
         ),
     )
-    data = store._data_dir("m")
-
     def files(b):
-        return sorted(
-            (p.name, p.stat().st_mtime_ns)
-            for p in (data / f"kr={b}").rglob("*.parquet")
-        )
+        live = _live_files(store, "m")
+        return sorted((p, live[p]) for p in live if p.startswith(f"kr={b}/"))
 
     before = {b: files(b) for b in (0, 1, 2)}
     store.upsert(
@@ -508,10 +502,7 @@ def test_composite_hash_in_range_layout(spark, store):
     assert [r["v"] for r in df.collect()] == ["v150"]
     # upsert rewrites only the hot leaf; the other five stay byte-identical
     def snap():
-        return {
-            str(p.relative_to(data)): p.stat().st_mtime_ns
-            for p in data.rglob("*.parquet")
-        }
+        return _live_files(store, "c")
 
     before = snap()
     store.upsert(
@@ -1298,8 +1289,7 @@ def test_sql_merge_rewrites_only_touched_buckets(spark, store):
         "INSERT INTO big VALUES "
         + ", ".join(f"({i}, 'n{i}')" for i in ids),
     )
-    data = store._data_dir("big")
-    before = _file_snapshot(data)
+    before = _live_files(store, "big")
     buckets = _bucket_of(spark, ids + [99])
     hit = {buckets[1], buckets[2], buckets[99]}  # update, delete, insert
     execute(
@@ -1311,7 +1301,7 @@ def test_sql_merge_rewrites_only_touched_buckets(spark, store):
         "WHEN MATCHED THEN UPDATE SET name = s.name "
         "WHEN NOT MATCHED THEN INSERT *",
     )
-    after = _file_snapshot(data)
+    after = _live_files(store, "big")
     untouched = 0
     for path, blob in before.items():
         if not any(path.startswith(f"kb={b}/") for b in hit):
@@ -1869,37 +1859,128 @@ def test_create_view_validates_sql_at_create_time(spark, store):
     assert run_sql(store, "SELECT count(*) AS n FROM good").collect()[0]["n"] == 1
 
 
-def test_displaced_staging_survives_crash_and_recovers(spark, store):
-    """r6 advice (low): a crash inside _replace_buckets between
-    displacing and archiving leaves files in data.displaced/ — prior
-    snapshots must still read them, and the next rewrite must ARCHIVE
-    the leftovers (an rmtree would destroy the only copy)."""
+def _unlisted_files(store, name):
+    """Files in data/ that no retained manifest lists."""
+    data = store._data_dir(name)
+    listed = set()
+    for v in store._version_numbers(name):
+        listed |= set(store._read_manifest(name, v)["files"])
+    return {str(p.relative_to(data)) for p in data.rglob("*.parquet")} - listed
+
+
+def test_commit_crash_leaves_last_version_readable(spark, store, monkeypatch):
+    """A writer that dies after its staged files reach data/ but before
+    its manifest commits leaves the table at its last commit — for an
+    append (insert) and a bucket rewrite (upsert) alike: scan,
+    current_version and the older snapshot are unchanged, and vacuum
+    deletes the orphaned files."""
     store.create_table("t", "id int, x int", ["id"])
     store.insert_values("t", [(i, i * 10) for i in range(1, 9)])
-    v0 = store.current_version("t")
-    before = {(r["id"], r["x"]) for r in store.scan_snapshot("t", v0).collect()}
+    v_old = store.current_version("t")
+    old = {(r["id"], r["x"]) for r in store.scan("t").collect()}
+    store.upsert("t", spark.createDataFrame([(2, 7)], "id int, x int"))
+    v_cur = store.current_version("t")
+    cur = {(r["id"], r["x"]) for r in store.scan("t").collect()}
 
-    # simulate the crash window: displace one bucket dir by hand
-    data = store._data_dir("t")
-    bucket = sorted(p for p in data.glob("kb=*") if any(p.rglob("*.parquet")))[0]
-    stage = store._dir("t") / "data.displaced" / bucket.name
-    stage.parent.mkdir(parents=True, exist_ok=True)
-    bucket.rename(stage)
+    def crash(*args):
+        raise OSError("simulated crash before the manifest commit")
 
-    # snapshot reads resolve the stranded files (third root)
-    assert {
-        (r["id"], r["x"]) for r in store.scan_snapshot("t", v0).collect()
-    } == before
+    monkeypatch.setattr(store, "_commit_version", crash)
+    with pytest.raises(OSError, match="simulated crash"):
+        store.insert_values("t", [(100, 1000)])
+    n_after_insert = len(_unlisted_files(store, "t"))
+    assert n_after_insert > 0, "the insert's staged files never reached data/"
+    with pytest.raises(OSError, match="simulated crash"):
+        store.upsert("t", spark.createDataFrame([(1, 999)], "id int, x int"))
+    orphans = _unlisted_files(store, "t")
+    assert len(orphans) > n_after_insert, "the upsert's files never reached data/"
+    monkeypatch.undo()
 
-    # the next bucket rewrite finishes the stranded archival first
-    store.upsert("t", spark.createDataFrame([(1, 999)], "id int, x int"))
-    assert not (store._dir("t") / "data.displaced").exists()
-    arch = store._archive_dir("t")
-    assert any(arch.rglob("*.parquet")), "stranded files must reach archive/"
-    # and the old snapshot STILL reads (files archived, not deleted)
-    assert {
-        (r["id"], r["x"]) for r in store.scan_snapshot("t", v0).collect()
-    } == before
+    def unchanged():
+        assert store.current_version("t") == v_cur
+        assert {(r["id"], r["x"]) for r in store.scan("t").collect()} == cur
+        got = {(r["id"], r["x"]) for r in store.scan_snapshot("t", v_old).collect()}
+        assert got == old
+
+    unchanged()
+    assert store.vacuum("t", keep_last=1)["deleted_files"] == len(orphans)
+    assert not _unlisted_files(store, "t")
+    unchanged()
+
+
+def test_concurrent_upserts_from_one_base_conflict(spark, store, monkeypatch):
+    """Two upserts based on the same version: exactly one commits, the
+    other gets CommitConflict instead of overwriting its manifest; the
+    winner's rows are current and vacuum deletes the loser's files."""
+    import threading
+
+    from hivekudu_handler_spark.sources.table_store import CommitConflict
+
+    store.create_table("t", "id int, x int", ["id"])
+    store.insert_values("t", [(i, 0) for i in range(1, 9)])
+    base = store.current_version("t")
+    commit = store._commit_version
+    both_staged = threading.Barrier(2, timeout=120)
+
+    def commit_when_both_staged(*args):
+        both_staged.wait()
+        return commit(*args)
+
+    monkeypatch.setattr(store, "_commit_version", commit_when_both_staged)
+    outcome = {}
+
+    def writer(x):
+        try:
+            store.upsert(
+                "t", spark.createDataFrame([(1, x), (2, x)], "id int, x int")
+            )
+            outcome[x] = "committed"
+        except CommitConflict:
+            outcome[x] = "conflict"
+
+    threads = [threading.Thread(target=writer, args=(x,)) for x in (1, 2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    monkeypatch.undo()
+
+    assert sorted(outcome.values()) == ["committed", "conflict"], outcome
+    winner = next(x for x, o in outcome.items() if o == "committed")
+    assert store.current_version("t") == base + 1
+    want = {(1, winner), (2, winner)} | {(i, 0) for i in range(3, 9)}
+    assert {(r["id"], r["x"]) for r in store.scan("t").collect()} == want
+    loser_files = _unlisted_files(store, "t")
+    assert loser_files
+    assert store.vacuum("t")["deleted_files"] == len(loser_files)
+    assert not _unlisted_files(store, "t")
+    assert {(r["id"], r["x"]) for r in store.scan("t").collect()} == want
+
+
+def test_building_a_read_starts_no_spark_job(spark, store):
+    """A version's file list past 32 paths would be listed by a Spark
+    job; the session's parallelPartitionDiscovery threshold keeps the
+    listing on the driver, so building scan() and scan_snapshot() runs
+    nothing."""
+    store.create_table("t", "id int, x int", ["id"])
+    for i in range(40):
+        store.insert_values("t", [(i, i)])
+    v = store.current_version("t")
+    assert len(store._read_manifest("t", v)["files"]) > 32
+    sc = spark.sparkContext
+    group = "table-store-read-build"
+    sc.setJobGroup(group, "build table-store reads")
+    try:
+        current = store.scan("t")
+        snap = store.scan_snapshot("t", v)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == [], jobs
+    want = {(i, i) for i in range(40)}
+    assert {(r["id"], r["x"]) for r in current.collect()} == want
+    assert {(r["id"], r["x"]) for r in snap.collect()} == want
 
 
 def test_rebucket_preserves_analyze_stats(spark, store):
@@ -2136,10 +2217,9 @@ def test_rebucket_preserves_rows_pruning_and_history(spark, store):
     store.rebucket("t", 8)
     # identical logical contents under the new layout
     assert {(r["id"], r["name"]) for r in store.scan("t").collect()} == before
-    data = store._data_dir("t")
     # buckets materialize only when a row hashes into them; all ids must
     # lie under the NEW count and spread past the old 4-bucket range
-    buckets = {int(p.name.split("=")[1]) for p in data.glob("kb=*")}
+    buckets = {int(p.split("/")[0].split("=")[1]) for p in _live_files(store, "t")}
     assert buckets <= set(range(8)) and max(buckets) >= 4, buckets
     # point lookups prune against the NEW bucket count
     assert [r["name"] for r in store.lookup("t", {"id": 7}).collect()] == ["n7"]
@@ -2148,7 +2228,7 @@ def test_rebucket_preserves_rows_pruning_and_history(spark, store):
     assert [
         r["name"] for r in store.lookup("t", {"id": 100}).collect()
     ] == ["new"]
-    # prior snapshots keep reading their own (old-layout) archived files
+    # prior snapshots keep reading their own (old-layout) files
     old_snap = {
         (r["id"], r["name"])
         for r in store.scan_snapshot("t", v_before).collect()
