@@ -18,34 +18,44 @@ on an already-cleared frame is a no-op).
 
 If a caller still holds a previous generation's DataFrame, releasing its
 pin is safe: Spark recomputes the un-cached plan — slower, never wrong.
+
+One lock guards the registry: release → persist → store is atomic per
+call, so two threads pinning under one tag cannot both miss the earlier
+pin and leave the overwritten frame persisted with no handle.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 _PINNED: dict[str, DataFrame] = {}
+_LOCK = threading.RLock()
 
 
 def pin(tag: str, df: DataFrame) -> DataFrame:
     """Persist ``df`` under ``tag``, releasing the tag's previous pin."""
-    release(tag)
-    df.persist()
-    _PINNED[tag] = df
+    with _LOCK:
+        release(tag)
+        df.persist()
+        _PINNED[tag] = df
     return df
 
 
 def release(tag: str) -> None:
     """Unpersist and forget the frame pinned under ``tag`` (no-op if none)."""
-    old = _PINNED.pop(tag, None)
-    if old is not None:
-        try:
-            old.unpersist()
-        except Exception:  # pragma: no cover - session already stopped
-            pass
+    with _LOCK:
+        old = _PINNED.pop(tag, None)
+        if old is not None:
+            try:
+                old.unpersist()
+            except Exception:  # pragma: no cover - session already stopped
+                pass
 
 
 def release_all() -> None:
     """Drain every registered pin — the long-lived-session escape hatch."""
-    for tag in list(_PINNED):
-        release(tag)
+    with _LOCK:
+        for tag in list(_PINNED):
+            release(tag)

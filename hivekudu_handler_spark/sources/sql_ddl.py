@@ -1131,9 +1131,10 @@ def _run_guarded(write) -> None:
     with the USER_RAISED_EXCEPTION error condition) — an unrelated
     failure whose text merely embeds a marker string (e.g. a codegen
     dump quoting the guard literal) propagates untouched (r17 review).
-    Guards fire at the write's FIRST action (the affected-buckets
-    collect), so a violation leaves the table untouched — no file
-    written, no version committed."""
+    Guards fire at the write's FIRST action (the tablet probe; for an
+    insert into an empty table, the staged write), so a violation
+    leaves the table untouched — no file in ``data/``, no version
+    committed."""
     try:
         write()
     except SqlDdlError:
@@ -1308,8 +1309,8 @@ def _merge(store: TableStore, stmt: str) -> None:
     upsert execution as a per-target-key windowed claim count guarding
     the key columns of every matched clause frame (``F.raise_error``),
     so no separate probe action runs and a violation aborts at the
-    upsert's first action (the affected-buckets probe) — before any
-    file is written or committed.  A NOT MATCHED INSERT whose key
+    upsert's first action (the tablet probe) — before any file is
+    staged or committed.  A NOT MATCHED INSERT whose key
     expression evaluates to NULL raises the same way (ANSI constraint
     violation) instead of being silently dropped by batch validation
     (r16 advice).  Execution is fully relational and single-commit: matched
@@ -1526,7 +1527,7 @@ def _merge(store: TableStore, stmt: str) -> None:
     # hash-partitioned on the key, so typically sort-only), and a
     # raise_error guard on the key columns of every matched clause frame
     # fires inside the ONE upsert execution — at its first action, the
-    # affected-buckets collect, before any file is written or committed.
+    # tablet probe, before any file is staged or committed.
     if saw_matched:
         if any(
             c.lower() == "__merge_claims" for c in (*tcols, *src.columns)

@@ -14,7 +14,7 @@ Semantics replicated from the reference (with file:line cites):
   :mod:`hivekudu_handler_spark.typesys`.
 * INSERT silently ignores duplicate keys — Kudu session configured with
   ``setIgnoreAllDuplicateRows(true)`` (``HiveKuduTableOutputFormat.java:101``).
-  Here: batch-internal dedup on key + anti-join against existing keys.
+  Here: existing keys and batch rows merged by key in the write's shuffle.
 * UPSERT/DELETE were declared goals of the reference, unimplemented
   (``HiveKuduTableOutputFormat.java:175-176``, ``doc/DesignDocument.md:9``);
   we implement them with PK merge semantics (SURVEY.md §7 M3).
@@ -35,11 +35,14 @@ Spark analogue of Kudu's tablets (``HiveKuduTableInputFormat.java:
   sorted on the range key within each directory so Parquet row-group
   min/max stats prune further inside it.
 
-Either way every mutation touches only the tablets its keys land in:
+Either way every mutation touches only the tablets its keys land in.
+A keyed write finds them with one tablet probe (an observation on a
+no-op write: one job, no shuffle) and stages one write whose tablet
+shuffle also merges rows by key (:meth:`TableStore._write_partitioned`):
 
 * INSERT adds new files to affected buckets (existing files are never
-  rewritten; dup-key checks anti-join only the affected buckets' rows via
-  partition pruning).
+  rewritten; the affected buckets' existing keys, read via partition
+  pruning, win the merge, so only fresh batch rows are written).
 * UPSERT/DELETE rewrite only the affected tablets; untouched tablets keep
   their files — O(batch + affected buckets) I/O instead of O(table) write
   amplification per mutation.
@@ -83,10 +86,10 @@ import shutil
 import time
 import uuid
 from collections import Counter
-from dataclasses import dataclass
+from dataclasses import dataclass, fields
 from pathlib import Path
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -98,6 +101,10 @@ class TableStoreError(RuntimeError):
 
 
 NOT_NULL_MSG_PREFIX = "NOT NULL constraint violated: column "
+
+# source rank of a write-merge row: of the rows sharing a key, the lowest
+# rank wins (see TableStore._write_partitioned)
+_SRC = "__src"
 
 
 class TableExistsError(TableStoreError):
@@ -149,42 +156,15 @@ class TableMeta:
     defaults: dict | None = None
 
     def to_json(self) -> str:
-        return json.dumps(
-            {
-                "name": self.name,
-                "schema": self.schema.jsonValue(),
-                "key_columns": self.key_columns,
-                "extended": self.extended,
-                "partition_by": self.partition_by,
-                "external": self.external,
-                "location": self.location,
-                "range_splits": self.range_splits,
-                "hash_in_range": self.hash_in_range,
-                "num_buckets": self.num_buckets,
-                "physical": self.physical,
-                "used_physical": self.used_physical,
-                "defaults": self.defaults,
-            }
-        )
+        # keys in field order, the schema as Spark's JSON form
+        d = {f.name: getattr(self, f.name) for f in fields(self)}
+        return json.dumps({**d, "schema": self.schema.jsonValue()})
 
     @staticmethod
     def from_json(s: str) -> "TableMeta":
-        d = json.loads(s)
-        return TableMeta(
-            name=d["name"],
-            schema=T.StructType.fromJson(d["schema"]),
-            key_columns=list(d["key_columns"]),
-            extended=bool(d.get("extended", False)),
-            partition_by=d.get("partition_by"),
-            external=bool(d.get("external", False)),
-            location=d.get("location"),
-            range_splits=d.get("range_splits"),
-            hash_in_range=d.get("hash_in_range"),
-            num_buckets=d.get("num_buckets"),
-            physical=d.get("physical"),
-            used_physical=d.get("used_physical"),
-            defaults=d.get("defaults"),
-        )
+        meta = TableMeta(**json.loads(s))
+        meta.schema = T.StructType.fromJson(meta.schema)
+        return meta
 
     def phys_name(self, logical: str) -> str:
         return (self.physical or {}).get(logical, logical)
@@ -902,7 +882,12 @@ class TableStore:
         return version, self._read_manifest(self._norm_name(name), version)["files"]
 
     def _commit_version(
-        self, meta: TableMeta, base: int | None, op: str, files: list[str]
+        self,
+        meta: TableMeta,
+        base: int | None,
+        op: str,
+        files: list[str],
+        rows_written: int = 0,
     ) -> int:
         """Commit ``files`` (data-relative paths) as version ``base + 1``
         (0 for a new table) and return it.
@@ -910,8 +895,11 @@ class TableStore:
         The manifest is created exclusively from a temp name private to
         this writer, so it can never overwrite another commit: a writer
         whose base already has a successor gets :class:`CommitConflict`,
-        and the files it staged stay unlisted until :meth:`vacuum`."""
+        and the files it staged stay unlisted until :meth:`vacuum`.  Its
+        ``metrics`` are the staged write's observed ``rows_written`` and
+        the files (and bytes) added and files removed against the base."""
         nxt = 0 if base is None else base + 1
+        prev = self._read_manifest(meta.name, base) if base is not None else {}
         # commit wall-clock (epoch seconds): what TIMESTAMP AS OF
         # resolves against — Kudu's scans are themselves
         # timestamp-addressed (READ_AT_SNAPSHOT at a HybridTime).
@@ -923,12 +911,16 @@ class TableStore:
         # the same problem with HybridTime's logical component; for a
         # file-manifest log the clamp is the whole fix (r17 advice,
         # shipped r19).
-        ts = time.time()
-        if base is not None:
-            prev_ts = self._read_manifest(meta.name, base).get("ts")
-            if prev_ts is not None:
-                ts = max(ts, float(prev_ts))
+        ts = max(time.time(), float(prev.get("ts") or 0.0))
+        old, new = set(prev.get("files", [])), set(files)
+        data = self._data_dir(meta.name)
         manifest = {"version": nxt, "op": op, "ts": ts, "files": sorted(files)}
+        manifest["metrics"] = {
+            "rows_written": rows_written,
+            "files_added": len(new - old),
+            "files_removed": len(old - new),
+            "bytes_added": sum((data / f).stat().st_size for f in new - old),
+        }
         vdir = self._versions_dir(meta.name)
         vdir.mkdir(parents=True, exist_ok=True)
         tmp = vdir / f".v{nxt:08d}.{uuid.uuid4().hex}.tmp"
@@ -2415,80 +2407,97 @@ class TableStore:
             )
         return df
 
-    def _dedup_batch(self, meta: TableMeta, df: DataFrame) -> DataFrame:
-        """One row per key within a batch, deterministically: the winner
-        is the smallest row under (non-key columns, nulls last).  A
-        distributed DataFrame has no row order, so "first write wins" must
-        be defined by values to be stable across runs and partitionings.
-        Map-typed columns are not orderable and are skipped as
-        tiebreakers; if no orderable non-key column exists the batch keeps
-        one arbitrary row per key (documented weakest case)."""
-        from pyspark.sql import Window
-
-        tiebreak = [
-            f.name
+    def _as_keys(self, meta: TableMeta, df: DataFrame, rank: int) -> DataFrame:
+        """``df``'s keys as write-merge rows of source ``rank``, every
+        non-key column NULL (see :meth:`_write_partitioned`)."""
+        keys = set(meta.key_columns)
+        cols = [
+            (F.col(f.name) if f.name in keys else F.lit(None))
+            .cast(f.dataType).alias(f.name)
             for f in meta.schema.fields
-            if f.name not in meta.key_columns
-            and not isinstance(f.dataType, T.MapType)
         ]
-        if not tiebreak:
-            return df.dropDuplicates(meta.key_columns)
-        w = Window.partitionBy(*meta.key_columns).orderBy(
-            *[F.col(c).asc_nulls_last() for c in tiebreak]
-        )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        return df.select(*cols, F.lit(rank).alias(_SRC))
 
-    def _affected_buckets(self, meta: TableMeta, batch: DataFrame) -> list[tuple]:
-        """Tablet ids a batch touches, as tuples matching
-        :meth:`_part_cols` — bounded by the tablet count, never by data
-        volume, so collecting it is safe."""
-        exprs = [
-            e.alias(c)
-            for c, e in zip(self._part_cols(meta), self._part_exprs(meta))
-        ]
-        return [tuple(r) for r in batch.select(*exprs).distinct().collect()]
+    def _affected_buckets(self, meta: TableMeta, df: DataFrame) -> list[tuple]:
+        """The tablet probe: tablet ids ``df``'s keys land in (tuples
+        matching :meth:`_part_cols`, bounded by the tablet count), as an
+        observation on a no-op write — one Spark job, no shuffle.  As the
+        first action on a persisted batch, it fires the batch's guards
+        before any file is staged."""
+        obs = Observation()
+        ids = F.collect_set(F.struct(*self._part_exprs(meta))).alias("ids")
+        df.observe(obs, ids).write.format("noop").mode("overwrite").save()
+        return sorted(tuple(r) for r in obs.get["ids"])
 
-    def _write_partitioned(self, meta: TableMeta, df: DataFrame, path: Path, mode: str) -> None:
+    def _write_partitioned(
+        self, meta: TableMeta, df: DataFrame, path: Path, keep: tuple | None
+    ) -> int:
+        """Write ``df`` in ``meta``'s layout under ``path``, one file per
+        tablet; return the rows written (observed on the write: no job).
+
+        With ``keep``, ``df`` carries the ``_SRC`` rank and rows merge by
+        key in the write's own tablet shuffle: per key the lowest rank
+        wins, then the smallest non-key tuple (nulls last; map columns
+        are not orderable and are skipped), and the winner is written if
+        its rank is in ``keep``.  The hash exchange on the tablet columns
+        already clusters the window's tablet + key columns."""
         pcs = self._part_cols(meta)
         out = df
         for c, e in zip(pcs, self._part_exprs(meta)):
             out = out.withColumn(c, e)
-        # files persist PHYSICAL column names (partition exprs above bind
-        # to the logical names the batch arrives with)
-        out = self._to_physical(out, meta)
         # one write task per tablet: each append adds one file per
         # affected tablet instead of num_tasks × num_tablets shards
         out = out.repartition(self._num_parts(meta), *[F.col(c) for c in pcs])
+        if keep is not None:
+            tiebreak = [
+                F.col(f.name).asc_nulls_last()
+                for f in meta.schema.fields
+                if f.name not in meta.key_columns
+                and not isinstance(f.dataType, T.MapType)
+            ]
+            w = Window.partitionBy(*pcs, *meta.key_columns).orderBy(
+                _SRC, *tiebreak
+            )
+            out = (
+                out.withColumn("__rn", F.row_number().over(w))
+                .filter((F.col("__rn") == 1) & F.col(_SRC).isin(*keep))
+                .drop("__rn", _SRC)
+            )
         if meta.range_splits:
             # ordered files inside each range directory: Parquet row-group
             # min/max stats on the range key become tight, so a pushed
             # range predicate skips row groups within the surviving dirs
             out = out.sortWithinPartitions(*pcs, meta.key_columns[0])
+        obs = Observation()
+        out = out.observe(obs, F.count(F.lit(1)).alias("rows"))
+        # files persist PHYSICAL column names (partition exprs above bind
+        # to the logical names the batch arrives with)
         parts = pcs + (meta.partition_by or [])
-        out.write.mode(mode).partitionBy(*parts).parquet(str(path))
+        self._to_physical(out, meta).write.partitionBy(*parts).parquet(str(path))
+        return obs.get["rows"]
 
-    def _stage(self, meta: TableMeta, df: DataFrame) -> list[str]:
-        """Write ``df`` in ``meta``'s layout to a staging directory private
-        to this writer, then move its part files into ``data/`` under the
+    def _stage(
+        self, meta: TableMeta, df: DataFrame, keep: tuple | None = None
+    ) -> tuple[list[str], int]:
+        """Write ``df`` (see :meth:`_write_partitioned`) to a staging
+        directory private to this writer, removed whether or not the
+        write succeeds, then move its part files into ``data/`` under the
         same relative paths — the one move a data file ever makes (part
-        names embed a per-write UUID, so they never collide).  Returns
-        those data-relative paths; empty when ``df`` has no rows (empty
-        partitions write no part files)."""
+        names embed a per-write UUID).  Returns those paths (none when no
+        row was written) and the row count."""
         stage = self._dir(meta.name) / "staging" / uuid.uuid4().hex
-        self._write_partitioned(meta, df, stage, "overwrite")
-        data = self._data_dir(meta.name)
-        added = []
-        for p in sorted(stage.rglob("*.parquet")):
-            rel = p.relative_to(stage)
-            (data / rel).parent.mkdir(parents=True, exist_ok=True)
-            p.rename(data / rel)
-            added.append(str(rel))
-        shutil.rmtree(stage, ignore_errors=True)
-        return added
+        try:
+            rows = self._write_partitioned(meta, df, stage, keep)
+            data = self._data_dir(meta.name)
+            added = []
+            for p in sorted(stage.rglob("*.parquet")):
+                rel = p.relative_to(stage)
+                (data / rel).parent.mkdir(parents=True, exist_ok=True)
+                p.rename(data / rel)
+                added.append(str(rel))
+        finally:
+            shutil.rmtree(stage, ignore_errors=True)
+        return added, rows
 
     def _tablet_of(self, meta: TableMeta, rel: str) -> tuple:
         """Tablet id of a data-relative file (its leading ``kr=``/``kb=``
@@ -2504,61 +2513,50 @@ class TableStore:
         bucket_ids: list[tuple],
         df: DataFrame,
         op: str,
+        keep: tuple | None = None,
     ) -> None:
-        """Commit ``df`` (exactly the surviving rows of the tablets
-        ``bucket_ids``) as those tablets' new contents: version
-        ``base + 1`` lists base's ``files`` minus those tablets' files
-        plus the staged ones.  Every other tablet's files carry over
-        unread and unwritten."""
-        added = self._stage(meta, df)
+        """Commit ``df`` (after the ``keep`` merge, exactly the surviving
+        rows of the tablets ``bucket_ids``) as those tablets' new
+        contents: version ``base + 1`` lists base's ``files`` minus those
+        tablets' files plus the staged ones.  Every other tablet's files
+        carry over unread and unwritten."""
+        added, rows = self._stage(meta, df, keep)
         replaced = {tuple(t) for t in bucket_ids}
         kept = [f for f in files if self._tablet_of(meta, f) not in replaced]
-        self._commit_version(meta, base, op, kept + added)
+        self._commit_version(meta, base, op, kept + added, rows)
 
     def insert(self, name: str, df: DataFrame) -> None:
         """INSERT with silent duplicate-key ignore
-        (``HiveKuduTableOutputFormat.java:101``): deterministic
-        first-write-wins within the batch (see ``_dedup_batch``), existing
-        rows win against the batch.  Pure append: the dup-key anti-join
-        reads only the buckets the batch hashes into (partition pruning on
-        ``kb``), and no existing file is ever rewritten."""
+        (``HiveKuduTableOutputFormat.java:101``): existing rows win, then
+        the batch's smallest non-key tuple (:meth:`_write_partitioned`).
+        Pure append: the existing keys of the tablets the batch lands in
+        (partition pruning on ``kb``/``kr``) merge with the batch in the
+        staged write, which writes only winning batch rows."""
         meta = self._writable_meta(name)
         base, files = self._head(meta.name)
+        # ranks: existing keys 0, batch 1 — only winning batch rows land
+        batch = self._validate_batch(meta, df).withColumn(_SRC, F.lit(1))
         if not files:
-            # empty-table fast path (r21): with no existing rows the
-            # anti-join is dead plan AND the bucket-id collect has no
-            # pruning consumer — its only remaining use was the
-            # empty-batch guard.  Write in ONE action (no persist:
-            # nothing reads the batch twice), then commit only if the
-            # write landed files — an empty batch writes no part files
-            # and must not commit a version.
-            batch = self._dedup_batch(meta, self._validate_batch(meta, df))
-            added = self._stage(meta, batch)
+            # empty table: no existing keys and no tablet probe — one
+            # write, committed only if it landed files (an empty batch
+            # writes none and must not commit a version)
+            added, rows = self._stage(meta, batch, (1,))
             if added:
-                self._commit_version(meta, base, "insert", added)
+                self._commit_version(meta, base, "insert", added, rows)
             return
-        # persist the deduped batch: it feeds two actions (the bucket-id
-        # collect and the write), and unpersisted the dedup window (and
-        # the caller's whole upstream plan) would execute twice (r21,
-        # guide §5 "reused and recomputing is more expensive")
-        batch = self._dedup_batch(meta, self._validate_batch(meta, df)).persist()
+        # persist: the batch feeds the tablet probe and the staged write,
+        # and unpersisted the caller's upstream plan would run twice
+        batch = batch.persist()
         try:
             affected = self._affected_buckets(meta, batch)
             if not affected:
                 return
-            existing_keys = (
-                self._read_files(meta, files)
-                .filter(self._part_filter(meta, affected))
-                .select(*meta.key_columns)
+            existing = self._read_files(meta, files).filter(
+                self._part_filter(meta, affected)
             )
-            # hint-free: AQE sizes the anti-join at runtime (the key
-            # set of a few buckets is usually broadcastable; at scale
-            # it may not be).
-            fresh = batch.join(
-                existing_keys, on=meta.key_columns, how="left_anti"
-            )
-            added = self._stage(meta, fresh)
-            self._commit_version(meta, base, "insert", files + added)
+            merged = batch.unionByName(self._as_keys(meta, existing, 0))
+            added, rows = self._stage(meta, merged, (1,))
+            self._commit_version(meta, base, "insert", files + added, rows)
         finally:
             batch.unpersist()
 
@@ -2573,51 +2571,46 @@ class TableStore:
         self, name: str, df: DataFrame, *, delete_keys: DataFrame | None = None
     ) -> None:
         """PK MERGE semantics (reference goal ``doc/DesignDocument.md:9``):
-        batch rows replace existing rows with the same key.  Only the
-        buckets the batch touches are read and rewritten.
+        batch rows replace existing rows with the same key, the smallest
+        non-key tuple winning inside the batch.  Only the tablets the
+        batch touches are read and rewritten.
 
         ``delete_keys`` (a DataFrame containing the key columns) folds a
-        keyed delete into the SAME bucket rewrite and version commit —
+        keyed delete into the SAME tablet rewrite and version commit —
         the mview refresh's upsert-changed-groups + delete-emptied-groups
-        pair becomes one commit instead of two (r7 verdict item 6; both
-        mutations mostly touch the same buckets, so two commits paid the
-        rewrite twice).  A key present in both the batch and
-        ``delete_keys`` is ASSERTED (batch wins): deletion applies to
-        existing rows only.  Partition exprs derive from key columns, so
-        key-only delete frames prune to their buckets like any batch."""
+        pair becomes one commit instead of two (r7 verdict item 6).  A
+        key present in both the batch and ``delete_keys`` is ASSERTED
+        (batch wins): deletion applies to existing rows only.
+
+        One tablet probe over batch ∪ delete keys, then one staged write
+        of those ∪ the affected tablets' rows, merged by key
+        (:meth:`_write_partitioned`) with ranks batch 0, delete 1 (a
+        winning delete drops the key), existing 2."""
         meta = self._writable_meta(name)
         base, files = self._head(meta.name)
-        # persist: the deduped batch feeds three plan branches (bucket-id
-        # collect, the anti-join key set, the rewritten-bucket union) —
-        # unpersisted, the dedup window and the caller's upstream plan
-        # would run once per branch (r21)
-        batch = self._dedup_batch(meta, self._validate_batch(meta, df)).persist()
+        # persist: the batch (and the delete keys) feed the tablet probe
+        # and the staged write.  The probe materializes them, so their
+        # guards (NOT NULL, MERGE cardinality) fire before any file is
+        # staged, and the caller's upstream plan runs once
+        batch = self._validate_batch(meta, df).withColumn(_SRC, F.lit(0)).persist()
         drop = None
         try:
-            # ONE bucket-id collect for batch ∪ delete keys (r21): the
-            # partition exprs derive from key columns only, so a key-only
-            # probe frame buckets identically to the full batch — the
-            # separate second collect over the delete keys was a whole
-            # extra Spark job per keyed-delete upsert (mview refresh,
-            # MERGE with DELETE clauses).
-            probe = batch.select(*meta.key_columns)
+            merged = batch
             if delete_keys is not None:
-                drop = delete_keys.select(*meta.key_columns).distinct().persist()
-                probe = probe.unionByName(drop)
-            affected = sorted(set(self._affected_buckets(meta, probe)))
+                drop = self._as_keys(meta, delete_keys, 1).persist()
+                merged = merged.unionByName(drop)
+            affected = self._affected_buckets(meta, merged)
             if not affected:
                 return
             existing = (
                 self._read_files(meta, files)
                 .filter(self._part_filter(meta, affected))
                 .drop(*self._part_cols(meta))
+                .withColumn(_SRC, F.lit(2))
             )
-            gone = batch.select(*meta.key_columns)
-            if drop is not None:
-                gone = gone.unionByName(drop)
-            kept = existing.join(gone, on=meta.key_columns, how="left_anti")
             self._replace_buckets(
-                meta, base, files, affected, kept.unionByName(batch), "upsert"
+                meta, base, files, affected, merged.unionByName(existing),
+                "upsert", (0, 2),
             )
         finally:
             batch.unpersist()
@@ -2647,13 +2640,9 @@ class TableStore:
         # correlated subqueries — EXISTS (SELECT .. WHERE other.k = t.k)
         # — resolve their outer references
         raw = self._read_files(meta, files).alias(meta.name)
-        affected = [
-            tuple(r)
-            for r in raw.filter(F.coalesce(pred, F.lit(False)))
-            .select(*self._part_cols(meta))
-            .distinct()
-            .collect()
-        ]
+        affected = self._affected_buckets(
+            meta, raw.filter(F.coalesce(pred, F.lit(False)))
+        )
         if not affected:
             return
         remaining = (
@@ -2733,9 +2722,9 @@ class TableStore:
         rows = self._read_files(meta, files).select(
             *[f.name for f in meta.schema.fields]
         )
-        added = self._stage(new_meta, rows)
+        added, n = self._stage(new_meta, rows)
         # commit first: a CommitConflict leaves the meta untouched
-        self._commit_version(new_meta, base, "rebucket", added)
+        self._commit_version(new_meta, base, "rebucket", added, n)
         self._write_meta(new_meta)
         return new_meta
 
@@ -2747,9 +2736,9 @@ class TableStore:
         its files."""
         meta = self._writable_meta(name)
         base = self._head(meta.name)[0]
-        batch = self._dedup_batch(meta, self._validate_batch(meta, df))
-        added = self._stage(meta, batch)
-        self._commit_version(meta, base, "insert_overwrite", added)
+        batch = self._validate_batch(meta, df).withColumn(_SRC, F.lit(0))
+        added, rows = self._stage(meta, batch, (0,))
+        self._commit_version(meta, base, "insert_overwrite", added, rows)
 
 
 def _segment_runs(

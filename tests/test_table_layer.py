@@ -2253,3 +2253,127 @@ def test_ddl_schema_default_literal_with_separator_chars(spark, store):
     )
     execute(store, "INSERT INTO t (id) VALUES (1)")
     assert [tuple(r) for r in store.scan("t").collect()] == [(1, "a,b<c", "d,e")]
+
+
+def test_keyed_writes_start_few_spark_jobs(spark, store):
+    """Each keyed write runs one tablet probe (a no-shuffle observation)
+    and one staged write whose single tablet shuffle also merges rows by
+    key: at most 3 Spark jobs per UPSERT, UPDATE, DELETE and INSERT, and
+    at most 9 for a MERGE (its source⋈target joins add their own)."""
+    from hivekudu_handler_spark.sources.sql_ddl import sql
+
+    store.create_table(
+        "kv", "k bigint, cust bigint, status string, price double", ["k"]
+    )
+    store.insert(
+        "kv",
+        spark.range(300).selectExpr(
+            "id AS k", "id % 50 AS cust", "'O' AS status", "id * 1.5 AS price"
+        ),
+    )
+    meta = store.table_meta("kv")
+    tablets = {store._tablet_of(meta, f) for f in _live_files(store, "kv")}
+    assert tablets == {(0,), (1,), (2,), (3,)}
+    vals = ", ".join(
+        f"({k}, 1, 'U', 2.5)" for k in [*range(10, 15), *range(1000, 1005)]
+    )
+    mvals = ", ".join(f"({k}, 3, 'M', 9.5)" for k in [20, 21, 22, 2000, 2001, 2002])
+    statements = {
+        "upsert": (f"UPSERT INTO kv VALUES {vals}", 3),
+        "update": (
+            "UPDATE kv SET price = price + 1.5, status = 'X' "
+            "WHERE k BETWEEN 40 AND 60",
+            3,
+        ),
+        "delete": ("DELETE FROM kv WHERE k BETWEEN 70 AND 73", 3),
+        "insert": ("INSERT INTO kv VALUES (3000, 1, 'I', 1.0), (5, 1, 'I', 1.0)", 3),
+        "merge": (
+            f"MERGE INTO kv USING (SELECT * FROM VALUES {mvals} "
+            "AS s(k, cust, status, price)) s ON kv.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET status = s.status, price = s.price "
+            "WHEN NOT MATCHED THEN INSERT *",
+            9,
+        ),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    for kind, (text, _) in statements.items():
+        group = f"table-store-write-{kind}"
+        sc.setJobGroup(group, f"keyed {kind}")
+        try:
+            sql(store, text)
+            jobs[kind] = len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    assert jobs == {
+        kind: min(jobs[kind], limit) for kind, (_, limit) in statements.items()
+    }, jobs
+    probe = "k IN (5, 10, 20, 45, 71, 1000, 2000, 3000)"
+    got = {r["k"]: r["status"] for r in store.scan("kv", predicate=probe).collect()}
+    assert got == {
+        5: "O", 10: "U", 20: "M", 45: "X", 1000: "U", 2000: "M", 3000: "I"
+    }
+
+
+def test_failed_staged_write_leaves_no_staging(spark, store, monkeypatch):
+    """A staged Spark write that raises removes its staging directory
+    and changes nothing: staging/ is empty, and the version and the scan
+    are those of the last commit."""
+    store.create_table("t", "id int, x int", ["id"])
+    store.insert_values("t", [(i, i) for i in range(1, 9)])
+    v = store.current_version("t")
+    before = {(r["id"], r["x"]) for r in store.scan("t").collect()}
+    write = store._write_partitioned
+
+    def failing(meta, df, path, keep):
+        write(meta, df, path, keep)
+        assert list(path.rglob("*.parquet")), "the write never staged files"
+        raise OSError("simulated failure after the staged write")
+
+    monkeypatch.setattr(store, "_write_partitioned", failing)
+    with pytest.raises(OSError, match="simulated failure"):
+        store.upsert("t", spark.createDataFrame([(1, 99)], "id int, x int"))
+    with pytest.raises(OSError, match="simulated failure"):
+        store.insert_values("t", [(100, 100)])
+    monkeypatch.undo()
+    staging = store._dir("t") / "staging"
+    assert not staging.exists() or not any(staging.iterdir())
+    assert store.current_version("t") == v
+    assert {(r["id"], r["x"]) for r in store.scan("t").collect()} == before
+    assert not _unlisted_files(store, "t")
+
+
+def test_commit_metrics_match_manifest_diff(spark, store):
+    """Each commit's manifest records what it did: rows written by the
+    staged write, and the files added and removed (with the bytes added)
+    against the previous manifest."""
+    store.create_table("t", "id int, x int", ["id"])
+    store.insert_values("t", [(i, i) for i in range(1, 41)])
+    prev_v = store.current_version("t")
+    prev = set(store._read_manifest("t", prev_v)["files"])
+    assert store._read_manifest("t", prev_v)["metrics"]["rows_written"] == 40
+    store.upsert(
+        "t",
+        spark.createDataFrame([(1, -1), (2, -2), (2, -3), (100, 0)], "id int, x int"),
+        delete_keys=spark.createDataFrame([(3,), (999,)], "id int"),
+    )
+    m = store._read_manifest("t", prev_v + 1)
+    cur = set(m["files"])
+    added, removed = cur - prev, prev - cur
+    data = store._data_dir("t")
+    meta = store.table_meta("t")
+    rewritten = sorted({store._tablet_of(meta, f) for f in removed})
+    n_rows = (
+        store._read_files(meta, m["files"])
+        .filter(store._part_filter(meta, rewritten))
+        .count()
+    )
+    assert m["metrics"] == {
+        "rows_written": n_rows,
+        "files_added": len(added),
+        "files_removed": len(removed),
+        "bytes_added": sum((data / f).stat().st_size for f in added),
+    }
+    assert m["metrics"]["files_added"] > 0 and m["metrics"]["files_removed"] > 0
+    # history keeps its (version, op, n_files) columns
+    assert store.history("t").columns == ["version", "op", "n_files"]
