@@ -1125,28 +1125,21 @@ def table_restore_diffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("table", "snapshot", "cdc"),
 )
 def table_changefeed_deep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SEGMENTED changefeed over a deep commit history (r18;
-    SCALE.md "r18: CDC plan width"): the canonical 3-commit mutation
-    history padded with truncates to 20 commits (the first truncate
-    deletes the 3 surviving keys; the rest commit empty diffs —
-    versions still advance), read via ``changefeed_segmented`` in
-    8-commit spans.  The per-type event counts and commit-version
-    bounds must equal the raw feed's — segmentation changes plan shape
-    (3 checkpointed leaves instead of a 20-term union), never content.
+    """The changefeed over a deep commit history (SCALE.md "CDC plan
+    width"): the canonical 3-commit mutation history padded with
+    truncates to 20 commits (the first truncate deletes the 3 surviving
+    keys; the rest commit empty diffs — versions still advance), read
+    through ``store.changefeed`` over the whole range.  The per-type
+    event counts and commit-version bounds are those of one diff per
+    commit: depth changes how many manifests are read to build the
+    plan, never its shape (one scan, one window) or its content.
     """
-    from hivekudu_handler_spark.sources.table_store import (
-        changefeed_segmented,
-    )
-
     store, d = _mutated_store(spark)
     try:
         store.truncate("snap")  # v4: deletes surviving keys {2, 3, 4}
         while store.current_version("snap") < 20:
             store.truncate("snap")  # empty diff, version advances
-        feed = changefeed_segmented(
-            store, "snap", 0, store.current_version("snap"),
-            segment_commits=8,
-        )
+        feed = store.changefeed("snap", 0, store.current_version("snap"))
         return _materialize(
             spark,
             feed.groupBy("_change_type")

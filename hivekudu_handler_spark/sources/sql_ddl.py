@@ -135,7 +135,6 @@ from hivekudu_handler_spark.sources.table_store import (
     NOT_NULL_MSG_PREFIX,
     TableStore,
     TableStoreError,
-    changefeed_segmented,
 )
 
 # module-private alias: every splitter below lexes through the shared
@@ -903,7 +902,10 @@ def _rewrite_changefeed(store: TableStore, stmt: str) -> str:
     surfaced in SQL (Delta spells it ``table_changes('t', a, b)``): the
     clause becomes a temp view over :meth:`TableStore.changefeed`, whose
     columns are the table's plus ``_change_type`` / ``_commit_version``.
-    Same string-literal guard as the VERSION AS OF rewrite, and the two
+    The feed is lazy — one scan and one window, built from the range's
+    manifests without running a job — so ``EXPLAIN`` over any range
+    shows the plan a read would run and reads nothing.  Same
+    string-literal guard as the VERSION AS OF rewrite, and the two
     compose in one statement (e.g. a feed joined against the snapshot
     it starts from).
 
@@ -916,46 +918,12 @@ def _rewrite_changefeed(store: TableStore, stmt: str) -> str:
     of a nonexistent table surfaces as Spark's unresolved-relation
     error, not a TableStoreError."""
 
-    # EXPLAIN is detected on the comment-masked text (r19 advice: a
-    # leading /* comment */ or -- line comment must not hide the
-    # keyword, or the rewrite eagerly materializes every span at bind
-    # time — the full read the lazy EXPLAIN path exists to avoid)
-    code_text = "".join(
-        ch if st == "code" else " "
-        for ch, st in zip(stmt, _sql_char_states(stmt))
-    )
-    explain = bool(re.match(r"\s*EXPLAIN\b", code_text, re.IGNORECASE))
-
     def bind(m: re.Match):
         table, frm, to = m.group(1), int(m.group(2)), int(m.group(3))
         if not store.has_table(table):
             return None
         alias = f"__cf_{table.lower()}_v{frm}_v{to}"
-        if explain:
-            # EXPLAIN must not run jobs: the segmented feed eagerly
-            # materializes each span (localCheckpoint) at BIND time, so
-            # explaining a deep range would pay the full read before any
-            # plan text is shown (r18 advice).  materialize=False
-            # assembles the exact union a read would execute — cached
-            # spans bind their pinned blocks, missing spans bind the
-            # lazy batched builder, tiny ranges keep the plain feed —
-            # with the span routing and cache-key construction owned by
-            # changefeed_segmented itself, not duplicated here (r19
-            # advice).
-            feed = changefeed_segmented(
-                store, table, frm, to, materialize=False
-            )
-        else:
-            # segmented: a deep range (CHANGES BETWEEN 0 AND 5000 on a
-            # long-lived table) is read in 64-commit spans with lineage
-            # cut between them, so plan width is O(range/64) instead of
-            # O(range); small incremental tails delegate to the plain
-            # feed (see changefeed_segmented's docstring).  Re-issued
-            # statements over the same range serve the cached
-            # materialization (invalidated on DROP/VACUUM) instead of
-            # re-paying the spans' first-touch cost.
-            feed = changefeed_segmented(store, table, frm, to)
-        feed.createOrReplaceTempView(alias)
+        store.changefeed(table, frm, to).createOrReplaceTempView(alias)
         return alias
 
     return _splice_rewrite(stmt, _CHANGES_RE, bind)

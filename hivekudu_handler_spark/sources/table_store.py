@@ -66,11 +66,14 @@ it added.  The manifest is created exclusively, so of two writers from
 the same base exactly one commits and the other gets
 :class:`CommitConflict`; a writer that dies before its commit leaves
 only unlisted files.  Every read — current state, as-of, diff,
-changefeed, bloom sidecar — is a read of one manifest's file list with
-``basePath=data/`` (:meth:`TableStore._read_files`), so a reader sees
-exactly one committed version.  ``diff()`` is Kudu's *diff scan*
+changefeed, bloom sidecar — reads files that committed manifests list,
+with ``basePath=data/`` (:meth:`TableStore._read_files`), so a reader
+sees exactly one committed version.  ``diff()`` is Kudu's *diff scan*
 (key-level changes between two snapshots, the incremental-backup
-primitive); ``vacuum()`` is Kudu's ancient-history mark
+primitive); ``changefeed()`` is its change feed over a version range:
+one scan of the files the range changed, each row tagged with its
+file's run of versions, and one window over the key that emits the
+events; ``vacuum()`` is Kudu's ancient-history mark
 (``--tablet_history_max_age_sec``): drop manifests older than the last
 *K* and delete the files in ``data/`` that no kept manifest lists.
 Manifests are O(files), written once per mutation — no per-row
@@ -183,12 +186,6 @@ class TableStore:
         # misleadingly named range_partitions through r5; it always was
         # the hash fan-out — real range partitioning is range_splits)
         self.num_buckets = num_buckets
-        # materialized segmented-changefeed reads, keyed
-        # (table, from_version, to_version, segment_commits) — a fixed
-        # committed range is immutable, so re-issued deep CHANGES
-        # BETWEEN reads serve the checkpointed blocks (see
-        # changefeed_segmented); entries drop on DROP TABLE and VACUUM
-        self._segfeed_cache: dict[tuple, DataFrame] = {}
 
     # ------------------------------------------------------------------ paths
     @staticmethod
@@ -486,18 +483,6 @@ class TableStore:
         # a stale session temp view would keep serving the dropped table's
         # last file listing
         self.spark.catalog.dropTempView(self._norm_name(name))
-        self._invalidate_segfeeds(name)
-
-    def _invalidate_segfeeds(self, name: str) -> None:
-        """Drop (and best-effort unpersist) cached segmented-changefeed
-        reads of ``name`` — called on DROP TABLE and VACUUM."""
-        norm = self._norm_name(name)
-        for key in [k for k in self._segfeed_cache if k[0] == norm]:
-            df = self._segfeed_cache.pop(key)
-            try:
-                df.unpersist()
-            except Exception:
-                pass  # session already stopped / blocks already freed
 
     def table_meta(self, name: str) -> TableMeta:
         if not self._meta_path(name).exists():
@@ -832,11 +817,6 @@ class TableStore:
             )
         new_norm = self._norm_name(new_name)
         self._dir(name).rename(self.root / new_norm)
-        # release the renamed-away name's cached feed spans eagerly
-        # (r20 advice): the timestamp-keyed identity already prevents
-        # stale serves, but the orphaned entries would otherwise keep
-        # their executor blocks pinned until LRU churn ages them out
-        self._invalidate_segfeeds(name)
         meta.name = new_norm
         self._write_meta(meta)
         self.spark.catalog.dropTempView(self._norm_name(name))
@@ -1161,16 +1141,32 @@ class TableStore:
         event).  Deletes and ``update_before`` rows carry the OLD values;
         inserts and ``update_after`` the new ones — replaying the feed
         onto the ``from_version`` snapshot reproduces ``to_version``
-        exactly (pinned by ``tests/test_table_layer.py``).
+        exactly, and the events are those of one :meth:`diff` per
+        commit in the range.
 
-        **Scale shape.** One term per commit in the range, each a
-        :meth:`diff` of consecutive manifests — which reads only the
-        files OUTSIDE the two manifests' common set, i.e. only the
-        tablets the commit touched.  A consumer tailing a 100 TB table
-        therefore reads O(changed tablets per commit), never O(table);
-        the union across commits is linear in the change volume.  The
-        update→(before, after) expansion is a single codegen explode per
-        term, so each per-commit diff join executes once."""
+        **One scan, one window, at any depth.**  Data files are
+        immutable and enter and leave the manifests once, so each file
+        is present over one run of versions ``(first_v, last_v)``
+        (:func:`_segment_runs`); files present over the whole range hold
+        no changed key and are never read.  The changed files are read
+        by ONE :meth:`_read_files` call, each row takes its file's run
+        from a literal ``path → run`` map (Spark folds it into one
+        constant), and one ``lag``/``lead`` window over the key turns a
+        key's runs into events:
+
+        * a run starting at ``a > from_version`` right after the key's
+          previous run → ``update_before``/``update_after`` @ a if the
+          values differ, nothing if they are equal (a file rewrite —
+          :meth:`diff`'s unchanged-filter);
+        * a run starting at ``a > from_version`` with no adjacent
+          predecessor → ``insert`` @ a;
+        * a run ending at ``b < to_version`` with no adjacent successor
+          → ``delete`` @ b+1, carrying the departing values.
+
+        The plan has one parquet scan and one shuffle, no join and no
+        union, so a consumer tailing a 100 TB table reads only the
+        tablets the range touched, and a deep range costs one manifest
+        read per version while the plan is built."""
         meta = self.table_meta(name)
         if meta.external:
             raise TableStoreError("external tables have no snapshots")
@@ -1178,70 +1174,85 @@ class TableStore:
             raise TableStoreError(
                 f"changefeed range is backwards: {from_version} > {to_version}"
             )
-        # surface missing/vacuumed endpoints eagerly, not mid-loop
-        self._read_manifest(meta.name, from_version)
-        self._read_manifest(meta.name, to_version)
         keys = meta.key_columns
         vals = [f.name for f in meta.schema.fields if f.name not in keys]
         logical = [f.name for f in meta.schema.fields]
-        out_schema = T.StructType(
-            [*meta.schema.fields]
-            + [
-                T.StructField("_change_type", T.StringType(), False),
-                T.StructField("_commit_version", T.IntegerType(), False),
-            ]
-        )
-        steps: list[DataFrame] = []
-        for v in range(from_version, to_version):
-            d = self.diff(name, v, v + 1, include_old=bool(vals))
-            if not vals:
-                # key-only table: updates cannot exist (diff filters
-                # identical rows), so the diff labels map 1:1
-                step = d.select(
-                    *keys, F.col("change_type").alias("_change_type")
-                )
-            else:
-                img = F.struct(*[F.col(c).alias(c) for c in vals])
-                old_img = F.struct(
-                    *[F.col(f"old_{c}").alias(c) for c in vals]
-                )
-                event = lambda tag, im: F.struct(  # noqa: E731
-                    F.lit(tag).alias("t"), im.alias("img")
-                )
-                events = (
-                    F.when(
-                        F.col("change_type") == "insert",
-                        F.array(event("insert", img)),
-                    )
-                    .when(
-                        F.col("change_type") == "delete",
-                        # diff's value columns already carry the OLD
-                        # values for deletes
-                        F.array(event("delete", img)),
-                    )
-                    .otherwise(
-                        F.array(
-                            event("update_before", old_img),
-                            event("update_after", img),
-                        )
-                    )
-                )
-                step = d.select(*keys, F.explode(events).alias("_e")).select(
-                    *keys,
-                    *[F.col(f"_e.img.{c}").alias(c) for c in vals],
-                    F.col("_e.t").alias("_change_type"),
-                )
-            steps.append(
-                step.select(*logical, "_change_type").withColumn(
-                    "_commit_version", F.lit(v + 1)
-                )
+        # reads every manifest of the range: a missing or vacuumed one
+        # raises here, before any plan is built
+        runs = _segment_runs(self, meta.name, from_version, to_version)
+        if not runs:
+            return self.spark.createDataFrame(
+                [],
+                T.StructType(
+                    [
+                        *meta.schema.fields,
+                        T.StructField("_change_type", T.StringType(), False),
+                        T.StructField("_commit_version", T.IntegerType(), False),
+                    ]
+                ),
             )
-        if not steps:
-            return self.spark.createDataFrame([], out_schema)
-        out = steps[0]
-        for s in steps[1:]:
-            out = out.unionByName(s)
-        return out
+        run_of = []
+        for (a, b), rels in runs.items():
+            span = F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
+            for rel in rels:
+                run_of += [F.lit(rel), span]
+        run = F.create_map(*run_of)[self._data_rel_path()]
+        # a key's values travel as one struct so the window can hand the
+        # previous run's image to the next; a key-only table has none
+        img = [F.struct(*vals).alias("_img")] if vals else []
+        rows = self._read_files(
+            meta, [rel for rels in runs.values() for rel in rels]
+        ).select(
+            *keys, *img, run["a"].alias("_first_v"), run["b"].alias("_last_v")
+        )
+        # the window columns are materialized into the row BEFORE the
+        # event array is built: lag/lead must sit directly under a
+        # Window operator — nesting them inside array/when under the
+        # explode is an unsupported-expression analysis error
+        kw = Window.partitionBy(*keys).orderBy("_first_v")
+        rows = rows.select(
+            "*",
+            F.lag("_last_v").over(kw).alias("_prev_last"),
+            F.lead("_first_v").over(kw).alias("_next_first"),
+            *([F.lag("_img").over(kw).alias("_prev_img")] if vals else []),
+        )
+        first_v, last_v = F.col("_first_v"), F.col("_last_v")
+        prev_last, next_first = F.col("_prev_last"), F.col("_next_first")
+        continuation = prev_last.isNotNull() & (prev_last == first_v - 1)
+        gap_after = next_first.isNull() | (next_first > last_v + 1)
+        arriving = first_v > from_version
+        departing = last_v < to_version
+
+        def ev(tag: str, v: Column, image: str = "_img") -> Column:
+            fs = [F.lit(tag).alias("t"), v.cast("int").alias("v")]
+            return F.struct(*fs, *([F.col(image).alias("img")] if vals else []))
+
+        events = [
+            F.when(arriving & ~continuation, ev("insert", first_v)),
+            F.when(departing & gap_after, ev("delete", last_v + 1)),
+        ]
+        if vals:
+            # same per-column null-safe rule as diff's unchanged-filter
+            changed = F.lit(False)
+            for c in vals:
+                changed = changed | ~F.col(f"_prev_img.{c}").eqNullSafe(
+                    F.col(f"_img.{c}")
+                )
+            update = arriving & continuation & changed
+            events += [
+                F.when(update, ev("update_before", first_v, "_prev_img")),
+                F.when(update, ev("update_after", first_v)),
+            ]
+        return rows.select(
+            *keys,
+            F.explode(F.filter(F.array(*events), lambda e: e.isNotNull())).alias(
+                "_e"
+            ),
+        ).select(
+            *[c if c in keys else F.col(f"_e.img.{c}").alias(c) for c in logical],
+            F.col("_e.t").alias("_change_type"),
+            F.col("_e.v").alias("_commit_version"),
+        )
 
     def vacuum(self, name: str, keep_last: int = 1) -> dict:
         """Kudu's ancient-history mark: retain only the last ``keep_last``
@@ -1258,7 +1269,6 @@ class TableStore:
             raise TableStoreError("external tables have no snapshots")
         if keep_last < 0:
             raise TableStoreError("keep_last must be >= 0")
-        self._invalidate_segfeeds(meta.name)
         versions = self._version_numbers(meta.name)
         if not versions:
             return {"dropped_versions": [], "deleted_files": 0}
@@ -1465,6 +1475,19 @@ class TableStore:
         data = self._data_dir(meta.name)
         reader = self.spark.read.schema(schema).option("basePath", str(data))
         return self._to_logical(reader.parquet(*[str(data / r) for r in rels]), meta)
+
+    @staticmethod
+    def _data_rel_path() -> Column:
+        """Each row's file as the manifests spell it: the path relative
+        to ``data/``, for a frame read by :meth:`_read_files`.
+        ``_metadata.file_path`` is a URI — its directory is the path the
+        reader was given (symlinks unresolved), percent-encoded (a space
+        reads ``%20``, a ``%`` reads ``%25``) — so the part after the
+        last ``/data/`` is taken (tablet directories are ``col=value``,
+        never ``data``) and percent-decoded.  The URI leaves ``+`` as
+        itself, which ``url_decode`` would read as a space."""
+        rel = F.regexp_extract(F.col("_metadata.file_path"), r"^.*/data/(.*)$", 1)
+        return F.url_decode(F.replace(rel, F.lit("+"), F.lit("%2B")))
 
     def _scan_raw(self, meta: TableMeta) -> DataFrame:
         """The latest version INCLUDING the partition columns."""
@@ -2147,16 +2170,8 @@ class TableStore:
 
         if not rel_files:
             return self.spark.createDataFrame([], "file string, bits array<int>")
-        data = self._data_dir(meta.name)
-        # file identity = path relative to data/ (matches the manifests
-        # and survives URI-scheme differences in _metadata.file_path)
-        rel = F.regexp_replace(
-            F.col("_metadata.file_path"),
-            "^.*?" + re.escape(str(data.resolve())) + "/",
-            "",
-        )
         exploded = self._read_files(meta, rel_files).select(
-            rel.alias("file"),
+            self._data_rel_path().alias("file"),
             F.explode(F.array(*probe_positions(F.col(col)))).alias("pos"),
         )
         return exploded.groupBy("file").agg(
@@ -2744,423 +2759,27 @@ class TableStore:
 def _segment_runs(
     store: TableStore, name: str, lo: int, hi: int
 ) -> dict[tuple[int, int], list[str]]:
-    """Per-file contiguous presence runs across manifests ``lo..hi``:
+    """Per-file presence runs across manifests ``lo..hi``:
     ``{(first_v, last_v): [data-relative paths]}``.
 
-    Data files are immutable and enter/leave a manifest exactly once
-    (rewrites mint new part names), so a file's presence across the
-    segment is one contiguous version interval — the grouping below is
-    nevertheless robust to gaps.  Files present in EVERY version of the
-    segment are EXCLUDED: an immutable file spanning the whole range
-    means none of its keys changed state inside it (a key lives in
-    exactly one tablet file per version), the same cancellation
-    :meth:`TableStore.diff` applies to the two-manifest common set —
-    extended here to ``hi - lo`` manifests at once."""
-    present: dict[str, list[int]] = {}
+    Every commit lists its base's files minus the ones it replaces plus
+    new part names, so a file, once dropped, is never listed again: its
+    presence across the range is one contiguous run from its first to
+    its last listing.  Files present in EVERY version of the range are
+    EXCLUDED: an immutable file spanning the whole range means none of
+    its keys changed state inside it (a key lives in exactly one tablet
+    file per version), the same cancellation :meth:`TableStore.diff`
+    applies to the two-manifest common set — extended here to
+    ``hi - lo`` manifests at once."""
+    first: dict[str, int] = {}
+    last: dict[str, int] = {}
     for v in range(lo, hi + 1):
         for rel in store._read_manifest(name, v)["files"]:
-            present.setdefault(rel, []).append(v)
+            first.setdefault(rel, v)
+            last[rel] = v
     groups: dict[tuple[int, int], list[str]] = {}
-    for rel in sorted(present):
-        vs = present[rel]
-        start = prev = vs[0]
-        for v in vs[1:] + [None]:  # sentinel flushes the last run
-            if v is not None and v == prev + 1:
-                prev = v
-                continue
-            if (start, prev) != (lo, hi):
-                groups.setdefault((start, prev), []).append(rel)
-            if v is not None:
-                start = prev = v
+    for rel in sorted(first):
+        run = (first[rel], last[rel])
+        if run != (lo, hi):
+            groups.setdefault(run, []).append(rel)
     return groups
-
-
-def _changefeed_batched(
-    store: TableStore, name: str, lo: int, hi: int
-) -> DataFrame:
-    """One segment of the change feed as a SINGLE window pass — the
-    batched alternative to :meth:`TableStore.changefeed`'s one
-    manifest-diff join per commit.
-
-    Motivation (measured, BENCH_NOTES r18): each per-commit diff join
-    carries ~0.4-0.75 s of fixed scheduling/shuffle overhead, so a
-    400-commit tail pays 400 tiny joins regardless of how the plan is
-    segmented.  Here each changed tablet file is read ONCE, tagged with
-    its presence interval ``[_first_v, _last_v]`` from the manifests
-    (:func:`_segment_runs`), and the whole segment's events fall out of
-    one ``lag``/``lead`` window over the key — one shuffle per segment
-    instead of K joins.
-
-    Event reconstruction: a key's history inside the segment is a set
-    of disjoint presence runs.  Comparing each run with its
-    predecessor/successor over the key window yields exactly the
-    per-commit diff events:
-
-    * run starts at ``a > lo`` with the previous run ending at ``a-1``
-      and different values → ``update_before``/``update_after`` @ a;
-      identical values → no event (pure file rewrite — the same
-      cancellation diff's unchanged-filter applies);
-    * run starts at ``a > lo`` with no adjacent predecessor →
-      ``insert`` @ a;
-    * run ends at ``b < hi`` with no adjacent successor → ``delete``
-      @ b+1 carrying the departing values (diff's delete rows likewise
-      carry OLD values).
-
-    Row set, column names and per-event semantics are IDENTICAL to
-    ``changefeed`` over the same range (pinned by the fixed-history
-    equality test and the randomized MVCC model differential in
-    tests/test_snapshots.py)."""
-    meta = store.table_meta(name)
-    keys = meta.key_columns
-    vals = [f.name for f in meta.schema.fields if f.name not in keys]
-    logical = [f.name for f in meta.schema.fields]
-    out_schema = T.StructType(
-        [*meta.schema.fields]
-        + [
-            T.StructField("_change_type", T.StringType(), False),
-            T.StructField("_commit_version", T.IntegerType(), False),
-        ]
-    )
-    groups = _segment_runs(store, meta.name, lo, hi)
-    if not groups:
-        return store.spark.createDataFrame([], out_schema)
-    parts = []
-    for (a, b), rels in sorted(groups.items()):
-        parts.append(
-            store._read_files(meta, rels)
-            .select(*logical)
-            .withColumn("_first_v", F.lit(a).cast("int"))
-            .withColumn("_last_v", F.lit(b).cast("int"))
-        )
-    runs = parts[0]
-    for p in parts[1:]:
-        runs = runs.unionByName(p)
-    # window columns are materialized into the row BEFORE the event
-    # array is built: lag/lead must sit directly under a Window
-    # operator — nesting them inside array/when under the explode
-    # Project is an unsupported-expression analysis error
-    kw = Window.partitionBy(*keys).orderBy("_first_v")
-    runs = runs.withColumn("_prev_last", F.lag("_last_v").over(kw)).withColumn(
-        "_next_first", F.lead("_first_v").over(kw)
-    )
-    prev_last, next_first = F.col("_prev_last"), F.col("_next_first")
-    continuation = prev_last.isNotNull() & (
-        prev_last == F.col("_first_v") - F.lit(1)
-    )
-    gap_after = next_first.isNull() | (
-        next_first > F.col("_last_v") + F.lit(1)
-    )
-    arriving = F.col("_first_v") > F.lit(lo)
-    departing = F.col("_last_v") < F.lit(hi)
-    if vals:
-        img = F.struct(*[F.col(c).alias(c) for c in vals])
-        runs = runs.withColumn("_img", img).withColumn(
-            "_prev_img", F.lag("_img").over(kw)
-        )
-        # same per-column null-safe rule as diff's unchanged-filter
-        changed = F.lit(False)
-        for c in vals:
-            changed = changed | ~F.col(f"_prev_img.{c}").eqNullSafe(
-                F.col(f"_img.{c}")
-            )
-        ev = lambda tag, im, v: F.struct(  # noqa: E731
-            F.lit(tag).alias("t"), im.alias("img"), v.cast("int").alias("v")
-        )
-        at_first = F.col("_first_v")
-        events = F.array(
-            F.when(
-                arriving & continuation & changed,
-                ev("update_before", F.col("_prev_img"), at_first),
-            ),
-            F.when(
-                arriving & continuation & changed,
-                ev("update_after", F.col("_img"), at_first),
-            ),
-            F.when(
-                arriving & ~continuation,
-                ev("insert", F.col("_img"), at_first),
-            ),
-            F.when(
-                departing & gap_after,
-                ev("delete", F.col("_img"), F.col("_last_v") + F.lit(1)),
-            ),
-        )
-        out = runs.select(
-            *keys, F.explode(F.filter(events, lambda e: e.isNotNull())).alias("_e")
-        ).select(
-            *keys,
-            *[F.col(f"_e.img.{c}").alias(c) for c in vals],
-            F.col("_e.t").alias("_change_type"),
-            F.col("_e.v").alias("_commit_version"),
-        )
-    else:
-        # key-only table: updates cannot exist (nothing to change), so
-        # the feed is inserts at non-adjacent arrivals and deletes at
-        # non-adjacent departures
-        ev = lambda tag, v: F.struct(  # noqa: E731
-            F.lit(tag).alias("t"), v.cast("int").alias("v")
-        )
-        events = F.array(
-            F.when(arriving & ~continuation, ev("insert", F.col("_first_v"))),
-            F.when(
-                departing & gap_after,
-                ev("delete", F.col("_last_v") + F.lit(1)),
-            ),
-        )
-        out = runs.select(
-            *keys, F.explode(F.filter(events, lambda e: e.isNotNull())).alias("_e")
-        ).select(
-            *keys,
-            F.col("_e.t").alias("_change_type"),
-            F.col("_e.v").alias("_commit_version"),
-        )
-    return out.select(*logical, "_change_type", "_commit_version")
-
-
-_SEGFEED_CACHE_MAX = 64
-"""Default LRU capacity of a store's ``_segfeed_cache``: materialized
-K-commit spans held across ALL tables of one store (r19 advice: the
-cache was unbounded, so a session sweeping many distinct deep ranges
-accumulated checkpoint blocks with no eviction).  64 spans x 64-commit
-default segmentation covers a 4096-commit working set per store; a
-test or an unusual session can override per instance via a
-``_segfeed_cache_max`` attribute on the store (an attribute, not a
-constructor knob, so the class body stays untouched)."""
-
-
-class _SegfeedSpan:
-    """One cached, materialized changefeed span: the
-    ``localCheckpoint``'d DataFrame plus a release handle that actually
-    frees the pinned executor blocks.
-
-    ``DataFrame.unpersist()`` does NOT release localCheckpoint blocks —
-    it talks to the SQL cache manager, while the checkpoint pins the
-    query's internal RDD in the BlockManager (verified empirically:
-    ``sc.getPersistentRDDs`` keeps the entry after ``df.unpersist()``).
-    Release digs the ``LogicalRDD``'s wrapped RDD out of the analyzed
-    plan and unpersists THAT.  The handle is spelled ``unpersist()`` so
-    :meth:`TableStore._invalidate_segfeeds`'s existing best-effort
-    ``entry.unpersist()`` on DROP TABLE / VACUUM frees blocks too."""
-
-    __slots__ = ("df",)
-
-    def __init__(self, df: DataFrame) -> None:
-        self.df = df
-
-    def unpersist(self) -> None:
-        try:
-            # analyzed plan of a localCheckpoint result IS the
-            # LogicalRDD node; .rdd() is the checkpointed RDD itself
-            self.df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            try:
-                self.df.unpersist()
-            except Exception:
-                pass  # session already stopped / blocks already freed
-
-
-def _segfeed_cache_put(
-    store: TableStore, key: tuple, span: _SegfeedSpan, protect: set
-) -> None:
-    """Insert ``key`` as most-recent and evict least-recently-used
-    entries past the cap, unpersisting each evicted span's blocks.
-    Keys in ``protect`` (the spans of the feed being assembled RIGHT
-    NOW) are never evicted — evicting one would hand the caller a union
-    over freed blocks — so a single range wider than the cap may exceed
-    it until the next put."""
-    cache = store._segfeed_cache
-    cache[key] = span
-    cap = max(1, getattr(store, "_segfeed_cache_max", _SEGFEED_CACHE_MAX))
-    if len(cache) <= cap:
-        return
-    for old_key in [k for k in cache if k not in protect]:
-        if len(cache) <= cap:
-            break
-        cache.pop(old_key).unpersist()
-
-
-def changefeed_segmented(
-    store: TableStore,
-    name: str,
-    from_version: int,
-    to_version: int,
-    *,
-    segment_commits: int = 64,
-    materialize: bool = True,
-) -> DataFrame:
-    """:meth:`TableStore.changefeed` with BOUNDED PLAN WIDTH for deep
-    commit histories (r17 verdict).
-
-    ``changefeed`` builds one union term (a per-commit manifest-diff
-    join) per commit in the range — the right DATA scale shape (each
-    term reads only the tablets that commit touched), but the PLAN is
-    O(commits) terms wide, and chained ``unionByName`` analysis cost
-    grows superlinearly with term count on the driver: a consumer
-    tailing ``CHANGES BETWEEN 0 AND 5000`` on a long-lived table would
-    pay minutes of driver-side analysis before any data moves.
-
-    This wrapper slices the range into ``segment_commits``-sized spans
-    and cuts lineage between them with an eager ``localCheckpoint``:
-    each span's O(K)-term plan is analyzed and executed on its own, the
-    materialized span becomes a single leaf, and the final feed is a
-    union over ceil(range/K) leaves — plan width O(range/K), analysis
-    linear in range.  Row set, ordering columns and schema are
-    IDENTICAL to ``changefeed`` (pinned by tests/test_snapshots.py).
-
-    Spans are aligned to ABSOLUTE ``segment_commits`` boundaries (r19
-    advice): the materialized unit cached for ``CHANGES BETWEEN 0 AND
-    128`` is the same unit ``0 AND 192`` needs for its first two spans,
-    so the natural CDC pattern — re-issuing the feed with an advancing
-    upper bound — re-pays only the NEW spans, and distinct overlapping
-    ranges share entries instead of each pinning a full-history copy.
-    Cache entries are therefore bounded at O(history / K) per table,
-    and a global LRU cap (``_SEGFEED_CACHE_MAX``, per-store override
-    via a ``_segfeed_cache_max`` attribute) unpersists the
-    least-recently-used spans' blocks on eviction.  A feed handle stays
-    valid while its spans are live; a handle whose spans were evicted
-    or invalidated (DROP TABLE / VACUUM) must be re-issued — the feed
-    of a fixed committed range is deterministic, so a re-issue is
-    always safe.  The partial head/tail of a misaligned range (< K
-    commits each) stay LAZY and uncached.
-
-    Cache keys carry the COMMIT TIMESTAMPS of the span's endpoint
-    manifests alongside the table name (r19 advice): a rename followed
-    by re-creating a table under the old name yields manifests with new
-    commit timestamps, so the recreated table can never serve its
-    predecessor's cached spans — without requiring ``rename_table``
-    itself to hook invalidation.  (Entries orphaned by a rename are
-    unreachable and age out of the LRU.)
-
-    ``materialize=False`` assembles the same union WITHOUT running
-    anything: cached spans bind their pinned blocks, missing spans bind
-    the lazy batched builder, and nothing is checkpointed or cached —
-    the EXPLAIN path binds through this, so the plan it shows is
-    exactly what a read would execute, with the span routing and cache
-    probing owned HERE instead of duplicated at the SQL layer (r19
-    advice).
-
-    Tradeoff, stated: ``localCheckpoint`` pins each span to executor
-    block storage, so a lost executor invalidates the feed mid-read on
-    a real cluster — acceptable for a CDC tail (re-tail the range; the
-    feed is deterministic for fixed versions).  A durability-critical
-    consumer should instead stage spans to a table (CTAS over
-    ``CHANGES BETWEEN`` per span), which this function deliberately
-    does not do implicitly: writing into the store from a read API
-    would surprise VACUUM accounting.
-
-    Small ranges (``<= 4`` commits) delegate to the plain per-commit
-    feed — the SQL surface routes every ``CHANGES BETWEEN`` read here,
-    and the common incremental tail must pay neither a checkpoint nor
-    a window shuffle.  Mid-size ranges (5..``segment_commits``) take
-    the batched single-window builder LAZILY (no checkpoint: the plan
-    is one window over O(runs) reads, cheap to analyze) — only deep
-    ranges pay materialization, and only once (see the cache below).
-
-    Segments materialize CONCURRENTLY (a small thread pool submitting
-    independent Spark jobs — the scheduler interleaves them across the
-    executor pool), so on a cluster the deep-tail wall is bounded by
-    total changed data, not segment count x per-job latency.  Measured
-    at a 200-real-commit history on local[8] (SCALE.md "CDC plan
-    width"): raw DataFrame BUILD alone is superlinear in depth (4.9 s
-    at 25 commits -> 44 s at 200, pure driver analysis before any data
-    moves, re-paid on EVERY action), while the segmented feed's
-    driver cost is linear, its first materialization is comparable
-    (~78 s vs raw's 83 s build+count), and every subsequent action
-    re-reads checkpointed blocks in ~0.3 s.
-    """
-    if segment_commits < 1:
-        raise TableStoreError("segment_commits must be >= 1")
-    if to_version - from_version <= min(4, segment_commits):
-        # the common incremental tail (a few commits): the plain
-        # per-commit feed — no checkpoint, no window, and it keeps the
-        # independent reference implementation on the hot differential
-        # path (the model test compares it against the batched builder)
-        return store.changefeed(name, from_version, to_version)
-    if to_version - from_version <= segment_commits:
-        # mid-size range: ONE lazy window pass (no checkpoint — plan
-        # width is O(runs), small enough to analyze directly) instead
-        # of up to `segment_commits` manifest-diff joins
-        return _changefeed_batched(store, name, from_version, to_version)
-    # deep range.  Same preamble as the raw feed: a dropped or
-    # renamed-away name raises NoSuchTableError here — never a silent
-    # answer from a surviving cache entry (r19 advice)
-    meta = store.table_meta(name)
-    if meta.external:
-        raise TableStoreError("external tables have no snapshots")
-    norm = meta.name
-    # surface missing/vacuumed endpoints before any span job runs
-    store._read_manifest(norm, from_version)
-    store._read_manifest(norm, to_version)
-    k = segment_commits
-    lo_aligned = -(-from_version // k) * k  # first k-boundary >= from
-    hi_aligned = (to_version // k) * k      # last k-boundary <= to
-    spans: list[tuple[int, int, bool]] = []  # (lo, hi, aligned-full?)
-    if lo_aligned > from_version:
-        spans.append((from_version, min(lo_aligned, to_version), False))
-    spans.extend((m, m + k, True) for m in range(lo_aligned, hi_aligned, k))
-    if hi_aligned < to_version and hi_aligned >= from_version:
-        spans.append((hi_aligned, to_version, False))
-
-    def _lazy(lo: int, hi: int) -> DataFrame:
-        # same routing as the tiny/mid-size top-level paths
-        if hi - lo <= 4:
-            return store.changefeed(name, lo, hi)
-        return _changefeed_batched(store, name, lo, hi)
-
-    # the feed for a FIXED, committed version range is immutable (later
-    # commits extend history, never rewrite it), so an aligned span
-    # materialized once serves every later range that contains it.  The
-    # endpoint-manifest timestamps in the key are the table's identity
-    # across rename/re-create (see docstring).
-    segs: list[DataFrame | None] = []
-    fresh: list[tuple[int, tuple[int, int], tuple]] = []
-    touched: set = set()
-    for lo, hi, full in spans:
-        if not full:
-            segs.append(_lazy(lo, hi))
-            continue
-        key = (
-            norm, lo, hi,
-            store._read_manifest(norm, lo).get("ts"),
-            store._read_manifest(norm, hi).get("ts"),
-        )
-        touched.add(key)
-        hit = store._segfeed_cache.get(key)
-        if hit is not None:
-            # refresh LRU recency
-            store._segfeed_cache[key] = store._segfeed_cache.pop(key)
-            segs.append(hit.df)
-        elif materialize:
-            segs.append(None)
-            fresh.append((len(segs) - 1, (lo, hi), key))
-        else:
-            segs.append(_lazy(lo, hi))
-
-    if fresh:
-
-        def _materialize(item: tuple) -> tuple:
-            idx, (lo, hi), key = item
-            # batched: the span's events come from ONE window pass over
-            # run-tagged tablet reads (see _changefeed_batched) — the
-            # per-commit manifest-diff joins were the measured fixed
-            # cost of a deep first touch (~0.4-0.75 s/commit,
-            # BENCH_NOTES r18)
-            df = _changefeed_batched(store, name, lo, hi).localCheckpoint(
-                eager=True
-            )
-            return idx, key, df
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(8, len(fresh))) as pool:
-            done = list(pool.map(_materialize, fresh))
-        # cache insertion on the caller thread, in span order, with this
-        # call's spans protected from its own evictions
-        for idx, key, df in done:
-            segs[idx] = df
-            _segfeed_cache_put(store, key, _SegfeedSpan(df), touched)
-
-    out = segs[0]
-    for seg in segs[1:]:
-        out = out.unionByName(seg)
-    return out
