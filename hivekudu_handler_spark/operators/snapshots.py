@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from hivekudu_handler_spark.registry import query
 from hivekudu_handler_spark.operators.ddl import _materialize, _scratch_store
+from hivekudu_handler_spark.sources.table_store import change_sign, signed
 
 
 def _mutated_store(spark: SparkSession):
@@ -129,11 +130,23 @@ def sql_describe_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kudu diff scan between v1 and v3: per-key net change with newer
     values (older for deletes).  Row 3 is absent — untouched keys never
-    appear in a diff."""
+    appear in a diff.  The diff's update pair is read as one ``update``
+    row: its ``update_after`` image."""
     store, d = _mutated_store(spark)
     try:
+        diff = store.diff("snap", 1, store.current_version("snap"))
         return _materialize(
-            spark, store.diff("snap", 1, store.current_version("snap")).orderBy("id")
+            spark,
+            diff.filter(F.col("_change_type") != "update_before")
+            .select(
+                "id",
+                "name",
+                "score",
+                F.when(F.col("_change_type") == "update_after", "update")
+                .otherwise(F.col("_change_type"))
+                .alias("change_type"),
+            )
+            .orderBy("id"),
         )
     finally:
         shutil.rmtree(d, ignore_errors=True)
@@ -518,10 +531,11 @@ def incr_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scenario over the events fixture: load two-thirds of the rows
     (v_a), take the per-type aggregate as the materialized base, then
     upsert the final third + double the value of every ``id%5=0`` row,
-    and delete the 'error' class.  Each diff row retracts its old
-    contribution (``old_*`` columns) and asserts its new one; merging
-    the signed deltas into the base must equal a from-scratch aggregate
-    of the final state — which is exactly what the oracle computes.
+    and delete the 'error' class.  Each diff row is signed: deletes and
+    ``update_before`` images retract their contribution, inserts and
+    ``update_after`` images assert theirs; merging the signed deltas
+    into the base must equal a from-scratch aggregate of the final
+    state — which is exactly what the oracle computes.
     Money-style exact arithmetic (floor-cents) keeps the incremental
     float path bit-identical to the recompute."""
     import pyspark.sql.functions as F
@@ -555,30 +569,13 @@ def incr_agg_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         store.delete_where("ev", "event_type = 'error'")
         v_b = store.current_version("ev")
 
-        diff = store.diff("ev", v_a, v_b, include_old=True)
-        # retract+assert via ONE explode, not a self-union (r22): the
-        # union form computed the manifest-diff join twice — see
-        # TableStore.refresh_materialized_view for the full rationale
-        retract_s = F.struct(
-            F.col("old_event_type").alias("event_type"),
-            F.lit(-1).cast("long").alias("dn"),
-            (-F.floor(F.col("old_value") * 100)).alias("dcents"),
-        )
-        assert_s = F.struct(
-            F.col("event_type").alias("event_type"),
-            F.lit(1).cast("long").alias("dn"),
-            F.floor(F.col("value") * 100).alias("dcents"),
-        )
-        signed = (
-            F.when(F.col("change_type") == "insert", F.array(assert_s))
-            .when(F.col("change_type") == "delete", F.array(retract_s))
-            .otherwise(F.array(retract_s, assert_s))
-        )
         delta = (
-            diff.select(F.explode(signed).alias("_e"))
-            .select("_e.*")
+            store.diff("ev", v_a, v_b)
             .groupBy("event_type")
-            .agg(F.sum("dn").alias("dn"), F.sum("dcents").alias("dcents"))
+            .agg(
+                F.sum(change_sign()).alias("dn"),
+                F.sum(signed(F.floor(F.col("value") * 100))).alias("dcents"),
+            )
         )
         merged = (
             base.join(delta, "event_type", "full_outer")
@@ -825,69 +822,31 @@ def join_view_delta_refresh(
     ``(group_col, n_rows, sum_<measure_col>)`` as of versions
     ``(v_left, v_right)``; both bases may have moved arbitrarily since
     (inserts, updates, deletes on either side — including the same
-    logical pair mutating on both).  Each diff row contributes its old
-    image with sign -1 and its new image with sign +1; the signs
-    multiply through the join, so a pair whose halves BOTH disappeared
-    is retracted exactly once (it is absent from R_new, so only the
-    L_old JOIN dR term sees it).
+    logical pair mutating on both).  Each diff row is signed: deletes
+    and ``update_before`` images -1, inserts and ``update_after``
+    images +1; the signs multiply through the join, so a pair whose
+    halves BOTH disappeared is retracted exactly once (it is absent
+    from R_new, so only the L_old JOIN dR term sees it).
 
     Scale shape: the diff frames are delta-sized (manifest symmetric
     difference) and explicitly broadcast — each term is one scan of the
     counterpart base with a broadcast hash join, never a base-vs-base
     join and never a shuffle of the big side."""
-    lmeta, rmeta = store.table_meta(left), store.table_meta(right)
     sum_col = f"sum_{measure_col}"
-
-    def old(c: str, keys) -> F.Column:
-        return F.col(c if c in keys else f"old_{c}")
-
-    d_left = store.diff(left, v_left, store.current_version(left), include_old=True)
-    d_right = store.diff(right, v_right, store.current_version(right), include_old=True)
-
-    lkeys, rkeys = set(lmeta.key_columns), set(rmeta.key_columns)
+    d_left = store.diff(left, v_left, store.current_version(left))
+    d_right = store.diff(right, v_right, store.current_version(right))
     # the deltas' join-key column gets a reserved name so the terms stay
     # unambiguous when lkey == rkey (USING-style views)
     jk = "__jv_key"
-    # retract+assert via ONE explode per diff, not a self-union (r22):
-    # the union form embedded each manifest-diff join in BOTH branches,
-    # computing every delta twice per refresh — the explode emits an
-    # update row's retraction and assertion from one 2-element array
-    # (TableStore.changefeed's shape); identical signed-row multiset
-    def _signed(d, retract_s, assert_s):
-        arr = (
-            F.when(F.col("change_type") == "insert", F.array(assert_s))
-            .when(F.col("change_type") == "delete", F.array(retract_s))
-            .otherwise(F.array(retract_s, assert_s))
-        )
-        return d.select(F.explode(arr).alias("_e")).select("_e.*")
-
     # dL, pre-aggregated per join key (additive measures allow it)
-    l_delta = _signed(
-        d_left,
-        F.struct(
-            old(lkey, lkeys).alias(jk),
-            F.lit(-1).cast("long").alias("dn"),
-            (-old(measure_col, lkeys)).alias("dm"),
-        ),
-        F.struct(
-            F.col(lkey).alias(jk),
-            F.lit(1).cast("long").alias("dn"),
-            F.col(measure_col).alias("dm"),
-        ),
-    ).groupBy(jk).agg(F.sum("dn").alias("dn"), F.sum("dm").alias("dm"))
-    # dR keeps rows (retract/assert may carry different group values)
-    r_delta = _signed(
-        d_right,
-        F.struct(
-            old(rkey, rkeys).alias(jk),
-            F.lit(-1).cast("long").alias("sign"),
-            old(group_col, rkeys).alias(group_col),
-        ),
-        F.struct(
-            F.col(rkey).alias(jk),
-            F.lit(1).cast("long").alias("sign"),
-            F.col(group_col).alias(group_col),
-        ),
+    l_delta = (
+        d_left.groupBy(F.col(lkey).alias(jk))
+        .agg(F.sum(change_sign()).alias("dn"), F.sum(signed(measure_col)).alias("dm"))
+    )
+    # dR keeps rows (a retraction and an assertion may carry different
+    # group values)
+    r_delta = d_right.select(
+        F.col(rkey).alias(jk), change_sign().alias("sign"), group_col
     )
 
     r_new = store.scan(right)
@@ -1090,7 +1049,8 @@ def table_restore_diffs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kudu incremental backup/restore: a REPLICA table is built purely
     by replaying per-version diff scans — never by copying the source's
     files or rescanning its full state.  Each step applies diff(v-1, v)
-    as one keyed commit (asserts upserted, deletes applied via the same
+    as one keyed commit (insert and ``update_after`` rows upserted,
+    deletes applied via the same
     bucket-scoped write), so replicating k changed tablets costs O(k
     tablets) regardless of source size; the replayed replica must equal
     the source's final state bit-for-bit (the oracle's VALUES literal).
@@ -1103,10 +1063,10 @@ def table_restore_diffs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for v in range(1, src_store.current_version("snap") + 1):
             delta = src_store.diff("snap", v - 1, v)
-            asserts = delta.filter(F.col("change_type") != "delete").select(
-                "id", "name", "score"
-            )
-            dead = delta.filter(F.col("change_type") == "delete").select("id")
+            asserts = delta.filter(
+                F.col("_change_type").isin("insert", "update_after")
+            ).select("id", "name", "score")
+            dead = delta.filter(F.col("_change_type") == "delete").select("id")
             src_store.upsert("replica", asserts, delete_keys=dead)
         return _materialize(spark, src_store.scan("replica").orderBy("id"))
     finally:

@@ -1755,7 +1755,15 @@ def _create(store: TableStore, stmt: str) -> None:
             return _ctas(store, name, ctas.group("clauses"), ctas.group("select"))
         raise SqlDdlError(f"expected column list after table name: {stmt!r}")
     cols, after = _match_paren_block(rest, 0)
-    clauses = rest[after:]
+    store.create_table(name, cols, **_create_kwargs(rest[after:], "CREATE TABLE"))
+
+
+def _create_kwargs(clauses: str, verb: str) -> dict:
+    """The ``create_table`` layout arguments of a CREATE's clauses after
+    its column list (or, for CTAS, before its AS SELECT): key columns,
+    range splits, hash-in-range, bucket count and hive partition
+    columns, all from TBLPROPERTIES.  A managed table takes no LOCATION
+    and must name its key columns."""
     if re.search(r"\bLOCATION\s+'", clauses, re.IGNORECASE):
         # KuduStorageHandler.java:235-237
         raise SqlDdlError("LOCATION may not be specified for a managed table")
@@ -1764,49 +1772,38 @@ def _create(store: TableStore, stmt: str) -> None:
     if tbl:
         inner, _ = _match_paren_block(clauses, tbl.end() - 1)
         props = _parse_props(inner)
-    key_prop = next((props[p] for p in _KEY_PROPS if p in props), None)
+
+    def prop(names: tuple[str, ...]) -> str | None:
+        return next((props[p] for p in names if p in props), None)
+
+    def int_prop(names: tuple[str, ...], what: str) -> int | None:
+        raw = prop(names)
+        if raw is None:
+            return None
+        try:
+            return int(raw)
+        except ValueError:
+            raise SqlDdlError(f"{what} must be an integer, got {raw!r}") from None
+
+    key_prop = prop(_KEY_PROPS)
     if not key_prop or not key_prop.strip():
         # KuduStorageHandler.java:242-247 ("kudu.key_columns not specified")
         raise SqlDdlError(
-            "key columns not specified: CREATE TABLE requires "
+            f"key columns not specified: {verb} requires "
             "TBLPROPERTIES ('kudu.key_columns'='col[,col...]')"
         )
-    key_columns = [c.strip() for c in key_prop.split(",") if c.strip()]
-    split_prop = next((props[p] for p in _SPLIT_PROPS if p in props), None)
-    hir_prop = next((props[p] for p in _HASH_IN_RANGE_PROPS if p in props), None)
-    if hir_prop is not None:
-        try:
-            hir = int(hir_prop)
-        except ValueError:
-            raise SqlDdlError(
-                f"hash_in_range must be an integer, got {hir_prop!r}"
-            ) from None
-    else:
-        hir = None
-    nb_prop = next((props[p] for p in _NUM_BUCKETS_PROPS if p in props), None)
-    if nb_prop is not None:
-        try:
-            nb = int(nb_prop)
-        except ValueError:
-            raise SqlDdlError(
-                f"num_buckets must be an integer, got {nb_prop!r}"
-            ) from None
-    else:
-        nb = None
-    pb_prop = next((props[p] for p in _PARTITION_BY_PROPS if p in props), None)
-    store.create_table(
-        name,
-        cols,
-        key_columns,
-        range_splits=_parse_splits(split_prop) if split_prop else None,
-        hash_in_range=hir,
-        num_buckets=nb,
-        partition_by=(
+    split_prop, pb_prop = prop(_SPLIT_PROPS), prop(_PARTITION_BY_PROPS)
+    return {
+        "key_columns": [c.strip() for c in key_prop.split(",") if c.strip()],
+        "range_splits": _parse_splits(split_prop) if split_prop else None,
+        "hash_in_range": int_prop(_HASH_IN_RANGE_PROPS, "hash_in_range"),
+        "num_buckets": int_prop(_NUM_BUCKETS_PROPS, "num_buckets"),
+        "partition_by": (
             [c.strip() for c in pb_prop.split(",") if c.strip()]
             if pb_prop
             else None
         ),
-    )
+    }
 
 
 def _ctas(store: TableStore, name: str, clauses: str, select: str) -> None:
@@ -1814,25 +1811,12 @@ def _ctas(store: TableStore, name: str, clauses: str, select: str) -> None:
     (over whatever views the caller registered), the result's schema —
     validated against the same strict type lattice — becomes the table
     schema, and the rows land through the store's keyed insert.  Key
-    columns still come from the kudu.key_columns property, exactly like
-    a plain CREATE."""
-    if re.search(r"\bLOCATION\s+'", clauses, re.IGNORECASE):
-        raise SqlDdlError("LOCATION may not be specified for a managed table")
-    props: dict[str, str] = {}
-    tbl = re.search(r"\bTBLPROPERTIES\s*\(", clauses, re.IGNORECASE)
-    if tbl:
-        inner, _ = _match_paren_block(clauses, tbl.end() - 1)
-        props = _parse_props(inner)
-    key_prop = next((props[p] for p in _KEY_PROPS if p in props), None)
-    if not key_prop or not key_prop.strip():
-        raise SqlDdlError(
-            "key columns not specified: CREATE TABLE AS SELECT requires "
-            "TBLPROPERTIES ('kudu.key_columns'='col[,col...]')"
-        )
-    key_columns = [c.strip() for c in key_prop.split(",") if c.strip()]
+    columns and layout come from TBLPROPERTIES, exactly like a plain
+    CREATE."""
+    kwargs = _create_kwargs(clauses, "CREATE TABLE AS SELECT")
     store.register_views()
     df = store.spark.sql(_rewrite_version_clauses(store, select))
-    store.create_table(name, df.schema, key_columns)
+    store.create_table(name, df.schema, **kwargs)
     store.insert(name, df)
 
 

@@ -70,10 +70,11 @@ changefeed, bloom sidecar — reads files that committed manifests list,
 with ``basePath=data/`` (:meth:`TableStore._read_files`), so a reader
 sees exactly one committed version.  ``diff()`` is Kudu's *diff scan*
 (key-level changes between two snapshots, the incremental-backup
-primitive); ``changefeed()`` is its change feed over a version range:
-one scan of the files the range changed, each row tagged with its
-file's run of versions, and one window over the key that emits the
-events; ``vacuum()`` is Kudu's ancient-history mark
+primitive) and ``changefeed()`` its change feed over a version range;
+both are one reader over a list of manifests: one scan of the files
+the list changed, each row tagged with its file's run of list
+positions, and one window over the key that emits the events;
+``vacuum()`` is Kudu's ancient-history mark
 (``--tablet_history_max_age_sec``): drop manifests older than the last
 *K* and delete the files in ``data/`` that no kept manifest lists.
 Manifests are O(files), written once per mutation — no per-row
@@ -987,80 +988,25 @@ class TableStore:
             df = df.select(*columns)
         return df
 
-    def diff(
-        self,
-        name: str,
-        from_version: int,
-        to_version: int,
-        include_old: bool = False,
-    ) -> DataFrame:
+    def diff(self, name: str, from_version: int, to_version: int) -> DataFrame:
         """Key-level changes between two snapshots — Kudu's *diff scan*
-        (its incremental-backup primitive): one row per primary key whose
-        state changed, carrying the newer values (older values for
-        deletes) plus a ``change_type`` in {'insert','update','delete'}.
-        ``include_old=True`` appends ``old_<col>`` columns (NULL for
-        inserts) — what downstream incremental maintenance needs to
-        retract a changed row's former contribution.
+        (its incremental-backup primitive): the :meth:`changefeed` row
+        shape over the two manifests ``[from_version, to_version]``
+        alone, every event stamped ``_commit_version = to_version``.  A
+        key present only in ``from_version`` is a ``delete`` carrying its
+        old values, one present only in ``to_version`` an ``insert``,
+        and one whose values differ an ``update_before``/``update_after``
+        pair — the retraction and assertion an incremental consumer
+        signs (-1 / +1).  ``from_version > to_version`` is allowed and
+        keeps that direction: before-images come from ``from_version``.
 
         **Reads only changed tablets.** Data files are immutable and a
-        key lives in exactly one tablet, so any file present in BOTH
-        manifests contributes identical rows to both sides — those cancel
-        by definition and are never read: each side scans only its
-        manifest's files *outside the common set*.  A mutation batch
+        key lives in exactly one tablet, so a file listed by BOTH
+        manifests holds no changed key and is never read: the one scan
+        covers the manifests' symmetric difference, and a mutation batch
         touching k of B tablets makes the diff O(k tablets), not
-        O(table) — the property that lets a 100 TB table feed
-        incremental consumers per commit.  The full-outer join on the key
-        shuffles only those rows."""
-        meta = self.table_meta(name)
-        if meta.external:
-            raise TableStoreError("external tables have no snapshots")
-        keys = meta.key_columns
-        vals = [f.name for f in meta.schema.fields if f.name not in keys]
-        a_files = self._read_manifest(meta.name, from_version)["files"]
-        b_files = self._read_manifest(meta.name, to_version)["files"]
-        common = set(a_files) & set(b_files)
-        logical = [f.name for f in meta.schema.fields]
-        # full_outer with `on=keys` coalesces the key columns, and non-key
-        # columns are nullable, so presence on each side is tracked with an
-        # explicit pre-join marker literal.
-        old_m = (
-            self._read_files(meta, [f for f in a_files if f not in common])
-            .select(*logical)
-            .withColumn("_o", F.lit(1))
-        )
-        new_m = (
-            self._read_files(meta, [f for f in b_files if f not in common])
-            .select(*logical)
-            .withColumn("_n", F.lit(1))
-        )
-        j = old_m.join(new_m, on=keys, how="full_outer")
-        change = (
-            F.when(F.col("_o").isNull(), F.lit("insert"))
-            .when(F.col("_n").isNull(), F.lit("delete"))
-            .otherwise(F.lit("update"))
-        )
-        out_vals = [
-            F.when(F.col("_n").isNull(), old_m[f"{c}"]).otherwise(new_m[f"{c}"]).alias(c)
-            for c in vals
-        ]
-        if include_old:
-            out_vals += [old_m[c].alias(f"old_{c}") for c in vals]
-        cols = [*keys, *out_vals, change.alias("change_type")]
-        if not vals:
-            # key-only table: a key present on BOTH sides is identical by
-            # definition (there is nothing to update) — it only appears
-            # here because a bucket rewrite moved its neighbors' file.
-            # Without this filter it would surface as a spurious 'update'.
-            return j.filter(
-                F.col("_o").isNull() | F.col("_n").isNull()
-            ).select(*cols)
-        # an 'update' whose values are byte-identical is not a change
-        unchanged = F.lit(True)
-        for c in vals:
-            unchanged = unchanged & old_m[c].eqNullSafe(new_m[c])
-        return j.filter(
-            F.col("_o").isNull() | F.col("_n").isNull() | ~unchanged
-        ).select(*cols)
+        O(table)."""
+        return self._change_events(name, [from_version, to_version])
 
     def show_partitions(self, name: str) -> DataFrame:
         """The table's live tablets as (partition, n_files) rows — the
@@ -1141,27 +1087,40 @@ class TableStore:
         event).  Deletes and ``update_before`` rows carry the OLD values;
         inserts and ``update_after`` the new ones — replaying the feed
         onto the ``from_version`` snapshot reproduces ``to_version``
-        exactly, and the events are those of one :meth:`diff` per
-        commit in the range.
+        exactly.  It is :meth:`diff`'s reader given every manifest of
+        the range instead of its two ends (:meth:`_change_events`)."""
+        if from_version > to_version:
+            raise TableStoreError(
+                f"changefeed range is backwards: {from_version} > {to_version}"
+            )
+        return self._change_events(
+            name, list(range(from_version, to_version + 1))
+        )
 
-        **One scan, one window, at any depth.**  Data files are
-        immutable and enter and leave the manifests once, so each file
-        is present over one run of versions ``(first_v, last_v)``
-        (:func:`_segment_runs`); files present over the whole range hold
-        no changed key and are never read.  The changed files are read
-        by ONE :meth:`_read_files` call, each row takes its file's run
-        from a literal ``path → run`` map (Spark folds it into one
-        constant), and one ``lag``/``lead`` window over the key turns a
-        key's runs into events:
+    def _change_events(self, name: str, versions: list[int]) -> DataFrame:
+        """The one change reader behind :meth:`diff` and
+        :meth:`changefeed`: the key-level events across the ordered
+        manifest ``versions``, each stamped with the version at its list
+        position.
 
-        * a run starting at ``a > from_version`` right after the key's
-          previous run → ``update_before``/``update_after`` @ a if the
-          values differ, nothing if they are equal (a file rewrite —
-          :meth:`diff`'s unchanged-filter);
-        * a run starting at ``a > from_version`` with no adjacent
-          predecessor → ``insert`` @ a;
-        * a run ending at ``b < to_version`` with no adjacent successor
-          → ``delete`` @ b+1, carrying the departing values.
+        **One scan, one window.**  Data files are immutable and enter
+        and leave the manifests once, so each file is present over one
+        run of list positions ``(first, last)`` (:func:`_segment_runs`);
+        files present at every position hold no changed key and are
+        never read.  The changed files are read by ONE
+        :meth:`_read_files` call, each row takes its file's run from a
+        literal ``path → run`` map (Spark folds it into one constant),
+        and one ``lag``/``lead`` window over the key turns a key's runs
+        into events:
+
+        * a run starting at ``a > 0`` right after the key's previous run
+          → ``update_before``/``update_after`` @ a if the values differ,
+          nothing if they are equal (a file rewrite);
+        * a run starting at ``a > 0`` with no adjacent predecessor →
+          ``insert`` @ a;
+        * a run ending at ``b`` before the last position with no
+          adjacent successor → ``delete`` @ b+1, carrying the departing
+          values.
 
         The plan has one parquet scan and one shuffle, no join and no
         union, so a consumer tailing a 100 TB table reads only the
@@ -1170,16 +1129,12 @@ class TableStore:
         meta = self.table_meta(name)
         if meta.external:
             raise TableStoreError("external tables have no snapshots")
-        if from_version > to_version:
-            raise TableStoreError(
-                f"changefeed range is backwards: {from_version} > {to_version}"
-            )
         keys = meta.key_columns
         vals = [f.name for f in meta.schema.fields if f.name not in keys]
         logical = [f.name for f in meta.schema.fields]
-        # reads every manifest of the range: a missing or vacuumed one
-        # raises here, before any plan is built
-        runs = _segment_runs(self, meta.name, from_version, to_version)
+        # reads every listed manifest: a missing or vacuumed one raises
+        # here, before any plan is built
+        runs = _segment_runs(self, meta.name, versions)
         if not runs:
             return self.spark.createDataFrame(
                 [],
@@ -1220,11 +1175,11 @@ class TableStore:
         prev_last, next_first = F.col("_prev_last"), F.col("_next_first")
         continuation = prev_last.isNotNull() & (prev_last == first_v - 1)
         gap_after = next_first.isNull() | (next_first > last_v + 1)
-        arriving = first_v > from_version
-        departing = last_v < to_version
+        arriving = first_v > 0
+        departing = last_v < len(versions) - 1
 
-        def ev(tag: str, v: Column, image: str = "_img") -> Column:
-            fs = [F.lit(tag).alias("t"), v.cast("int").alias("v")]
+        def ev(tag: str, pos: Column, image: str = "_img") -> Column:
+            fs = [F.lit(tag).alias("t"), pos.alias("v")]
             return F.struct(*fs, *([F.col(image).alias("img")] if vals else []))
 
         events = [
@@ -1232,7 +1187,7 @@ class TableStore:
             F.when(departing & gap_after, ev("delete", last_v + 1)),
         ]
         if vals:
-            # same per-column null-safe rule as diff's unchanged-filter
+            # a byte-identical value image is a file rewrite, not a change
             changed = F.lit(False)
             for c in vals:
                 changed = changed | ~F.col(f"_prev_img.{c}").eqNullSafe(
@@ -1243,15 +1198,17 @@ class TableStore:
                 F.when(update, ev("update_before", first_v, "_prev_img")),
                 F.when(update, ev("update_after", first_v)),
             ]
-        return rows.select(
-            *keys,
-            F.explode(F.filter(F.array(*events), lambda e: e.isNotNull())).alias(
-                "_e"
-            ),
-        ).select(
-            *[c if c in keys else F.col(f"_e.img.{c}").alias(c) for c in logical],
-            F.col("_e.t").alias("_change_type"),
-            F.col("_e.v").alias("_commit_version"),
+        version_at = F.array(*[F.lit(v) for v in versions])
+        # explode, then drop the null slots: a higher-order filter on the
+        # array runs interpreted per row and doubled the reader's wall
+        return (
+            rows.select(*keys, F.explode(F.array(*events)).alias("_e"))
+            .filter(F.col("_e").isNotNull())
+            .select(
+                *[c if c in keys else F.col(f"_e.img.{c}").alias(c) for c in logical],
+                F.col("_e.t").alias("_change_type"),
+                version_at[F.col("_e.v")].alias("_commit_version"),
+            )
         )
 
     def vacuum(self, name: str, keep_last: int = 1) -> dict:
@@ -1485,8 +1442,9 @@ class TableStore:
         reads ``%20``, a ``%`` reads ``%25``) — so the part after the
         last ``/data/`` is taken (tablet directories are ``col=value``,
         never ``data``) and percent-decoded.  The URI leaves ``+`` as
-        itself, which ``url_decode`` would read as a space."""
-        rel = F.regexp_extract(F.col("_metadata.file_path"), r"^.*/data/(.*)$", 1)
+        itself, which ``url_decode`` would read as a space.  It runs per
+        row: ``substring_index`` costs a fraction of a regex there."""
+        rel = F.substring_index(F.col("_metadata.file_path"), "/data/", -1)
         return F.url_decode(F.replace(rel, F.lit("+"), F.lit("%2B")))
 
     def _scan_raw(self, meta: TableMeta) -> DataFrame:
@@ -1554,12 +1512,17 @@ class TableStore:
                 f"table {name!r} is not range-partitioned: create it with "
                 "range_splits, or use scan(predicate=...) on a hash layout"
             )
+        out_cols = columns or [f.name for f in meta.schema.fields]
+        known = {f.name for f in meta.schema.fields}
+        bad = [c for c in out_cols if c not in known]
+        if bad:
+            raise TableStoreError(f"unknown projected columns: {bad}")
         if (
             lower is not None
             and upper is not None
             and self._range_key(meta, lower) >= self._range_key(meta, upper)
         ):
-            return self.spark.createDataFrame([], meta.schema)
+            return self.spark.createDataFrame([], meta.schema).select(*out_cols)
         rc = meta.key_columns[0]
         typ = self._range_col_type(meta)
         df = self._scan_raw(meta)
@@ -1574,11 +1537,6 @@ class TableStore:
             df = df.filter(F.col(rc) >= F.lit(lower).cast(typ))
         if upper is not None:
             df = df.filter(F.col(rc) < F.lit(upper).cast(typ))
-        out_cols = columns or [f.name for f in meta.schema.fields]
-        known = {f.name for f in meta.schema.fields}
-        bad = [c for c in out_cols if c not in known]
-        if bad:
-            raise TableStoreError(f"unknown projected columns: {bad}")
         return df.select(*out_cols)
 
     def register_views(self, *names: str) -> None:
@@ -1895,10 +1853,11 @@ class TableStore:
         and the merge touches only changed GROUPS (an upsert into the
         groups' buckets plus a bounded delete of emptied groups).  A
         billion-row base with a thousand changed rows refreshes in
-        thousand-row time; the base is never rescanned.  Retractions
-        (update/delete) subtract the old row's contribution via the
-        diff's ``old_*`` columns; groups whose count reaches zero are
-        deleted so the view never reports phantom empty groups.
+        thousand-row time; the base is never rescanned.  Each diff row
+        is signed: inserts and ``update_after`` images add their
+        contribution, deletes and ``update_before`` images subtract it;
+        groups whose count reaches zero are deleted so the view never
+        reports phantom empty groups.
 
         Crash safety: the merge is guarded by a two-phase marker in
         mview.json.  ``pending`` records the view-table version BEFORE
@@ -1925,48 +1884,11 @@ class TableStore:
         cur = self.current_version(base)
         if cur == mv["last_version"]:
             return {"refreshed": False, "from": cur, "to": cur}
-        bmeta = self.table_meta(base)
-        types = {f.name: f.dataType for f in bmeta.schema.fields}
-        base_keys = set(bmeta.key_columns)
-
-        # key columns never change within a row, so the diff carries them
-        # un-prefixed (coalesced across the snapshot join); every other
-        # retracted value reads its old_* column
-        def old(c: str):
-            return F.col(c if c in base_keys else f"old_{c}")
-
-        d = self.diff(base, mv["last_version"], cur, include_old=True)
-        # retract+assert via ONE explode, not a self-union (r22): the
-        # union form embedded the whole manifest-diff join in BOTH
-        # branches, so the delta-sized diff was computed twice per
-        # refresh — at 100 TB, twice the refresh's dominant cost.  An
-        # update row emits its retraction and assertion from a 2-element
-        # array instead (the same shape :meth:`changefeed` always used);
-        # same signed-row multiset, so the per-group sums are unchanged
-        # (guide §7.2 "duplicated subtrees").
-        retract_s = F.struct(
-            *[old(c).alias(c) for c in gcols],
-            F.lit(-1).cast("long").alias("dn"),
-            *[(-old(c)).alias(f"d_{c}") for c in scols],
-        )
-        assert_s = F.struct(
-            *[F.col(c).alias(c) for c in gcols],
-            F.lit(1).cast("long").alias("dn"),
-            *[F.col(c).alias(f"d_{c}") for c in scols],
-        )
-        signed = (
-            F.when(F.col("change_type") == "insert", F.array(assert_s))
-            .when(F.col("change_type") == "delete", F.array(retract_s))
-            .otherwise(F.array(retract_s, assert_s))
-        )
-        delta = (
-            d.select(F.explode(signed).alias("_e"))
-            .select("_e.*")
-            .groupBy(*gcols)
-            .agg(
-                F.sum("dn").alias("dn"),
-                *[F.sum(f"d_{c}").alias(f"d_{c}") for c in scols],
-            )
+        types = {f.name: f.dataType for f in self.table_meta(base).schema.fields}
+        d = self.diff(base, mv["last_version"], cur)
+        delta = d.groupBy(*gcols).agg(
+            F.sum(change_sign()).alias("dn"),
+            *[F.sum(signed(c)).alias(f"d_{c}") for c in scols],
         )
         merged = delta.join(self.scan(name), on=gcols, how="left").select(
             *gcols,
@@ -2756,30 +2678,47 @@ class TableStore:
         self._commit_version(meta, base, "insert_overwrite", added, rows)
 
 
+def signed(c: str | Column) -> Column:
+    """Column ``c`` of a change row with the row's sign applied: as is
+    for a row that asserts its image (insert, update_after), negated for
+    one that retracts it (delete, update_before) — how an incremental
+    consumer of :meth:`TableStore.diff` folds events into additive
+    aggregates.  The column keeps its type."""
+    c = F.col(c) if isinstance(c, str) else c
+    return F.when(
+        F.col("_change_type").isin("insert", "update_after"), c
+    ).otherwise(-c)
+
+
+def change_sign() -> Column:
+    """+1 or -1 per change row: :func:`signed` of a long 1."""
+    return signed(F.lit(1).cast("long"))
+
+
 def _segment_runs(
-    store: TableStore, name: str, lo: int, hi: int
+    store: TableStore, name: str, versions: list[int]
 ) -> dict[tuple[int, int], list[str]]:
-    """Per-file presence runs across manifests ``lo..hi``:
-    ``{(first_v, last_v): [data-relative paths]}``.
+    """Per-file presence runs across the ordered manifests ``versions``:
+    ``{(first, last): [data-relative paths]}``, where ``first``/``last``
+    are list positions.
 
     Every commit lists its base's files minus the ones it replaces plus
     new part names, so a file, once dropped, is never listed again: its
-    presence across the range is one contiguous run from its first to
-    its last listing.  Files present in EVERY version of the range are
-    EXCLUDED: an immutable file spanning the whole range means none of
+    presence across consecutive versions is one contiguous run from its
+    first to its last listing, and across two versions it is present in
+    one, the other, or both.  Files present at EVERY position are
+    EXCLUDED: an immutable file spanning the whole list means none of
     its keys changed state inside it (a key lives in exactly one tablet
-    file per version), the same cancellation :meth:`TableStore.diff`
-    applies to the two-manifest common set — extended here to
-    ``hi - lo`` manifests at once."""
+    file per version)."""
     first: dict[str, int] = {}
     last: dict[str, int] = {}
-    for v in range(lo, hi + 1):
+    for i, v in enumerate(versions):
         for rel in store._read_manifest(name, v)["files"]:
-            first.setdefault(rel, v)
-            last[rel] = v
+            first.setdefault(rel, i)
+            last[rel] = i
     groups: dict[tuple[int, int], list[str]] = {}
     for rel in sorted(first):
         run = (first[rel], last[rel])
-        if run != (lo, hi):
+        if run != (0, len(versions) - 1):
             groups.setdefault(run, []).append(rel)
     return groups

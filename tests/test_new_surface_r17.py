@@ -484,10 +484,10 @@ def test_restore_diffs_one_commit_per_replayed_version(spark):
             delta = store.diff("snap", v - 1, v)
             store.upsert(
                 "rep",
-                delta.filter(F.col("change_type") != "delete").select(
-                    "id", "name", "score"
-                ),
-                delete_keys=delta.filter(F.col("change_type") == "delete").select("id"),
+                delta.filter(
+                    F.col("_change_type").isin("insert", "update_after")
+                ).select("id", "name", "score"),
+                delete_keys=delta.filter(F.col("_change_type") == "delete").select("id"),
             )
         got = sorted(tuple(r) for r in store.scan("rep").collect())
         want = sorted(tuple(r) for r in store.scan("snap").collect())

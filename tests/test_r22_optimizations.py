@@ -120,7 +120,8 @@ def test_concurrent_pins_under_one_tag_leak_nothing(spark):
 
 def test_quiet_band_raises_limit_to_observed_scatter():
     ref = {"a": 1.0, "b": 1.0}
-    band = {"a": {"quiet_min": 1.0, "quiet_max": 4.0, "n_samples": 5}}
+    # a trusted entry: 5 samples, quiet_max / quiet_min = 2.5
+    band = {"a": {"quiet_min": 1.6, "quiet_max": 4.0, "n_samples": 5}}
     # a at 3.9: over the 1.8 ratio band but INSIDE the observed quiet
     # scatter — never flagged (the hand-adjudication rule, mechanical)
     v = compare({"queries": {"a": 3.9, "b": 1.0}}, ref, quiet_band=band)
@@ -128,10 +129,18 @@ def test_quiet_band_raises_limit_to_observed_scatter():
     # outside even the quiet scatter: flagged, with the band attached
     v = compare({"queries": {"a": 4.1, "b": 1.0}}, ref, quiet_band=band)
     assert [e["key"] for e in v["flagged"]] == ["a"]
-    assert v["flagged"][0]["quiet_band"] == [1.0, 4.0]
+    assert v["flagged"][0]["quiet_band"] == [1.6, 4.0]
+    # a 4x-wide entry is untrusted and raises nothing
+    band = {"a": {"quiet_min": 1.0, "quiet_max": 4.0, "n_samples": 5}}
+    v = compare({"queries": {"a": 3.9, "b": 1.0}}, ref, quiet_band=band)
+    assert [e["key"] for e in v["flagged"]] == ["a"]
 
 
 def test_quiet_band_serves_as_reference_for_unknown_keys():
     band = {"nk": {"quiet_min": 2.0, "quiet_max": 2.5, "n_samples": 3}}
     v = compare({"queries": {"nk": 2.4}}, {}, quiet_band=band)
-    assert v["new"] == [] and v["ok"] == 1
+    # inside the band-derived limit, but with no recorded history: new
+    assert v["new"] == [{"key": "nk", "cand": 2.4, "band_ref": 2.0}]
+    assert v["ok"] == 0
+    v = compare({"queries": {"nk": 9.9}}, {}, quiet_band=band)
+    assert [e["key"] for e in v["flagged"]] == ["nk"]

@@ -122,8 +122,8 @@ def test_diff_noop_upsert_is_not_an_update(spark, store):
     store.upsert(
         "t", spark.createDataFrame([(1, "v1"), (2, "changed")], meta.schema)
     )
-    d = {(r["id"]): r["change_type"] for r in store.diff("t", v1, v1 + 1).collect()}
-    assert d == {2: "update"}
+    d = _rows(store.diff("t", v1, v1 + 1).select("id", "_change_type"))
+    assert d == [(2, "update_after"), (2, "update_before")]
 
 
 def test_diff_empty_between_identical_versions(spark, store):
@@ -187,21 +187,29 @@ def test_diff_reads_only_changed_tablets(spark, store, tmp_path):
     # normalize: inputFiles are absolute under data/
     read = {p.split("data/")[-1] for p in read}
     assert read == sym, (read, sym)
-    got = {(r["id"], r["change_type"]) for r in d.collect()}
-    assert got == {(1, "update")}
+    got = {(r["id"], r["_change_type"]) for r in d.collect()}
+    assert got == {(1, "update_before"), (1, "update_after")}
 
 
-def test_diff_include_old_columns(spark, store):
+def test_diff_carries_before_and_after_images(spark, store):
     meta = _mk(store, spark)
     v1 = store.current_version("t")
     store.upsert("t", spark.createDataFrame([(1, "one"), (99, "new")], meta.schema))
     store.delete_where("t", "id = 2")
     v2 = store.current_version("t")
-    rows = {r["id"]: r for r in store.diff("t", v1, v2, include_old=True).collect()}
-    assert rows[1]["change_type"] == "update"
-    assert rows[1]["v"] == "one" and rows[1]["old_v"] == "v1"
-    assert rows[99]["change_type"] == "insert" and rows[99]["old_v"] is None
-    assert rows[2]["change_type"] == "delete" and rows[2]["old_v"] == "v2"
+    rows = {
+        (r["id"], r["_change_type"]): r for r in store.diff("t", v1, v2).collect()
+    }
+    # one update_before/update_after pair for key 1, one event for 99 and 2
+    assert sorted(rows) == [
+        (1, "update_after"), (1, "update_before"), (2, "delete"), (99, "insert")
+    ]
+    assert rows[(1, "update_after")]["v"] == "one"
+    assert rows[(1, "update_before")]["v"] == "v1"
+    # an insert has no before-image; a delete carries its old values
+    assert rows[(99, "insert")]["v"] == "new"
+    assert rows[(2, "delete")]["v"] == "v2"
+    assert {r["_commit_version"] for r in rows.values()} == {v2}
 
 
 def test_snapshot_on_hive_partitioned_layout(spark, store):
@@ -220,7 +228,7 @@ def test_snapshot_on_hive_partitioned_layout(spark, store):
     assert _rows(store.scan_snapshot("t", v1)) == [
         (1, "en", "a"), (2, "de", "b"), (3, "en", "c")
     ]
-    d = {r["id"]: r["change_type"] for r in store.diff("t", v1, v1 + 1).collect()}
+    d = {r["id"]: r["_change_type"] for r in store.diff("t", v1, v1 + 1).collect()}
     assert d == {1: "delete", 3: "delete"}
 
 
@@ -251,24 +259,47 @@ def _replay(base_df, feed_df, key="id"):
     )
 
 
+def _snapshot_model(store, name, version):
+    """Collected ``scan_snapshot(version)`` rows as ``{key tuple: row}``."""
+    meta = store.table_meta(name)
+    names = [f.name for f in meta.schema.fields]
+    key_pos = [names.index(k) for k in meta.key_columns]
+    return {
+        tuple(row[i] for i in key_pos): tuple(row)
+        for row in store.scan_snapshot(name, version).collect()
+    }
+
+
+def _model_diff(old, new, stamp):
+    """The change events between two collected snapshots, stamped
+    ``stamp``: a key only in ``old`` is a delete of its old row, one
+    only in ``new`` an insert, and one whose row differs an
+    update_before/update_after pair."""
+    events = []
+    for k in old.keys() | new.keys():
+        o, n = old.get(k), new.get(k)
+        if o == n:
+            continue
+        if o is None:
+            events.append((*n, "insert", stamp))
+        elif n is None:
+            events.append((*o, "delete", stamp))
+        else:
+            events.append((*o, "update_before", stamp))
+            events.append((*n, "update_after", stamp))
+    return sorted(events)
+
+
 def _diff_events(store, name, frm, to):
     """The expected feed over ``frm..to``, sorted like :func:`_rows`,
-    built independently of ``changefeed``: one collected
-    ``diff(v, v + 1, include_old=True)`` per commit, each insert and
-    delete one event and each update a before/after pair at ``v + 1``."""
-    meta = store.table_meta(name)
-    logical = [f.name for f in meta.schema.fields]
-    old = [c if c in meta.key_columns else f"old_{c}" for c in logical]
-    events = []
-    for v in range(frm, to):
-        for r in store.diff(name, v, v + 1, include_old=True).collect():
-            new_img = tuple(r[c] for c in logical)
-            if r["change_type"] == "update":
-                events.append((*(r[c] for c in old), "update_before", v + 1))
-                events.append((*new_img, "update_after", v + 1))
-            else:
-                events.append((*new_img, r["change_type"], v + 1))
-    return sorted(events)
+    built in pure Python from collected snapshots — independent of
+    ``diff`` and ``changefeed``, which share one reader: each commit's
+    events are the key-level difference of ``scan_snapshot(v)`` and
+    ``scan_snapshot(v + 1)``, stamped ``v + 1``."""
+    snaps = {v: _snapshot_model(store, name, v) for v in range(frm, to + 1)}
+    return sorted(
+        e for v in range(frm, to) for e in _model_diff(snaps[v], snaps[v + 1], v + 1)
+    )
 
 
 def test_changefeed_update_carries_before_and_after_images(spark, store):
@@ -406,13 +437,51 @@ def test_key_only_table_diff_and_feed_have_no_spurious_updates(spark, store):
     v1 = store.current_version("t")
     store.delete_where("t", "id = 3")  # rewrites id 3's bucket — its
     v2 = store.current_version("t")    # neighbors move files unchanged
-    d = [(r["id"], r["change_type"]) for r in store.diff("t", v1, v2).collect()]
+    d = [(r["id"], r["_change_type"]) for r in store.diff("t", v1, v2).collect()]
     assert d == [(3, "delete")]
     feed = [
         (r["id"], r["_change_type"], r["_commit_version"])
         for r in store.changefeed("t", v1, v2).collect()
     ]
     assert feed == [(3, "delete", v2)]
+
+
+@pytest.mark.parametrize("seed", [11, 4242])
+def test_diff_randomized_against_model(spark, store, seed):
+    """diff(a, b) over a random mutation history equals the pure-Python
+    difference of the two collected snapshots for random version pairs:
+    forward, backward (before-images from ``a``, after-images from
+    ``b``) and the empty ``a == b`` pair."""
+    import random
+
+    rng = random.Random(seed)
+    meta = _mk(store, spark)
+    for _ in range(6):
+        op = rng.choice(["upsert", "insert", "delete"])
+        if op == "upsert":
+            # some rows restate a key's original value: a no-op rewrite
+            # when the key still holds it
+            ks = rng.sample(range(1, 15), rng.randint(1, 4))
+            rows = [(k, rng.choice([f"v{k}", f"u{rng.randint(0, 2)}"])) for k in ks]
+            store.upsert("t", spark.createDataFrame(rows, meta.schema))
+        elif op == "insert":
+            k = rng.randint(20, 60)
+            try:
+                store.insert_values("t", [(k, f"i{k}")])
+            except TableStoreError:
+                pass  # duplicate-key insert is rejected; history unchanged
+        else:
+            store.delete_where("t", f"id % 5 = {rng.randint(0, 4)}")
+    cur = store.current_version("t")
+    snaps = {v: _snapshot_model(store, "t", v) for v in range(cur + 1)}
+    pairs = [(rng.randint(0, cur), rng.randint(0, cur)) for _ in range(5)]
+    a = rng.randint(0, cur)
+    pairs += [(a, a), (cur, rng.randint(0, cur - 1))]
+    for a, b in pairs:
+        want = _model_diff(snaps[a], snaps[b], b)
+        assert _rows(store.diff("t", a, b)) == want, (a, b)
+        if a == b:
+            assert want == []
 
 
 @pytest.mark.parametrize("seed", [2024, 7])
@@ -621,6 +690,23 @@ def test_changefeed_plan_is_one_scan_and_one_window(spark, store):
         assert "Union" not in text, (frm, to)
         assert text.count("Window [") == 1, (frm, to)
         assert plan.collectLeaves().size() == 1, (frm, to)
+
+
+def test_diff_plan_is_one_scan_and_one_window(spark, store):
+    """diff is the changefeed's reader over two manifests: one parquet
+    scan under one window and no join, in either direction and over
+    non-adjacent versions."""
+    meta = _mk(store, spark)
+    v1 = store.current_version("t")
+    store.upsert("t", spark.createDataFrame([(1, "one"), (9, "nine")], meta.schema))
+    store.delete_where("t", "id = 2")
+    v3 = store.current_version("t")
+    for a, b in ((v1, v1 + 1), (v1, v3), (v3, v1), (0, v3)):
+        plan = _plan(store.diff("t", a, b))
+        text = plan.toString()
+        assert "Join" not in text, (a, b)
+        assert text.count("Window [") == 1, (a, b)
+        assert plan.collectLeaves().size() == 1, (a, b)
 
 
 def test_changes_between_starts_at_most_two_jobs(spark, store):

@@ -367,6 +367,20 @@ def test_range_layout_scan_prunes_to_intersected_ranges(spark, store):
     assert store.scan_range("ev", upper=50).count() == 5
 
 
+def test_scan_range_empty_interval_keeps_projection(spark, store):
+    """An empty interval (lower >= upper) projects and validates columns
+    exactly like a non-empty one."""
+    store.create_table("r", "id bigint, v string", ["id"], range_splits=[10])
+    store.insert_values("r", [(1, "a"), (20, "b")])
+    for lo, hi in ((5, 1), (5, 5), (0, 30)):
+        df = store.scan_range("r", lo, hi, columns=["v"])
+        assert df.columns == ["v"], (lo, hi)
+        with pytest.raises(TableStoreError, match="unknown projected"):
+            store.scan_range("r", lo, hi, columns=["nope"])
+    assert store.scan_range("r", 5, 1, columns=["v"]).count() == 0
+    assert store.scan_range("r", 5, 1).columns == ["id", "v"]
+
+
 def test_range_layout_files_are_range_partitioned_dirs(spark, store):
     """The physical layout is one kr=<i> directory per populated range,
     with rows routed by the split points (write path twin of the scan's
@@ -1643,6 +1657,42 @@ def test_ctas_rejections_and_types(spark, store):
         meta = store.table_meta("t")
         key_field = next(f for f in meta.schema.fields if f.name == "id")
         assert not key_field.nullable
+    finally:
+        spark.catalog.dropTempView("ctas_src")
+
+
+def test_ctas_keeps_layout_properties(spark, store):
+    """CTAS reads the same TBLPROPERTIES layout as a plain CREATE: bucket
+    count, range splits, hash-in-range and hive partition columns all
+    reach the created table, and the rows land under that layout."""
+    from hivekudu_handler_spark.sources.sql_ddl import execute
+
+    rows = [(i, f"v{i}", "en" if i % 2 else "de") for i in range(1, 7)]
+    spark.createDataFrame(rows, "id int, v string, lang string").createOrReplaceTempView(
+        "ctas_src"
+    )
+    cases = {
+        "hb": ("'kudu.num_buckets'='3'", {"num_buckets": 3}),
+        "rg": ("'kudu.range_splits'='2'", {"range_splits": [2]}),
+        "rh": (
+            "'kudu.range_splits'='3', 'kudu.hash_in_range'='2'",
+            {"range_splits": [3], "hash_in_range": 2},
+        ),
+        "pb": ("'kudu.partition_by'='lang'", {"partition_by": ["lang"]}),
+    }
+    try:
+        for name, (props, want) in cases.items():
+            execute(
+                store,
+                f"CREATE TABLE {name} TBLPROPERTIES ('kudu.key_columns'='id', "
+                f"{props}) AS SELECT * FROM ctas_src",
+            )
+            meta = store.table_meta(name)
+            assert meta.key_columns == ["id"], name
+            for field, value in want.items():
+                assert getattr(meta, field) == value, (name, field)
+            got = sorted(tuple(r) for r in store.scan(name, ["id", "v", "lang"]).collect())
+            assert got == rows, name
     finally:
         spark.catalog.dropTempView("ctas_src")
 

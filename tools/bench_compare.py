@@ -36,6 +36,11 @@ import sys
 
 BAND_RATIO = 1.5
 BAND_FLOOR_S = 0.3
+# a quiet-band entry is trusted only with enough samples and a bounded
+# spread: a majority-contended sample set would otherwise turn its
+# contended median into a permanent never-flag ceiling
+QUIET_SPREAD_MAX = 2.5
+QUIET_MIN_SAMPLES = 3
 
 
 def _load(path: str) -> dict:
@@ -73,6 +78,19 @@ def load_quiet_band(path: str | None = None) -> dict[str, dict]:
         return json.load(f)
 
 
+def band_entry_trusted(entry: dict) -> bool:
+    """Whether a quiet-band entry may serve as a reference: at least
+    ``QUIET_MIN_SAMPLES`` samples and ``quiet_max / quiet_min`` at most
+    ``QUIET_SPREAD_MAX``."""
+    lo, hi = entry.get("quiet_min"), entry.get("quiet_max")
+    return (
+        lo is not None
+        and hi is not None
+        and entry.get("n_samples", 0) >= QUIET_MIN_SAMPLES
+        and hi <= QUIET_SPREAD_MAX * lo
+    )
+
+
 def compare(
     candidate: dict,
     reference: dict[str, float],
@@ -91,7 +109,11 @@ def compare(
     least the key's observed ``quiet_max``: a timing inside the scatter
     that a QUIET host has already produced is never evidence of a
     regression (the adjudication rule every round's verdict applied by
-    hand — now mechanical, from committed data alone).
+    hand — now mechanical, from committed data alone).  Only trusted
+    entries (:func:`band_entry_trusted`) are consulted; the others are
+    listed under ``untrusted_band``.  A key whose only reference is the
+    band's ``quiet_min`` has no recorded history: within its limit it
+    is reported under ``new`` (with ``band_ref``), never counted ok.
     """
     timings: dict[str, float] = candidate.get("queries", {})
     loads: dict[str, float] = candidate.get("loadavg_1m", {}) or {}
@@ -111,6 +133,10 @@ def compare(
            "run_quiet": run_quiet, "start_1m": start_1m,
            "flagged": [], "excused": [], "new": [], "ok": 0}
     quiet_band = quiet_band or {}
+    out["untrusted_band"] = sorted(
+        k for k in timings if k in quiet_band and not band_entry_trusted(quiet_band[k])
+    )
+    quiet_band = {k: e for k, e in quiet_band.items() if band_entry_trusted(e)}
     out["quiet_band_keys"] = sum(
         1 for k in timings if "quiet_max" in quiet_band.get(k, {})
     )
@@ -118,7 +144,8 @@ def compare(
         cand = timings[key]
         ref = reference.get(key)
         band = quiet_band.get(key, {})
-        if ref is None and "quiet_min" in band:
+        band_only = ref is None and "quiet_min" in band
+        if band_only:
             ref = band["quiet_min"]
         if ref is None:
             out["new"].append({"key": key, "cand": cand})
@@ -127,7 +154,10 @@ def compare(
         if "quiet_max" in band:
             limit = max(limit, band["quiet_max"])
         if cand <= limit:
-            out["ok"] += 1
+            if band_only:
+                out["new"].append({"key": key, "cand": cand, "band_ref": ref})
+            else:
+                out["ok"] += 1
             continue
         entry = {
             "key": key, "cand": round(cand, 2), "ref": round(ref, 2),
