@@ -174,8 +174,8 @@ def shingle_pair_stats(
     the candidate side is small after thresholding and AQE picks the
     strategy from runtime sizes instead of a corpus-sized broadcast.
     """
+    # pinned (materialized) before the four consumer branches race
     sh = pins.pin("dedup.pairstats.shingles", doc_shingles(spark, sf_dir))
-    sh.count()  # materialize before the four consumer branches race
     ex = sh.select(
         "doc_id", F.explode("shingles").alias("shingle")
     ).select("doc_id", F.xxhash64("shingle").alias("shingle"))
@@ -554,10 +554,10 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("source").isin(*_BATCH_SOURCES).alias("is_batch")
     )
+    # pinned (materialized) before the consumer branches race
     sh = pins.pin(
         "dedup.incr_pairs.shingles", doc_shingles(spark, sf_dir).join(d, "doc_id")
     )
-    sh.count()  # materialize before the consumer branches race
     ex = (
         sh.select("doc_id", "is_batch", F.explode("shingles").alias("shingle"))
         .select("doc_id", "is_batch", F.xxhash64("shingle").alias("shingle"))
@@ -755,13 +755,12 @@ def _bands_from_sigs(sigs: DataFrame) -> DataFrame:
     )
 
 
-def _minhash_band_table(sh: DataFrame) -> DataFrame:
-    """Bands straight from shingles; the signature table is persisted
-    and materialized once — it feeds both sides of band joins
-    (pin-registered so repeated calls release the prior generation)."""
-    sigs = pins.pin("dedup.minhash.sigs", _minhash_sigs(sh))
-    sigs.count()  # materialize once; feeds both sides of the band join
-    return _bands_from_sigs(sigs)
+def _minhash_band_table(sh: DataFrame, pin_tag: str) -> DataFrame:
+    """Bands straight from shingles; the signature table is pinned
+    (persisted and materialized once) under the caller's own tag — it
+    feeds both sides of band joins, and two callers sharing one tag
+    would release each other's signatures on every call."""
+    return _bands_from_sigs(pins.pin(pin_tag, _minhash_sigs(sh)))
 
 
 @query("dedup_minhash", oracle=_jaccard_oracle(0.5), tags=("dedup", "approx"))
@@ -791,8 +790,7 @@ def dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = pins.pin("dedup.minhash.shingles", doc_shingles(spark, sf_dir)).filter(
         F.size("shingles") > 0
     )
-    sh.count()  # materialize before the consumer branches race
-    bands = _minhash_band_table(sh)
+    bands = _minhash_band_table(sh, pin_tag="dedup.minhash.sigs")
     a = bands.alias("a")
     b = bands.alias("b")
     cand = (
@@ -864,8 +862,9 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = pins.pin(
         "dedup.incremental.shingles", doc_shingles(spark, sf_dir).join(d, "doc_id")
     ).filter(F.size("shingles") > 0)
-    sh.count()  # materialize before the consumer branches race
-    bands = _minhash_band_table(sh.select("doc_id", "shingles")).join(d, "doc_id")
+    bands = _minhash_band_table(
+        sh.select("doc_id", "shingles"), pin_tag="dedup.incremental.sigs"
+    ).join(d, "doc_id")
     a = bands.filter("is_batch").alias("a")
     b = bands.alias("b")
     cand = (
@@ -951,7 +950,6 @@ def dedup_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dedup.sigstore.shingles",
             doc_shingles(spark, sf_dir).join(flags, "doc_id"),
         ).filter(F.size("shingles") > 0)
-        sh.count()
         sig_cols = ", ".join(f"s{i} bigint" for i in range(_MH_K))
         store.create_table("sig_store", f"doc_id bigint, {sig_cols}", ["doc_id"])
         corpus_sigs = _minhash_sigs(
@@ -963,7 +961,6 @@ def dedup_signature_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dedup.sigstore.batch_sigs",
             _minhash_sigs(sh.filter("is_batch").select("doc_id", "shingles")),
         )
-        batch_sigs.count()
         stored = store.scan("sig_store")  # corpus side reads storage
         a = _bands_from_sigs(batch_sigs).alias("a")
         corpus_b = _bands_from_sigs(stored).withColumn("is_batch", F.lit(False))
@@ -1116,7 +1113,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # table, and the r20 plan (0 ReusedExchange) rebuilt the entire
     # tokenize → term-count → 60-bit-sum pipeline for the broadcast side
     # — the cache is doc_id+sig (16 B/doc, model-of-the-corpus sized);
-    # pin-registered so repeated calls release the prior generation (r22)
+    # pin-registered: a repeated call reuses it or releases it (r22)
     sigs = pins.pin(
         "dedup.simhash.sigs", bit_sums.select("doc_id", sig_expr.alias("sig"))
     )
@@ -1325,15 +1322,15 @@ def ann_verified_pairs(
     # cached doubles per pair is bit-identical (same fold, same sqrt,
     # same single multiply) at a third of the per-pair expression cost
     # — and candidate pairs outnumber vectors ~1000× at this banding.
+    # one materialization feeds signatures and both verify sides
     e = pins.pin(
         "dedup.ann_verified.e",
         _nonzero(e_all).withColumn("nrm", _norm(F.col("v"))),
     )
-    e.count()  # one materialization feeds signatures and both verify sides
+    # both sides of the band self-join read the pinned signatures:
+    # unpersisted, each side would re-run the full hyperplane crossJoin
+    # + sign aggregation (measured 3× key cost)
     sigs = pins.pin("dedup.ann_verified.sigs", _signatures(e, planes))
-    sigs.count()  # both sides of the band self-join read the cached
-    # signatures: unpersisted, each side would re-run the full
-    # hyperplane crossJoin + sign aggregation (measured 3× key cost)
     bands = sigs.select(
         "vec_id",
         F.posexplode(

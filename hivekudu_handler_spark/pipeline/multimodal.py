@@ -635,14 +635,14 @@ def mm_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (all-pairs is oracle-side only; the engine side never materializes
     it)."""
     thumbs = mm_resize(spark, sf_dir).filter(F.col("src_side") > 0)
+    # pinned (materialized): the decode→thumbnail Python path runs
+    # ONCE; both sides of the band self-join read the 16-byte/doc
+    # signature table (without this the whole two-pass image pipeline
+    # executes per plan branch — measured 47 s vs 6 s at sf0.1)
     sigs = pins.pin(
         "mm.phash.sigs",
         thumbs.mapInPandas(_phash_batch, schema="doc_id bigint, sig bigint"),
     )
-    sigs.count()  # materialize: the decode→thumbnail Python path runs
-    # ONCE; both sides of the band self-join read the 16-byte/doc
-    # signature table (without this the whole two-pass image pipeline
-    # executes per plan branch — measured 47 s vs 6 s at sf0.1)
     chunks = sigs.select(
         "doc_id",
         "sig",

@@ -47,7 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from hivekudu_handler_spark.registry import query
-from hivekudu_handler_spark.tables import load_table
+from hivekudu_handler_spark.tables import embedding_width, load_table
 
 N_COMPONENTS = 8
 
@@ -168,7 +168,7 @@ def pca_project_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     registered query wraps this with the scalar exact-bounds
     projection the driver verifier can hash."""
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").first()["embedding"])
+    dim = embedding_width(spark, sf_dir)
     comps, mu = fit_pca(emb, dim, N_COMPONENTS)
     return _project_df(spark, emb, comps, mu)
 
@@ -228,7 +228,7 @@ def emb_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings")
-    dim = len(emb.select("embedding").first()["embedding"])
+    dim = embedding_width(spark, sf_dir)
     comps, mu, vals, cov, n = _fit_pca_full(emb, dim, N_COMPONENTS)
     # best axis-aligned k-subspace captured SS: top-k of the centered
     # per-coordinate sums of squares, i.e. (n-1) * top-k diag(cov)

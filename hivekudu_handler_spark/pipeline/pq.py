@@ -62,7 +62,7 @@ from hivekudu_handler_spark.pipeline.replay import (
     pq_encode_oracle,
 )
 from hivekudu_handler_spark.pipeline.similarity import _IVF_CENTROIDS, _IVF_NPROBE
-from hivekudu_handler_spark.tables import load_table
+from hivekudu_handler_spark.tables import embedding_width, load_table
 
 _M = 8  # subspaces
 _KSUB = 16  # centroids per subspace
@@ -169,12 +169,12 @@ def pq_encode(norm: DataFrame, books: np.ndarray) -> DataFrame:
 
 def _fit_encode(spark: SparkSession, sf_dir: str):
     e = load_table(spark, sf_dir, "embeddings")
-    dim = len(e.select("embedding").first()["embedding"])
+    dim = embedding_width(spark, sf_dir)
     # persist the normalized vectors: every PQ key evaluates ``norm``
     # several times (train sample, query collect, the encode pass, both
     # sides of the exact re-rank join) and the normalize chain is a
     # per-row HOF fold — cache it once, reads are columnar (r21);
-    # pin-registered so repeated calls release the prior generation (r22)
+    # pin-registered: a repeated call reuses it or releases it (r22)
     norm = pins.pin("pq.fit_encode.norm", _normalize(e))
     books = pq_train(norm, dim)
     return norm, books, pq_encode(norm, books)

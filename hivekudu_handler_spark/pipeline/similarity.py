@@ -27,7 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hivekudu_handler_spark.registry import query
-from hivekudu_handler_spark.tables import load_table
+from hivekudu_handler_spark.tables import embedding_width, load_table
 
 from hivekudu_handler_spark.pipeline.replay import (
     ANN_BITS,
@@ -662,7 +662,7 @@ def ivf_probe_selectivity(
     vectors (sim_ivf: 4·d per row) and PQ codes (sim_ivfpq: 8 bytes per
     row) — vs the brute-force scan."""
     e = _nonzero(_as_double(load_table(spark, sf_dir, "embeddings")))
-    dim = len(e.select("v").first()["v"])
+    dim = embedding_width(spark, sf_dir)
     if kmeans:
         from hivekudu_handler_spark.pipeline.clustering import kmeans_fit
 

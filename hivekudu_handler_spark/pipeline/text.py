@@ -235,11 +235,10 @@ def text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hivekudu_handler_spark.pipeline.dedup import _SHINGLES_EXPR
 
     d = load_table(spark, sf_dir, "documents")
-    t = pins.pin(
+    t = pins.pin(  # two consumers below
         "text.repetition.toks",
         d.select("doc_id", F.filter(tokens(), lambda x: x != "").alias("toks")),
     )
-    t.count()  # two consumers below
     base = t.select(
         "doc_id",
         F.greatest(F.size("toks") - 2, F.lit(0)).alias("n_tri"),

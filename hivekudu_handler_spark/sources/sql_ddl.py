@@ -135,6 +135,7 @@ from hivekudu_handler_spark.sources.table_store import (
     NOT_NULL_MSG_PREFIX,
     TableStore,
     TableStoreError,
+    local_frame,
 )
 
 # module-private alias: every splitter below lexes through the shared
@@ -544,7 +545,8 @@ def execute(store: TableStore, sql: str) -> DataFrame | None:
             raise SqlDdlError(f"cannot parse VACUUM statement: {sql!r}")
         keep = int(m.group("n")) if m.group("n") is not None else 1
         res = store.vacuum(m.group("name"), keep_last=keep)
-        return store.spark.createDataFrame(
+        return local_frame(
+            store.spark,
             [(len(res["dropped_versions"]), res["deleted_files"])],
             "dropped_versions int, deleted_files int",
         )
@@ -678,9 +680,7 @@ def _show(store: TableStore, stmt: str) -> DataFrame:
             names = [
                 n for n in names if any(fnmatch.fnmatchcase(n, a) for a in alts)
             ]
-        return store.spark.createDataFrame(
-            [(n,) for n in names], "tab_name string"
-        )
+        return local_frame(store.spark, [(n,) for n in names], "tab_name string")
     m = _SHOW_PARTITIONS_RE.match(stmt)
     if m:
         # Impala-on-Kudu's SHOW PARTITIONS / `kudu table list`: the live
@@ -688,7 +688,8 @@ def _show(store: TableStore, stmt: str) -> DataFrame:
         return store.show_partitions(m.group("name"))
     m = _SHOW_CREATE_RE.match(stmt)
     if m:
-        return store.spark.createDataFrame(
+        return local_frame(
+            store.spark,
             [(_render_create(store, m.group("name")),)],
             "createtab_stmt string",
         )
@@ -1632,7 +1633,7 @@ def _merge(store: TableStore, stmt: str) -> None:
     for b in batches:
         batch = b if batch is None else batch.unionByName(b)
     if batch is None:
-        batch = store.spark.createDataFrame([], meta.schema)
+        batch = local_frame(store.spark, [], meta.schema)
     dk: DataFrame | None = None
     for d in delete_frames:
         dk = d if dk is None else dk.unionByName(d)

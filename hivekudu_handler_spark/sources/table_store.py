@@ -115,6 +115,26 @@ class TableExistsError(TableStoreError):
     pass
 
 
+def local_frame(
+    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """``rows`` (driver values, possibly none) as a local relation over
+    an Arrow table: building and collecting it starts no Spark job,
+    where ``createDataFrame(<list>)`` runs a Python-worker job even for
+    an empty list.  Column names, types and values are the same."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)
+
+
 class NoSuchTableError(TableStoreError):
     pass
 
@@ -506,8 +526,8 @@ class TableStore:
             (f.name, f.dataType.simpleString(), f.name in meta.key_columns)
             for f in meta.schema.fields
         ]
-        return self.spark.createDataFrame(
-            rows, "col_name string, data_type string, is_key boolean"
+        return local_frame(
+            self.spark, rows, "col_name string, data_type string, is_key boolean"
         )
 
     # ------------------------------------------------------------ STATS
@@ -590,7 +610,8 @@ class TableStore:
         # schema order, not dict order, for a deterministic render
         order = {f.name: i for i, f in enumerate(meta.schema.fields)}
         rows.sort(key=lambda r: order.get(r[0], len(order)))
-        return self.spark.createDataFrame(
+        return local_frame(
+            self.spark,
             rows,
             "col_name string, n_nulls bigint, ndv bigint, "
             "min_val string, max_val string, n_rows bigint",
@@ -951,9 +972,7 @@ class TableStore:
                 for v in self._version_numbers(meta.name)
             )
         ]
-        return self.spark.createDataFrame(
-            rows, "version int, op string, n_files int"
-        )
+        return local_frame(self.spark, rows, "version int, op string, n_files int")
 
     def scan_snapshot(
         self,
@@ -1031,8 +1050,8 @@ class TableStore:
             # grouping is portable
             part = "/".join(re.split(r"[\\/]", rel)[:-1])
             counts[part] = counts.get(part, 0) + 1
-        return self.spark.createDataFrame(
-            sorted(counts.items()), "partition string, n_files int"
+        return local_frame(
+            self.spark, sorted(counts.items()), "partition string, n_files int"
         )
 
     def commit_timestamp(self, name: str, version: int) -> float:
@@ -1136,7 +1155,8 @@ class TableStore:
         # here, before any plan is built
         runs = _segment_runs(self, meta.name, versions)
         if not runs:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [],
                 T.StructType(
                     [
@@ -1428,7 +1448,7 @@ class TableStore:
         tablet's files unopened."""
         schema = self._read_schema(meta)
         if not rels:
-            return self._to_logical(self.spark.createDataFrame([], schema), meta)
+            return self._to_logical(local_frame(self.spark, [], schema), meta)
         data = self._data_dir(meta.name)
         reader = self.spark.read.schema(schema).option("basePath", str(data))
         return self._to_logical(reader.parquet(*[str(data / r) for r in rels]), meta)
@@ -1522,7 +1542,7 @@ class TableStore:
             and upper is not None
             and self._range_key(meta, lower) >= self._range_key(meta, upper)
         ):
-            return self.spark.createDataFrame([], meta.schema).select(*out_cols)
+            return local_frame(self.spark, [], meta.schema).select(*out_cols)
         rc = meta.key_columns[0]
         typ = self._range_col_type(meta)
         df = self._scan_raw(meta)
@@ -1990,7 +2010,7 @@ class TableStore:
                 f"table {name!r} is external: no bucket layout to prune"
             )
         if not values:
-            return self.spark.createDataFrame([], meta.schema)
+            return local_frame(self.spark, [], meta.schema)
         keys = meta.key_columns
         types = {f.name: f.dataType for f in meta.schema.fields}
         batch: list[dict[str, object]] = []
@@ -2091,7 +2111,7 @@ class TableStore:
         from hivekudu_handler_spark.sources.bloom import probe_positions
 
         if not rel_files:
-            return self.spark.createDataFrame([], "file string, bits array<int>")
+            return local_frame(self.spark, [], "file string, bits array<int>")
         exploded = self._read_files(meta, rel_files).select(
             self._data_rel_path().alias("file"),
             F.explode(F.array(*probe_positions(F.col(col)))).alias("pos"),
@@ -2244,7 +2264,7 @@ class TableStore:
             name, col, self._bloom_cover_cond(probe), cur
         )
         if not candidates:
-            return self.spark.createDataFrame([], meta.schema)
+            return local_frame(self.spark, [], meta.schema)
         return self._read_bloom_candidates(meta, candidates).filter(
             F.col(col) == probe_lit
         )
@@ -2261,7 +2281,7 @@ class TableStore:
         meta, imeta, cur, _ = self._bloom_state(name, col)
         self._bloom_check_fresh(name, col, imeta, cur)
         if not values:
-            return self.spark.createDataFrame([], meta.schema)
+            return local_frame(self.spark, [], meta.schema)
         dtype = next(f.dataType for f in meta.schema.fields if f.name == col)
         # all probe positions in ONE job over the batch (driver-sized)
         probe_rows = self.spark.createDataFrame(
@@ -2273,7 +2293,7 @@ class TableStore:
             cond = c if cond is None else (cond | c)
         candidates = self._bloom_candidates(name, col, cond, cur)
         if not candidates:
-            return self.spark.createDataFrame([], meta.schema)
+            return local_frame(self.spark, [], meta.schema)
         return self._read_bloom_candidates(meta, candidates).filter(
             F.col(col).isin(*[F.lit(v).cast(dtype) for v in values])
         )

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from hivekudu_handler_spark.registry import query
-from hivekudu_handler_spark.tables import load_events, load_table
+from hivekudu_handler_spark.tables import load_events, load_table, read_fixture
 
 
 def tumbling_counts(ev: DataFrame) -> DataFrame:
@@ -318,7 +318,7 @@ def run_stream_over_fixture(
     # source is session-timezone-dependent (r4 ADVICE)
     ensure_session_confs(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_fixture(spark, f"{sf_dir}/events.parquet")
     # the fixture dir contains all tables; restrict to the events file
     stream = (
         spark.readStream.schema(static.schema)
@@ -394,7 +394,7 @@ def run_stateful_over_fixture(spark, sf_dir: str):
 
     ensure_session_confs(spark)  # pin UTC before the ts cast (r4 ADVICE)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    static = spark.read.parquet(f"{sf_dir}/events.parquet")
+    static = read_fixture(spark, f"{sf_dir}/events.parquet")
     stream = spark.readStream.schema(static.schema).option(
         "pathGlobFilter", "events.parquet"
     ).parquet(f"{sf_dir}")
@@ -1018,7 +1018,7 @@ def stream_cdc_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from hivekudu_handler_spark.operators.ddl import _materialize
 
-    spark.read.parquet(f"{sf_dir}/customer.parquet").createOrReplaceTempView(
+    read_fixture(spark, f"{sf_dir}/customer.parquet").createOrReplaceTempView(
         "customer"
     )
     store, d = _cdc_mirror_scaffold(spark, sf_dir)
@@ -1051,7 +1051,7 @@ def stream_cdc_mirror_phases(spark: SparkSession, sf_dir: str):
 
     from hivekudu_handler_spark.operators.ddl import _materialize
 
-    spark.read.parquet(f"{sf_dir}/customer.parquet").createOrReplaceTempView(
+    read_fixture(spark, f"{sf_dir}/customer.parquet").createOrReplaceTempView(
         "customer"
     )
     store, d = _cdc_mirror_scaffold(spark, sf_dir)

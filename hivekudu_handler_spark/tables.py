@@ -4,12 +4,29 @@ The reference reads tables through one split per Kudu tablet
 (``HiveKuduTableInputFormat.java:149-223``); the Spark-native equivalent is
 the Parquet file source whose partition-aligned splits, vectorized reads and
 column pruning replace all of that code (SURVEY.md §2.1).
+
+The reference never reads data to learn a schema: its SerDe takes the
+declared ``columns``/``columns.types`` (``HiveKuduSerDe.java:62-74``).
+``spark.read.parquet(path)`` without a schema starts one Spark job to merge
+footers on every call, so every fixture read goes through
+:func:`read_fixture`, which infers a path's schema once and hands the cached
+``StructType`` to ``spark.read.schema``.  The memo key is the path, each
+leaf file's name, size and ``mtime_ns``, and the session confs that change
+how Parquet types map (:data:`_SCHEMA_CONFS`): a rewritten file or a changed
+conf infers again.  A rewrite that keeps both the size and the ``mtime_ns``
+of every file is not detected.  :func:`embedding_width` memoizes the
+embeddings' vector width under the same key.
 """
 
 from __future__ import annotations
 
+import os
+import stat
+from typing import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from hivekudu_handler_spark.session import (
     _DEFAULT_CONF,
@@ -82,7 +99,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ensure_session_confs(spark)
     if name == "events":
         return load_events(spark, sf_dir)
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_fixture(spark, f"{sf_dir}/{name}.parquet")
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -96,8 +113,88 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     microsecond precision — matching ``EVENTS_US_CTE`` on the DuckDB side.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/events.parquet")
+    df = read_fixture(spark, f"{sf_dir}/events.parquet")
     return df.withColumn("ts", ts_to_micros(df))
+
+
+# session confs that change which Spark type a Parquet footer field maps
+# to, plus mergeSchema, which changes the columns a multi-file read has
+_SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+# (path, confs) -> (listing, value): one entry per path and conf setting
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+_WIDTHS: dict[tuple, tuple[tuple, int]] = {}
+
+
+def _listing(path: str) -> tuple | None:
+    """``(name, size, mtime_ns)`` of every file under ``path`` (the path
+    itself when it is a file), sorted; None when the driver cannot stat
+    it (a remote filesystem), which disables the memo."""
+    try:
+        top = os.stat(path)
+        if not stat.S_ISDIR(top.st_mode):
+            return ((path, top.st_size, top.st_mtime_ns),)
+        out = []
+        for root, _, files in os.walk(path):
+            for f in files:
+                st = os.stat(os.path.join(root, f))
+                rel = os.path.relpath(os.path.join(root, f), path)
+                out.append((rel, st.st_size, st.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(out))
+
+
+def _fixture_key(spark: SparkSession, path: str) -> tuple | None:
+    """The memo key of a fixture read: ``((path, confs), listing)``."""
+    listing = _listing(path)
+    if listing is None:
+        return None
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    return (path, confs), listing
+
+
+def _memo(table: dict, key: tuple | None, compute: Callable):
+    """``compute()`` once per unchanged key; a new listing replaces the
+    path's entry instead of adding one.  Two threads may both compute
+    one value; each dict access is atomic, so either result may stay."""
+    if key is None:
+        return compute()
+    slot, listing = key
+    held = table.get(slot)
+    if held is not None and held[0] == listing:
+        return held[1]
+    value = compute()
+    table[slot] = (listing, value)
+    return value
+
+
+def read_fixture(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema (one Spark
+    job) only the first time an unchanged path is read."""
+    schema = _memo(
+        _SCHEMAS, _fixture_key(spark, path), lambda: spark.read.parquet(path).schema
+    )
+    return spark.read.schema(schema).parquet(path)
+
+
+def embedding_width(spark: SparkSession, sf_dir: str) -> int:
+    """Length of the embeddings fixture's first vector, probed with one
+    ``first()`` per unchanged fixture listing."""
+    return _memo(
+        _WIDTHS,
+        _fixture_key(spark, f"{sf_dir}/embeddings.parquet"),
+        lambda: len(
+            load_table(spark, sf_dir, "embeddings")
+            .select("embedding")
+            .first()["embedding"]
+        ),
+    )
 
 
 def ts_to_micros(df: DataFrame):
