@@ -130,17 +130,17 @@ import re
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hivekudu_handler_spark.sources.sql_lex import sql_char_states
+from hivekudu_handler_spark.sources.sql_lex import (
+    skip_blank,
+    sql_char_states,
+    tokens,
+)
 from hivekudu_handler_spark.sources.table_store import (
     NOT_NULL_MSG_PREFIX,
     TableStore,
     TableStoreError,
     local_frame,
 )
-
-# module-private alias: every splitter below lexes through the shared
-# scanner (see sql_lex.py for the dialect decision)
-_sql_char_states = sql_char_states
 
 # the reference's property names (HiveKuduConstants.java:28-30) plus the
 # bare spelling for convenience
@@ -178,33 +178,18 @@ def _strip_stmt(sql: str) -> str:
     rewrite's lazy-EXPLAIN path never fired behind a leading comment).
     Comments INSIDE the statement are preserved; Spark strips those
     itself."""
-    states = _sql_char_states(sql)
-    start = len(sql)
-    for i, (ch, st) in enumerate(zip(sql, states)):
-        if st == "comment" or ch.isspace():
-            continue
-        start = i
-        break
-    return sql[start:].strip().rstrip(";").strip()
+    return sql[skip_blank(sql) :].strip().rstrip(";").strip()
 
 
 def _match_paren_block(text: str, start: int) -> tuple[str, int]:
     """Return (inner, index_after_close) for the paren group opening at
-    ``start`` (which must be '('), honoring nesting and the full
-    literal/comment dialect (:func:`_sql_char_states`)."""
+    ``start`` (which must be '('): the first ``)`` token back at the
+    opening's depth (:func:`sql_lex.tokens`)."""
     assert text[start] == "("
-    states = _sql_char_states(text)
-    depth = 0
-    for i in range(start, len(text)):
-        if states[i] != "code":
-            continue
-        ch = text[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return text[start + 1 : i], i + 1
+    for tok in tokens(text[start:]):
+        if tok.text == ")" and tok.depth == 0:
+            end = start + tok.start
+            return text[start + 1 : end], end + 1
     raise SqlDdlError(f"unbalanced parentheses in statement: {text!r}")
 
 
@@ -248,24 +233,21 @@ _CREATE_LIKE_RE = re.compile(
     r"(?P<src>[A-Za-z_]\w*)\s*$",
     re.IGNORECASE,
 )
-# a statement/predicate carries a subquery (IN/EXISTS/scalar all spell
-# an opening paren before SELECT)
-_SUBQUERY_RE = re.compile(r"\(\s*SELECT\b", re.IGNORECASE)
 
 
 def _has_subquery(text: str) -> bool:
-    """True when ``text`` contains a subquery opener in a CODE region.
-    The raw regex alone would fire on a string literal like
-    ``SET v = '(select x)'`` and pay the register_views() re-plan (and
-    its temp-view clobbering) for a plain literal DML — so literals and
-    comments are masked to spaces first (:func:`_sql_char_states`),
-    consistent with every other fragment parser.  Spaces preserve the
-    match across an inline comment: ``( /*c*/ SELECT`` still counts."""
-    states = _sql_char_states(text)
-    masked = "".join(
-        ch if s == "code" else " " for ch, s in zip(text, states)
+    """True when ``text`` carries a subquery: a ``(`` token whose next
+    non-blank token is SELECT (IN, EXISTS and scalar subqueries all
+    spell it).  A literal like ``SET v = '(select x)'`` is one string
+    token, so a plain literal DML never pays the register_views()
+    re-plan (and its temp-view clobbering); a comment between the two
+    is skipped: ``( /*c*/ SELECT`` still counts."""
+    if "select" not in text.lower():
+        return False  # nothing to lex for
+    code = [t.text for t in tokens(text) if t.kind not in ("space", "comment")]
+    return any(
+        a == "(" and b.upper() == "SELECT" for a, b in zip(code, code[1:])
     )
-    return _SUBQUERY_RE.search(masked) is not None
 # the name must be separated from VALUES by whitespace or a column list
 # — 'INSERT INTO docsVALUES (...)' must NOT backtrack-parse as table
 # 'docs' (r17 review)
@@ -315,37 +297,20 @@ _UPDATE_RE = re.compile(
 
 
 def _split_where(text: str) -> tuple[str, str | None]:
-    """Split ``text`` into (before, predicate) on the first top-level WHERE
-    keyword — at paren depth 0, outside string literals and comments
-    (:func:`_sql_char_states`) — so a literal like ``'x WHERE y'`` is
+    """Split ``text`` into (before, predicate) on the first WHERE word
+    token at paren depth 0 that starts the text or follows whitespace
+    (:func:`sql_lex.tokens`) — so a literal like ``'x WHERE y'`` is
     never misread as a predicate boundary."""
-    states = _sql_char_states(text)
-    depth = 0
-    i, n = 0, len(text)
-    while i < n:
-        if states[i] != "code":
-            i += 1
-            continue
-        ch = text[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and ch in "wW":
-            before, kw = text[:i], text[i : i + 5]
-            after = text[i + 5 : i + 6]
-            if (
-                kw.upper() == "WHERE"
-                and (not before or before[-1].isspace())
-                and (not after or not (after.isalnum() or after == "_"))
-            ):
-                pred = text[i + 5 :].strip()
-                if not pred:
-                    # a bare trailing WHERE must not silently widen the
-                    # statement to every row
-                    raise SqlDdlError("WHERE clause has no predicate")
-                return before, pred
-        i += 1
+    prev = "space"
+    for tok in tokens(text):
+        if tok.depth == 0 and prev == "space" and tok.text.upper() == "WHERE":
+            pred = text[tok.start + 5 :].strip()
+            if not pred:
+                # a bare trailing WHERE must not silently widen the
+                # statement to every row
+                raise SqlDdlError("WHERE clause has no predicate")
+            return text[: tok.start], pred
+        prev = tok.kind
     return text, None
 
 
@@ -755,34 +720,23 @@ def split_statements(text: str) -> list[str]:
     """Split a multi-statement SQL script into statements: ``;`` is a
     separator only in plain code — string literals (either quote style,
     doubling and backslash escapes honored) keep their semicolons, and
-    ``--`` line / ``/* */`` bracketed comments are stripped.  Lexing is
-    :func:`_sql_char_states`, the same scanner the rewrite mask uses.
+    ``--`` line / ``/* */`` bracketed comments are stripped
+    (:func:`sql_lex.tokens`).
 
-    A comment is a TOKEN SEPARATOR in SQL, so each stripped span emits
+    A comment is a TOKEN SEPARATOR in SQL, so each run of comments emits
     one space — dropping the characters outright merged the neighbors
     (``SELECT 1/*c*/FROM t`` became ``SELECT 1FROM t``, r17 advice)."""
-    states = _sql_char_states(text)
-    out: list[str] = []
-    token: list[str] = []
-    in_comment = False
-    for ch, state in zip(text, states):
-        if state == "comment":
-            if not in_comment:
-                token.append(" ")
-                in_comment = True
-            continue
-        in_comment = False
-        if state == "code" and ch == ";":
-            stmt = "".join(token).strip()
-            if stmt:
-                out.append(stmt)
-            token = []
-        else:
-            token.append(ch)
-    stmt = "".join(token).strip()
-    if stmt:
-        out.append(stmt)
-    return out
+    stmts: list[list[str]] = [[]]
+    prev = None
+    for tok in tokens(text):
+        if tok.text == ";":
+            stmts.append([])
+        elif tok.kind != "comment":
+            stmts[-1].append(tok.text)
+        elif prev != "comment":
+            stmts[-1].append(" ")
+        prev = tok.kind
+    return [s for s in ("".join(p).strip() for p in stmts) if s]
 
 
 def run_script(store: TableStore, text: str) -> list[DataFrame | None]:
@@ -844,24 +798,19 @@ def _parse_travel_ts(raw: str) -> float:
     return dt.timestamp()
 
 
-def _in_string_mask(text: str) -> list[bool]:
-    """Per-character flag: NOT plain code — inside a string literal or
-    a comment (see :func:`_sql_char_states`).  Shared guard so rewrites
-    never touch literal or comment content."""
-    return [s != "code" for s in _sql_char_states(text)]
-
-
 def _splice_rewrite(stmt: str, pattern: re.Pattern, bind) -> str:
     """Shared quote-masked splice loop for version-addressed read
-    rewrites: every ``pattern`` occurrence OUTSIDE string literals is
-    replaced by the view alias ``bind(match)`` returns (``bind`` creates
-    the temp view and returns its name, or returns ``None`` to leave the
-    occurrence untouched)."""
-    mask = _in_string_mask(stmt)
+    rewrites: every ``pattern`` occurrence that starts in code (not in a
+    string literal, quoted identifier or comment) is replaced by the
+    view alias ``bind(match)`` returns (``bind`` creates the temp view
+    and returns its name, or returns ``None`` to leave the occurrence
+    untouched).  The statement is lexed only once a pattern matches."""
+    states: list[str] | None = None
     out: list[str] = []
     last = 0
     for m in pattern.finditer(stmt):
-        if mask[m.start()]:
+        states = states or sql_char_states(stmt)
+        if states[m.start()] != "code":
             continue
         alias = bind(m)
         if alias is None:
@@ -957,24 +906,16 @@ def _rewrite_version_clauses(store: TableStore, stmt: str) -> str:
 
 
 def _split_top(text: str) -> list[str]:
-    """Split on commas at paren depth 0, outside string literals and
-    comments (:func:`_sql_char_states`)."""
+    """Split on comma tokens at paren depth 0 (:func:`sql_lex.tokens`);
+    a blank last part is dropped."""
     parts: list[str] = []
-    depth = 0
-    token = ""
-    for ch, state in zip(text, _sql_char_states(text)):
-        if state == "code":
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            if ch == "," and depth == 0:
-                parts.append(token)
-                token = ""
-                continue
-        token += ch
-    if token.strip():
-        parts.append(token)
+    last = 0
+    for tok in tokens(text):
+        if tok.text == "," and tok.depth == 0:
+            parts.append(text[last : tok.start])
+            last = tok.start + 1
+    if text[last:].strip():
+        parts.append(text[last:])
     return parts
 
 
@@ -1044,37 +985,15 @@ _CLAUSE_HEAD_RE = re.compile(
 
 def _find_boundary_then(text: str) -> int:
     """Index of the clause-level THEN in ``AND <cond> THEN <action>`` —
-    the first THEN at paren depth 0, outside string literals and
-    comments, and outside any CASE...END expression (a CASE in the
-    condition owns its own THENs), or -1.  The naive lazy-regex split mis-parsed ANSI-valid
-    conditions like ``AND CASE WHEN x THEN 1 ELSE 0 END = 1 THEN DELETE``
-    (r16 review)."""
-    depth = case_depth = 0
-    states = _sql_char_states(text)
-    word = re.compile(r"\b(CASE|END|THEN)\b", re.IGNORECASE)
-    i = 0
-    while i < len(text):
-        if states[i] != "code":
-            i += 1
-            continue
-        ch = text[i]
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0:
-            m = word.match(text, i)
-            if m and not _dot_qualified(text, states, i, m.end()):
-                kw = m.group(1).upper()
-                if kw == "CASE":
-                    case_depth += 1
-                elif kw == "END":
-                    case_depth = max(0, case_depth - 1)
-                elif case_depth == 0:  # THEN at clause level
-                    return i
-                i = m.end()
-                continue
-        i += 1
+    the first THEN token at paren depth 0, outside any CASE...END
+    expression (a CASE in the condition owns its own THENs) and not a
+    dotted column (``s.then``), or -1.  The naive lazy-regex split
+    mis-parsed ANSI-valid conditions like ``AND CASE WHEN x THEN 1 ELSE
+    0 END = 1 THEN DELETE`` (r16 review)."""
+    for tok in tokens(text):
+        if tok.text.upper() == "THEN" and tok.depth == tok.case == 0:
+            if not tok.dotted:
+                return tok.start
     return -1
 _INSERT_ACTION_RE = re.compile(
     r"^INSERT\s+(?:\*|(?:\((?P<cols>[^)]*)\)\s+)?VALUES\s*(?P<vals>\(.+\)))$",
@@ -1148,108 +1067,29 @@ def _guard_null_keys(df: DataFrame, key_columns) -> DataFrame:
     )
 
 
-_CASE_RE = re.compile(r"CASE\b", re.IGNORECASE)
-_END_RE = re.compile(r"END\b", re.IGNORECASE)
-
-
-def _dot_qualified(text: str, states: list[str], start: int, end: int) -> bool:
-    """True when the word at ``[start, end)`` is part of a dot-qualified
-    reference — the nearest non-space character on EITHER side is a
-    ``.`` (``s.case``, ``t.end``, ``end.col``; SQL allows whitespace
-    around the dot).  CASE/END are non-reserved words in Spark SQL, so
-    ``s.case`` is a column reference, not a CASE-expression opener — a
-    depth counter that treats it as one swallows every later clause
-    head (r18 advice).  Backtick-quoted spellings never get here (the
-    shared lexer marks them ``'ident'``).
-
-    A preceding dot only qualifies when what precedes IT can be a
-    reference: ``THEN 1. END`` is a trailing-dot NUMERIC literal before
-    a real END (identifiers can't be all digits), so the dot there must
-    not suppress the bracket."""
-    j = start - 1
-    while j >= 0 and (states[j] != "code" or text[j].isspace()):
-        j -= 1
-    if j >= 0 and text[j] == ".":
-        t = j - 1
-        while t >= 0 and states[t] == "code" and text[t].isspace():
-            t -= 1
-        tok_end = t + 1
-        while t >= 0 and states[t] == "code" and (
-            text[t].isalnum() or text[t] == "_"
-        ):
-            t -= 1
-        tok = text[t + 1 : tok_end]
-        if t >= 0 and states[t] == "ident":
-            return True  # `quoted`.case — backtick-qualified reference
-        if tok and not tok.isdigit():
-            return True  # alias.case — identifiers can't be all-digits
-        if not tok and t >= 0 and text[t] == ")":
-            return True  # (struct_expr).case — field access
-        # trailing-dot numeric literal (or start of text): not a
-        # qualifier — fall through to the following-dot check
-    k = end
-    while k < len(text) and (states[k] != "code" or text[k].isspace()):
-        k += 1
-    return k < len(text) and text[k] == "."
-
-
 def _split_keyword(text: str, pattern: str) -> list[str]:
-    """Split ``text`` on regex ``pattern`` at paren depth 0, outside
-    string literals and comments (:func:`_sql_char_states`) and outside
-    ``CASE ... END`` expressions, case-insensitively.  Segment 0 is the
-    text before the first occurrence.
+    """Split ``text`` where regex ``pattern`` matches, case-insensitively,
+    at the start of a word token at paren depth 0, outside ``CASE ...
+    END`` expressions and not a dotted column (:func:`sql_lex.tokens`).
+    Segment 0 is the text before the first occurrence.
 
     CASE tracking closes the last lexical hole in the MERGE clause
     splitter (r16/r17 advice): ``CASE WHEN matched THEN ...`` inside an
     ON condition or SET expression spells ``WHEN`` + an identifier
     literally named ``matched`` at paren depth 0 — indistinguishable
     from a clause head by regex alone.  A ``CASE`` expression is a
-    bracketed region exactly like parens, so it gets the same depth
-    counter."""
+    bracketed region exactly like parens, so the lexer gives it the
+    same depth counter."""
     pat = re.compile(pattern, re.IGNORECASE)
-    states = _sql_char_states(text)
     parts: list[str] = []
-    depth = 0
-    case_depth = 0
     last = 0
-    i = 0
-    while i < len(text):
-        if states[i] == "code":
-            ch = text[i]
-            word_start = ch.isalpha() and (
-                i == 0
-                or states[i - 1] != "code"
-                or not (text[i - 1].isalnum() or text[i - 1] == "_")
-            )
-            if ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            elif (
-                word_start
-                and _CASE_RE.match(text, i)
-                and not _dot_qualified(text, states, i, i + 4)
-            ):
-                case_depth += 1
-                i += 4
-                continue
-            elif (
-                word_start
-                and case_depth
-                and _END_RE.match(text, i)
-                and not _dot_qualified(text, states, i, i + 3)
-            ):
-                case_depth -= 1
-                i += 3
-                continue
-            elif depth == 0 and case_depth == 0:
-                m = pat.match(text, i)
-                if m and not _dot_qualified(text, states, i, m.end()):
-                    parts.append(text[last:i])
-                    last = m.end()
-                    i = m.end()
-                    continue
-        i += 1
+    for tok in tokens(text):
+        if tok.kind != "word" or tok.depth or tok.case or tok.dotted:
+            continue
+        m = pat.match(text, tok.start) if tok.start >= last else None
+        if m:
+            parts.append(text[last : tok.start])
+            last = m.end()
     parts.append(text[last:])
     return parts
 

@@ -434,29 +434,24 @@ class TableStore:
         loud error — and ``DEFAULT <literal>`` records the expression a
         column-list INSERT fills in when the column is omitted.
         Returns ``(schema, defaults)``."""
-        from hivekudu_handler_spark.sources.sql_lex import sql_char_states
+        from hivekudu_handler_spark.sources.sql_lex import tokens
 
         fields = []
         defaults: dict[str, str] = {}
+        # shared lexer: a comma inside a DEFAULT literal (one string
+        # token) is content; so is one nested in () or in the <> of a
+        # type like array<struct<a:int,b:string>>
+        parts: list[list[str]] = [[]]
         depth = 0
-        token = ""
-        parts: list[str] = []
-        # shared lexer: a comma inside a DEFAULT literal (either quote
-        # style, escapes honored) is content, not a column separator
-        for ch, state in zip(ddl, sql_char_states(ddl)):
-            if state == "comment":
-                continue
-            if state == "code":
-                if ch == "," and depth == 0:
-                    parts.append(token)
-                    token = ""
-                    continue
-                depth += ch in "(<"
-                depth -= ch in ")>"
-            token += ch
-        if token.strip():
-            parts.append(token)
-        for part in parts:
+        for tok in tokens(ddl):
+            if tok.text == "," and depth == 0:
+                parts.append([])
+            elif tok.kind != "comment":
+                depth += (tok.text in ("(", "<")) - (tok.text in (")", ">"))
+                parts[-1].append(tok.text)
+        if not "".join(parts[-1]).strip():
+            parts.pop()
+        for part in ("".join(p) for p in parts):
             text = part.strip()
             nullable = True
             # both SQL attribute orders are valid: 'NOT NULL DEFAULT x'

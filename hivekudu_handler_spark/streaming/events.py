@@ -315,9 +315,9 @@ def run_stream_over_fixture(
     from hivekudu_handler_spark.tables import ensure_session_confs, ts_to_micros
 
     # pin UTC before the ts cast: cast('timestamp') on a TIMESTAMP_NTZ
-    # source is session-timezone-dependent (r4 ADVICE)
+    # source is session-timezone-dependent (r4 ADVICE); the pinned confs
+    # also read a nanos ts as int64
     ensure_session_confs(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     static = read_fixture(spark, f"{sf_dir}/events.parquet")
     # the fixture dir contains all tables; restrict to the events file
     stream = (
@@ -392,8 +392,8 @@ def run_stateful_over_fixture(spark, sf_dir: str):
 
     from hivekudu_handler_spark.tables import ensure_session_confs, ts_to_micros
 
-    ensure_session_confs(spark)  # pin UTC before the ts cast (r4 ADVICE)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # pin UTC before the ts cast (r4 ADVICE) and nanos-as-int64
+    ensure_session_confs(spark)
     static = read_fixture(spark, f"{sf_dir}/events.parquet")
     stream = spark.readStream.schema(static.schema).option(
         "pathGlobFilter", "events.parquet"

@@ -64,11 +64,15 @@ def ensure_session_confs(spark: SparkSession) -> None:
     The verification driver (and any embedding application) builds its own
     SparkSession; these are runtime-settable, so setting them here makes
     every query self-contained: UTC timestamps (oracle comparisons),
-    non-ANSI casts (Hive-style permissive semantics, SURVEY.md §7.3).
+    non-ANSI casts (Hive-style permissive semantics, SURVEY.md §7.3), and
+    Parquet TIMESTAMP(NANOS) read as int64 (:func:`load_events`).  Set
+    once here rather than by each events reader, so a fixture read's
+    schema-memo key is the same before and after the first events read.
     """
     for k, v in (
         ("spark.sql.session.timeZone", "UTC"),
         ("spark.sql.ansi.enabled", "false"),
+        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
     ):
         try:
             spark.conf.set(k, v)
@@ -107,12 +111,13 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The fixture has shipped ``ts`` as both TIMESTAMP(NANOS) (rounds 1-3)
     and TIMESTAMP(MICROS); Spark's timestamp is microseconds and its
-    Parquet reader rejects nanos outright, so keep the legacy conf that
-    surfaces nanos as raw int64 and branch on the type that actually
-    arrives.  Either way the result is session-zone ``TimestampType`` at
-    microsecond precision — matching ``EVENTS_US_CTE`` on the DuckDB side.
+    Parquet reader rejects nanos outright, so :func:`ensure_session_confs`
+    pins the legacy conf that surfaces nanos as raw int64, and this
+    branches on the type that actually arrives.  Either way the result is
+    session-zone ``TimestampType`` at microsecond precision — matching
+    ``EVENTS_US_CTE`` on the DuckDB side.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    ensure_session_confs(spark)
     df = read_fixture(spark, f"{sf_dir}/events.parquet")
     return df.withColumn("ts", ts_to_micros(df))
 

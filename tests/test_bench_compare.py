@@ -6,7 +6,7 @@ No Spark involved: pure record arithmetic, so the pins are exact.
 
 from __future__ import annotations
 
-from tools.bench_compare import best_reference, compare
+from tools.bench_compare import best_reference, compare, cpus_refusal, main
 
 
 def _cand(queries, loads=None):
@@ -93,6 +93,23 @@ def test_best_reference_is_per_key_min(tmp_path):
     assert best_reference([str(p1), str(p2)]) == {"a": 1.5, "b": 1.0, "c": 3.0}
 
 
+def test_mixed_core_counts_refused(tmp_path, capsys):
+    import json
+
+    cand = {"cpus": 4, "queries": {"a": 1.0}}
+    why = cpus_refusal(cand, {"ref.json": {"cpus": 32, "queries": {"a": 1.0}}})
+    assert "32" in why and "4" in why and "ref.json" in why
+    # same count, or a record that does not say, is compared as before
+    assert cpus_refusal(cand, {"r": {"cpus": 4}, "s": {"queries": {}}}) is None
+    assert cpus_refusal({"queries": {}}, {"r": {"cpus": 32}}) is None
+    c, r = tmp_path / "cand.json", tmp_path / "ref.json"
+    c.write_text(json.dumps(cand))
+    r.write_text(json.dumps({"cpus": 32, "queries": {"a": 0.1}}))
+    assert main([str(c), str(r)]) == 2
+    err = capsys.readouterr().err
+    assert "refusing to compare" in err and "32 cpus" in err and "on 4" in err
+
+
 def test_contended_launch_marks_run_not_quiet():
     rec = {"queries": {"a": 5.0}, "loadavg": {"start_1m": 3.1}}
     v = compare(rec, {"a": 1.0})
@@ -114,3 +131,19 @@ def test_stdout_omit_subset_of_headline():
     # the omit list exists to create headroom; it must never grow to
     # the point of hiding a meaningful share of the suite
     assert len(bench.STDOUT_OMIT) <= 8
+
+
+def test_time_keys_repeat_flag_parsing():
+    """tools/time_keys_r21: only ``--n`` and ``--n=<int>`` set the repeat
+    count; ``--name`` is not a prefix match, and a missing value exits
+    with the usage line instead of an IndexError."""
+    import pytest
+
+    from tools.time_keys_r21 import parse_args
+
+    assert parse_args(["a", "--n", "5", "b"]) == (["a", "b"], 5)
+    assert parse_args(["--n=7", "k"]) == (["k"], 7)
+    assert parse_args(["k"]) == (["k"], 3)
+    for argv in (["k", "--n"], ["--name", "x"], ["--n=x"], ["--n", "x"]):
+        with pytest.raises(SystemExit, match="usage:"):
+            parse_args(argv)

@@ -21,7 +21,13 @@ from pyspark.sql import types as T
 from hivekudu_handler_spark import pins
 from hivekudu_handler_spark.sources import sql_ddl
 from hivekudu_handler_spark.sources.table_store import TableStore
-from hivekudu_handler_spark.tables import embedding_width, load_table, read_fixture
+from hivekudu_handler_spark.tables import (
+    embedding_width,
+    ensure_session_confs,
+    load_events,
+    load_table,
+    read_fixture,
+)
 
 PKG = Path(__file__).resolve().parents[1] / "hivekudu_handler_spark"
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
@@ -110,6 +116,19 @@ def test_changed_nanos_conf_uses_its_own_entry(spark, tmp_path):
             spark.conf.set(NANOS, old)
 
 
+def test_load_events_leaves_session_confs_unchanged(spark, fixture_dir, sf_dir):
+    """The events reader sets no conf of its own: every conf it needs is
+    pinned by ensure_session_confs, so a fixture read after an events
+    read keeps its schema-memo entry."""
+    ensure_session_confs(spark)
+    before = dict(spark.conf.getAll)
+    load_table(spark, str(fixture_dir), "region")
+    load_events(spark, sf_dir)
+    assert dict(spark.conf.getAll) == before
+    _, n = _jobs(spark, lambda: load_table(spark, str(fixture_dir), "region"))
+    assert n == 0
+
+
 def test_embedding_width_probes_once_per_listing(spark, tmp_path, sf_dir):
     shutil.copy(f"{sf_dir}/embeddings.parquet", tmp_path / "embeddings.parquet")
     want = len(
@@ -142,6 +161,9 @@ def _pin_jobs(spark, df):
 
 @pytest.fixture
 def pinned(tmp_path):
+    # start from an empty registry: pins an earlier test file left held
+    # would otherwise show up in pins.snapshot()
+    pins.release_all()
     path = tmp_path / "a.parquet"
     _write(path, a=pa.array([1, 2, 3], pa.int64()))
     yield path

@@ -21,6 +21,11 @@ quiet-round record" the policy names.  Keys new in the candidate have
 no reference and are reported separately (first record = their initial
 band, per the per-round notes' convention).
 
+Records taken on different core counts are not comparable: when the
+candidate and a reference record both carry ``cpus`` and they differ, the
+comparison is refused with both counts named (exit status 2), the way
+``perfbench/compare.py`` refuses mismatched hosts.
+
 Usage:
     python -m tools.bench_compare BENCH_LOCAL.json
     python -m tools.bench_compare CAND.json REF1.json REF2.json
@@ -57,6 +62,18 @@ def best_reference(paths: list[str]) -> dict[str, float]:
             if k not in best or v < best[k]:
                 best[k] = v
     return best
+
+
+def cpus_refusal(candidate: dict, references: dict[str, dict]) -> str | None:
+    """Why ``candidate`` must not be compared with the reference records
+    (``{path: record}``): one was taken on a different core count.  A
+    record without ``cpus`` is not refused."""
+    want = candidate.get("cpus")
+    for path, rec in references.items():
+        got = rec.get("cpus")
+        if want is not None and got is not None and got != want:
+            return f"{path} ran on {got} cpus, the candidate on {want}"
+    return None
 
 
 def load_quiet_band(path: str | None = None) -> dict[str, dict]:
@@ -190,8 +207,13 @@ def main(argv: list[str]) -> int:
         if not refs:
             print("no quiet reference records under tools/bench_history/")
             return 2
+    candidate = _load(cand_path)
+    why = cpus_refusal(candidate, {p: _load(p) for p in refs})
+    if why:
+        print(f"refusing to compare: {why}", file=sys.stderr)
+        return 2
     verdict = compare(
-        _load(cand_path), best_reference(refs), load_margin, load_quiet_band()
+        candidate, best_reference(refs), load_margin, load_quiet_band()
     )
     print(json.dumps(verdict, indent=1))
     if verdict["flagged"] and not verdict["run_quiet"]:

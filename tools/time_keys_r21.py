@@ -1,6 +1,6 @@
 """Time individual headline keys (r21 optimization round, guide §1).
 
-Usage: python -m tools.time_keys_r21 key1 key2 ... [--n 3]
+Usage: python -m tools.time_keys_r21 key1 key2 ... [--n 3 | --n=3]
 
 Same methodology as bench.py (noop sink, clearCache between passes),
 but min-of-N with N configurable and one warmup action first, so
@@ -22,25 +22,40 @@ from hivekudu_handler_spark.registry import load_all  # noqa: E402
 from hivekudu_handler_spark.session import default_sf_dir, get_spark  # noqa: E402
 
 
-def main() -> None:
-    # both `--n=3` and `--n 3` work: a bare `--n` consumes the following
-    # token as its value (r21 ADVICE: the value token used to leak into
-    # the key list and KeyError)
-    argv = sys.argv[1:]
-    args: list[str] = []
+USAGE = "usage: python -m tools.time_keys_r21 key1 key2 ... [--n N | --n=N]"
+
+
+def parse_args(argv: list[str]) -> tuple[list[str], int]:
+    """``(keys, n)`` from the command line.  Both ``--n=3`` and ``--n 3``
+    set the repeat count (a bare ``--n`` consumes the following token, so
+    the value never leaks into the key list); any other option, or a
+    missing or non-integer value, exits with the usage line."""
+    keys: list[str] = []
     n = 3
     i = 0
     while i < len(argv):
         a = argv[i]
-        if a.startswith("--n"):
-            if "=" in a:
-                n = int(a.split("=", 1)[1])
-            else:
-                n = int(argv[i + 1])
+        if a == "--n" or a.startswith("--n="):
+            raw = a[len("--n="):]
+            if a == "--n":
                 i += 1
-        elif not a.startswith("--"):
-            args.append(a)
+                if i == len(argv):
+                    raise SystemExit(f"--n needs a value\n{USAGE}")
+                raw = argv[i]
+            try:
+                n = int(raw)
+            except ValueError:
+                raise SystemExit(f"--n takes an integer, got {raw!r}\n{USAGE}") from None
+        elif a.startswith("--"):
+            raise SystemExit(f"unknown option {a!r}\n{USAGE}")
+        else:
+            keys.append(a)
         i += 1
+    return keys, n
+
+
+def main() -> None:
+    args, n = parse_args(sys.argv[1:])
     sf_dir = default_sf_dir()
     spark = get_spark("time-keys-r21")
     specs = load_all()
