@@ -324,6 +324,10 @@ def main() -> None:
         # caveat
         "phases_method": "single_cold_pass",
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        # the local[N] core count, so tools/bench_compare.py refuses a
+        # comparison across core counts (file record only: the stdout
+        # line keeps its fields)
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     # Durable full record: the driver captures only the last ~2000 chars
     # of output, and r10 (2049-char line), r11 (loadavg map added ~450

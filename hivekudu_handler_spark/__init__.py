@@ -22,7 +22,16 @@ that contract is:
 
 All query keys are registered in ``registry.QUERIES`` and surfaced through
 ``__spark_entry__.py`` for differential (DuckDB-oracle) verification.
+
+Engine decisions that change cost (a driver-side point fetch and the
+tablet it read, a pin persisted, reused or released) are logged at DEBUG
+under the ``hivekudu_handler_spark`` logger, which is silent unless the
+application configures it.
 """
+
+import logging
+
+logging.getLogger(__name__).addHandler(logging.NullHandler())
 
 from hivekudu_handler_spark.registry import QUERIES, query  # noqa: F401
 from hivekudu_handler_spark.session import get_spark  # noqa: F401

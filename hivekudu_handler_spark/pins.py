@@ -40,6 +40,7 @@ handle.
 
 from __future__ import annotations
 
+import logging
 import os
 import threading
 from urllib.parse import unquote, urlparse
@@ -50,6 +51,7 @@ _PINNED: dict[str, DataFrame] = {}
 # tag -> {input file path: (size, mtime_ns)} when the pin materialized
 _FILES: dict[str, dict[str, tuple[int, int]] | None] = {}
 _LOCK = threading.RLock()
+_log = logging.getLogger(__name__)
 
 
 # leaves whose plan equality (``sameResult``) already means equal rows:
@@ -122,6 +124,7 @@ def pin(tag: str, df: DataFrame) -> DataFrame:
             _PINNED[tag].is_cached = False
             df.is_cached = True
             _PINNED[tag] = df
+            _log.debug("pin %s: reused", tag, extra={"tag": tag, "action": "reuse"})
             return df
         release(tag)
         files = _input_files(df)  # before the count: a later rewrite misses
@@ -136,6 +139,7 @@ def pin(tag: str, df: DataFrame) -> DataFrame:
             raise
         _PINNED[tag] = df
         _FILES[tag] = files
+        _log.debug("pin %s: persisted", tag, extra={"tag": tag, "action": "persist"})
     return df
 
 
@@ -145,6 +149,7 @@ def release(tag: str) -> None:
         old = _PINNED.pop(tag, None)
         _FILES.pop(tag, None)
         if old is not None:
+            _log.debug("pin %s: released", tag, extra={"tag": tag, "action": "release"})
             try:
                 old.unpersist()
             except Exception:  # pragma: no cover - session already stopped

@@ -120,7 +120,10 @@ Rejections mirror the reference byte-for-byte in spirit:
 Anything that is a *query* (SELECT ...) is not routed here — queries go
 through Spark SQL directly (register the table as a view via
 ``store.scan(name)``); the reference likewise delegated all queries to
-Hive's engine and owned only the DDL hooks.
+Hive's engine and owned only the DDL hooks.  The exception is an exact
+key-equality point SELECT, which :func:`sql` serves on the driver with
+:meth:`TableStore.fetch`, the way Hive serves a simple select-filter as
+a fetch task instead of a job.
 """
 
 from __future__ import annotations
@@ -137,6 +140,7 @@ from hivekudu_handler_spark.sources.sql_lex import (
 )
 from hivekudu_handler_spark.sources.table_store import (
     NOT_NULL_MSG_PREFIX,
+    NotFetchable,
     TableStore,
     TableStoreError,
     local_frame,
@@ -708,12 +712,130 @@ def sql(store: TableStore, text: str) -> DataFrame | None:
     the queries; everything else routes to :func:`execute`.  View
     registration is a metadata operation (``store.scan`` is lazy), so a
     query statement costs nothing beyond its own plan.
+
+    The one exception is an exact key-equality point SELECT
+    (:func:`_point_select`), which Hive too would serve as a fetch task
+    instead of a job: :meth:`TableStore.fetch` answers it on the driver
+    from the key's tablet.  It registers no temp views, plans nothing
+    and starts no Spark job; its result has the schema and rows the
+    Spark SQL path returns.
     """
     stmt = _strip_stmt(text)
     if _QUERY_RE.match(stmt):
+        served = _point_select(store, stmt)
+        if served is not None:
+            return served
         store.register_views()
         return store.spark.sql(_rewrite_version_clauses(store, stmt))
     return execute(store, text)
+
+
+_NAME_RE = re.compile(r"[A-Za-z_]\w*", re.ASCII)
+_INT_RE = re.compile(r"[0-9]+")
+_POINT_WORDS = frozenset({"SELECT", "FROM", "WHERE", "AND"})
+
+
+def _point_select(store: TableStore, stmt: str) -> DataFrame | None:
+    """Serve an exact key-equality point SELECT with
+    :meth:`TableStore.fetch` — no temp views, no plan, no Spark job — or
+    return ``None`` for Spark SQL to run the statement.
+
+    The shape served, read off :func:`sql_lex.tokens`:
+    ``SELECT * | c1, c2, … FROM t WHERE k1 = lit [AND k2 = lit …]``
+    with plain names only, each selected column once, ``t`` a managed
+    store table and the conjuncts covering every key column exactly
+    once.  A literal is an integer (optionally negated) for an integral
+    key, fitting its type, or a single-quoted string with no backslash
+    and no doubled quote for a STRING key.  Anything else in the text —
+    a comment, a quoted identifier, OR, IN, a cast, LIMIT, an alias, a
+    version clause — and every store view, external table or other
+    name goes to Spark."""
+    toks = [t for t in tokens(stmt) if t.kind != "space"]
+    if any(t.kind not in ("word", "code", "str") for t in toks):
+        return None
+
+    def word(i: int) -> str | None:
+        t = _at(toks, i)
+        return t.text.upper() if t is not None and t.kind == "word" else None
+
+    def name(i: int) -> str | None:
+        w = word(i)
+        if w is None or w in _POINT_WORDS or not _NAME_RE.fullmatch(toks[i].text):
+            return None
+        return toks[i].text
+
+    def code(i: int, c: str) -> bool:
+        t = _at(toks, i)
+        return t is not None and t.kind == "code" and t.text == c
+
+    if word(0) != "SELECT":
+        return None
+    if code(1, "*"):
+        columns, i = None, 2
+    else:
+        columns, i = [], 1
+        while True:
+            col = name(i)
+            if col is None:
+                return None
+            columns.append(col)
+            i += 1
+            if not code(i, ","):
+                break
+            i += 1
+        if len({c.lower() for c in columns}) != len(columns):
+            return None
+    table = name(i + 1)
+    if word(i) != "FROM" or table is None or word(i + 2) != "WHERE":
+        return None
+    i += 3
+    key: dict[str, object] = {}
+    while True:
+        col = name(i)
+        if col is None or not code(i + 1, "=") or col.lower() in {k.lower() for k in key}:
+            return None
+        value, i = _point_literal(toks, i + 2)
+        if value is None:
+            return None
+        key[col] = value
+        if i == len(toks):
+            break
+        if word(i) != "AND":
+            return None
+        i += 1
+    if not store.has_table(table):
+        return None
+    try:
+        return store.fetch(table, key, columns)
+    except NotFetchable:
+        return None
+
+
+def _at(toks: list, i: int):
+    return toks[i] if i < len(toks) else None
+
+
+def _point_literal(toks: list, i: int) -> tuple[object, int]:
+    """``(value, index after it)`` of the literal at ``toks[i]``: an int
+    from digits or ``-`` digits, a str from a single-quoted literal with
+    no backslash and no doubled quote; ``(None, i)`` otherwise."""
+    t = _at(toks, i)
+    if t is None:
+        return None, i
+    if t.kind == "str":
+        inner = t.text[1:-1]
+        if not (len(t.text) >= 2 and t.text[0] == t.text[-1] == "'"):
+            return None, i
+        if "'" in inner or "\\" in inner:
+            return None, i
+        return inner, i + 1
+    sign = 1
+    if t.kind == "code" and t.text == "-":
+        sign, i = -1, i + 1
+        t = _at(toks, i)
+    if t is not None and t.kind == "word" and _INT_RE.fullmatch(t.text):
+        return sign * int(t.text), i + 1
+    return None, i
 
 
 def split_statements(text: str) -> list[str]:
@@ -753,7 +875,9 @@ def run_script(store: TableStore, text: str) -> list[DataFrame | None]:
     a result before a LATER statement in the same script mutates or
     drops the tables it reads (``SELECT * FROM t; DROP TABLE t`` — the
     first result is unreadable after the drop), exactly as a cursor
-    over a dropped table would be.  The reference's CLI prints each
+    over a dropped table would be.  A point SELECT served on the driver
+    (see :func:`sql`) is the exception: its rows are read when its
+    statement runs, so later statements do not change them.  The reference's CLI prints each
     result before running the next statement; callers wanting that
     semantics should consume each result as it is produced."""
     return [sql(store, stmt) for stmt in split_statements(text)]

@@ -147,3 +147,20 @@ def test_time_keys_repeat_flag_parsing():
     for argv in (["k", "--n"], ["--name", "x"], ["--n=x"], ["--n", "x"]):
         with pytest.raises(SystemExit, match="usage:"):
             parse_args(argv)
+
+
+def test_default_references_refuse_a_4_cpu_candidate(tmp_path, capsys):
+    """Every committed quiet record says which core count it ran on, so
+    the refusal fires against the default reference set."""
+    import glob
+    import json
+    import os
+
+    import tools.bench_compare as bc
+
+    refs = glob.glob(os.path.join(os.path.dirname(bc.__file__), "bench_history", "bench_r*quiet*.json"))
+    assert refs and all(json.load(open(p)).get("cpus") == 32 for p in refs)
+    cand = tmp_path / "cand.json"
+    cand.write_text(json.dumps({"cpus": 4, "queries": {"q1_pricing_summary": 1.0}}))
+    assert main([str(cand)]) == 2
+    assert "refusing to compare" in capsys.readouterr().err

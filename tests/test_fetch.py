@@ -1,0 +1,290 @@
+"""Point SELECTs served on the driver (``TableStore.fetch``).
+
+An exact key-equality SELECT through ``sql_ddl.sql`` is answered by
+reading the key's tablet with pyarrow; every other statement runs
+through Spark SQL as before.  These tests run each served statement both
+ways and demand the same schema (names, types, nullability) and rows,
+check the driver-side bucket twin against Spark's ``xxhash64``, count
+the Spark jobs of a served read, and pin every shape that must still go
+to Spark.
+"""
+
+from __future__ import annotations
+
+import logging
+import uuid
+
+import pytest
+from hypothesis import given, settings, strategies as st
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from hivekudu_handler_spark import pins
+from hivekudu_handler_spark.sources.sql_ddl import sql
+from hivekudu_handler_spark.sources.table_store import (
+    NotFetchable,
+    TableMeta,
+    TableStore,
+)
+
+LOGGER = "hivekudu_handler_spark"
+
+TABLES = {
+    # name: (columns, extra TBLPROPERTIES)
+    "h_big": ("k BIGINT, v STRING, n INT", ""),
+    "h_int": ("k INT, v STRING, n INT", ", 'kudu.num_buckets'='3'"),
+    "h_str": ("k STRING, v STRING, n INT", ""),
+    "h_comp": ("a INT, b STRING, v STRING, n INT", ""),
+    "r_int": ("k INT, v STRING, n INT", ", 'kudu.range_splits'='-5,10,20'"),
+    "r_str": ("k STRING, v STRING, n INT", ", 'kudu.range_splits'='g,p'"),
+    "hr_comp": (
+        "a BIGINT, b STRING, v STRING, n INT",
+        ", 'kudu.range_splits'='0,15', 'kudu.hash_in_range'='3'",
+    ),
+}
+KEYS = {"h_comp": "a,b", "hr_comp": "a,b"}
+
+INTS = [-12, -5, 0, 3, 7, 10, 11, 19, 20, 25]
+STRS = ["", "a", "g", "gz", "k", "p", "zz", "é", "日本", "a b"]
+
+
+def _key_sql(name: str, i: int) -> str:
+    if name in KEYS:
+        return f"{INTS[i]}, '{STRS[i]}'"
+    return f"'{STRS[i]}'" if name.endswith("_str") else str(INTS[i])
+
+
+def _where(name: str, i: int, upper: bool = False) -> str:
+    a, b, k = ("A", "B", "K") if upper else ("a", "b", "k")
+    if name in KEYS:
+        return f"{a} = {INTS[i]} AND {b} = '{STRS[i]}'"
+    lit = f"'{STRS[i]}'" if name.endswith("_str") else str(INTS[i])
+    return f"{k} = {lit}"
+
+
+@pytest.fixture(scope="module")
+def store(spark, tmp_path_factory):
+    """Every layout, written through UPSERT, DELETE, ALTER ADD COLUMN,
+    RENAME COLUMN and VACUUM: rows 0-7 inserted, 0-2 and 8 upserted, 3
+    deleted, a column added and the value column renamed."""
+    wh = TableStore(spark, str(tmp_path_factory.mktemp("fetch") / "wh"))
+    for name, (cols, props) in TABLES.items():
+        keys = KEYS.get(name, "k")
+        sql(wh, f"CREATE TABLE {name} ({cols}) TBLPROPERTIES ('kudu.key_columns'='{keys}'{props})")
+        rows = ", ".join(f"({_key_sql(name, i)}, 'v{i}', {i})" for i in range(8))
+        sql(wh, f"INSERT INTO {name} VALUES {rows}")
+        sql(wh, f"ALTER TABLE {name} ADD COLUMN extra BIGINT")
+        ups = ", ".join(f"({_key_sql(name, i)}, 'u{i}', {10 + i}, {100 + i})" for i in (0, 1, 2, 8))
+        sql(wh, f"UPSERT INTO {name} VALUES {ups}")
+        sql(wh, f"DELETE FROM {name} WHERE {_where(name, 3)}")
+        sql(wh, f"ALTER TABLE {name} RENAME COLUMN v TO val")
+        sql(wh, f"VACUUM {name} RETAIN 1 VERSIONS")
+    return wh
+
+
+def _canon(rows):
+    return sorted((tuple(r) for r in rows), key=repr)
+
+
+def _local(df) -> bool:
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+def _jobs(spark, action):
+    """(result of ``action()``, number of Spark jobs it started)."""
+    sc = spark.sparkContext
+    group = f"fetch-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = action()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _same_both_ways(store, q: str) -> list:
+    served = sql(store, q)
+    assert _local(served), q
+    store.register_views()
+    ref = store.spark.sql(q)
+    assert served.schema == ref.schema, q
+    got = _canon(served.collect())
+    assert got == _canon(ref.collect()), q
+    return got
+
+
+@pytest.mark.parametrize("name", sorted(TABLES))
+def test_fetch_matches_spark_path(store, name):
+    key_cols = KEYS.get(name, "k").split(",")
+    selects = [
+        "*",
+        ", ".join([*key_cols, "val", "n", "extra"]),
+        "extra, val",
+        ", ".join(c.upper() for c in [*key_cols, "val"]),
+    ]
+    hits = 0
+    for i in range(10):  # 0-2 upserted, 3 deleted, 4-7 inserted, 8 new, 9 never
+        q = f"SELECT {selects[i % len(selects)]} FROM {name} WHERE {_where(name, i)}"
+        hits += len(_same_both_ways(store, q))
+    assert hits == 8
+    q = f"SELECT * FROM {name.upper()} WHERE {_where(name, 8, upper=True)}"
+    assert len(_same_both_ways(store, q)) == 1
+
+
+def test_key_order_and_negative_literal(store):
+    q = "SELECT val, n FROM hr_comp WHERE b = 'a' AND a = -5"
+    assert _same_both_ways(store, q) == [("u1", 11)]
+    assert len(_same_both_ways(store, "SELECT * FROM r_int WHERE k = - 12")) == 1
+    assert _same_both_ways(store, "select k from h_big where k = 9223372036854775807") == []
+
+
+def test_served_select_starts_no_job(spark, store):
+    rows, n = _jobs(spark, lambda: sql(store, "SELECT * FROM h_big WHERE k = 7").collect())
+    assert n == 0 and [r.k for r in rows] == [7]
+    rows, n = _jobs(spark, lambda: sql(store, "SELECT val FROM hr_comp WHERE a = 11 AND b = 'é'").collect())
+    assert n == 0 and rows == []
+
+
+FALL_THROUGH = [
+    "SELECT * FROM h_big WHERE k = 7 OR k = 8",
+    "SELECT * FROM h_big WHERE k IN (7)",
+    "SELECT * FROM h_big WHERE k = CAST(7 AS BIGINT)",
+    "SELECT * FROM h_big WHERE k = 7 LIMIT 1",
+    "SELECT k AS x FROM h_big WHERE k = 7",
+    "SELECT t.k FROM h_big t WHERE t.k = 7",
+    "SELECT * FROM h_big VERSION AS OF {version} WHERE k = 7",
+    "SELECT * FROM h_big WHERE k = 7 AND n = 7",
+    "SELECT k, k FROM h_big WHERE k = 7",
+    "SELECT * FROM h_big WHERE k = 7 AND k = 7",
+    "SELECT * FROM h_big WHERE k = '7'",
+    "SELECT * FROM h_big WHERE k = 7L",
+    "SELECT * FROM h_big WHERE k = 7 -- c",
+    "SELECT `k` FROM h_big WHERE k = 7",
+    "SELECT * FROM h_str WHERE k = 'it''s'",
+    "SELECT * FROM h_str WHERE k = 'a\\\\b'",
+    'SELECT * FROM h_str WHERE k = "a"',
+    "SELECT * FROM h_comp WHERE a = 1",
+    "SELECT * FROM v_big WHERE k = 7",
+    "SELECT * FROM ext WHERE k = 7",
+    "SELECT * FROM parted WHERE k = 7",
+    "SELECT * FROM nonstore WHERE k = 7",
+]
+
+
+def test_other_shapes_go_to_spark(spark, store, tmp_path, caplog):
+    spark.range(10).toDF("k").write.parquet(str(tmp_path / "ext"))
+    store.attach_external("ext", str(tmp_path / "ext"), ["k"])
+    store.create_view("v_big", "SELECT * FROM h_big")
+    sql(store, "CREATE TABLE parted (k BIGINT, p STRING) TBLPROPERTIES ('kudu.key_columns'='k', 'kudu.partition_by'='p')")
+    sql(store, "INSERT INTO parted VALUES (7, 'x')")
+    spark.range(10).toDF("k").createOrReplaceTempView("nonstore")
+    version = store.current_version("h_big")
+    caplog.set_level(logging.DEBUG, logger=LOGGER)
+    for q in FALL_THROUGH:
+        df = sql(store, q.format(version=version))
+        assert not _local(df), q
+        assert "LocalTableScan" not in df._jdf.queryExecution().executedPlan().toString(), q
+    assert sql(store, "SELECT * FROM parted WHERE k = 7").collect() == [(7, "x")]
+    # a literal outside the key's type goes to Spark too, whose optimizer
+    # folds the comparison to an empty local relation of its own
+    assert sql(store, "SELECT * FROM h_int WHERE k = 2147483648").collect() == []
+    explain = sql(store, "EXPLAIN SELECT * FROM h_big WHERE k = 7").collect()[0][0]
+    assert "FileScan" in explain
+    assert not [r for r in caplog.records if r.getMessage().startswith("fetch")]
+    # an unknown name is Spark's error, as before
+    for q in ("SELECT nope FROM h_big WHERE k = 7", "SELECT * FROM h_big WHERE nope = 7"):
+        with pytest.raises(AnalysisException):
+            sql(store, q)
+
+
+def test_fetch_api_rejects_what_it_does_not_serve(spark, store, tmp_path):
+    with pytest.raises(NotFetchable):
+        store.fetch("h_big", {"k": 2**63})
+    with pytest.raises(NotFetchable):
+        store.fetch("h_comp", {"a": 1})
+    with pytest.raises(NotFetchable):
+        store.fetch("h_big", {"k": 1}, ["nope"])
+    floats = TableStore(spark, str(tmp_path / "wh"))
+    floats.create_table("f", "k INT, v STRING", ["k"], range_splits=[1.5])
+    with pytest.raises(NotFetchable):
+        floats.fetch("f", {"k": 1})
+    assert store.fetch("H_BIG", {"K": 5}, ["Val"]).columns == ["Val"]
+
+
+# ---------------------------------------------------------------- bucket twin
+_INT_TYPES = [
+    ("tinyint", T.ByteType(), 8),
+    ("smallint", T.ShortType(), 16),
+    ("int", T.IntegerType(), 32),
+    ("bigint", T.LongType(), 64),
+]
+
+
+def _key_value(draw_type):
+    """(spark type, value) for one key column of the drawn type index."""
+    if draw_type == 4:
+        return st.tuples(st.just(T.StringType()), st.text(max_size=40))
+    _, dtype, bits = _INT_TYPES[draw_type]
+    lo, hi = -(1 << (bits - 1)), (1 << (bits - 1)) - 1
+    return st.tuples(
+        st.just(dtype),
+        st.one_of(st.sampled_from([lo, hi, -1, 0, 1]), st.integers(lo, hi)),
+    )
+
+
+_CASE = st.tuples(
+    st.lists(st.integers(0, 4).flatmap(_key_value), min_size=1, max_size=3),
+    st.integers(1, 64),
+)
+
+
+@settings(max_examples=12, deadline=None)
+@given(st.lists(_CASE, min_size=1, max_size=25))
+def test_bucket_twin_matches_spark_xxhash64(spark, store, cases):
+    cols, want = [], []
+    for keys, n in cases:
+        names = [f"c{j}" for j in range(len(keys))]
+        meta = TableMeta(
+            name="t",
+            schema=T.StructType([T.StructField(c, t) for c, (t, _) in zip(names, keys)]),
+            key_columns=names,
+            num_buckets=n,
+        )
+        want.append(store._hash_py(meta, [v for _, v in keys]))
+        lits = [F.lit(v).cast(t) for t, v in keys]
+        cols.append(F.pmod(F.xxhash64(*lits), F.lit(n)))
+    got = list(spark.range(1).select(*cols).first())
+    assert got == want
+
+
+# ---------------------------------------------------------------- logging
+def test_package_logger_is_silent_by_default():
+    handlers = logging.getLogger(LOGGER).handlers
+    assert any(isinstance(h, logging.NullHandler) for h in handlers)
+
+
+def test_fetch_record_names_only_the_key_tablet(store, caplog):
+    caplog.set_level(logging.DEBUG, logger=LOGGER)
+    sql(store, "SELECT * FROM hr_comp WHERE a = 20 AND b = '日本'").collect()
+    (rec,) = [r for r in caplog.records if r.getMessage().startswith("fetch hr_comp")]
+    meta = store.table_meta("hr_comp")
+    tablet = store._tablet_py(meta, [20, "日本"])
+    assert rec.tablet == tablet and tablet[0] == 2
+    head = store._head("hr_comp")[1]
+    want = [f for f in head if store._tablet_of(meta, f) == tablet]
+    assert rec.files == want and want
+    assert len(want) < len(head)
+    prefix = f"kr={tablet[0]}/kb={tablet[1]}/"
+    assert all(f.startswith(prefix) for f in rec.files)
+
+
+def test_pin_records_persist_reuse_release(spark, caplog):
+    caplog.set_level(logging.DEBUG, logger=LOGGER)
+    tag = "tests.fetch.pin_log"
+    pins.pin(tag, spark.range(5))
+    pins.pin(tag, spark.range(5))
+    pins.release(tag)
+    got = [(r.tag, r.action) for r in caplog.records if getattr(r, "tag", None) == tag]
+    assert got == [(tag, "persist"), (tag, "reuse"), (tag, "release")]
