@@ -1893,7 +1893,9 @@ def _aligned_write(
     """Align a positional batch (VALUES literals or a SELECT result) to
     the table schema — column-list handling, DEFAULT fill, partial
     UPSERT — then run the guarded keyed write.  Shared by
-    ``INSERT/UPSERT ... VALUES`` and ``INSERT/UPSERT ... SELECT``."""
+    ``INSERT/UPSERT ... VALUES`` and ``INSERT/UPSERT ... SELECT``.
+    Source columns are taken by position (``toDF``), never by their
+    generated names, which may hold a dot (``(id * 1.5)``)."""
     fields = meta.schema.fields
     if col_list is None:
         if len(df.columns) != len(fields):
@@ -1901,11 +1903,8 @@ def _aligned_write(
                 f"INSERT arity mismatch for {name!r}: table has {len(fields)} "
                 f"columns, the source has {len(df.columns)}"
             )
-        df = df.select(
-            *[
-                F.col(c).cast(f.dataType).alias(f.name)
-                for c, f in zip(df.columns, fields)
-            ]
+        df = df.toDF(*[f.name for f in fields]).select(
+            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in fields]
         )
     else:
         # INSERT INTO t (a, b) ...: omitted columns fill with their
@@ -1923,11 +1922,8 @@ def _aligned_write(
                 f"INSERT arity mismatch for {name!r}: column list has "
                 f"{len(named)} columns, the source has {len(df.columns)}"
             )
-        df = df.select(
-            *[
-                F.col(c).cast(types[n].dataType).alias(n)
-                for c, n in zip(df.columns, named)
-            ]
+        df = df.toDF(*named).select(
+            *[F.col(n).cast(types[n].dataType).alias(n) for n in named]
         )
         missing_keys = [k for k in meta.key_columns if k not in named]
         if missing_keys:

@@ -36,9 +36,25 @@ Spark analogue of Kudu's tablets (``HiveKuduTableInputFormat.java:
   min/max stats prune further inside it.
 
 Either way every mutation touches only the tablets its keys land in.
-A keyed write finds them with one tablet probe (an observation on a
-no-op write: one job, no shuffle) and stages one write whose tablet
-shuffle also merges rows by key (:meth:`TableStore._write_partitioned`):
+A keyed write merges its batch with those tablets' rows by key, on one
+of two paths (:meth:`TableStore._keyed_write`):
+
+* **driver** — a small write, as the reference's client-side Kudu
+  session applies rows (``HiveKuduTableOutputFormat.java:84,96-106``):
+  the batch is collected once (no Spark job for a VALUES batch) and,
+  when its tablets' live files are small too, they are read, merged and
+  rewritten with pyarrow, one file per tablet.  "Small" is Spark's own
+  bound on what may be pulled to the driver,
+  ``spark.sql.autoBroadcastJoinThreshold`` (10 MB by default; <= 0
+  turns the path off), against Spark's row-size estimate for the batch
+  and the files' sizes on disk;
+* **Spark** — anything larger, and every ``partition_by``, extended or
+  non-integral/non-STRING-keyed table: one tablet probe (an observation
+  on a no-op write: one job, no shuffle; skipped when the driver
+  already knows the tablets) and one staged write whose tablet shuffle
+  also merges rows by key (:meth:`TableStore._write_partitioned`).
+
+Both paths apply one merge rule and leave the same rows; either way:
 
 * INSERT adds new files to affected buckets (existing files are never
   rewritten; the affected buckets' existing keys, read via partition
@@ -50,7 +66,8 @@ shuffle also merges rows by key (:meth:`TableStore._write_partitioned`):
 
 On a cluster the same code paths run unchanged; per-bucket file lists and
 bucket ids (bounded by the bucket count, never by data volume) are the
-only driver-side state.
+only driver-side state, besides a small write's rows (bounded by the
+driver budget).
 
 **Storage vs metadata** (Kudu's ``READ_AT_SNAPSHOT`` scan mode — the
 scanner the reference builds at ``HiveKuduTableInputFormat.java:449-517``
@@ -2254,13 +2271,17 @@ class TableStore:
         return out
 
     def _read_tablet(
-        self, meta: TableMeta, rels: list[str], out: list[T.StructField], key: dict
+        self,
+        meta: TableMeta,
+        rels: list[str],
+        out: list[T.StructField],
+        key: dict | None = None,
     ):
-        """The rows of the files ``rels`` whose key equals ``key``, as a
-        pyarrow table of the fields ``out`` (positional column names).
-        One tablet of a point read is read on the calling thread: handing
-        it to pyarrow's thread pools cost about 3 ms more per read (16 vs
-        18 ms per point SELECT, 4-core host)."""
+        """The rows of the files ``rels`` (whose key equals ``key``, when
+        given), as a pyarrow table of the fields ``out`` (positional
+        column names).  One tablet of a point read is read on the calling
+        thread: handing it to pyarrow's thread pools cost about 3 ms more
+        per read (16 vs 18 ms per point SELECT, 4-core host)."""
         from functools import reduce
 
         import pyarrow.dataset as ds
@@ -2274,7 +2295,7 @@ class TableStore:
         fmt = ds.ParquetFileFormat(read_options={"coerce_int96_timestamp_unit": "us"})
         data = self._data_dir(meta.name)
         dataset = ds.dataset([str(data / r) for r in rels], schema=phys, format=fmt)
-        cond = reduce(
+        cond = None if key is None else reduce(
             lambda a, b: a & b,
             [ds.field(meta.phys_name(k)) == v for k, v in key.items()],
         )
@@ -2623,6 +2644,187 @@ class TableStore:
         df.observe(obs, ids).write.format("noop").mode("overwrite").save()
         return sorted(tuple(r) for r in obs.get["ids"])
 
+    def _write_budget(self) -> int:
+        """Bytes a keyed write may bring to the driver: the session's
+        ``spark.sql.autoBroadcastJoinThreshold``, Spark's own size under
+        which a relation may be pulled to the driver (10 MB by default),
+        read through the JVM conf so its size suffixes parse as Spark
+        parses them.  A value <= 0 turns the driver write path off."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        return int(conf.autoBroadcastJoinThreshold())
+
+    @staticmethod
+    def _driver_shape(meta: TableMeta) -> str | None:
+        """Why no write of ``meta`` runs on the driver, whatever its size
+        (None when one may) — the exclusions :meth:`fetch` makes.  The
+        files of a ``partition_by`` table lack the partition columns; an
+        extended table's nested types have no exact pyarrow round trip
+        (each core type has one: timestamps travel as their
+        microseconds); and the driver merge groups keys by Arrow
+        equality, which is Spark's only for integral and STRING keys."""
+        if meta.partition_by:
+            return "layout"
+        if meta.extended:
+            return "column type"
+        types = {f.name: f.dataType for f in meta.schema.fields}
+        if not all(
+            isinstance(types[k], (T.StringType, *_INT_BITS)) for k in meta.key_columns
+        ):
+            return "key type"
+        return None
+
+    @staticmethod
+    def _is_local(df: DataFrame) -> bool:
+        """Whether ``df`` optimizes to a local relation (VALUES, driver
+        frames), which ``collect()`` reads without a Spark job."""
+        plan = df._jdf.queryExecution().optimizedPlan()
+        return plan.getClass().getSimpleName() == "LocalRelation"
+
+    def _collect_batch(
+        self, meta: TableMeta, batch: DataFrame, budget: int, local: bool
+    ):
+        """``batch`` (write-merge rows) with each row's tablet, as a
+        pyarrow table (the logical columns, the ``_SRC`` rank and the
+        tablet columns, all nullable), if it holds at most the rows
+        ``budget`` bytes allow by Spark's own row estimate (8 bytes plus
+        the schema's default size); else None.
+
+        One action bounded by ``limit(n + 1)``: a ``local`` relation is
+        collected as rows, which starts no Spark job, and any other batch
+        is read as Arrow.  Tablets come from the write path's own tablet
+        expressions (:meth:`_part_exprs`) and timestamps travel as their
+        microseconds, so both are exact.  As the batch's first action it
+        fires the guards (NOT NULL, NULL key, MERGE cardinality) of every
+        row it reads — all of them when the batch fits."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        n = min(budget // (8 + batch._jdf.schema().defaultSize()), (1 << 31) - 2)
+        fields = meta.schema.fields
+        pcs = self._part_cols(meta)
+        frame = batch.select(
+            *[
+                (
+                    F.unix_micros(F.col(f.name))
+                    if isinstance(f.dataType, T.TimestampType)
+                    else F.col(f.name)
+                ).alias(f.name)
+                for f in fields
+            ],
+            _SRC,
+            *[e.alias(c) for c, e in zip(pcs, self._part_exprs(meta))],
+        ).limit(n + 1)
+        schema = to_arrow_schema(
+            T.StructType(
+                [T.StructField(f.name, f.dataType) for f in fields]
+                + [T.StructField(c, T.IntegerType()) for c in [_SRC, *pcs]]
+            )
+        )
+        wire = [
+            pa.int64() if pa.types.is_timestamp(f.type) else f.type for f in schema
+        ]
+        if local:
+            rows = frame.collect()
+            cols = list(zip(*rows)) if rows else [()] * len(wire)
+            arrays = [pa.array(c, type=t) for c, t in zip(cols, wire)]
+            table = pa.table(arrays, names=schema.names)
+        else:
+            table = frame.toArrow()
+        if table.num_rows > n:
+            return None
+        return table.cast(schema)
+
+    def _merge_on_driver(
+        self, meta: TableMeta, batch, rels: list[str], op: str, keep: tuple
+    ):
+        """The winners of ``batch`` (from :meth:`_collect_batch`) merged
+        with the rows of the files ``rels`` by :meth:`_write_partitioned`'s
+        rule, as a pyarrow table of ``batch``'s schema.
+
+        Existing rows rank 0 for an insert — they win outright, so only
+        their keys are read — and 2 otherwise.  Per key the lowest rank
+        wins, then the smallest non-key tuple, ascending with nulls last
+        (Arrow orders NaN above every number and below NULL, as Spark
+        does); a winner is kept if its rank is in ``keep``."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        schema = batch.schema
+        keys = meta.key_columns
+        read = [f for f in meta.schema.fields if op != "insert" or f.name in keys]
+        by_tablet: dict[tuple, list[str]] = {}
+        for rel in rels:
+            by_tablet.setdefault(self._tablet_of(meta, rel), []).append(rel)
+        parts = [batch]
+        for tablet, trels in by_tablet.items():
+            got = self._read_tablet(meta, trels, read)
+            n = got.num_rows
+            cols = dict(zip([f.name for f in read], got.columns))
+            consts = zip([_SRC, *self._part_cols(meta)], [0 if op == "insert" else 2, *tablet])
+            for c, v in consts:
+                cols[c] = pa.repeat(pa.scalar(v, pa.int32()), n)
+            parts.append(
+                pa.table([cols.get(f.name, pa.nulls(n, f.type)) for f in schema], schema=schema)
+            )
+        rows = pa.concat_tables(parts)
+        order = [*keys, _SRC, *[f.name for f in meta.schema.fields if f.name not in keys]]
+        rows = rows.take(
+            pc.sort_indices(
+                rows, sort_keys=[(c, "ascending") for c in order], null_placement="at_end"
+            )
+        )
+        # each key's first row in that order wins
+        pos = rows.append_column("__pos", pa.array(np.arange(rows.num_rows)))
+        won = rows.take(
+            pos.group_by(keys, use_threads=False).aggregate([("__pos", "min")])["__pos_min"]
+        )
+        return won.filter(pc.is_in(won[_SRC], pa.array(keep, pa.int32())))
+
+    def _tablet_counts(self, meta: TableMeta, rows) -> list[tuple[tuple, int]]:
+        """``(tablet, row count)`` of each tablet the pyarrow table
+        ``rows`` (with the tablet columns) holds rows of, in order of
+        first appearance."""
+        pcs = self._part_cols(meta)
+        counts = rows.group_by(pcs, use_threads=False).aggregate([([], "count_all")])
+        tablets = zip(*[counts[c].to_pylist() for c in pcs])
+        return list(zip(tablets, counts["count_all"].to_pylist()))
+
+    def _write_tablets(self, meta: TableMeta, rows, path: Path) -> int:
+        """Write the driver-merged ``rows`` under ``path`` the way
+        :meth:`_write_partitioned` lays them out: one snappy Parquet file
+        per tablet directory, with physical column names and no partition
+        columns, its rows sorted by key.  Returns the rows written.
+
+        The file keeps a Spark-written file's shape, so reads cost the
+        same: one row group, and a dictionary only for a column with at
+        most half as many distinct values as rows — Spark's Parquet
+        writer drops a dictionary that does not beat plain encoding, so
+        a unique key column is written plain."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        pcs = self._part_cols(meta)
+        rows = rows.sort_by([(c, "ascending") for c in [*pcs, *meta.key_columns]])
+        data = rows.select([f.name for f in meta.schema.fields]).rename_columns(
+            [meta.phys_name(f.name) for f in meta.schema.fields]
+        )
+        name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+        start = 0
+        for tablet, n in self._tablet_counts(meta, rows):
+            out = path.joinpath(*[f"{c}={v}" for c, v in zip(pcs, tablet)])
+            out.mkdir(parents=True)
+            part = data.slice(start, n)
+            dictionary = [
+                c for c in part.column_names
+                if 2 * pc.count_distinct(part[c]).as_py() <= n
+            ]
+            pq.write_table(
+                part, out / name, compression="snappy", use_dictionary=dictionary
+            )
+            start += n
+        return rows.num_rows
+
     def _write_partitioned(
         self, meta: TableMeta, df: DataFrame, path: Path, keep: tuple | None
     ) -> int:
@@ -2671,17 +2873,22 @@ class TableStore:
         return obs.get["rows"]
 
     def _stage(
-        self, meta: TableMeta, df: DataFrame, keep: tuple | None = None
+        self, meta: TableMeta, df, keep: tuple | None = None
     ) -> tuple[list[str], int]:
-        """Write ``df`` (see :meth:`_write_partitioned`) to a staging
-        directory private to this writer, removed whether or not the
-        write succeeds, then move its part files into ``data/`` under the
-        same relative paths — the one move a data file ever makes (part
-        names embed a per-write UUID).  Returns those paths (none when no
-        row was written) and the row count."""
+        """Write ``df`` — a DataFrame through Spark (see
+        :meth:`_write_partitioned`), or the driver-merged rows of a
+        pyarrow table (:meth:`_write_tablets`) — to a staging directory
+        private to this writer, removed whether or not the write
+        succeeds, then move its part files into ``data/`` under the same
+        relative paths — the one move a data file ever makes (part names
+        embed a per-write UUID).  Returns those paths (none when no row
+        was written) and the row count."""
         stage = self._dir(meta.name) / "staging" / uuid.uuid4().hex
         try:
-            rows = self._write_partitioned(meta, df, stage, keep)
+            if isinstance(df, DataFrame):
+                rows = self._write_partitioned(meta, df, stage, keep)
+            else:
+                rows = self._write_tablets(meta, df, stage)
             data = self._data_dir(meta.name)
             added = []
             for p in sorted(stage.rglob("*.parquet")):
@@ -2705,54 +2912,159 @@ class TableStore:
         base: int,
         files: list[str],
         bucket_ids: list[tuple],
-        df: DataFrame,
+        df,
         op: str,
         keep: tuple | None = None,
-    ) -> None:
+    ) -> list[str]:
         """Commit ``df`` (after the ``keep`` merge, exactly the surviving
         rows of the tablets ``bucket_ids``) as those tablets' new
         contents: version ``base + 1`` lists base's ``files`` minus those
-        tablets' files plus the staged ones.  Every other tablet's files
-        carry over unread and unwritten."""
+        tablets' files plus the staged ones, which are returned.  Every
+        other tablet's files carry over unread and unwritten."""
         added, rows = self._stage(meta, df, keep)
         replaced = {tuple(t) for t in bucket_ids}
         kept = [f for f in files if self._tablet_of(meta, f) not in replaced]
         self._commit_version(meta, base, op, kept + added, rows)
+        return added
+
+    def _keyed_write(
+        self,
+        meta: TableMeta,
+        head: tuple[int, list[str]],
+        op: str,
+        batch: DataFrame,
+        keep: tuple,
+        rest: DataFrame | None = None,
+    ) -> None:
+        """The one keyed write behind :meth:`insert`, :meth:`upsert` and
+        :meth:`delete_where`: ``batch`` (write-merge rows carrying their
+        ``_SRC`` rank) merges by key with the rows the base version
+        ``head`` (:meth:`_head`) holds in the tablets its keys land in,
+        and the winners whose rank is in ``keep`` become those tablets'
+        rows.  An insert ranks existing rows 0, writes only new rows and
+        rewrites no file; the others rank them 2 and rewrite each
+        touched tablet.  A delete passes ``rest``, the rows
+        its predicate leaves, which the Spark path writes instead of a
+        merge.
+
+        **On the driver** when the write is small.  The batch is
+        collected once (:meth:`_collect_batch`) within the budget
+        (:meth:`_write_budget`); if the live files of its tablets also
+        fit the budget (by ``stat``), they are read with pyarrow, merged
+        (:meth:`_merge_on_driver`) and written one file per tablet
+        (:meth:`_write_tablets`) through the same staging directory and
+        commit as a Spark write.  A local batch (VALUES) thus commits
+        with no Spark job at all.
+
+        **Through Spark** otherwise: the staged write of
+        :meth:`_write_partitioned`, merging in its tablet shuffle.  When
+        only the tablets were too big, it takes the driver's tablets and
+        collected rows; it runs the tablet probe (:meth:`_affected_buckets`)
+        when the batch was too big, or was never collected because the
+        budget is off or the table's shape rules the driver out
+        (:meth:`_driver_shape`).
+
+        A write that touches no tablet, and an insert whose batch rows
+        all lose to existing keys, commits no version.  Each write logs
+        one DEBUG record: the path taken, why not the driver, the
+        tablets touched and the bytes read and written."""
+        base, files = head
+        pcs = self._part_cols(meta)
+        budget = self._write_budget()
+        reason = "budget off" if budget <= 0 else self._driver_shape(meta)
+        local = reason is None and self._is_local(batch)
+        held = batch
+        cached = None
+        try:
+            rows = tablets = None
+            if reason is None:
+                rows = self._collect_batch(meta, batch, budget, local)
+                if rows is None:
+                    reason = "batch over budget"
+                else:
+                    tablets = sorted(t for t, _ in self._tablet_counts(meta, rows))
+            if tablets is None and (files or op != "insert"):
+                # persist: the probe and the staged write both read the
+                # batch, and unpersisted the caller's upstream plan would
+                # run for each.  A local relation is cheaper to rebuild
+                # than to cache, and a delete writes ``rest`` instead.
+                # (An insert into an empty table needs no tablets: its
+                # staged write holds the whole batch.)
+                if not local and rest is None:
+                    held = cached = batch.persist()
+                tablets = self._affected_buckets(meta, held)
+            touched = set(tablets or ())
+            rels = [f for f in files if self._tablet_of(meta, f) in touched]
+            data = self._data_dir(meta.name)
+            bytes_read = sum((data / f).stat().st_size for f in rels)
+            if reason is None and bytes_read > budget:
+                reason = "tablets over budget"
+                # the Spark write stages the rows the driver collected:
+                # the batch's plan runs once, and the rows match the
+                # tablets they were counted in
+                logical = T.StructType(
+                    [T.StructField(f.name, f.dataType) for f in meta.schema.fields]
+                    + [T.StructField(_SRC, T.IntegerType())]
+                )
+                held = arrow_frame(self.spark, rows.drop_columns(pcs), logical)
+            added: list[str] = []
+            if tablets != []:
+                if reason is None:
+                    staged = self._merge_on_driver(meta, rows, rels, op, keep)
+                elif not files:
+                    staged = held
+                else:
+                    existing = self._read_files(meta, files).filter(
+                        self._part_filter(meta, tablets)
+                    )
+                    if op == "insert":
+                        staged = held.unionByName(self._as_keys(meta, existing, 0))
+                    elif rest is not None:
+                        staged = rest.filter(self._part_filter(meta, tablets)).drop(*pcs)
+                        keep = None
+                    else:
+                        staged = held.unionByName(
+                            existing.drop(*pcs).withColumn(_SRC, F.lit(2))
+                        )
+                if op == "insert":
+                    added, n = self._stage(meta, staged, keep)
+                    if added:
+                        self._commit_version(meta, base, op, files + added, n)
+                else:
+                    added = self._replace_buckets(
+                        meta, base, files, tablets, staged, op, keep
+                    )
+            path = "spark" if reason else "driver"
+            if tablets is None:
+                tablets = sorted({self._tablet_of(meta, f) for f in added})
+            written = sum((data / f).stat().st_size for f in added)
+            _log.debug(
+                "write %s %s on the %s%s: %d tablets, %d bytes read, %d written",
+                meta.name, op, path, f" ({reason})" if reason else "",
+                len(tablets), bytes_read, written,
+                extra={
+                    "table": meta.name, "op": op, "write_path": path,
+                    "reason": reason, "tablets": tablets,
+                    "bytes_read": bytes_read, "bytes_written": written,
+                },
+            )
+        finally:
+            if cached is not None:
+                cached.unpersist()
 
     def insert(self, name: str, df: DataFrame) -> None:
         """INSERT with silent duplicate-key ignore
         (``HiveKuduTableOutputFormat.java:101``): existing rows win, then
         the batch's smallest non-key tuple (:meth:`_write_partitioned`).
         Pure append: the existing keys of the tablets the batch lands in
-        (partition pruning on ``kb``/``kr``) merge with the batch in the
-        staged write, which writes only winning batch rows."""
+        merge with the batch, and only winning batch rows are written,
+        as new files; no version is committed when none wins.  A small
+        write runs on the driver with pyarrow, anything else as a staged
+        Spark write (:meth:`_keyed_write`)."""
         meta = self._writable_meta(name)
-        base, files = self._head(meta.name)
         # ranks: existing keys 0, batch 1 — only winning batch rows land
         batch = self._validate_batch(meta, df).withColumn(_SRC, F.lit(1))
-        if not files:
-            # empty table: no existing keys and no tablet probe — one
-            # write, committed only if it landed files (an empty batch
-            # writes none and must not commit a version)
-            added, rows = self._stage(meta, batch, (1,))
-            if added:
-                self._commit_version(meta, base, "insert", added, rows)
-            return
-        # persist: the batch feeds the tablet probe and the staged write,
-        # and unpersisted the caller's upstream plan would run twice
-        batch = batch.persist()
-        try:
-            affected = self._affected_buckets(meta, batch)
-            if not affected:
-                return
-            existing = self._read_files(meta, files).filter(
-                self._part_filter(meta, affected)
-            )
-            merged = batch.unionByName(self._as_keys(meta, existing, 0))
-            added, rows = self._stage(meta, merged, (1,))
-            self._commit_version(meta, base, "insert", files + added, rows)
-        finally:
-            batch.unpersist()
+        self._keyed_write(meta, self._head(meta.name), "insert", batch, (1,))
 
     def insert_values(self, name: str, rows: list[tuple]) -> None:
         """INSERT INTO ... VALUES — the reference demo's ingest path
@@ -2776,40 +3088,18 @@ class TableStore:
         key present in both the batch and ``delete_keys`` is ASSERTED
         (batch wins): deletion applies to existing rows only.
 
-        One tablet probe over batch ∪ delete keys, then one staged write
-        of those ∪ the affected tablets' rows, merged by key
-        (:meth:`_write_partitioned`) with ranks batch 0, delete 1 (a
-        winning delete drops the key), existing 2."""
+        Batch ∪ delete keys merge by key with the touched tablets' rows
+        with ranks batch 0, delete 1 (a winning delete drops the key),
+        existing 2 — on the driver with pyarrow when the write is small,
+        else in one staged Spark write after one tablet probe
+        (:meth:`_keyed_write`).  Guards (NOT NULL, MERGE cardinality)
+        fire at the batch's first action, before any file is staged."""
         meta = self._writable_meta(name)
-        base, files = self._head(meta.name)
-        # persist: the batch (and the delete keys) feed the tablet probe
-        # and the staged write.  The probe materializes them, so their
-        # guards (NOT NULL, MERGE cardinality) fire before any file is
-        # staged, and the caller's upstream plan runs once
-        batch = self._validate_batch(meta, df).withColumn(_SRC, F.lit(0)).persist()
-        drop = None
-        try:
-            merged = batch
-            if delete_keys is not None:
-                drop = self._as_keys(meta, delete_keys, 1).persist()
-                merged = merged.unionByName(drop)
-            affected = self._affected_buckets(meta, merged)
-            if not affected:
-                return
-            existing = (
-                self._read_files(meta, files)
-                .filter(self._part_filter(meta, affected))
-                .drop(*self._part_cols(meta))
-                .withColumn(_SRC, F.lit(2))
-            )
-            self._replace_buckets(
-                meta, base, files, affected, merged.unionByName(existing),
-                "upsert", (0, 2),
-            )
-        finally:
-            batch.unpersist()
-            if drop is not None:
-                drop.unpersist()
+        head = self._head(meta.name)
+        batch = self._validate_batch(meta, df).withColumn(_SRC, F.lit(0))
+        if delete_keys is not None:
+            batch = batch.unionByName(self._as_keys(meta, delete_keys, 1))
+        self._keyed_write(meta, head, "upsert", batch, (0, 2))
 
     def truncate(self, name: str) -> int:
         """TRUNCATE TABLE: commit ONE new version listing no files — even
@@ -2825,26 +3115,22 @@ class TableStore:
 
         SQL DELETE semantics: a row is deleted only where the predicate is
         definitively TRUE — rows where it evaluates to NULL are kept
-        (``~pred`` alone would drop them).  Only buckets that contain at
-        least one matching row are rewritten."""
+        (``~pred`` alone would drop them).  Only tablets that hold at
+        least one matching row are rewritten: the matching keys are
+        collected once and, when the write is small, the tablets are
+        rewritten on the driver without them; otherwise a staged Spark
+        write rewrites the rows the predicate leaves
+        (:meth:`_keyed_write`)."""
         meta = self._writable_meta(name)
-        base, files = self._head(meta.name)
+        head = self._head(meta.name)
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
         # alias the (logical-named) scan with the table name so ANSI
         # correlated subqueries — EXISTS (SELECT .. WHERE other.k = t.k)
         # — resolve their outer references
-        raw = self._read_files(meta, files).alias(meta.name)
-        affected = self._affected_buckets(
-            meta, raw.filter(F.coalesce(pred, F.lit(False)))
-        )
-        if not affected:
-            return
-        remaining = (
-            raw.filter(self._part_filter(meta, affected))
-            .filter(~F.coalesce(pred, F.lit(False)))
-            .drop(*self._part_cols(meta))
-        )
-        self._replace_buckets(meta, base, files, affected, remaining, "delete")
+        raw = self._read_files(meta, head[1]).alias(meta.name)
+        hit = F.coalesce(pred, F.lit(False))
+        keys = self._as_keys(meta, raw.filter(hit), 1)
+        self._keyed_write(meta, head, "delete", keys, (2,), rest=raw.filter(~hit))
 
     def compact(self, name: str, max_files_per_bucket: int = 8) -> list[int]:
         """Rewrite buckets whose file count exceeds the threshold into one

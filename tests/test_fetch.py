@@ -280,6 +280,72 @@ def test_fetch_record_names_only_the_key_tablet(store, caplog):
     assert all(f.startswith(prefix) for f in rec.files)
 
 
+def test_write_records_path_reason_tablets_and_bytes(spark, tmp_path, monkeypatch, caplog):
+    """Each keyed write logs one DEBUG record: the path it took, why not
+    the driver, the tablets touched and the bytes read and written.  The
+    driver budget is ``spark.sql.autoBroadcastJoinThreshold``; when only
+    the tablets are over it, the Spark write takes the driver's tablets
+    and runs no tablet probe."""
+    wh = TableStore(spark, str(tmp_path / "wh"))
+    sql(wh, "CREATE TABLE w (k BIGINT, v STRING, n INT) TBLPROPERTIES ('kudu.key_columns'='k')")
+    sql(wh, "INSERT INTO w VALUES " + ", ".join(f"({i}, 'v{i}', {i})" for i in range(40)))
+    meta = wh.table_meta("w")
+    tablets = sorted({wh._tablet_py(meta, [k]) for k in (1, 2)})
+    caplog.set_level(logging.DEBUG, logger=LOGGER)
+
+    def record(stmt):
+        caplog.clear()
+        base = wh._head("w")[1]
+        sql(wh, stmt)
+        (rec,) = [r for r in caplog.records if r.getMessage().startswith("write w ")]
+        data = wh._data_dir("w")
+        read = [f for f in base if wh._tablet_of(meta, f) in set(rec.tablets)]
+        assert rec.bytes_read == sum((data / f).stat().st_size for f in read)
+        m = wh._read_manifest("w", wh.current_version("w"))["metrics"]
+        assert rec.bytes_written == m["bytes_added"]
+        return rec
+
+    rec = record("UPSERT INTO w VALUES (1, 'a', 1), (2, 'b', 2)")
+    assert (rec.op, rec.write_path, rec.reason, rec.tablets) == ("upsert", "driver", None, tablets)
+    assert rec.getMessage().startswith("write w upsert on the driver: 2 tablets")
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(conf)
+    try:
+        # 200 bytes hold the 2-row batch, not its tablets' files
+        assert rec.bytes_read > 200
+        spark.conf.set(conf, "200")
+
+        def no_probe(*args):
+            raise AssertionError("the tablet probe ran")
+
+        monkeypatch.setattr(wh, "_affected_buckets", no_probe)
+        rec = record("UPSERT INTO w VALUES (1, 'c', 1), (2, 'd', 2)")
+        assert (rec.write_path, rec.reason, rec.tablets) == ("spark", "tablets over budget", tablets)
+        monkeypatch.undo()
+        # 100 bytes hold 2 rows of (8 + 36) bytes: a 3-row batch is over
+        spark.conf.set(conf, "100")
+        rec = record("UPSERT INTO w VALUES (1, 'e', 1), (2, 'f', 2), (3, 'g', 3)")
+        assert (rec.write_path, rec.reason) == ("spark", "batch over budget")
+        spark.conf.set(conf, "-1")
+        rec = record("DELETE FROM w WHERE k = 1")
+        assert (rec.op, rec.write_path, rec.reason) == ("delete", "spark", "budget off")
+    finally:
+        spark.conf.set(conf, old)
+    assert {r["k"]: r["v"] for r in wh.scan("w", predicate="k < 4").collect()} == {
+        0: "v0", 2: "f", 3: "g"
+    }
+    sql(wh, "CREATE TABLE p (k BIGINT, q STRING) TBLPROPERTIES ('kudu.key_columns'='k', 'kudu.partition_by'='q')")
+    sql(wh, "CREATE TABLE f (k DOUBLE, v STRING) TBLPROPERTIES ('kudu.key_columns'='k')")
+    for stmt, reason in (
+        ("INSERT INTO p VALUES (1, 'x')", "layout"),
+        ("INSERT INTO f VALUES (1.5, 'x')", "key type"),
+    ):
+        caplog.clear()
+        sql(wh, stmt)
+        (rec,) = [r for r in caplog.records if r.getMessage().startswith("write ")]
+        assert (rec.write_path, rec.reason) == ("spark", reason), stmt
+
+
 def test_pin_records_persist_reuse_release(spark, caplog):
     caplog.set_level(logging.DEBUG, logger=LOGGER)
     tag = "tests.fetch.pin_log"

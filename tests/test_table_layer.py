@@ -141,6 +141,42 @@ def test_insert_empty_table_fast_path_commit_semantics(spark, store):
     assert rows == {1: "a", 2: "b"}
 
 
+def test_insert_of_existing_keys_commits_no_version(spark, store, write_path):
+    """An INSERT into a non-empty table whose batch rows all lose to
+    existing keys changes nothing and commits no version, on either
+    write path (the rule the empty-table insert already follows)."""
+    store.create_table("t", "id int, name string", ["id"])
+    store.insert_values("t", [(1, "a"), (2, "b")])
+    v = store.current_version("t")
+    store.insert_values("t", [(1, "z"), (2, "y"), (2, "x")])
+    assert store.current_version("t") == v
+    store.insert_values("t", [(2, "y"), (3, "c")])
+    assert store.current_version("t") == v + 1
+    rows = {r["id"]: r["name"] for r in store.scan("t").collect()}
+    assert rows == {1: "a", 2: "b", 3: "c"}
+
+
+def test_insert_select_takes_columns_by_position(spark, store):
+    """INSERT/UPSERT ... SELECT align the select list to the table by
+    position: an unaliased expression whose generated name holds a dot,
+    ``(id * 1.5)``, is not read as a struct field."""
+    from hivekudu_handler_spark.sources.sql_ddl import sql
+
+    sql(
+        store,
+        "CREATE TABLE kv (k BIGINT, cust BIGINT, status STRING, price DOUBLE, "
+        "prio STRING) TBLPROPERTIES ('kudu.key_columns'='k')",
+    )
+    sql(store, "INSERT INTO kv SELECT id, id % 750, 'O', id * 1.5, '1-URGENT' FROM range(10)")
+    sql(store, "UPSERT INTO kv SELECT id, id % 7, 'U', id * 2.5, '2-HIGH' FROM range(8, 12)")
+    sql(store, "UPSERT INTO kv (k, price) SELECT id, id * 0.5 FROM range(0, 2)")
+    got = {r["k"]: tuple(r)[1:] for r in store.scan("kv").collect()}
+    want = {k: (k % 750, "O", k * 1.5, "1-URGENT") for k in range(8)}
+    want.update({k: (k % 7, "U", k * 2.5, "2-HIGH") for k in range(8, 12)})
+    want.update({k: (k % 750, "O", k * 0.5, "1-URGENT") for k in range(2)})
+    assert got == want
+
+
 def test_upsert_replaces_and_inserts(spark, store):
     store.create_table("t", "id int, name string", ["id"])
     store.insert_values("t", [(1, "a"), (2, "b")])
@@ -1958,10 +1994,14 @@ def test_commit_crash_leaves_last_version_readable(spark, store, monkeypatch):
     unchanged()
 
 
-def test_concurrent_upserts_from_one_base_conflict(spark, store, monkeypatch):
+def test_concurrent_upserts_from_one_base_conflict(
+    spark, store, monkeypatch, write_path
+):
     """Two upserts based on the same version: exactly one commits, the
     other gets CommitConflict instead of overwriting its manifest; the
-    winner's rows are current and vacuum deletes the loser's files."""
+    winner's rows are current and vacuum deletes the loser's files.  On
+    both write paths: the driver path stages with pyarrow and commits
+    through the same manifest link."""
     import threading
 
     from hivekudu_handler_spark.sources.table_store import CommitConflict
@@ -2305,11 +2345,14 @@ def test_ddl_schema_default_literal_with_separator_chars(spark, store):
     assert [tuple(r) for r in store.scan("t").collect()] == [(1, "a,b<c", "d,e")]
 
 
-def test_keyed_writes_start_few_spark_jobs(spark, store):
-    """Each keyed write runs one tablet probe (a no-shuffle observation)
-    and one staged write whose single tablet shuffle also merges rows by
-    key: at most 3 Spark jobs per UPSERT, UPDATE, DELETE and INSERT, and
-    at most 9 for a MERGE (its source⋈target joins add their own)."""
+def test_keyed_writes_start_few_spark_jobs(spark, store, write_path):
+    """On the Spark path each keyed write runs one tablet probe (a
+    no-shuffle observation) and one staged write whose single tablet
+    shuffle also merges rows by key: at most 3 Spark jobs per UPSERT,
+    UPDATE, DELETE and INSERT, and at most 9 for a MERGE (its
+    source⋈target joins add their own).  On the driver path a VALUES
+    write starts no job at all, and the others only the jobs that
+    collect their batch."""
     from hivekudu_handler_spark.sources.sql_ddl import sql
 
     store.create_table(
@@ -2328,27 +2371,31 @@ def test_keyed_writes_start_few_spark_jobs(spark, store):
         f"({k}, 1, 'U', 2.5)" for k in [*range(10, 15), *range(1000, 1005)]
     )
     mvals = ", ".join(f"({k}, 3, 'M', 9.5)" for k in [20, 21, 22, 2000, 2001, 2002])
+    driver = write_path == "driver"
     statements = {
-        "upsert": (f"UPSERT INTO kv VALUES {vals}", 3),
+        "upsert": (f"UPSERT INTO kv VALUES {vals}", 0 if driver else 3),
         "update": (
             "UPDATE kv SET price = price + 1.5, status = 'X' "
             "WHERE k BETWEEN 40 AND 60",
-            3,
+            2 if driver else 3,
         ),
-        "delete": ("DELETE FROM kv WHERE k BETWEEN 70 AND 73", 3),
-        "insert": ("INSERT INTO kv VALUES (3000, 1, 'I', 1.0), (5, 1, 'I', 1.0)", 3),
+        "delete": ("DELETE FROM kv WHERE k BETWEEN 70 AND 73", 2 if driver else 3),
+        "insert": (
+            "INSERT INTO kv VALUES (3000, 1, 'I', 1.0), (5, 1, 'I', 1.0)",
+            0 if driver else 3,
+        ),
         "merge": (
             f"MERGE INTO kv USING (SELECT * FROM VALUES {mvals} "
             "AS s(k, cust, status, price)) s ON kv.k = s.k "
             "WHEN MATCHED THEN UPDATE SET status = s.status, price = s.price "
             "WHEN NOT MATCHED THEN INSERT *",
-            9,
+            6 if driver else 9,
         ),
     }
     sc = spark.sparkContext
     jobs = {}
     for kind, (text, _) in statements.items():
-        group = f"table-store-write-{kind}"
+        group = f"table-store-write-{write_path}-{kind}"
         sc.setJobGroup(group, f"keyed {kind}")
         try:
             sql(store, text)
@@ -2368,7 +2415,10 @@ def test_keyed_writes_start_few_spark_jobs(spark, store):
 def test_failed_staged_write_leaves_no_staging(spark, store, monkeypatch):
     """A staged Spark write that raises removes its staging directory
     and changes nothing: staging/ is empty, and the version and the scan
-    are those of the last commit."""
+    are those of the last commit.  The Spark path is forced (write
+    budget 0); ``test_failed_driver_write_leaves_no_staging`` is the
+    driver path's twin."""
+    monkeypatch.setattr(store, "_write_budget", lambda: 0)
     store.create_table("t", "id int, x int", ["id"])
     store.insert_values("t", [(i, i) for i in range(1, 9)])
     v = store.current_version("t")
@@ -2385,6 +2435,36 @@ def test_failed_staged_write_leaves_no_staging(spark, store, monkeypatch):
         store.upsert("t", spark.createDataFrame([(1, 99)], "id int, x int"))
     with pytest.raises(OSError, match="simulated failure"):
         store.insert_values("t", [(100, 100)])
+    monkeypatch.undo()
+    staging = store._dir("t") / "staging"
+    assert not staging.exists() or not any(staging.iterdir())
+    assert store.current_version("t") == v
+    assert {(r["id"], r["x"]) for r in store.scan("t").collect()} == before
+    assert not _unlisted_files(store, "t")
+
+
+def test_failed_driver_write_leaves_no_staging(spark, store, monkeypatch):
+    """The driver-path twin: a pyarrow staging write that raises after
+    writing its files removes its staging directory and changes
+    nothing."""
+    store.create_table("t", "id int, x int", ["id"])
+    store.insert_values("t", [(i, i) for i in range(1, 9)])
+    v = store.current_version("t")
+    before = {(r["id"], r["x"]) for r in store.scan("t").collect()}
+    write = store._write_tablets
+
+    def failing(meta, rows, path):
+        write(meta, rows, path)
+        assert list(path.rglob("*.parquet")), "the write never staged files"
+        raise OSError("simulated failure after the pyarrow staging write")
+
+    monkeypatch.setattr(store, "_write_tablets", failing)
+    with pytest.raises(OSError, match="simulated failure"):
+        store.upsert("t", spark.createDataFrame([(1, 99)], "id int, x int"))
+    with pytest.raises(OSError, match="simulated failure"):
+        store.insert_values("t", [(100, 100)])
+    with pytest.raises(OSError, match="simulated failure"):
+        store.delete_where("t", "id = 3")
     monkeypatch.undo()
     staging = store._dir("t") / "staging"
     assert not staging.exists() or not any(staging.iterdir())
