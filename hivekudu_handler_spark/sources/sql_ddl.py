@@ -143,8 +143,8 @@ from hivekudu_handler_spark.sources.table_store import (
     NotFetchable,
     TableStore,
     TableStoreError,
-    local_frame,
 )
+from hivekudu_handler_spark.sources.tablets import local_frame
 
 # the reference's property names (HiveKuduConstants.java:28-30) plus the
 # bare spelling for convenience

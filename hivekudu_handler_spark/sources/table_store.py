@@ -39,20 +39,14 @@ Either way every mutation touches only the tablets its keys land in.
 A keyed write merges its batch with those tablets' rows by key, on one
 of two paths (:meth:`TableStore._keyed_write`):
 
-* **driver** — a small write, as the reference's client-side Kudu
-  session applies rows (``HiveKuduTableOutputFormat.java:84,96-106``):
-  the batch is collected once (no Spark job for a VALUES batch) and,
-  when its tablets' live files are small too, they are read, merged and
-  rewritten with pyarrow, one file per tablet.  "Small" is Spark's own
-  bound on what may be pulled to the driver,
-  ``spark.sql.autoBroadcastJoinThreshold`` (10 MB by default; <= 0
-  turns the path off), against Spark's row-size estimate for the batch
-  and the files' sizes on disk;
-* **Spark** — anything larger, and every ``partition_by``, extended or
-  non-integral/non-STRING-keyed table: one tablet probe (an observation
-  on a no-op write: one job, no shuffle; skipped when the driver
-  already knows the tablets) and one staged write whose tablet shuffle
-  also merges rows by key (:meth:`TableStore._write_partitioned`).
+* **driver** — a small write of a table the driver can serve, merged
+  and rewritten with pyarrow, one file per tablet (:mod:`.tablets`,
+  which holds the driver side and its one gate, the same one that
+  decides whether :meth:`TableStore.fetch` serves a point read there);
+* **Spark** — anything else: one tablet probe (an observation on a
+  no-op write: one job, no shuffle; skipped when the driver already
+  knows the tablets) and one staged write whose tablet shuffle also
+  merges rows by key (:meth:`TableStore._write_partitioned`).
 
 Both paths apply one merge rule and leave the same rows; either way:
 
@@ -116,6 +110,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hivekudu_handler_spark import typesys
+from hivekudu_handler_spark.sources import tablets
 
 _log = logging.getLogger(__name__)
 
@@ -126,55 +121,11 @@ class TableStoreError(RuntimeError):
 
 NOT_NULL_MSG_PREFIX = "NOT NULL constraint violated: column "
 
-# source rank of a write-merge row: of the rows sharing a key, the lowest
-# rank wins (see TableStore._write_partitioned)
-_SRC = "__src"
+_SRC = tablets.SRC
 
 
 class TableExistsError(TableStoreError):
     pass
-
-
-def local_frame(
-    spark: SparkSession, rows: list[tuple], schema: T.StructType | str
-) -> DataFrame:
-    """``rows`` (driver values, possibly none) as a local relation over
-    an Arrow table: building and collecting it starts no Spark job,
-    where ``createDataFrame(<list>)`` runs a Python-worker job even for
-    an empty list.  Column names, types and values are the same."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    import pyarrow as pa
-
-    if isinstance(schema, str):
-        schema = T.StructType.fromDDL(schema)
-    arrow = to_arrow_schema(schema)
-    cols = list(zip(*rows)) if rows else [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
-    return arrow_frame(spark, table, schema)
-
-
-def arrow_frame(spark: SparkSession, table, schema: T.StructType) -> DataFrame:
-    """A pyarrow ``table`` whose types are ``to_arrow_schema(schema)``'s
-    as a local relation with ``schema`` (no Spark job).  This is the
-    tail of ``createDataFrame(<pa.Table>)``: that call first looks up
-    three confs over Py4J and localizes tz-naive timestamps, which an
-    Arrow table of exactly this schema does not have.  Skipping them
-    halves the driver time of building a one-row frame (about 16 ms →
-    8 ms on a 4-core host)."""
-    from pyspark.sql.pandas.serializers import ArrowStreamSerializer
-
-    utils = spark._jvm.PythonSQLUtils
-    jiter = spark.sparkContext._serialize_to_jvm(
-        table.to_batches(),
-        ArrowStreamSerializer(),
-        utils.readArrowStreamFromFile,
-        lambda: spark._jvm.ArrowIteratorServer(),  # with I/O encryption only
-    )
-    df = DataFrame(utils.toDataFrame(jiter, schema.json(), spark._jsparkSession), spark)
-    df._schema = schema
-    return df
 
 
 class NoSuchTableError(TableStoreError):
@@ -185,81 +136,6 @@ class NotFetchable(TableStoreError):
     """A point read :meth:`TableStore.fetch` does not serve on the
     driver (the key or the layout is outside its shape); the same read
     through Spark is unaffected."""
-
-
-# XXH64 (Spark's catalyst ``XXH64``, the hash behind ``xxhash64``)
-_M64 = (1 << 64) - 1
-_P1, _P2, _P3, _P4, _P5 = (
-    0x9E3779B185EBCA87,
-    0xC2B2AE3D27D4EB4F,
-    0x165667B19E3779F9,
-    0x85EBCA77C2B2AE63,
-    0x27D4EB2F165667C5,
-)
-
-
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M64
-
-
-def _xxh64_round(acc: int, lane: int) -> int:
-    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
-
-
-def _xxh64(data: bytes, seed: int) -> int:
-    """XXH64 of ``data`` with ``seed``, as an unsigned 64-bit int."""
-    n, i = len(data), 0
-    if n >= 32:
-        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
-        while i + 32 <= n:
-            for j in range(4):
-                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
-                v[j] = _xxh64_round(v[j], lane)
-            i += 32
-        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
-        for x in v:
-            h = ((h ^ _xxh64_round(0, x)) * _P1 + _P4) & _M64
-    else:
-        h = (seed + _P5) & _M64
-    h = (h + n) & _M64
-    while i + 8 <= n:
-        h ^= _xxh64_round(0, int.from_bytes(data[i : i + 8], "little"))
-        h = (_rotl(h, 27) * _P1 + _P4) & _M64
-        i += 8
-    if i + 4 <= n:
-        h ^= int.from_bytes(data[i : i + 4], "little") * _P1 & _M64
-        h = (_rotl(h, 23) * _P2 + _P3) & _M64
-        i += 4
-    for b in data[i:]:
-        h ^= b * _P5 & _M64
-        h = _rotl(h, 11) * _P1 & _M64
-    h = (h ^ (h >> 33)) * _P2 & _M64
-    h = (h ^ (h >> 29)) * _P3 & _M64
-    return h ^ (h >> 32)
-
-
-# bits of each integral key type a fetch serves
-_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
-
-
-def _fits(dtype: T.DataType, value) -> bool:
-    """Whether ``value`` is a Python literal of the key type ``dtype``
-    (an int in the integral type's range, or a str for STRING)."""
-    if isinstance(dtype, T.StringType):
-        if not isinstance(value, str):
-            return False
-        try:
-            value.encode("utf-8")
-        except UnicodeEncodeError:  # a lone surrogate has no UTF-8 form
-            return False
-        return True
-    bits = _INT_BITS.get(type(dtype))
-    return (
-        bits is not None
-        and isinstance(value, int)
-        and not isinstance(value, bool)
-        and -(1 << (bits - 1)) <= value < 1 << (bits - 1)
-    )
 
 
 class CommitConflict(TableStoreError):
@@ -644,7 +520,7 @@ class TableStore:
             (f.name, f.dataType.simpleString(), f.name in meta.key_columns)
             for f in meta.schema.fields
         ]
-        return local_frame(
+        return tablets.local_frame(
             self.spark, rows, "col_name string, data_type string, is_key boolean"
         )
 
@@ -728,7 +604,7 @@ class TableStore:
         # schema order, not dict order, for a deterministic render
         order = {f.name: i for i, f in enumerate(meta.schema.fields)}
         rows.sort(key=lambda r: order.get(r[0], len(order)))
-        return local_frame(
+        return tablets.local_frame(
             self.spark,
             rows,
             "col_name string, n_nulls bigint, ndv bigint, "
@@ -1090,7 +966,7 @@ class TableStore:
                 for v in self._version_numbers(meta.name)
             )
         ]
-        return local_frame(self.spark, rows, "version int, op string, n_files int")
+        return tablets.local_frame(self.spark, rows, "version int, op string, n_files int")
 
     def scan_snapshot(
         self,
@@ -1168,7 +1044,7 @@ class TableStore:
             # grouping is portable
             part = "/".join(re.split(r"[\\/]", rel)[:-1])
             counts[part] = counts.get(part, 0) + 1
-        return local_frame(
+        return tablets.local_frame(
             self.spark, sorted(counts.items()), "partition string, n_files int"
         )
 
@@ -1273,7 +1149,7 @@ class TableStore:
         # here, before any plan is built
         runs = _segment_runs(self, meta.name, versions)
         if not runs:
-            return local_frame(
+            return tablets.local_frame(
                 self.spark,
                 [],
                 T.StructType(
@@ -1392,9 +1268,6 @@ class TableStore:
         return {"dropped_versions": dropped, "deleted_files": deleted}
 
     # ------------------------------------------------- tablets (hash/range)
-    _BUCKET_COL = "kb"   # hash-bucketed layout
-    _RANGE_COL = "kr"    # key-range layout
-
     @staticmethod
     def _validate_splits(
         schema: T.StructType, key_columns: list[str], splits: list
@@ -1435,17 +1308,7 @@ class TableStore:
             )
         return list(splits)
 
-    def _part_cols(self, meta: TableMeta) -> list[str]:
-        """The layout's partition-directory columns, outer first: [kb]
-        for hash tables, [kr] for range tables, [kr, kb] for composite
-        hash-in-range tables (Kudu's three tablet schemes)."""
-        if meta.range_splits:
-            return (
-                [self._RANGE_COL, self._BUCKET_COL]
-                if meta.hash_in_range
-                else [self._RANGE_COL]
-            )
-        return [self._BUCKET_COL]
+    _part_cols = staticmethod(tablets.part_cols)
 
     def _num_parts(self, meta: TableMeta) -> int:
         if meta.range_splits:
@@ -1468,64 +1331,9 @@ class TableStore:
             rid = rid + (value >= F.lit(s).cast(typ)).cast("int")
         return rid.cast("int")
 
-    @staticmethod
-    def _range_key(meta: TableMeta, value):
-        """Normalize a bound/key for driver-side comparison against the
-        stored splits: datetime/date values become ISO text in the same
-        form the splits use ('YYYY-MM-DD HH:MM:SS' — space separator, so
-        text order == time order against space-separated splits)."""
-        import datetime
-
-        if isinstance(meta.range_splits[0], str) and not isinstance(value, str):
-            if isinstance(value, datetime.datetime):
-                return value.isoformat(sep=" ")
-            if isinstance(value, datetime.date):
-                return value.isoformat()
-        return value
-
-    def _range_id_py(self, meta: TableMeta, value) -> int:
-        """Driver-side twin of :meth:`_range_id_expr` for pruning bounds
-        (bisect over the bounded split list, never data-sized)."""
-        import bisect
-
-        return bisect.bisect_right(meta.range_splits, self._range_key(meta, value))
-
-    def _hash_buckets(self, meta: TableMeta) -> int:
-        return meta.hash_in_range or meta.num_buckets or self.num_buckets
-
     def _hash_expr(self, meta: TableMeta, cols: list[Column]) -> Column:
-        return F.pmod(F.xxhash64(*cols), F.lit(self._hash_buckets(meta))).cast("int")
-
-    def _hash_py(self, meta: TableMeta, values: list) -> int:
-        """Driver-side twin of :meth:`_hash_expr` for one key tuple
-        (``key_columns`` order): Spark's ``xxhash64`` is XXH64 with seed
-        42, chained over the columns (each column's hash seeds the next,
-        a NULL leaves it as it is), a TINYINT/SMALLINT/INT hashed as its
-        4 little-endian bytes (``hashInt``), a BIGINT as 8 (``hashLong``)
-        and a STRING as its UTF-8 bytes; ``pmod`` then reads the hash as
-        a signed 64-bit value."""
-        types = {f.name: f.dataType for f in meta.schema.fields}
-        h = 42
-        for k, v in zip(meta.key_columns, values):
-            if v is None:
-                continue
-            t = types[k]
-            if isinstance(t, T.StringType):
-                data = v.encode("utf-8")
-            elif isinstance(t, T.LongType):
-                data = (v & _M64).to_bytes(8, "little")
-            else:
-                data = (v & 0xFFFFFFFF).to_bytes(4, "little")
-            h = _xxh64(data, h)
-        return (h - (1 << 64) if h >> 63 else h) % self._hash_buckets(meta)
-
-    def _tablet_py(self, meta: TableMeta, values: list) -> tuple:
-        """Driver-side twin of :meth:`_part_exprs` for one key tuple, as
-        a tuple matching :meth:`_part_cols`."""
-        if not meta.range_splits:
-            return (self._hash_py(meta, values),)
-        rid = self._range_id_py(meta, values[0])
-        return (rid, self._hash_py(meta, values)) if meta.hash_in_range else (rid,)
+        buckets = F.lit(tablets.hash_buckets(meta, self.num_buckets))
+        return F.pmod(F.xxhash64(*cols), buckets).cast("int")
 
     def _part_exprs(self, meta: TableMeta, lits: list[Column] | None = None) -> list[Column]:
         """Deterministic tablet id of a row, one expression per partition
@@ -1599,7 +1407,7 @@ class TableStore:
         tablet's files unopened."""
         schema = self._read_schema(meta)
         if not rels:
-            return self._to_logical(local_frame(self.spark, [], schema), meta)
+            return self._to_logical(tablets.local_frame(self.spark, [], schema), meta)
         data = self._data_dir(meta.name)
         reader = self.spark.read.schema(schema).option("basePath", str(data))
         return self._to_logical(reader.parquet(*[str(data / r) for r in rels]), meta)
@@ -1691,19 +1499,19 @@ class TableStore:
         if (
             lower is not None
             and upper is not None
-            and self._range_key(meta, lower) >= self._range_key(meta, upper)
+            and tablets.range_key(meta, lower) >= tablets.range_key(meta, upper)
         ):
-            return local_frame(self.spark, [], meta.schema).select(*out_cols)
+            return tablets.local_frame(self.spark, [], meta.schema).select(*out_cols)
         rc = meta.key_columns[0]
         typ = self._range_col_type(meta)
         df = self._scan_raw(meta)
-        lo_id = 0 if lower is None else self._range_id_py(meta, lower)
+        lo_id = 0 if lower is None else tablets.range_id_py(meta, lower)
         hi_id = (
             len(meta.range_splits)
             if upper is None
-            else bisect.bisect_left(meta.range_splits, self._range_key(meta, upper))
+            else bisect.bisect_left(meta.range_splits, tablets.range_key(meta, upper))
         )
-        df = df.filter(F.col(self._RANGE_COL).between(lo_id, hi_id))
+        df = df.filter(F.col(tablets.RANGE_COL).between(lo_id, hi_id))
         if lower is not None:
             df = df.filter(F.col(rc) >= F.lit(lower).cast(typ))
         if upper is not None:
@@ -2161,7 +1969,7 @@ class TableStore:
                 f"table {name!r} is external: no bucket layout to prune"
             )
         if not values:
-            return local_frame(self.spark, [], meta.schema)
+            return tablets.local_frame(self.spark, [], meta.schema)
         keys = meta.key_columns
         types = {f.name: f.dataType for f in meta.schema.fields}
         batch: list[dict[str, object]] = []
@@ -2201,109 +2009,73 @@ class TableStore:
     def fetch(
         self, name: str, key: dict[str, object], columns: list[str] | None = None
     ) -> DataFrame:
-        """Point read of one primary key, served on the driver: building
-        and collecting the result starts no Spark job.
+        """Point read of one primary key, served on the driver when
+        :func:`.tablets.driver_reason` allows: building and collecting the
+        result then starts no Spark job.
 
         It reads the head manifest (the file list a Spark read of the
         table uses), computes the key's tablet on the driver
-        (:meth:`_tablet_py`, the twin of the write path's tablet
+        (:func:`.tablets.tablet_py`, the twin of the write path's tablet
         expressions) and reads only that tablet's files with pyarrow,
-        under the physical read schema (a column added after a file was
-        written reads as NULL) and the key filter.  So its cost is
-        O(files in one tablet), whatever the table's size — Hive's fetch
+        under the physical read schema and the key filter — Hive's fetch
         task over Kudu's key-pruned scanner
-        (``HiveKuduTableInputFormat.java:166-217,466-467``).
+        (``HiveKuduTableInputFormat.java:166-217,466-467``).  When those
+        files are over the budget (:meth:`_driver_budget`), or the budget
+        is off, the same read runs through Spark (:meth:`lookup`), so a
+        driver read is bounded by the budget whatever the table's size.
+        One DEBUG record names the path taken and why not the driver.
 
-        The result is a local relation with the schema the same read
-        through Spark SQL has: ``columns`` (default: every column)
-        resolved the way Spark resolves names and spelled as given,
-        types from the table's meta, every field nullable.  ``key`` must
-        name each key column once, with an int in the range of an
-        integral key type or a str for a STRING key.  Anything else —
-        an external or extended-type table, a ``partition_by`` table
-        (whose files do not hold the partition columns), another key
-        type, a value outside its type, range splits not of the key's
-        type, an unknown column — raises :class:`NotFetchable`.
+        The result has the schema the same read through Spark SQL has:
+        ``columns`` (default: every column) resolved the way Spark
+        resolves names and spelled as given, types from the table's
+        meta, every field nullable.  ``key`` must name each key column
+        once, with an int in the range of an integral key type or a str
+        for a STRING key.  Anything else — a table the gate rules out by
+        its shape, a value outside its type, an unknown column — raises
+        :class:`NotFetchable`.
         """
         meta = self.table_meta(name)
-        if meta.external or meta.extended or meta.partition_by:
-            raise NotFetchable(
-                f"{name!r} is not a managed core-type table without partition_by"
-            )
-        key_fields = self._resolve(meta, list(key))
+        budget = self._driver_budget()
+        reason = tablets.driver_reason(meta, 0, budget)
+        if reason not in (None, "budget off"):  # the table's shape
+            raise NotFetchable(f"{name!r} is not served on the driver: {reason}")
+        names = columns or [f.name for f in meta.schema.fields]
+        fields = tablets.resolve(self.spark, meta, [*key, *names])
+        bad = [n for n, f in zip([*key, *names], fields) if f is None]
+        if bad:
+            raise NotFetchable(f"unknown columns of {meta.name!r}: {bad}")
+        key_fields, out = fields[: len(key)], fields[len(key) :]
         vals = {f.name: v for f, v in zip(key_fields, key.values())}
         if len(vals) != len(key) or set(vals) != set(meta.key_columns):
             raise NotFetchable(
                 f"a fetch key must cover exactly {meta.key_columns}, got {list(key)}"
             )
-        if not all(_fits(f.dataType, vals[f.name]) for f in key_fields):
+        if not all(tablets.fits(f.dataType, vals[f.name]) for f in key_fields):
             raise NotFetchable(f"key {key!r} is not of the types of {meta.key_columns}")
-        if meta.range_splits and not all(
-            _fits(self._range_col_type(meta), s) for s in meta.range_splits
-        ):
-            raise NotFetchable(f"{name!r} has range splits of another type")
-        names = columns or [f.name for f in meta.schema.fields]
-        out = self._resolve(meta, names)
-        tablet = self._tablet_py(meta, [vals[k] for k in meta.key_columns])
+        tablet = tablets.tablet_py(
+            meta, [vals[k] for k in meta.key_columns], self.num_buckets
+        )
         rels = [r for r in self._head(meta.name)[1] if self._tablet_of(meta, r) == tablet]
+        data = self._data_dir(meta.name)
+        nbytes = sum((data / r).stat().st_size for r in rels)
+        reason = tablets.driver_reason(meta, nbytes, budget)
+        path = "spark" if reason else "driver"
         _log.debug(
-            "fetch %s tablet %s: %d files", meta.name, tablet, len(rels),
-            extra={"table": meta.name, "tablet": tablet, "files": rels},
+            "fetch %s tablet %s on the %s%s: %d files, %d bytes",
+            meta.name, tablet, path, f" ({reason})" if reason else "", len(rels), nbytes,
+            extra={
+                "table": meta.name, "tablet": tablet, "files": rels,
+                "fetch_path": path, "reason": reason, "bytes_read": nbytes,
+            },
         )
         schema = T.StructType(
             [T.StructField(n, f.dataType, True) for n, f in zip(names, out)]
         )
-        table = self._read_tablet(meta, rels, out, vals)
-        return arrow_frame(self.spark, table.rename_columns(names), schema)
-
-    def _resolve(self, meta: TableMeta, names: list[str]) -> list[T.StructField]:
-        """The schema fields ``names`` refer to, matched the way Spark SQL
-        matches names (case-insensitively unless
-        ``spark.sql.caseSensitive`` is set)."""
-        exact = {f.name: f for f in meta.schema.fields}
-        out = [exact.get(n) for n in names]
-        if None in out and self.spark.conf.get("spark.sql.caseSensitive") != "true":
-            folded = {f.name.lower(): f for f in meta.schema.fields}
-            out = [folded.get(n.lower()) for n in names]
-        bad = [n for n, f in zip(names, out) if f is None]
-        if bad:
-            raise NotFetchable(f"unknown columns of {meta.name!r}: {bad}")
-        return out
-
-    def _read_tablet(
-        self,
-        meta: TableMeta,
-        rels: list[str],
-        out: list[T.StructField],
-        key: dict | None = None,
-    ):
-        """The rows of the files ``rels`` (whose key equals ``key``, when
-        given), as a pyarrow table of the fields ``out`` (positional
-        column names).  One tablet of a point read is read on the calling
-        thread: handing it to pyarrow's thread pools cost about 3 ms more
-        per read (16 vs 18 ms per point SELECT, 4-core host)."""
-        from functools import reduce
-
-        import pyarrow.dataset as ds
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        phys = to_arrow_schema(
-            T.StructType(
-                [T.StructField(meta.phys_name(f.name), f.dataType) for f in meta.schema.fields]
-            )
-        )
-        fmt = ds.ParquetFileFormat(read_options={"coerce_int96_timestamp_unit": "us"})
-        data = self._data_dir(meta.name)
-        dataset = ds.dataset([str(data / r) for r in rels], schema=phys, format=fmt)
-        cond = None if key is None else reduce(
-            lambda a, b: a & b,
-            [ds.field(meta.phys_name(k)) == v for k, v in key.items()],
-        )
-        return dataset.to_table(
-            columns={str(i): ds.field(meta.phys_name(f.name)) for i, f in enumerate(out)},
-            filter=cond,
-            use_threads=False,
-        )
+        if reason:
+            cols = [F.col(f.name).alias(n) for n, f in zip(names, out)]
+            return self.lookup(meta.name, vals).select(*cols).to(schema)
+        table = tablets.read_tablet(meta, data, rels, out, vals)
+        return tablets.arrow_frame(self.spark, table.rename_columns(names), schema)
 
     # ------------------------------------------------- bloom index sidecar
     #
@@ -2369,7 +2141,7 @@ class TableStore:
         from hivekudu_handler_spark.sources.bloom import probe_positions
 
         if not rel_files:
-            return local_frame(self.spark, [], "file string, bits array<int>")
+            return tablets.local_frame(self.spark, [], "file string, bits array<int>")
         exploded = self._read_files(meta, rel_files).select(
             self._data_rel_path().alias("file"),
             F.explode(F.array(*probe_positions(F.col(col)))).alias("pos"),
@@ -2522,7 +2294,7 @@ class TableStore:
             name, col, self._bloom_cover_cond(probe), cur
         )
         if not candidates:
-            return local_frame(self.spark, [], meta.schema)
+            return tablets.local_frame(self.spark, [], meta.schema)
         return self._read_bloom_candidates(meta, candidates).filter(
             F.col(col) == probe_lit
         )
@@ -2539,7 +2311,7 @@ class TableStore:
         meta, imeta, cur, _ = self._bloom_state(name, col)
         self._bloom_check_fresh(name, col, imeta, cur)
         if not values:
-            return local_frame(self.spark, [], meta.schema)
+            return tablets.local_frame(self.spark, [], meta.schema)
         dtype = next(f.dataType for f in meta.schema.fields if f.name == col)
         # all probe positions in ONE job over the batch (driver-sized)
         probe_rows = self.spark.createDataFrame(
@@ -2551,7 +2323,7 @@ class TableStore:
             cond = c if cond is None else (cond | c)
         candidates = self._bloom_candidates(name, col, cond, cur)
         if not candidates:
-            return local_frame(self.spark, [], meta.schema)
+            return tablets.local_frame(self.spark, [], meta.schema)
         return self._read_bloom_candidates(meta, candidates).filter(
             F.col(col).isin(*[F.lit(v).cast(dtype) for v in values])
         )
@@ -2644,186 +2416,15 @@ class TableStore:
         df.observe(obs, ids).write.format("noop").mode("overwrite").save()
         return sorted(tuple(r) for r in obs.get["ids"])
 
-    def _write_budget(self) -> int:
-        """Bytes a keyed write may bring to the driver: the session's
+    def _driver_budget(self) -> int:
+        """Bytes a point read or a keyed write may bring to the driver
+        (:func:`.tablets.driver_reason`): the session's
         ``spark.sql.autoBroadcastJoinThreshold``, Spark's own size under
         which a relation may be pulled to the driver (10 MB by default),
         read through the JVM conf so its size suffixes parse as Spark
-        parses them.  A value <= 0 turns the driver write path off."""
+        parses them.  A value <= 0 turns the driver paths off."""
         conf = self.spark._jsparkSession.sessionState().conf()
         return int(conf.autoBroadcastJoinThreshold())
-
-    @staticmethod
-    def _driver_shape(meta: TableMeta) -> str | None:
-        """Why no write of ``meta`` runs on the driver, whatever its size
-        (None when one may) — the exclusions :meth:`fetch` makes.  The
-        files of a ``partition_by`` table lack the partition columns; an
-        extended table's nested types have no exact pyarrow round trip
-        (each core type has one: timestamps travel as their
-        microseconds); and the driver merge groups keys by Arrow
-        equality, which is Spark's only for integral and STRING keys."""
-        if meta.partition_by:
-            return "layout"
-        if meta.extended:
-            return "column type"
-        types = {f.name: f.dataType for f in meta.schema.fields}
-        if not all(
-            isinstance(types[k], (T.StringType, *_INT_BITS)) for k in meta.key_columns
-        ):
-            return "key type"
-        return None
-
-    @staticmethod
-    def _is_local(df: DataFrame) -> bool:
-        """Whether ``df`` optimizes to a local relation (VALUES, driver
-        frames), which ``collect()`` reads without a Spark job."""
-        plan = df._jdf.queryExecution().optimizedPlan()
-        return plan.getClass().getSimpleName() == "LocalRelation"
-
-    def _collect_batch(
-        self, meta: TableMeta, batch: DataFrame, budget: int, local: bool
-    ):
-        """``batch`` (write-merge rows) with each row's tablet, as a
-        pyarrow table (the logical columns, the ``_SRC`` rank and the
-        tablet columns, all nullable), if it holds at most the rows
-        ``budget`` bytes allow by Spark's own row estimate (8 bytes plus
-        the schema's default size); else None.
-
-        One action bounded by ``limit(n + 1)``: a ``local`` relation is
-        collected as rows, which starts no Spark job, and any other batch
-        is read as Arrow.  Tablets come from the write path's own tablet
-        expressions (:meth:`_part_exprs`) and timestamps travel as their
-        microseconds, so both are exact.  As the batch's first action it
-        fires the guards (NOT NULL, NULL key, MERGE cardinality) of every
-        row it reads — all of them when the batch fits."""
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        n = min(budget // (8 + batch._jdf.schema().defaultSize()), (1 << 31) - 2)
-        fields = meta.schema.fields
-        pcs = self._part_cols(meta)
-        frame = batch.select(
-            *[
-                (
-                    F.unix_micros(F.col(f.name))
-                    if isinstance(f.dataType, T.TimestampType)
-                    else F.col(f.name)
-                ).alias(f.name)
-                for f in fields
-            ],
-            _SRC,
-            *[e.alias(c) for c, e in zip(pcs, self._part_exprs(meta))],
-        ).limit(n + 1)
-        schema = to_arrow_schema(
-            T.StructType(
-                [T.StructField(f.name, f.dataType) for f in fields]
-                + [T.StructField(c, T.IntegerType()) for c in [_SRC, *pcs]]
-            )
-        )
-        wire = [
-            pa.int64() if pa.types.is_timestamp(f.type) else f.type for f in schema
-        ]
-        if local:
-            rows = frame.collect()
-            cols = list(zip(*rows)) if rows else [()] * len(wire)
-            arrays = [pa.array(c, type=t) for c, t in zip(cols, wire)]
-            table = pa.table(arrays, names=schema.names)
-        else:
-            table = frame.toArrow()
-        if table.num_rows > n:
-            return None
-        return table.cast(schema)
-
-    def _merge_on_driver(
-        self, meta: TableMeta, batch, rels: list[str], op: str, keep: tuple
-    ):
-        """The winners of ``batch`` (from :meth:`_collect_batch`) merged
-        with the rows of the files ``rels`` by :meth:`_write_partitioned`'s
-        rule, as a pyarrow table of ``batch``'s schema.
-
-        Existing rows rank 0 for an insert — they win outright, so only
-        their keys are read — and 2 otherwise.  Per key the lowest rank
-        wins, then the smallest non-key tuple, ascending with nulls last
-        (Arrow orders NaN above every number and below NULL, as Spark
-        does); a winner is kept if its rank is in ``keep``."""
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        schema = batch.schema
-        keys = meta.key_columns
-        read = [f for f in meta.schema.fields if op != "insert" or f.name in keys]
-        by_tablet: dict[tuple, list[str]] = {}
-        for rel in rels:
-            by_tablet.setdefault(self._tablet_of(meta, rel), []).append(rel)
-        parts = [batch]
-        for tablet, trels in by_tablet.items():
-            got = self._read_tablet(meta, trels, read)
-            n = got.num_rows
-            cols = dict(zip([f.name for f in read], got.columns))
-            consts = zip([_SRC, *self._part_cols(meta)], [0 if op == "insert" else 2, *tablet])
-            for c, v in consts:
-                cols[c] = pa.repeat(pa.scalar(v, pa.int32()), n)
-            parts.append(
-                pa.table([cols.get(f.name, pa.nulls(n, f.type)) for f in schema], schema=schema)
-            )
-        rows = pa.concat_tables(parts)
-        order = [*keys, _SRC, *[f.name for f in meta.schema.fields if f.name not in keys]]
-        rows = rows.take(
-            pc.sort_indices(
-                rows, sort_keys=[(c, "ascending") for c in order], null_placement="at_end"
-            )
-        )
-        # each key's first row in that order wins
-        pos = rows.append_column("__pos", pa.array(np.arange(rows.num_rows)))
-        won = rows.take(
-            pos.group_by(keys, use_threads=False).aggregate([("__pos", "min")])["__pos_min"]
-        )
-        return won.filter(pc.is_in(won[_SRC], pa.array(keep, pa.int32())))
-
-    def _tablet_counts(self, meta: TableMeta, rows) -> list[tuple[tuple, int]]:
-        """``(tablet, row count)`` of each tablet the pyarrow table
-        ``rows`` (with the tablet columns) holds rows of, in order of
-        first appearance."""
-        pcs = self._part_cols(meta)
-        counts = rows.group_by(pcs, use_threads=False).aggregate([([], "count_all")])
-        tablets = zip(*[counts[c].to_pylist() for c in pcs])
-        return list(zip(tablets, counts["count_all"].to_pylist()))
-
-    def _write_tablets(self, meta: TableMeta, rows, path: Path) -> int:
-        """Write the driver-merged ``rows`` under ``path`` the way
-        :meth:`_write_partitioned` lays them out: one snappy Parquet file
-        per tablet directory, with physical column names and no partition
-        columns, its rows sorted by key.  Returns the rows written.
-
-        The file keeps a Spark-written file's shape, so reads cost the
-        same: one row group, and a dictionary only for a column with at
-        most half as many distinct values as rows — Spark's Parquet
-        writer drops a dictionary that does not beat plain encoding, so
-        a unique key column is written plain."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        pcs = self._part_cols(meta)
-        rows = rows.sort_by([(c, "ascending") for c in [*pcs, *meta.key_columns]])
-        data = rows.select([f.name for f in meta.schema.fields]).rename_columns(
-            [meta.phys_name(f.name) for f in meta.schema.fields]
-        )
-        name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
-        start = 0
-        for tablet, n in self._tablet_counts(meta, rows):
-            out = path.joinpath(*[f"{c}={v}" for c, v in zip(pcs, tablet)])
-            out.mkdir(parents=True)
-            part = data.slice(start, n)
-            dictionary = [
-                c for c in part.column_names
-                if 2 * pc.count_distinct(part[c]).as_py() <= n
-            ]
-            pq.write_table(
-                part, out / name, compression="snappy", use_dictionary=dictionary
-            )
-            start += n
-        return rows.num_rows
 
     def _write_partitioned(
         self, meta: TableMeta, df: DataFrame, path: Path, keep: tuple | None
@@ -2877,7 +2478,7 @@ class TableStore:
     ) -> tuple[list[str], int]:
         """Write ``df`` — a DataFrame through Spark (see
         :meth:`_write_partitioned`), or the driver-merged rows of a
-        pyarrow table (:meth:`_write_tablets`) — to a staging directory
+        pyarrow table (:func:`.tablets.write_tablets`) — to a staging directory
         private to this writer, removed whether or not the write
         succeeds, then move its part files into ``data/`` under the same
         relative paths — the one move a data file ever makes (part names
@@ -2888,7 +2489,7 @@ class TableStore:
             if isinstance(df, DataFrame):
                 rows = self._write_partitioned(meta, df, stage, keep)
             else:
-                rows = self._write_tablets(meta, df, stage)
+                rows = tablets.write_tablets(meta, df, stage)
             data = self._data_dir(meta.name)
             added = []
             for p in sorted(stage.rglob("*.parquet")):
@@ -2900,11 +2501,7 @@ class TableStore:
             shutil.rmtree(stage, ignore_errors=True)
         return added, rows
 
-    def _tablet_of(self, meta: TableMeta, rel: str) -> tuple:
-        """Tablet id of a data-relative file (its leading ``kr=``/``kb=``
-        path segments), as a tuple matching :meth:`_part_cols`."""
-        parts = Path(rel).parts[: len(self._part_cols(meta))]
-        return tuple(int(p.split("=", 1)[1]) for p in parts)
+    _tablet_of = staticmethod(tablets.tablet_of)
 
     def _replace_buckets(
         self,
@@ -2947,22 +2544,22 @@ class TableStore:
         its predicate leaves, which the Spark path writes instead of a
         merge.
 
-        **On the driver** when the write is small.  The batch is
-        collected once (:meth:`_collect_batch`) within the budget
-        (:meth:`_write_budget`); if the live files of its tablets also
+        **On the driver** when the write is small and the gate
+        (:func:`.tablets.driver_reason`) allows.  The batch is collected
+        once (:func:`.tablets.collect_batch`) within the budget
+        (:meth:`_driver_budget`); if the live files of its tablets also
         fit the budget (by ``stat``), they are read with pyarrow, merged
-        (:meth:`_merge_on_driver`) and written one file per tablet
-        (:meth:`_write_tablets`) through the same staging directory and
-        commit as a Spark write.  A local batch (VALUES) thus commits
-        with no Spark job at all.
+        (:func:`.tablets.merge_on_driver`) and written one file per
+        tablet (:func:`.tablets.write_tablets`) through the same staging
+        directory and commit as a Spark write.  A local batch (VALUES)
+        thus commits with no Spark job at all.
 
         **Through Spark** otherwise: the staged write of
         :meth:`_write_partitioned`, merging in its tablet shuffle.  When
         only the tablets were too big, it takes the driver's tablets and
         collected rows; it runs the tablet probe (:meth:`_affected_buckets`)
         when the batch was too big, or was never collected because the
-        budget is off or the table's shape rules the driver out
-        (:meth:`_driver_shape`).
+        gate ruled the driver out.
 
         A write that touches no tablet, and an insert whose batch rows
         all lose to existing keys, commits no version.  Each write logs
@@ -2970,20 +2567,20 @@ class TableStore:
         tablets touched and the bytes read and written."""
         base, files = head
         pcs = self._part_cols(meta)
-        budget = self._write_budget()
-        reason = "budget off" if budget <= 0 else self._driver_shape(meta)
-        local = reason is None and self._is_local(batch)
+        budget = self._driver_budget()
+        reason = tablets.driver_reason(meta, 0, budget)
+        local = reason is None and tablets.is_local(batch)
         held = batch
         cached = None
         try:
-            rows = tablets = None
+            rows = ids = None
             if reason is None:
-                rows = self._collect_batch(meta, batch, budget, local)
+                rows = tablets.collect_batch(meta, batch, budget, local, self._part_exprs(meta))
                 if rows is None:
                     reason = "batch over budget"
                 else:
-                    tablets = sorted(t for t, _ in self._tablet_counts(meta, rows))
-            if tablets is None and (files or op != "insert"):
+                    ids = sorted(t for t, _ in tablets.tablet_counts(meta, rows))
+            if ids is None and (files or op != "insert"):
                 # persist: the probe and the staged write both read the
                 # batch, and unpersisted the caller's upstream plan would
                 # run for each.  A local relation is cheaper to rebuild
@@ -2992,35 +2589,36 @@ class TableStore:
                 # staged write holds the whole batch.)
                 if not local and rest is None:
                     held = cached = batch.persist()
-                tablets = self._affected_buckets(meta, held)
-            touched = set(tablets or ())
+                ids = self._affected_buckets(meta, held)
+            touched = set(ids or ())
             rels = [f for f in files if self._tablet_of(meta, f) in touched]
             data = self._data_dir(meta.name)
             bytes_read = sum((data / f).stat().st_size for f in rels)
-            if reason is None and bytes_read > budget:
-                reason = "tablets over budget"
-                # the Spark write stages the rows the driver collected:
-                # the batch's plan runs once, and the rows match the
-                # tablets they were counted in
-                logical = T.StructType(
-                    [T.StructField(f.name, f.dataType) for f in meta.schema.fields]
-                    + [T.StructField(_SRC, T.IntegerType())]
-                )
-                held = arrow_frame(self.spark, rows.drop_columns(pcs), logical)
+            if reason is None:
+                reason = tablets.driver_reason(meta, bytes_read, budget)
+                if reason:
+                    # the Spark write stages the rows the driver collected:
+                    # the batch's plan runs once, and the rows match the
+                    # tablets they were counted in
+                    logical = T.StructType(
+                        [T.StructField(f.name, f.dataType) for f in meta.schema.fields]
+                        + [T.StructField(_SRC, T.IntegerType())]
+                    )
+                    held = tablets.arrow_frame(self.spark, rows.drop_columns(pcs), logical)
             added: list[str] = []
-            if tablets != []:
+            if ids != []:
                 if reason is None:
-                    staged = self._merge_on_driver(meta, rows, rels, op, keep)
+                    staged = tablets.merge_on_driver(meta, rows, data, rels, op, keep)
                 elif not files:
                     staged = held
                 else:
                     existing = self._read_files(meta, files).filter(
-                        self._part_filter(meta, tablets)
+                        self._part_filter(meta, ids)
                     )
                     if op == "insert":
                         staged = held.unionByName(self._as_keys(meta, existing, 0))
                     elif rest is not None:
-                        staged = rest.filter(self._part_filter(meta, tablets)).drop(*pcs)
+                        staged = rest.filter(self._part_filter(meta, ids)).drop(*pcs)
                         keep = None
                     else:
                         staged = held.unionByName(
@@ -3032,19 +2630,19 @@ class TableStore:
                         self._commit_version(meta, base, op, files + added, n)
                 else:
                     added = self._replace_buckets(
-                        meta, base, files, tablets, staged, op, keep
+                        meta, base, files, ids, staged, op, keep
                     )
             path = "spark" if reason else "driver"
-            if tablets is None:
-                tablets = sorted({self._tablet_of(meta, f) for f in added})
+            if ids is None:
+                ids = sorted({self._tablet_of(meta, f) for f in added})
             written = sum((data / f).stat().st_size for f in added)
             _log.debug(
                 "write %s %s on the %s%s: %d tablets, %d bytes read, %d written",
                 meta.name, op, path, f" ({reason})" if reason else "",
-                len(tablets), bytes_read, written,
+                len(ids), bytes_read, written,
                 extra={
                     "table": meta.name, "op": op, "write_path": path,
-                    "reason": reason, "tablets": tablets,
+                    "reason": reason, "tablets": ids,
                     "bytes_read": bytes_read, "bytes_written": written,
                 },
             )

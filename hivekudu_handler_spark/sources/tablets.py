@@ -1,0 +1,453 @@
+"""The table store's driver side: point reads and small keyed writes
+served with pyarrow, with no Spark job, and the one gate that decides
+when the driver may serve them.
+
+A point read (:meth:`TableStore.fetch`) is Hive's fetch task over
+Kudu's key-pruned scanner (``HiveKuduTableInputFormat.java:166-217,
+466-467``): the key's tablet is computed here (:func:`tablet_py`, the
+twin of the write path's tablet expressions) and only that tablet's
+files are read.  A small keyed write (:meth:`TableStore._keyed_write`)
+applies rows as the reference's client-side Kudu session does
+(``HiveKuduTableOutputFormat.java:84,96-106``): the batch is collected
+once (no Spark job for a VALUES batch) and, when its tablets' live files
+are small too, they are read, merged (:func:`merge_on_driver`) and
+rewritten one file per tablet (:func:`write_tablets`) through the
+store's staging directory and commit.
+
+**The gate** (:func:`driver_reason`) returns None when the driver may
+serve a table and a byte count, else why not:
+
+* ``"layout"``: an external table (no tablets), or a ``partition_by``
+  table, whose files lack the partition columns;
+* ``"column type"``: an extended table, whose nested types have no exact
+  pyarrow round trip (each core type has one: timestamps travel as
+  their microseconds);
+* ``"key type"``: a key column neither integral nor STRING.  The driver
+  merge groups keys by Arrow equality, which is Spark's only for those,
+  and the hash twin covers only those;
+* ``"range splits"``: range splits not of the key's type.  Spark casts
+  each split to the key type, so a bisect over the stored splits could
+  name another tablet;
+* ``"budget off"``: the budget is <= 0;
+* ``"tablets over budget"``: the bytes on disk of the tablet files the
+  request reads exceed the budget.
+
+The first four are the table's shape: a fetch of such a table raises
+:class:`NotFetchable` and a write takes the Spark path.  The last two
+are size: a fetch then reads the same rows through Spark
+(:meth:`TableStore.lookup`) and a write stages through Spark.  A write
+also leaves the driver when its batch holds more rows than the budget
+allows (``"batch over budget"``, :func:`collect_batch`).
+
+**The budget** (:meth:`TableStore._driver_budget`) is Spark's own bound
+on what may be pulled to the driver,
+``spark.sql.autoBroadcastJoinThreshold`` (10 MB by default).  So a
+driver read or write is O(budget), whatever the table's size.
+
+Everything here is a function of a :class:`TableMeta`, file lists and
+pyarrow tables; the store's default hash-bucket count is passed in as
+``buckets``.
+"""
+
+from __future__ import annotations
+
+import bisect
+import datetime
+import uuid
+from functools import reduce
+from pathlib import Path
+from typing import TYPE_CHECKING
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.serializers import ArrowStreamSerializer
+from pyspark.sql.pandas.types import to_arrow_schema
+
+if TYPE_CHECKING:
+    from hivekudu_handler_spark.sources.table_store import TableMeta
+
+# source rank of a write-merge row: of the rows sharing a key, the lowest
+# rank wins (see TableStore._write_partitioned)
+SRC = "__src"
+
+BUCKET_COL = "kb"  # hash-bucketed layout
+RANGE_COL = "kr"  # key-range layout
+
+# bits of each integral key type the driver serves
+_INT_BITS = {T.ByteType: 8, T.ShortType: 16, T.IntegerType: 32, T.LongType: 64}
+
+
+def driver_reason(meta: TableMeta, nbytes: int, budget: int) -> str | None:
+    """Why a request of ``meta`` that reads ``nbytes`` of tablet files
+    may not run on the driver with ``budget`` bytes, or None when it may
+    (the reasons are in the module docstring; shape before size)."""
+    if meta.external or meta.partition_by:
+        return "layout"
+    if meta.extended:
+        return "column type"
+    types = {f.name: f.dataType for f in meta.schema.fields}
+    keys = [types[k] for k in meta.key_columns]
+    if not all(isinstance(t, (T.StringType, *_INT_BITS)) for t in keys):
+        return "key type"
+    if meta.range_splits and not all(fits(keys[0], s) for s in meta.range_splits):
+        return "range splits"
+    if budget <= 0:
+        return "budget off"
+    if nbytes > budget:
+        return "tablets over budget"
+    return None
+
+
+def fits(dtype: T.DataType, value) -> bool:
+    """Whether ``value`` is a Python literal of the key type ``dtype``
+    (an int in the integral type's range, or a str for STRING)."""
+    if isinstance(dtype, T.StringType):
+        if not isinstance(value, str):
+            return False
+        try:
+            value.encode("utf-8")
+        except UnicodeEncodeError:  # a lone surrogate has no UTF-8 form
+            return False
+        return True
+    bits = _INT_BITS.get(type(dtype))
+    return (
+        bits is not None
+        and isinstance(value, int)
+        and not isinstance(value, bool)
+        and -(1 << (bits - 1)) <= value < 1 << (bits - 1)
+    )
+
+
+# ------------------------------------------------------------ local frames
+def _arrow_rows(rows: list[tuple], schema: pa.Schema) -> pa.Table:
+    """Driver ``rows`` (tuples, possibly none) as a pyarrow table of
+    ``schema``."""
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    arrays = [pa.array(c, type=f.type) for c, f in zip(cols, schema)]
+    return pa.Table.from_arrays(arrays, schema=schema)
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType | str) -> DataFrame:
+    """``rows`` (driver values, possibly none) as a local relation over
+    an Arrow table: building and collecting it starts no Spark job,
+    where ``createDataFrame(<list>)`` runs a Python-worker job even for
+    an empty list.  Column names, types and values are the same."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    return arrow_frame(spark, _arrow_rows(rows, to_arrow_schema(schema)), schema)
+
+
+def arrow_frame(spark: SparkSession, table: pa.Table, schema: T.StructType) -> DataFrame:
+    """A pyarrow ``table`` whose types are ``to_arrow_schema(schema)``'s
+    as a local relation with ``schema`` (no Spark job).  This is the
+    tail of ``createDataFrame(<pa.Table>)``: that call first looks up
+    three confs over Py4J and localizes tz-naive timestamps, which an
+    Arrow table of exactly this schema does not have.  Skipping them
+    halves the driver time of building a one-row frame (about 16 ms →
+    8 ms on a 4-core host)."""
+    utils = spark._jvm.PythonSQLUtils
+    jiter = spark.sparkContext._serialize_to_jvm(
+        table.to_batches(),
+        ArrowStreamSerializer(),
+        utils.readArrowStreamFromFile,
+        lambda: spark._jvm.ArrowIteratorServer(),  # with I/O encryption only
+    )
+    df = DataFrame(utils.toDataFrame(jiter, schema.json(), spark._jsparkSession), spark)
+    df._schema = schema
+    return df
+
+
+def is_local(df: DataFrame) -> bool:
+    """Whether ``df`` optimizes to a local relation (VALUES, driver
+    frames), which ``collect()`` reads without a Spark job."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    return plan.getClass().getSimpleName() == "LocalRelation"
+
+
+# ---------------------------------------------------------- tablet mapping
+# XXH64 (Spark's catalyst ``XXH64``, the hash behind ``xxhash64``)
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87,
+    0xC2B2AE3D27D4EB4F,
+    0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63,
+    0x27D4EB2F165667C5,
+)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` with ``seed``, as an unsigned 64-bit int."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed, (seed - _P1) & _M64]
+        while i + 32 <= n:
+            for j in range(4):
+                lane = int.from_bytes(data[i + 8 * j : i + 8 * j + 8], "little")
+                v[j] = _xxh64_round(v[j], lane)
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12) + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _xxh64_round(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        h ^= _xxh64_round(0, int.from_bytes(data[i : i + 8], "little"))
+        h = (_rotl(h, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        h ^= int.from_bytes(data[i : i + 4], "little") * _P1 & _M64
+        h = (_rotl(h, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h ^= b * _P5 & _M64
+        h = _rotl(h, 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def part_cols(meta: TableMeta) -> list[str]:
+    """The layout's partition-directory columns, outer first: [kb]
+    for hash tables, [kr] for range tables, [kr, kb] for composite
+    hash-in-range tables (Kudu's three tablet schemes)."""
+    if meta.range_splits:
+        return [RANGE_COL, BUCKET_COL] if meta.hash_in_range else [RANGE_COL]
+    return [BUCKET_COL]
+
+
+def tablet_of(meta: TableMeta, rel: str) -> tuple:
+    """Tablet id of a data-relative file (its leading ``kr=``/``kb=``
+    path segments), as a tuple matching :func:`part_cols`."""
+    parts = Path(rel).parts[: len(part_cols(meta))]
+    return tuple(int(p.split("=", 1)[1]) for p in parts)
+
+
+def hash_buckets(meta: TableMeta, buckets: int) -> int:
+    """``meta``'s hash fan-out; ``buckets`` is the store's default."""
+    return meta.hash_in_range or meta.num_buckets or buckets
+
+
+def hash_py(meta: TableMeta, values: list, buckets: int) -> int:
+    """Driver-side twin of :meth:`TableStore._hash_expr` for one key
+    tuple (``key_columns`` order): Spark's ``xxhash64`` is XXH64 with
+    seed 42, chained over the columns (each column's hash seeds the
+    next, a NULL leaves it as it is), a TINYINT/SMALLINT/INT hashed as
+    its 4 little-endian bytes (``hashInt``), a BIGINT as 8
+    (``hashLong``) and a STRING as its UTF-8 bytes; ``pmod`` then reads
+    the hash as a signed 64-bit value."""
+    types = {f.name: f.dataType for f in meta.schema.fields}
+    h = 42
+    for k, v in zip(meta.key_columns, values):
+        if v is None:
+            continue
+        t = types[k]
+        if isinstance(t, T.StringType):
+            data = v.encode("utf-8")
+        elif isinstance(t, T.LongType):
+            data = (v & _M64).to_bytes(8, "little")
+        else:
+            data = (v & 0xFFFFFFFF).to_bytes(4, "little")
+        h = _xxh64(data, h)
+    return (h - (1 << 64) if h >> 63 else h) % hash_buckets(meta, buckets)
+
+
+def range_key(meta: TableMeta, value):
+    """Normalize a bound/key for driver-side comparison against the
+    stored splits: datetime/date values become ISO text in the same
+    form the splits use ('YYYY-MM-DD HH:MM:SS' — space separator, so
+    text order == time order against space-separated splits)."""
+    if isinstance(meta.range_splits[0], str) and not isinstance(value, str):
+        if isinstance(value, datetime.datetime):
+            return value.isoformat(sep=" ")
+        if isinstance(value, datetime.date):
+            return value.isoformat()
+    return value
+
+
+def range_id_py(meta: TableMeta, value) -> int:
+    """Driver-side twin of :meth:`TableStore._range_id_expr` for pruning
+    bounds (bisect over the bounded split list, never data-sized)."""
+    return bisect.bisect_right(meta.range_splits, range_key(meta, value))
+
+
+def tablet_py(meta: TableMeta, values: list, buckets: int) -> tuple:
+    """Driver-side twin of :meth:`TableStore._part_exprs` for one key
+    tuple, as a tuple matching :func:`part_cols`."""
+    if not meta.range_splits:
+        return (hash_py(meta, values, buckets),)
+    rid = range_id_py(meta, values[0])
+    return (rid, hash_py(meta, values, buckets)) if meta.hash_in_range else (rid,)
+
+
+# ------------------------------------------------------------------- reads
+def resolve(spark: SparkSession, meta: TableMeta, names: list[str]) -> list[T.StructField | None]:
+    """The schema fields ``names`` refer to (None for an unknown name),
+    matched the way Spark SQL matches names (case-insensitively unless
+    ``spark.sql.caseSensitive`` is set)."""
+    exact = {f.name: f for f in meta.schema.fields}
+    out = [exact.get(n) for n in names]
+    if None in out and spark.conf.get("spark.sql.caseSensitive") != "true":
+        folded = {f.name.lower(): f for f in meta.schema.fields}
+        out = [folded.get(n.lower()) for n in names]
+    return out
+
+
+def read_tablet(
+    meta: TableMeta, data: Path, rels: list[str], out: list[T.StructField], key: dict | None = None
+) -> pa.Table:
+    """The rows of the files ``rels`` under ``data`` (whose key equals
+    ``key``, when given), as a pyarrow table of the fields ``out``
+    (positional column names), under the physical read schema: a column
+    added after a file was written reads as NULL.  One tablet of a point
+    read is read on the calling thread: handing it to pyarrow's thread
+    pools cost about 3 ms more per read (16 vs 18 ms per point SELECT,
+    4-core host)."""
+    phys = [T.StructField(meta.phys_name(f.name), f.dataType) for f in meta.schema.fields]
+    phys = to_arrow_schema(T.StructType(phys))
+    fmt = ds.ParquetFileFormat(read_options={"coerce_int96_timestamp_unit": "us"})
+    dataset = ds.dataset([str(data / r) for r in rels], schema=phys, format=fmt)
+    cond = None if key is None else reduce(
+        lambda a, b: a & b,
+        [ds.field(meta.phys_name(k)) == v for k, v in key.items()],
+    )
+    return dataset.to_table(
+        columns={str(i): ds.field(meta.phys_name(f.name)) for i, f in enumerate(out)},
+        filter=cond,
+        use_threads=False,
+    )
+
+
+# ------------------------------------------------------------------ writes
+def collect_batch(
+    meta: TableMeta, batch: DataFrame, budget: int, local: bool, tablet_exprs: list[Column]
+) -> pa.Table | None:
+    """``batch`` (write-merge rows) with each row's tablet, as a
+    pyarrow table (the logical columns, the :data:`SRC` rank and the
+    tablet columns, all nullable), if it holds at most the rows
+    ``budget`` bytes allow by Spark's own row estimate (8 bytes plus
+    the schema's default size); else None.
+
+    One action bounded by ``limit(n + 1)``: a ``local`` relation is
+    collected as rows, which starts no Spark job, and any other batch
+    is read as Arrow.  Tablets come from the write path's own tablet
+    expressions ``tablet_exprs`` (:meth:`TableStore._part_exprs`) and
+    timestamps travel as their microseconds, so both are exact.  As the
+    batch's first action it fires the guards (NOT NULL, NULL key, MERGE
+    cardinality) of every row it reads — all of them when the batch
+    fits."""
+    n = min(budget // (8 + batch._jdf.schema().defaultSize()), (1 << 31) - 2)
+    fields = meta.schema.fields
+    pcs = part_cols(meta)
+    schema = [T.StructField(f.name, f.dataType) for f in fields]
+    schema += [T.StructField(c, T.IntegerType()) for c in [SRC, *pcs]]
+    schema = to_arrow_schema(T.StructType(schema))
+    cols = [
+        F.unix_micros(f.name) if isinstance(f.dataType, T.TimestampType) else F.col(f.name)
+        for f in fields
+    ]
+    cols = [c.alias(name) for c, name in zip([*cols, F.col(SRC), *tablet_exprs], schema.names)]
+    frame = batch.select(*cols).limit(n + 1)
+    wire = pa.schema(
+        [f.with_type(pa.int64()) if pa.types.is_timestamp(f.type) else f for f in schema]
+    )
+    table = _arrow_rows(frame.collect(), wire) if local else frame.toArrow()
+    if table.num_rows > n:
+        return None
+    return table.cast(schema)
+
+
+def merge_on_driver(
+    meta: TableMeta, batch: pa.Table, data: Path, rels: list[str], op: str, keep: tuple
+) -> pa.Table:
+    """The winners of ``batch`` (from :func:`collect_batch`) merged
+    with the rows of the files ``rels`` under ``data`` by
+    :meth:`TableStore._write_partitioned`'s rule, as a pyarrow table of
+    ``batch``'s schema.
+
+    Existing rows rank 0 for an insert — they win outright, so only
+    their keys are read — and 2 otherwise.  Per key the lowest rank
+    wins, then the smallest non-key tuple, ascending with nulls last
+    (Arrow orders NaN above every number and below NULL, as Spark
+    does); a winner is kept if its rank is in ``keep``."""
+    schema = batch.schema
+    keys = meta.key_columns
+    read = [f for f in meta.schema.fields if op != "insert" or f.name in keys]
+    by_tablet: dict[tuple, list[str]] = {}
+    for rel in rels:
+        by_tablet.setdefault(tablet_of(meta, rel), []).append(rel)
+    parts = [batch]
+    for tablet, trels in by_tablet.items():
+        got = read_tablet(meta, data, trels, read)
+        n = got.num_rows
+        cols = dict(zip([f.name for f in read], got.columns))
+        consts = zip([SRC, *part_cols(meta)], [0 if op == "insert" else 2, *tablet])
+        for c, v in consts:
+            cols[c] = pa.repeat(pa.scalar(v, pa.int32()), n)
+        parts.append(
+            pa.table([cols.get(f.name, pa.nulls(n, f.type)) for f in schema], schema=schema)
+        )
+    rows = pa.concat_tables(parts)
+    order = [*keys, SRC, *[f.name for f in meta.schema.fields if f.name not in keys]]
+    sort_keys = [(c, "ascending") for c in order]
+    rows = rows.take(pc.sort_indices(rows, sort_keys=sort_keys, null_placement="at_end"))
+    # each key's first row in that order wins
+    pos = rows.append_column("__pos", pa.array(np.arange(rows.num_rows)))
+    won = rows.take(
+        pos.group_by(keys, use_threads=False).aggregate([("__pos", "min")])["__pos_min"]
+    )
+    return won.filter(pc.is_in(won[SRC], pa.array(keep, pa.int32())))
+
+
+def tablet_counts(meta: TableMeta, rows: pa.Table) -> list[tuple[tuple, int]]:
+    """``(tablet, row count)`` of each tablet the pyarrow table
+    ``rows`` (with the tablet columns) holds rows of, in order of
+    first appearance."""
+    pcs = part_cols(meta)
+    counts = rows.group_by(pcs, use_threads=False).aggregate([([], "count_all")])
+    ids = zip(*[counts[c].to_pylist() for c in pcs])
+    return list(zip(ids, counts["count_all"].to_pylist()))
+
+
+def write_tablets(meta: TableMeta, rows: pa.Table, path: Path) -> int:
+    """Write the driver-merged ``rows`` under ``path`` the way
+    :meth:`TableStore._write_partitioned` lays them out: one snappy
+    Parquet file per tablet directory, with physical column names and no
+    partition columns, its rows sorted by key.  Returns the rows
+    written.
+
+    The file keeps a Spark-written file's shape, so reads cost the
+    same: one row group, and a dictionary only for a column with at
+    most half as many distinct values as rows — Spark's Parquet
+    writer drops a dictionary that does not beat plain encoding, so
+    a unique key column is written plain."""
+    pcs = part_cols(meta)
+    rows = rows.sort_by([(c, "ascending") for c in [*pcs, *meta.key_columns]])
+    data = rows.select([f.name for f in meta.schema.fields]).rename_columns(
+        [meta.phys_name(f.name) for f in meta.schema.fields]
+    )
+    name = f"part-00000-{uuid.uuid4()}.c000.snappy.parquet"
+    start = 0
+    for tablet, n in tablet_counts(meta, rows):
+        out = path.joinpath(*[f"{c}={v}" for c, v in zip(pcs, tablet)])
+        out.mkdir(parents=True)
+        part = data.slice(start, n)
+        dictionary = [c for c in part.column_names if 2 * pc.count_distinct(part[c]).as_py() <= n]
+        pq.write_table(part, out / name, compression="snappy", use_dictionary=dictionary)
+        start += n
+    return rows.num_rows

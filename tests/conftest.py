@@ -29,14 +29,14 @@ def sf_dir() -> str:
 
 
 @pytest.fixture(params=["driver", "spark"])
-def write_path(request, monkeypatch):
-    """Run a test once with small keyed writes on the driver path and
-    once with the staged Spark write forced.  The Spark run sets the one
-    write budget, ``TableStore._write_budget``, to 0; the conf it reads
-    (``spark.sql.autoBroadcastJoinThreshold``) is left alone, so join
-    planning is the same on both runs."""
+def driver_path(request, monkeypatch):
+    """Run a test once with point reads and small keyed writes on the
+    driver paths and once with both forced through Spark.  The Spark run
+    sets the one driver budget, ``TableStore._driver_budget``, to 0; the
+    conf it reads (``spark.sql.autoBroadcastJoinThreshold``) is left
+    alone, so join planning is the same on both runs."""
     from hivekudu_handler_spark.sources.table_store import TableStore
 
     if request.param == "spark":
-        monkeypatch.setattr(TableStore, "_write_budget", lambda self: 0)
+        monkeypatch.setattr(TableStore, "_driver_budget", lambda self: 0)
     return request.param

@@ -20,6 +20,7 @@ import math
 
 import pytest
 
+from hivekudu_handler_spark.sources import tablets
 from hivekudu_handler_spark.sources.sql_ddl import sql
 from hivekudu_handler_spark.sources.table_store import TableStore
 
@@ -127,15 +128,15 @@ def stores(spark, tmp_path, monkeypatch):
     writes its driver path makes."""
     drv = TableStore(spark, str(tmp_path / "drv"))
     spk = TableStore(spark, str(tmp_path / "spk"))
-    monkeypatch.setattr(spk, "_write_budget", lambda: 0)
-    write = drv._write_tablets
+    monkeypatch.setattr(spk, "_driver_budget", lambda: 0)
+    write = tablets.write_tablets
     drv.driver_writes = 0
 
     def counted(meta, rows, path):
-        drv.driver_writes += 1
+        drv.driver_writes += path.is_relative_to(drv.root)
         return write(meta, rows, path)
 
-    monkeypatch.setattr(drv, "_write_tablets", counted)
+    monkeypatch.setattr(tablets, "write_tablets", counted)
     return drv, spk
 
 
@@ -147,7 +148,7 @@ def test_driver_and_spark_paths_leave_the_same_table(spark, tmp_path, monkeypatc
     no tablet probe."""
     drv, spk = stores
     mix = TableStore(spark, str(tmp_path / "mix"))
-    monkeypatch.setattr(mix, "_write_budget", lambda: 4096)
+    monkeypatch.setattr(mix, "_driver_budget", lambda: 4096)
 
     def no_probe(*args):
         raise AssertionError("the tablet probe ran")

@@ -21,12 +21,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hivekudu_handler_spark import pins
+from hivekudu_handler_spark.sources import tablets
 from hivekudu_handler_spark.sources.sql_ddl import sql
 from hivekudu_handler_spark.sources.table_store import (
     NotFetchable,
     TableMeta,
     TableStore,
 )
+from hivekudu_handler_spark.sources.tablets import hash_py, tablet_py
 
 LOGGER = "hivekudu_handler_spark"
 
@@ -213,6 +215,91 @@ def test_fetch_api_rejects_what_it_does_not_serve(spark, store, tmp_path):
     assert store.fetch("H_BIG", {"K": 5}, ["Val"]).columns == ["Val"]
 
 
+# ---------------------------------------------------------------- the gate
+@pytest.mark.parametrize("name", sorted(TABLES))
+def test_fetch_over_budget_reads_through_spark(store, monkeypatch, caplog, name):
+    """With the budget below every tablet's bytes, and with it off, a
+    point SELECT reads through Spark and returns what Spark SQL returns."""
+    key_cols = KEYS.get(name, "k").split(",")
+    selects = ["*", ", ".join([*key_cols, "val", "n", "extra"]), "extra, val"]
+    store.register_views()
+    caplog.set_level(logging.DEBUG, logger=LOGGER)
+    for budget, reason in ((1, "tablets over budget"), (0, "budget off")):
+        monkeypatch.setattr(store, "_driver_budget", lambda: budget)
+        for i in range(10):
+            q = f"SELECT {selects[i % len(selects)]} FROM {name} WHERE {_where(name, i)}"
+            caplog.clear()
+            served, ref = sql(store, q), store.spark.sql(q)
+            assert served.schema == ref.schema, q
+            assert _canon(served.collect()) == _canon(ref.collect()), q
+            (rec,) = [r for r in caplog.records if r.getMessage().startswith("fetch ")]
+            if rec.files or not budget:
+                assert (rec.fetch_path, rec.reason) == ("spark", reason), q
+
+
+def test_fetch_record_names_path_and_reason(store, monkeypatch, caplog):
+    caplog.set_level(logging.DEBUG, logger=LOGGER)
+    for budget, path, reason in (
+        (None, "driver", None),
+        (1, "spark", "tablets over budget"),
+        (0, "spark", "budget off"),
+    ):
+        if budget is not None:
+            monkeypatch.setattr(store, "_driver_budget", lambda: budget)
+        caplog.clear()
+        assert [r.k for r in store.fetch("h_big", {"k": 7}).collect()] == [7]
+        (rec,) = [r for r in caplog.records if r.getMessage().startswith("fetch h_big")]
+        assert (rec.fetch_path, rec.reason) == (path, reason)
+        suffix = f" ({reason})" if reason else ""
+        assert rec.getMessage().startswith(f"fetch h_big tablet {rec.tablet} on the {path}{suffix}:")
+        assert rec.bytes_read > 1
+
+
+# (create_table columns and options, the row written and read, budget,
+# the reason driver_reason gives)
+GATE = {
+    "driver": ("k BIGINT, v STRING", {}, (1, "a"), 10 << 20, None),
+    "layout": ("k BIGINT, v STRING, p STRING", {"partition_by": ["p"]}, (1, "a", "x"), 10 << 20, "layout"),
+    "column type": ("k BIGINT, v ARRAY<INT>", {"extended": True}, (1, [2]), 10 << 20, "column type"),
+    "key type": ("k DOUBLE, v STRING", {}, (1.5, "a"), 10 << 20, "key type"),
+    "range splits": ("k INT, v STRING", {"range_splits": [1.5]}, (1, "a"), 10 << 20, "range splits"),
+    "budget off": ("k BIGINT, v STRING", {}, (1, "a"), 0, "budget off"),
+    # a 1-row batch fits 200 bytes, its tablet's file does not
+    "tablets over budget": ("k BIGINT, v STRING", {}, (1, "a"), 200, "tablets over budget"),
+}
+SHAPES = {"layout", "column type", "key type", "range splits"}
+
+
+@pytest.mark.parametrize("case", sorted(GATE))
+def test_one_gate_decides_fetch_and_write(spark, tmp_path, monkeypatch, caplog, case):
+    """``tablets.driver_reason`` names the path both a keyed write and a
+    point read take: the driver when it returns None; for a shape
+    reason the Spark write and :class:`NotFetchable`; for a size reason
+    the Spark write and the Spark read."""
+    cols, opts, row, budget, reason = GATE[case]
+    wh = TableStore(spark, str(tmp_path / "wh"))
+    wh.create_table("t", T.StructType.fromDDL(cols), ["k"], **opts)
+    batch = spark.createDataFrame([row], cols)
+    wh.insert("t", batch)
+    monkeypatch.setattr(wh, "_driver_budget", lambda: budget)
+    meta = wh.table_meta("t")
+    data = wh._data_dir("t")
+    nbytes = sum((data / f).stat().st_size for f in wh._head("t")[1])
+    assert tablets.driver_reason(meta, nbytes, budget) == reason
+    caplog.set_level(logging.DEBUG, logger=LOGGER)
+    wh.upsert("t", batch)
+    (rec,) = [r for r in caplog.records if r.getMessage().startswith("write t ")]
+    assert (rec.write_path, rec.reason) == ("spark" if reason else "driver", reason)
+    caplog.clear()
+    if reason in SHAPES:
+        with pytest.raises(NotFetchable):
+            wh.fetch("t", {"k": row[0]})
+        return
+    assert wh.fetch("t", {"k": row[0]}).collect() == [row]
+    (rec,) = [r for r in caplog.records if r.getMessage().startswith("fetch t ")]
+    assert (rec.fetch_path, rec.reason) == ("spark" if reason else "driver", reason)
+
+
 # ---------------------------------------------------------------- bucket twin
 _INT_TYPES = [
     ("tinyint", T.ByteType(), 8),
@@ -252,7 +339,7 @@ def test_bucket_twin_matches_spark_xxhash64(spark, store, cases):
             key_columns=names,
             num_buckets=n,
         )
-        want.append(store._hash_py(meta, [v for _, v in keys]))
+        want.append(hash_py(meta, [v for _, v in keys], store.num_buckets))
         lits = [F.lit(v).cast(t) for t, v in keys]
         cols.append(F.pmod(F.xxhash64(*lits), F.lit(n)))
     got = list(spark.range(1).select(*cols).first())
@@ -270,7 +357,7 @@ def test_fetch_record_names_only_the_key_tablet(store, caplog):
     sql(store, "SELECT * FROM hr_comp WHERE a = 20 AND b = '日本'").collect()
     (rec,) = [r for r in caplog.records if r.getMessage().startswith("fetch hr_comp")]
     meta = store.table_meta("hr_comp")
-    tablet = store._tablet_py(meta, [20, "日本"])
+    tablet = tablet_py(meta, [20, "日本"], store.num_buckets)
     assert rec.tablet == tablet and tablet[0] == 2
     head = store._head("hr_comp")[1]
     want = [f for f in head if store._tablet_of(meta, f) == tablet]
@@ -290,7 +377,7 @@ def test_write_records_path_reason_tablets_and_bytes(spark, tmp_path, monkeypatc
     sql(wh, "CREATE TABLE w (k BIGINT, v STRING, n INT) TBLPROPERTIES ('kudu.key_columns'='k')")
     sql(wh, "INSERT INTO w VALUES " + ", ".join(f"({i}, 'v{i}', {i})" for i in range(40)))
     meta = wh.table_meta("w")
-    tablets = sorted({wh._tablet_py(meta, [k]) for k in (1, 2)})
+    tablets = sorted({tablet_py(meta, [k], wh.num_buckets) for k in (1, 2)})
     caplog.set_level(logging.DEBUG, logger=LOGGER)
 
     def record(stmt):

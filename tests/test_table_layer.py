@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hivekudu_handler_spark import typesys
+from hivekudu_handler_spark.sources import tablets
 from hivekudu_handler_spark.sources.table_store import (
     TableExistsError,
     TableStore,
@@ -141,7 +142,7 @@ def test_insert_empty_table_fast_path_commit_semantics(spark, store):
     assert rows == {1: "a", 2: "b"}
 
 
-def test_insert_of_existing_keys_commits_no_version(spark, store, write_path):
+def test_insert_of_existing_keys_commits_no_version(spark, store, driver_path):
     """An INSERT into a non-empty table whose batch rows all lose to
     existing keys changes nothing and commits no version, on either
     write path (the rule the empty-table insert already follows)."""
@@ -1995,7 +1996,7 @@ def test_commit_crash_leaves_last_version_readable(spark, store, monkeypatch):
 
 
 def test_concurrent_upserts_from_one_base_conflict(
-    spark, store, monkeypatch, write_path
+    spark, store, monkeypatch, driver_path
 ):
     """Two upserts based on the same version: exactly one commits, the
     other gets CommitConflict instead of overwriting its manifest; the
@@ -2345,14 +2346,15 @@ def test_ddl_schema_default_literal_with_separator_chars(spark, store):
     assert [tuple(r) for r in store.scan("t").collect()] == [(1, "a,b<c", "d,e")]
 
 
-def test_keyed_writes_start_few_spark_jobs(spark, store, write_path):
+def test_keyed_writes_start_few_spark_jobs(spark, store, driver_path):
     """On the Spark path each keyed write runs one tablet probe (a
     no-shuffle observation) and one staged write whose single tablet
     shuffle also merges rows by key: at most 3 Spark jobs per UPSERT,
     UPDATE, DELETE and INSERT, and at most 9 for a MERGE (its
     source⋈target joins add their own).  On the driver path a VALUES
     write starts no job at all, and the others only the jobs that
-    collect their batch."""
+    collect their batch.  A point SELECT starts no job on the driver
+    path and at least one through Spark."""
     from hivekudu_handler_spark.sources.sql_ddl import sql
 
     store.create_table(
@@ -2371,7 +2373,7 @@ def test_keyed_writes_start_few_spark_jobs(spark, store, write_path):
         f"({k}, 1, 'U', 2.5)" for k in [*range(10, 15), *range(1000, 1005)]
     )
     mvals = ", ".join(f"({k}, 3, 'M', 9.5)" for k in [20, 21, 22, 2000, 2001, 2002])
-    driver = write_path == "driver"
+    driver = driver_path == "driver"
     statements = {
         "upsert": (f"UPSERT INTO kv VALUES {vals}", 0 if driver else 3),
         "update": (
@@ -2395,7 +2397,7 @@ def test_keyed_writes_start_few_spark_jobs(spark, store, write_path):
     sc = spark.sparkContext
     jobs = {}
     for kind, (text, _) in statements.items():
-        group = f"table-store-write-{write_path}-{kind}"
+        group = f"table-store-write-{driver_path}-{kind}"
         sc.setJobGroup(group, f"keyed {kind}")
         try:
             sql(store, text)
@@ -2405,6 +2407,15 @@ def test_keyed_writes_start_few_spark_jobs(spark, store, write_path):
     assert jobs == {
         kind: min(jobs[kind], limit) for kind, (_, limit) in statements.items()
     }, jobs
+    group = f"table-store-read-{driver_path}-point"
+    sc.setJobGroup(group, "keyed point read")
+    try:
+        point = sql(store, "SELECT status FROM kv WHERE k = 10").collect()
+        point_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert point == [("U",)]
+    assert (point_jobs == 0) if driver else (point_jobs >= 1), point_jobs
     probe = "k IN (5, 10, 20, 45, 71, 1000, 2000, 3000)"
     got = {r["k"]: r["status"] for r in store.scan("kv", predicate=probe).collect()}
     assert got == {
@@ -2418,7 +2429,7 @@ def test_failed_staged_write_leaves_no_staging(spark, store, monkeypatch):
     are those of the last commit.  The Spark path is forced (write
     budget 0); ``test_failed_driver_write_leaves_no_staging`` is the
     driver path's twin."""
-    monkeypatch.setattr(store, "_write_budget", lambda: 0)
+    monkeypatch.setattr(store, "_driver_budget", lambda: 0)
     store.create_table("t", "id int, x int", ["id"])
     store.insert_values("t", [(i, i) for i in range(1, 9)])
     v = store.current_version("t")
@@ -2451,14 +2462,14 @@ def test_failed_driver_write_leaves_no_staging(spark, store, monkeypatch):
     store.insert_values("t", [(i, i) for i in range(1, 9)])
     v = store.current_version("t")
     before = {(r["id"], r["x"]) for r in store.scan("t").collect()}
-    write = store._write_tablets
+    write = tablets.write_tablets
 
     def failing(meta, rows, path):
         write(meta, rows, path)
         assert list(path.rglob("*.parquet")), "the write never staged files"
         raise OSError("simulated failure after the pyarrow staging write")
 
-    monkeypatch.setattr(store, "_write_tablets", failing)
+    monkeypatch.setattr(tablets, "write_tablets", failing)
     with pytest.raises(OSError, match="simulated failure"):
         store.upsert("t", spark.createDataFrame([(1, 99)], "id int, x int"))
     with pytest.raises(OSError, match="simulated failure"):

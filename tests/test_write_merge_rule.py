@@ -11,7 +11,7 @@ The rules, as the table store documents them:
 Random batches carry duplicate keys, NULL non-key values, and delete
 keys that overlap the batch or hit absent keys; each runs on a hash and
 a range layout, and on both write paths: merged on the driver with
-pyarrow, and in the staged Spark write (the ``write_path`` fixture).
+pyarrow, and in the staged Spark write (the ``driver_path`` fixture).
 """
 
 from __future__ import annotations
@@ -60,7 +60,7 @@ def _model_insert(existing, batch) -> dict[int, tuple]:
     return {**_winners(batch), **existing}
 
 
-def test_keyed_writes_follow_the_merge_rule(spark, store, write_path):
+def test_keyed_writes_follow_the_merge_rule(spark, store, driver_path):
     names = itertools.count()
 
     def table(layout: str, existing: dict[int, tuple]) -> str:
