@@ -20,9 +20,12 @@ compilation amortizes to zero.
 
 from __future__ import annotations
 
+import importlib
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -192,40 +195,32 @@ STDOUT_OMIT = frozenset({
 })
 
 
+def phases_fn(key: str):
+    """The phases helper ``PHASE_SPLIT`` names for ``key``."""
+    mod_name, fn_name, _label = PHASE_SPLIT[key]
+    return getattr(importlib.import_module(mod_name), fn_name)
+
+
 def run_query(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-def main() -> None:
-    sf_dir = default_sf_dir()
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    load_start = os.getloadavg()
-    spark = get_spark("bench")
-    specs = load_all()
-    # warm the JVM/codegen and the Python worker pool once so the first
-    # timed query isn't charged session startup
+def warm_up(spark) -> None:
+    """Pay a session's one-time costs before anything is timed: JVM and
+    codegen, the Python worker pool, and the Structured Streaming
+    engine."""
     spark.range(1_000_000).selectExpr("sum(id)").collect()
 
     def _ident(batches):
         yield from batches
 
-    (
-        spark.range(64)
-        .repartition(64)
-        .mapInPandas(_ident, "id long")
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-    )
+    run_query(spark.range(64).repartition(64).mapInPandas(_ident, "id long"))
 
-    # warm the Structured Streaming engine too (r15 verdict item 6): the
-    # first streaming query of a session pays several seconds of
+    # the first streaming query of a session pays several seconds of
     # one-time engine init (state-store/offset-log classloading, trigger
     # machinery JIT) that otherwise lands inside stream_upsert_sink's
-    # single-cold-pass phase wall — a fixed session cost, not data work
-    import shutil
-    import tempfile
-
+    # single-cold-pass phase wall (r15 verdict item 6) — a fixed
+    # session cost, not data work
     wdir = tempfile.mkdtemp(prefix="bench_stream_warm_")
     try:
         spark.range(2).write.mode("overwrite").parquet(f"{wdir}/in")
@@ -244,6 +239,15 @@ def main() -> None:
             raise TimeoutError("streaming warm-up did not finish in 120 s")
     finally:
         shutil.rmtree(wdir, ignore_errors=True)
+
+
+def main() -> None:
+    sf_dir = default_sf_dir()
+    sf = sf_dir.rstrip("/").split("sf")[-1]
+    load_start = os.getloadavg()
+    spark = get_spark("bench")
+    specs = load_all()
+    warm_up(spark)
 
     timings: dict[str, float] = {}
     # host-load telemetry (r10 verdict item 3): one 1-minute loadavg
@@ -269,12 +273,9 @@ def main() -> None:
     # setup runs untimed, only the steady-state phase is measured
     # (single pass — the operate phases mutate scratch state and a
     # second run would not repeat the same work)
-    import importlib
-
     phases: dict[str, float] = {}
-    for key, (mod_name, fn_name, phase_label) in PHASE_SPLIT.items():
-        phases_fn = getattr(importlib.import_module(mod_name), fn_name)
-        operate, cleanup = phases_fn(spark, sf_dir)
+    for key, (_mod, _fn, phase_label) in PHASE_SPLIT.items():
+        operate, cleanup = phases_fn(key)(spark, sf_dir)
         try:
             t0 = time.time()
             run_query(operate())

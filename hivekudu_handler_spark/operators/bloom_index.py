@@ -45,7 +45,7 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hivekudu_handler_spark.operators.ddl import _SCRATCH_ROOT, _materialize
+from hivekudu_handler_spark.operators.ddl import _SCRATCH_ROOT, _materialize, _run_phases
 from hivekudu_handler_spark.registry import query
 from hivekudu_handler_spark.sources.bloom import K_PROBES, M_BITS, probe_positions
 from hivekudu_handler_spark.tables import load_events
@@ -136,7 +136,7 @@ def scan_bloom_index_phases(spark: SparkSession, sf_dir: str):
         hit, _files = bloom_index_lookup(
             spark, str(d / "ev"), str(d / "ev_bloom"), "event_id", 123
         )
-        return _materialize(spark, hit.select("event_id", "user_id", "value"))
+        return hit.select("event_id", "user_id", "value")
 
     def cleanup() -> None:
         shutil.rmtree(d, ignore_errors=True)
@@ -160,11 +160,7 @@ def scan_bloom_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     source; identical rows prove no-false-negative correctness, and
     tests/test_new_surface_r17.py pins that the candidate set is a
     small fraction of the 32 files."""
-    operate, cleanup = scan_bloom_index_phases(spark, sf_dir)
-    try:
-        return operate()
-    finally:
-        cleanup()
+    return _run_phases(spark, scan_bloom_index_phases, sf_dir)
 
 
 @query(

@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hivekudu_handler_spark.registry import query
-from hivekudu_handler_spark.operators.ddl import _materialize, _scratch_store
+from hivekudu_handler_spark.operators.ddl import _materialize, _run_phases, _scratch_store
 from hivekudu_handler_spark.sources.table_store import change_sign, signed
 
 
@@ -66,11 +66,7 @@ def scan_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     upserts rewrote bucket files and a delete removed a row — a read
     of version 1's manifest, whose replaced files stay in ``data/``
     beside the current ones."""
-    operate, cleanup = scan_snapshot_phases(spark, sf_dir)
-    try:
-        return operate()
-    finally:
-        cleanup()
+    return _run_phases(spark, scan_snapshot_phases, sf_dir)
 
 
 @query(
@@ -174,14 +170,7 @@ def table_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the commit that produced it.  Each per-commit term reads only
     the files outside the two manifests' common set — a consumer tailing
     commits reads O(changed tablets), never O(table)."""
-    store, d = _mutated_store(spark)
-    try:
-        feed = store.changefeed("snap", 0, store.current_version("snap"))
-        return _materialize(
-            spark, feed.orderBy("_commit_version", "id", "_change_type")
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return _run_phases(spark, table_changefeed_phases, sf_dir)
 
 
 @query(
@@ -281,37 +270,7 @@ def sql_merge_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     current state, and the MERGE commits one bucket-scoped version.  At
     100 TB both legs stay bounded: the feed reads only changed tablets
     and the MERGE rewrites only the buckets those keys live in."""
-    from hivekudu_handler_spark.sources.sql_ddl import sql
-
-    store, d = _mutated_store(spark)
-    try:
-        cur = store.current_version("snap")
-        sql(
-            store,
-            "CREATE TABLE mirror (id int, name string, score double) "
-            "TBLPROPERTIES ('kudu.key_columns'='id')",
-        )
-        sql(store, "INSERT INTO mirror SELECT * FROM snap VERSION AS OF 1")
-        sql(
-            store,
-            f"MERGE INTO mirror AS m USING ("
-            f"  SELECT id, name, score, _change_type FROM ("
-            f"    SELECT id, name, score, _change_type, "
-            f"           ROW_NUMBER() OVER (PARTITION BY id "
-            f"               ORDER BY _commit_version DESC) AS rn "
-            f"    FROM snap CHANGES BETWEEN 1 AND {cur} "
-            f"    WHERE _change_type <> 'update_before') ranked "
-            f"  WHERE rn = 1"
-            f") AS c "
-            f"ON m.id = c.id "
-            f"WHEN MATCHED AND c._change_type = 'delete' THEN DELETE "
-            f"WHEN MATCHED THEN UPDATE SET name = c.name, score = c.score "
-            f"WHEN NOT MATCHED AND c._change_type <> 'delete' "
-            f"  THEN INSERT (id, name, score) VALUES (c.id, c.name, c.score)",
-        )
-        return _materialize(spark, store.scan("mirror").orderBy("id"))
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return _run_phases(spark, sql_merge_cdc_apply_phases, sf_dir)
 
 
 def table_changefeed_phases(spark: SparkSession, sf_dir: str):
@@ -324,9 +283,7 @@ def table_changefeed_phases(spark: SparkSession, sf_dir: str):
 
     def operate() -> DataFrame:
         feed = store.changefeed("snap", 0, store.current_version("snap"))
-        return _materialize(
-            spark, feed.orderBy("_commit_version", "id", "_change_type")
-        )
+        return feed.orderBy("_commit_version", "id", "_change_type")
 
     def cleanup() -> None:
         shutil.rmtree(d, ignore_errors=True)
@@ -373,7 +330,7 @@ def sql_merge_cdc_apply_phases(spark: SparkSession, sf_dir: str):
             f"WHEN NOT MATCHED AND c._change_type <> 'delete' "
             f"  THEN INSERT (id, name, score) VALUES (c.id, c.name, c.score)",
         )
-        return _materialize(spark, store.scan("mirror").orderBy("id"))
+        return store.scan("mirror").orderBy("id")
 
     def cleanup() -> None:
         shutil.rmtree(d, ignore_errors=True)
@@ -626,11 +583,7 @@ def mview_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental maintenance (retract old / assert new / drop emptied
     groups) is exact.  Integer cents keep the sums float-free, so the
     incremental path is bit-identical to the recompute."""
-    operate, cleanup = mview_incremental_phases(spark, sf_dir)
-    try:
-        return operate()
-    finally:
-        cleanup()
+    return _run_phases(spark, mview_incremental_phases, sf_dir)
 
 
 def mview_incremental_phases(spark: SparkSession, sf_dir: str):
@@ -681,7 +634,7 @@ def mview_incremental_phases(spark: SparkSession, sf_dir: str):
 
     def operate() -> DataFrame:
         run_sql(store, "ALTER MATERIALIZED VIEW mv REBUILD")
-        return _materialize(spark, store.scan("mv").orderBy("event_type"))
+        return store.scan("mv").orderBy("event_type")
 
     def cleanup() -> None:
         shutil.rmtree(d, ignore_errors=True)
@@ -696,7 +649,7 @@ def scan_snapshot_phases(spark: SparkSession, sf_dir: str):
     store, d = _mutated_store(spark)
 
     def operate() -> DataFrame:
-        return _materialize(spark, store.scan_snapshot("snap", 1).orderBy("id"))
+        return store.scan_snapshot("snap", 1).orderBy("id")
 
     def cleanup() -> None:
         shutil.rmtree(d, ignore_errors=True)
@@ -949,7 +902,7 @@ def mview_join_incremental_phases(spark: SparkSession, sf_dir: str):
         raise
 
     def operate() -> DataFrame:
-        merged = join_view_delta_refresh(
+        return join_view_delta_refresh(
             store,
             base,
             left="ord",
@@ -961,7 +914,6 @@ def mview_join_incremental_phases(spark: SparkSession, sf_dir: str):
             group_col="seg",
             measure_col="cents",
         )
-        return _materialize(spark, merged)
 
     def cleanup() -> None:
         shutil.rmtree(d, ignore_errors=True)
@@ -994,11 +946,7 @@ def mview_join_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the JOIN key (``kudu.hash_columns``) would prune it to the
     delta's buckets.  Integer cents keep every path float-free, so
     incremental equals recompute bit-for-bit."""
-    operate, cleanup = mview_join_incremental_phases(spark, sf_dir)
-    try:
-        return operate()
-    finally:
-        cleanup()
+    return _run_phases(spark, mview_join_incremental_phases, sf_dir)
 
 
 @query(

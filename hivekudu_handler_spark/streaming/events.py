@@ -599,43 +599,14 @@ def stream_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events streamed through ``foreachBatch`` into a managed keyed
     table with last-write-wins merge: the final table is each user's
     newest event — checked against the one-shot SQL window oracle."""
-    import shutil
-    import tempfile
+    from hivekudu_handler_spark.operators.ddl import _run_phases
 
-    from hivekudu_handler_spark.operators.ddl import _materialize, _scratch_store
-    from hivekudu_handler_spark.tables import load_events
-
-    ev = load_events(spark, sf_dir).select(
-        "user_id", "event_id", "ts", "event_type", "value"
-    )
-    store, d = _scratch_store(spark)
-    try:
-        store.create_table(
-            "user_state",
-            "user_id bigint, event_id bigint, ts timestamp, "
-            "event_type string, value double",
-            ["user_id"],
-        )
-        # 2 micro-batches, not 4 (r16 bench hygiene, r15 verdict item 6):
-        # multi-batch LWW convergence is what the key demonstrates and 2
-        # batches demonstrate it identically (order-independence is
-        # separately pinned in test_streaming.py with its own file
-        # counts); each availableNow micro-batch costs ~1.4 s of FIXED
-        # streaming-engine latency that is not data work, so the bench
-        # wall should not pay it four times
-        run_upsert_sink(
-            spark, ev, store, "user_state",
-            checkpoint_dir=str(d / "ckpt"), stage_dir=str(d / "stage"),
-            n_files=2,
-        )
-        return _materialize(spark, store.scan("user_state").orderBy("user_id"))
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return _run_phases(spark, stream_upsert_sink_phases, sf_dir)
 
 
 def stream_upsert_sink_phases(spark: SparkSession, sf_dir: str):
     """Bench phase-split for ``stream_upsert_sink`` (r8 verdict item 6):
-    ``operate()`` is the Structured-Streaming run alone — four
+    ``operate()`` is the Structured-Streaming run alone — two
     ``foreachBatch`` micro-batches of LWW merge into the keyed table
     plus the final-state scan — against a scaffold (table create +
     staged stream files) this function already built, untimed.  The
@@ -643,7 +614,7 @@ def stream_upsert_sink_phases(spark: SparkSession, sf_dir: str):
     one-time setup a real deployment never repeats."""
     import shutil
 
-    from hivekudu_handler_spark.operators.ddl import _materialize, _scratch_store
+    from hivekudu_handler_spark.operators.ddl import _scratch_store
     from hivekudu_handler_spark.tables import load_events
 
     ev = load_events(spark, sf_dir).select(
@@ -657,10 +628,12 @@ def stream_upsert_sink_phases(spark: SparkSession, sf_dir: str):
             "event_type string, value double",
             ["user_id"],
         )
-        # 2 files → 2 micro-batches, matching the registered key (r16
-        # bench hygiene): the operate() wall then measures two LWW merge
-        # batches of data work plus two — not four — fixed ~1.4 s
-        # availableNow engine latencies
+        # 2 files → 2 micro-batches, not 4 (r16 bench hygiene, r15
+        # verdict item 6): multi-batch LWW convergence is what the key
+        # demonstrates and 2 batches demonstrate it identically
+        # (order-independence is separately pinned in test_streaming.py
+        # with its own file counts); each availableNow micro-batch costs
+        # ~1.4 s of FIXED streaming-engine latency that is not data work
         stage_stream_files(ev, str(d / "stage"), n_files=2)
     except BaseException:
         # cleanup() is only handed out on success — reap the half-built
@@ -674,7 +647,7 @@ def stream_upsert_sink_phases(spark: SparkSession, sf_dir: str):
             checkpoint_dir=str(d / "ckpt"), stage_dir=str(d / "stage"),
             pre_staged=True,
         )
-        return _materialize(spark, store.scan("user_state").orderBy("user_id"))
+        return store.scan("user_state").orderBy("user_id")
 
     def cleanup() -> None:
         shutil.rmtree(d, ignore_errors=True)
@@ -975,7 +948,8 @@ _CDC_MIRROR_ORACLE = (
 
 def _cdc_mirror_scaffold(spark: SparkSession, sf_dir: str):
     """Source table with a 4-commit history over ``customer`` plus an
-    empty mirror — shared by the key and its bench phase split."""
+    empty mirror — the scaffold of the bench phase split, which the key
+    runs whole."""
     from hivekudu_handler_spark.operators.ddl import _scratch_store
     from hivekudu_handler_spark.sources.sql_ddl import sql as run_sql
 
@@ -1013,30 +987,9 @@ def stream_cdc_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     two commit-ordered micro-batches; the final mirror must equal the
     source's current state — which the oracle recomputes from raw
     ``customer`` with plain SQL."""
-    import shutil
-    import tempfile
+    from hivekudu_handler_spark.operators.ddl import _run_phases
 
-    from hivekudu_handler_spark.operators.ddl import _materialize
-
-    read_fixture(spark, f"{sf_dir}/customer.parquet").createOrReplaceTempView(
-        "customer"
-    )
-    store, d = _cdc_mirror_scaffold(spark, sf_dir)
-    try:
-        feed = store.changefeed("acct", 0, store.current_version("acct"))
-        run_cdc_mirror(
-            spark, feed, store, "acct_mirror",
-            checkpoint_dir=str(d / "ckpt"), stage_dir=str(d / "stage"),
-            n_files=2,
-        )
-        return _materialize(
-            spark,
-            store.scan("acct_mirror")
-            .select("c_custkey", "name", "bal")
-            .orderBy("c_custkey"),
-        )
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return _run_phases(spark, stream_cdc_mirror_phases, sf_dir)
 
 
 def stream_cdc_mirror_phases(spark: SparkSession, sf_dir: str):
@@ -1048,8 +1001,6 @@ def stream_cdc_mirror_phases(spark: SparkSession, sf_dir: str):
     scaffold (source history + staged commit-range files) this function
     already built, untimed."""
     import shutil
-
-    from hivekudu_handler_spark.operators.ddl import _materialize
 
     read_fixture(spark, f"{sf_dir}/customer.parquet").createOrReplaceTempView(
         "customer"
@@ -1070,11 +1021,10 @@ def stream_cdc_mirror_phases(spark: SparkSession, sf_dir: str):
             checkpoint_dir=str(d / "ckpt"), stage_dir=str(d / "stage"),
             n_files=2, pre_staged=True,
         )
-        return _materialize(
-            spark,
+        return (
             store.scan("acct_mirror")
             .select("c_custkey", "name", "bal")
-            .orderBy("c_custkey"),
+            .orderBy("c_custkey")
         )
 
     def cleanup() -> None:

@@ -50,40 +50,6 @@ def test_new_keys_reported_not_flagged():
     assert v["flagged"] == [] and v["new"] == [{"key": "brand_new", "cand": 9.9}]
 
 
-def _band(lo, hi, n):
-    return {"quiet_min": lo, "quiet_max": hi, "n_samples": n}
-
-
-def test_untrusted_band_entries_are_ignored():
-    # a wide (3x > 2.5x) or thin (2 < 3 samples) entry would raise the
-    # limit to its quiet_max; ignored, the plain band decides
-    ref = {"wide": 1.0, "thin": 1.0, "good": 1.0}
-    band = {
-        "wide": _band(1.0, 3.0, 9),
-        "thin": _band(1.0, 2.4, 2),
-        "good": _band(1.0, 2.4, 9),
-    }
-    v = compare(_cand({"wide": 2.3, "thin": 2.3, "good": 2.3}), ref, quiet_band=band)
-    assert [e["key"] for e in v["flagged"]] == ["thin", "wide"]
-    assert v["untrusted_band"] == ["thin", "wide"]
-    assert v["ok"] == 1 and v["quiet_band_keys"] == 1
-    # the bounds are inclusive: exactly 2.5x and exactly 3 samples count
-    v = compare(_cand({"a": 2.4}), {"a": 1.0}, quiet_band={"a": _band(1.0, 2.5, 3)})
-    assert v["ok"] == 1 and v["untrusted_band"] == []
-
-
-def test_band_only_reference_reported_new_not_ok():
-    band = {"a": _band(1.0, 2.0, 5), "b": _band(1.0, 2.0, 5)}
-    v = compare(_cand({"a": 1.2, "b": 9.0}), {}, quiet_band=band)
-    assert v["ok"] == 0
-    assert v["new"] == [{"key": "a", "cand": 1.2, "band_ref": 1.0}]
-    # a band-only key far above its limit is still a regression
-    assert [e["key"] for e in v["flagged"]] == ["b"]
-    # an untrusted band-only entry gives no reference at all
-    v = compare(_cand({"c": 1.2}), {}, quiet_band={"c": _band(1.0, 2.0, 1)})
-    assert v["new"] == [{"key": "c", "cand": 1.2}]
-
-
 def test_best_reference_is_per_key_min(tmp_path):
     import json
 
@@ -131,22 +97,6 @@ def test_stdout_omit_subset_of_headline():
     # the omit list exists to create headroom; it must never grow to
     # the point of hiding a meaningful share of the suite
     assert len(bench.STDOUT_OMIT) <= 8
-
-
-def test_time_keys_repeat_flag_parsing():
-    """tools/time_keys_r21: only ``--n`` and ``--n=<int>`` set the repeat
-    count; ``--name`` is not a prefix match, and a missing value exits
-    with the usage line instead of an IndexError."""
-    import pytest
-
-    from tools.time_keys_r21 import parse_args
-
-    assert parse_args(["a", "--n", "5", "b"]) == (["a", "b"], 5)
-    assert parse_args(["--n=7", "k"]) == (["k"], 7)
-    assert parse_args(["k"]) == (["k"], 3)
-    for argv in (["k", "--n"], ["--name", "x"], ["--n=x"], ["--n", "x"]):
-        with pytest.raises(SystemExit, match="usage:"):
-            parse_args(argv)
 
 
 def test_default_references_refuse_a_4_cpu_candidate(tmp_path, capsys):

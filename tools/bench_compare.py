@@ -41,11 +41,6 @@ import sys
 
 BAND_RATIO = 1.5
 BAND_FLOOR_S = 0.3
-# a quiet-band entry is trusted only with enough samples and a bounded
-# spread: a majority-contended sample set would otherwise turn its
-# contended median into a permanent never-flag ceiling
-QUIET_SPREAD_MAX = 2.5
-QUIET_MIN_SAMPLES = 3
 
 
 def _load(path: str) -> dict:
@@ -76,43 +71,10 @@ def cpus_refusal(candidate: dict, references: dict[str, dict]) -> str | None:
     return None
 
 
-def load_quiet_band(path: str | None = None) -> dict[str, dict]:
-    """The committed per-key quiet-band reference (r22, verdict item 2):
-    ``{key: {quiet_min, quiet_max, n_samples, samples}}`` collected by
-    ``tools/quiet_band_r22.py`` — quiet_min is the min over all recorded
-    samples (contention only inflates, so the min is the engine truth)
-    and quiet_max the median (robust typical; see that module's
-    docstring for why loadavg gating failed).  Missing file → {}."""
-    if path is None:
-        path = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)),
-            "bench_history",
-            "quiet_band_r22.json",
-        )
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        return json.load(f)
-
-
-def band_entry_trusted(entry: dict) -> bool:
-    """Whether a quiet-band entry may serve as a reference: at least
-    ``QUIET_MIN_SAMPLES`` samples and ``quiet_max / quiet_min`` at most
-    ``QUIET_SPREAD_MAX``."""
-    lo, hi = entry.get("quiet_min"), entry.get("quiet_max")
-    return (
-        lo is not None
-        and hi is not None
-        and entry.get("n_samples", 0) >= QUIET_MIN_SAMPLES
-        and hi <= QUIET_SPREAD_MAX * lo
-    )
-
-
 def compare(
     candidate: dict,
     reference: dict[str, float],
     load_margin: float = 4.0,
-    quiet_band: dict[str, dict] | None = None,
 ) -> dict:
     """Classify every candidate key: ok / flagged / excused / new.
 
@@ -121,16 +83,6 @@ def compare(
     at the run's own load level, so it is evidence.
     ``excused``: band exceeded but sampled load is an outlier above the
     median — ambient contention; re-run before concluding anything.
-
-    When a committed quiet band covers a key, its limit is raised to at
-    least the key's observed ``quiet_max``: a timing inside the scatter
-    that a QUIET host has already produced is never evidence of a
-    regression (the adjudication rule every round's verdict applied by
-    hand — now mechanical, from committed data alone).  Only trusted
-    entries (:func:`band_entry_trusted`) are consulted; the others are
-    listed under ``untrusted_band``.  A key whose only reference is the
-    band's ``quiet_min`` has no recorded history: within its limit it
-    is reported under ``new`` (with ``band_ref``), never counted ok.
     """
     timings: dict[str, float] = candidate.get("queries", {})
     loads: dict[str, float] = candidate.get("loadavg_1m", {}) or {}
@@ -149,39 +101,20 @@ def compare(
     out = {"band": f"{BAND_RATIO}x+{BAND_FLOOR_S}s", "load_median_1m": med,
            "run_quiet": run_quiet, "start_1m": start_1m,
            "flagged": [], "excused": [], "new": [], "ok": 0}
-    quiet_band = quiet_band or {}
-    out["untrusted_band"] = sorted(
-        k for k in timings if k in quiet_band and not band_entry_trusted(quiet_band[k])
-    )
-    quiet_band = {k: e for k, e in quiet_band.items() if band_entry_trusted(e)}
-    out["quiet_band_keys"] = sum(
-        1 for k in timings if "quiet_max" in quiet_band.get(k, {})
-    )
     for key in sorted(timings):
         cand = timings[key]
         ref = reference.get(key)
-        band = quiet_band.get(key, {})
-        band_only = ref is None and "quiet_min" in band
-        if band_only:
-            ref = band["quiet_min"]
         if ref is None:
             out["new"].append({"key": key, "cand": cand})
             continue
         limit = BAND_RATIO * ref + BAND_FLOOR_S
-        if "quiet_max" in band:
-            limit = max(limit, band["quiet_max"])
         if cand <= limit:
-            if band_only:
-                out["new"].append({"key": key, "cand": cand, "band_ref": ref})
-            else:
-                out["ok"] += 1
+            out["ok"] += 1
             continue
         entry = {
             "key": key, "cand": round(cand, 2), "ref": round(ref, 2),
             "limit": round(limit, 2), "load_1m": loads.get(key),
         }
-        if "quiet_max" in band:
-            entry["quiet_band"] = [band["quiet_min"], band["quiet_max"]]
         quiet = (
             med is None
             or loads.get(key) is None
@@ -212,9 +145,7 @@ def main(argv: list[str]) -> int:
     if why:
         print(f"refusing to compare: {why}", file=sys.stderr)
         return 2
-    verdict = compare(
-        candidate, best_reference(refs), load_margin, load_quiet_band()
-    )
+    verdict = compare(candidate, best_reference(refs), load_margin)
     print(json.dumps(verdict, indent=1))
     if verdict["flagged"] and not verdict["run_quiet"]:
         print(
