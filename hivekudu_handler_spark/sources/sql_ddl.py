@@ -976,9 +976,13 @@ def _rewrite_changefeed(store: TableStore, stmt: str) -> str:
     surfaced in SQL (Delta spells it ``table_changes('t', a, b)``): the
     clause becomes a temp view over :meth:`TableStore.changefeed`, whose
     columns are the table's plus ``_change_type`` / ``_commit_version``.
-    The feed is lazy — one scan and one window, built from the range's
-    manifests without running a job — so ``EXPLAIN`` over any range
-    shows the plan a read would run and reads nothing.  Same
+    A range whose changed files fit the driver budget is read with
+    pyarrow while the view is bound, starting no job, and the view is a
+    local relation.  Any other range binds the lazy feed — one scan and
+    one window, built from the range's manifests without running a job.
+    Either way ``EXPLAIN`` starts no job: under the budget it reads the
+    changed files and shows the ``LocalRelation``, over it it shows the
+    plan a read would run and reads nothing.  Same
     string-literal guard as the VERSION AS OF rewrite, and the two
     compose in one statement (e.g. a feed joined against the snapshot
     it starts from).

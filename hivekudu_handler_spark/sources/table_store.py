@@ -1018,7 +1018,9 @@ class TableStore:
         manifests holds no changed key and is never read: the one scan
         covers the manifests' symmetric difference, and a mutation batch
         touching k of B tablets makes the diff O(k tablets), not
-        O(table)."""
+        O(table).  When those files fit the driver budget they are read
+        with pyarrow and the diff is a local relation
+        (:meth:`_change_events`)."""
         return self._change_events(name, [from_version, to_version])
 
     def show_partitions(self, name: str) -> DataFrame:
@@ -1101,7 +1103,10 @@ class TableStore:
         inserts and ``update_after`` the new ones — replaying the feed
         onto the ``from_version`` snapshot reproduces ``to_version``
         exactly.  It is :meth:`diff`'s reader given every manifest of
-        the range instead of its two ends (:meth:`_change_events`)."""
+        the range instead of its two ends (:meth:`_change_events`): a
+        range whose changed files fit the driver budget is read with
+        pyarrow when the feed is built, and comes back as a local
+        relation that starts no Spark job."""
         if from_version > to_version:
             raise TableStoreError(
                 f"changefeed range is backwards: {from_version} > {to_version}"
@@ -1138,7 +1143,20 @@ class TableStore:
         The plan has one parquet scan and one shuffle, no join and no
         union, so a consumer tailing a 100 TB table reads only the
         tablets the range touched, and a deep range costs one manifest
-        read per version while the plan is built."""
+        read per version while the plan is built.
+
+        **Small reads on the driver.**  When the changed files' bytes on
+        disk pass :func:`.tablets.driver_reason` with the driver budget
+        (:meth:`_driver_budget`), the same files are read here with
+        pyarrow and :func:`.tablets.change_events`, the window's twin,
+        builds the events, so the result is a local relation with the
+        Spark plan's schema: a projection over it folds into it and
+        starts no Spark job, and an ``EXPLAIN`` of it shows a
+        ``LocalRelation``, not the scan.  Over-budget ranges, and the
+        tables the gate refuses by shape (``partition_by``, extended
+        columns, keys neither integral nor STRING), get the plan above.
+        One DEBUG record per read names the path taken, why not the
+        driver, and the files and bytes read."""
         meta = self.table_meta(name)
         if meta.external:
             raise TableStoreError("external tables have no snapshots")
@@ -1148,18 +1166,22 @@ class TableStore:
         # reads every listed manifest: a missing or vacuumed one raises
         # here, before any plan is built
         runs = _segment_runs(self, meta.name, versions)
-        if not runs:
-            return tablets.local_frame(
-                self.spark,
-                [],
-                T.StructType(
-                    [
-                        *meta.schema.fields,
-                        T.StructField("_change_type", T.StringType(), False),
-                        T.StructField("_commit_version", T.IntegerType(), False),
-                    ]
-                ),
-            )
+        files = [rel for rels in runs.values() for rel in rels]
+        data = self._data_dir(meta.name)
+        nbytes = sum((data / r).stat().st_size for r in files)
+        reason = tablets.driver_reason(meta, nbytes, self._driver_budget()) if files else None
+        path = "spark" if reason else "driver"
+        _log.debug(
+            "changes %s on the %s%s: %d files, %d bytes",
+            meta.name, path, f" ({reason})" if reason else "", len(files), nbytes,
+            extra={
+                "table": meta.name, "files": files, "change_path": path,
+                "reason": reason, "bytes_read": nbytes,
+            },
+        )
+        if not reason:
+            table = tablets.change_events(meta, data, runs, versions)
+            return tablets.arrow_frame(self.spark, table, tablets.change_schema(meta))
         run_of = []
         for (a, b), rels in runs.items():
             span = F.struct(F.lit(a).alias("a"), F.lit(b).alias("b"))
@@ -1169,9 +1191,7 @@ class TableStore:
         # a key's values travel as one struct so the window can hand the
         # previous run's image to the next; a key-only table has none
         img = [F.struct(*vals).alias("_img")] if vals else []
-        rows = self._read_files(
-            meta, [rel for rels in runs.values() for rel in rels]
-        ).select(
+        rows = self._read_files(meta, files).select(
             *keys, *img, run["a"].alias("_first_v"), run["b"].alias("_last_v")
         )
         # the window columns are materialized into the row BEFORE the

@@ -1,6 +1,6 @@
-"""The table store's driver side: point reads and small keyed writes
-served with pyarrow, with no Spark job, and the one gate that decides
-when the driver may serve them.
+"""The table store's driver side: point reads, small keyed writes and
+small change reads served with pyarrow, with no Spark job, and the one
+gate that decides when the driver may serve them.
 
 A point read (:meth:`TableStore.fetch`) is Hive's fetch task over
 Kudu's key-pruned scanner (``HiveKuduTableInputFormat.java:166-217,
@@ -12,7 +12,11 @@ applies rows as the reference's client-side Kudu session does
 once (no Spark job for a VALUES batch) and, when its tablets' live files
 are small too, they are read, merged (:func:`merge_on_driver`) and
 rewritten one file per tablet (:func:`write_tablets`) through the
-store's staging directory and commit.
+store's staging directory and commit.  A change read
+(:meth:`TableStore._change_events`, behind ``diff``, ``changefeed`` and
+SQL ``CHANGES BETWEEN``) is Kudu's diff scan served to its client: the
+files that changed across the range are read and turned into change
+events here (:func:`change_events`, the twin of the Spark path's window).
 
 **The gate** (:func:`driver_reason`) returns None when the driver may
 serve a table and a byte count, else why not:
@@ -33,9 +37,10 @@ serve a table and a byte count, else why not:
   request reads exceed the budget.
 
 The first four are the table's shape: a fetch of such a table raises
-:class:`NotFetchable` and a write takes the Spark path.  The last two
-are size: a fetch then reads the same rows through Spark
-(:meth:`TableStore.lookup`) and a write stages through Spark.  A write
+:class:`NotFetchable`, and a write or a change read takes the Spark
+path.  The last two are size: a fetch then reads the same rows through
+Spark (:meth:`TableStore.lookup`), a write stages through Spark and a
+change read plans its one scan and one window.  A write
 also leaves the driver when its batch holds more rows than the budget
 allows (``"batch over budget"``, :func:`collect_batch`).
 
@@ -153,7 +158,10 @@ def arrow_frame(spark: SparkSession, table: pa.Table, schema: T.StructType) -> D
     8 ms on a 4-core host)."""
     utils = spark._jvm.PythonSQLUtils
     jiter = spark.sparkContext._serialize_to_jvm(
-        table.to_batches(),
+        # Spark's stream reader stops at an empty batch that is not the
+        # stream's first, dropping every row after it; the schema comes
+        # from ``schema``, so a table of no rows may send no batch
+        [b for b in table.to_batches() if b.num_rows],
         ArrowStreamSerializer(),
         utils.readArrowStreamFromFile,
         lambda: spark._jvm.ArrowIteratorServer(),  # with I/O encryption only
@@ -412,6 +420,105 @@ def merge_on_driver(
         pos.group_by(keys, use_threads=False).aggregate([("__pos", "min")])["__pos_min"]
     )
     return won.filter(pc.is_in(won[SRC], pa.array(keep, pa.int32())))
+
+
+def change_schema(meta: TableMeta) -> T.StructType:
+    """The columns of a change read: the table's logical columns, then
+    ``_change_type`` and ``_commit_version``, every one nullable, as the
+    Spark path's plan types them."""
+    return T.StructType(
+        [T.StructField(f.name, f.dataType) for f in meta.schema.fields]
+        + [
+            T.StructField("_change_type", T.StringType()),
+            T.StructField("_commit_version", T.IntegerType()),
+        ]
+    )
+
+
+def _null_safe_equal(a: pa.ChunkedArray, b: pa.ChunkedArray) -> np.ndarray:
+    """Spark's ``a <=> b`` per row, as a numpy bool array: NULL equals
+    NULL, and for floating point ``NaN`` equals ``NaN`` and ``-0.0``
+    equals ``0.0``.  Arrow's ``equal`` gives NULL for a NULL input and
+    does not hold for NaN."""
+    eq = pc.fill_null(pc.equal(a, b), False)
+    if pa.types.is_floating(a.type):
+        eq = pc.or_(eq, pc.fill_null(pc.and_(pc.is_nan(a), pc.is_nan(b)), False))
+    eq = pc.or_(eq, pc.and_(pc.is_null(a), pc.is_null(b)))
+    return eq.to_numpy()
+
+
+def _same_as_previous(col: pa.ChunkedArray) -> np.ndarray:
+    """Whether each row of ``col`` is ``<=>`` to the row before it (the
+    first row is not)."""
+    out = np.zeros(len(col), bool)
+    if len(col) > 1:
+        out[1:] = _null_safe_equal(col.slice(1), col.slice(0, len(col) - 1))
+    return out
+
+
+def change_events(
+    meta: TableMeta, data: Path, runs: dict[tuple[int, int], list[str]], versions: list[int]
+) -> pa.Table:
+    """The change events of the files ``runs`` under ``data`` (from
+    ``_segment_runs``: each file's run of positions ``(first, last)`` in
+    the ordered manifest ``versions``), as a pyarrow table of
+    :func:`change_schema`'s types: the twin of
+    :meth:`TableStore._change_events`'s Spark window.
+
+    Each run's files are read under the physical read schema (a column
+    added after a file was written reads as NULL) and each row is
+    stamped with its run.  Sorted by key and then ``first``, a key's
+    rows are adjacent, so the window's ``lag``/``lead`` are the
+    neighbouring rows of the same key.  A row's run starting at
+    ``first > 0`` right after its key's previous run is an
+    ``update_before``/``update_after`` pair at ``first`` when some value
+    differs by Spark's ``<=>`` and nothing when none does (a file
+    rewrite); one with no adjacent predecessor is an ``insert`` at
+    ``first``; a run ending before the last position with no adjacent
+    successor is a ``delete`` at ``last + 1`` carrying its values.  Each
+    position becomes the version at it.  Events come in key order, each
+    key's in the order of its runs."""
+    schema = to_arrow_schema(change_schema(meta))
+    if not runs:
+        return schema.empty_table()
+    fields = meta.schema.fields
+    keys = [i for i, f in enumerate(fields) if f.name in meta.key_columns]
+    parts = [read_tablet(meta, data, rels, fields) for rels in runs.values()]
+    sizes = [t.num_rows for t in parts]
+    rows = pa.concat_tables(parts)
+    first = np.repeat([a for a, _ in runs], sizes)
+    last = np.repeat([b for _, b in runs], sizes)
+    by = rows.select(keys).append_column(str(len(fields)), pa.array(first))
+    order = pc.sort_indices(by, sort_keys=[(c, "ascending") for c in by.column_names]).to_numpy()
+    rows, first, last = rows.take(order), first[order], last[order]
+    same = np.ones(rows.num_rows, bool)
+    for i in keys:
+        same &= _same_as_previous(rows.column(i))
+    nxt = np.append(same[1:], False)
+    # the run right before in the key's group ends just before this one
+    continuation = same & (np.roll(last, 1) == first - 1)
+    gap_after = ~nxt | (np.roll(first, -1) > last + 1)
+    arriving = first > 0
+    departing = last < len(versions) - 1
+    changed = np.zeros(rows.num_rows, bool)
+    for i in range(len(fields)):
+        if i not in keys:
+            changed |= ~_same_as_previous(rows.column(i))
+    inserts = np.flatnonzero(arriving & ~continuation)
+    deletes = np.flatnonzero(departing & gap_after)
+    updates = np.flatnonzero(arriving & continuation & changed)
+    # (image row, anchor row, kind, position) of each event; an
+    # update_before carries the image of the key's previous row
+    image = np.concatenate([inserts, deletes, updates - 1, updates])
+    anchor = np.concatenate([inserts, deletes, updates, updates])
+    kind = np.repeat(np.arange(4), [len(inserts), len(deletes), len(updates), len(updates)])
+    pos = np.concatenate([first[inserts], last[deletes] + 1, first[updates], first[updates]])
+    ordered = np.lexsort((kind, anchor))
+    kinds = pa.array(["insert", "delete", "update_before", "update_after"])
+    at = np.asarray(versions, np.int32)
+    cols = rows.take(image[ordered]).columns
+    cols += [kinds.take(kind[ordered]), pa.array(at[pos[ordered]])]
+    return pa.Table.from_arrays(cols, schema=schema)
 
 
 def tablet_counts(meta: TableMeta, rows: pa.Table) -> list[tuple[tuple, int]]:

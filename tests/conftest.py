@@ -30,13 +30,26 @@ def sf_dir() -> str:
 
 @pytest.fixture(params=["driver", "spark"])
 def driver_path(request, monkeypatch):
-    """Run a test once with point reads and small keyed writes on the
-    driver paths and once with both forced through Spark.  The Spark run
-    sets the one driver budget, ``TableStore._driver_budget``, to 0; the
-    conf it reads (``spark.sql.autoBroadcastJoinThreshold``) is left
-    alone, so join planning is the same on both runs."""
+    """Run a test once with point reads, small keyed writes and small
+    change reads on the driver paths and once with all of them forced
+    through Spark (:func:`spark_path`)."""
+    if request.param == "spark":
+        _budget_off(monkeypatch)
+    return request.param
+
+
+@pytest.fixture()
+def spark_path(monkeypatch):
+    """Force every request the driver could serve through Spark: the
+    Spark run of :func:`driver_path`, for tests that pin the Spark
+    plan itself (the plan an over-budget request still runs)."""
+    _budget_off(monkeypatch)
+
+
+def _budget_off(monkeypatch):
+    """Set the one driver budget, ``TableStore._driver_budget``, to 0;
+    the conf it reads (``spark.sql.autoBroadcastJoinThreshold``) is left
+    alone, so join planning is the same on both paths."""
     from hivekudu_handler_spark.sources.table_store import TableStore
 
-    if request.param == "spark":
-        monkeypatch.setattr(TableStore, "_driver_budget", lambda self: 0)
-    return request.param
+    monkeypatch.setattr(TableStore, "_driver_budget", lambda self: 0)

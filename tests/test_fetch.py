@@ -14,6 +14,7 @@ from __future__ import annotations
 import logging
 import uuid
 
+import pyarrow as pa
 import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.errors import AnalysisException
@@ -147,6 +148,38 @@ def test_served_select_starts_no_job(spark, store):
     assert n == 0 and [r.k for r in rows] == [7]
     rows, n = _jobs(spark, lambda: sql(store, "SELECT val FROM hr_comp WHERE a = 11 AND b = 'é'").collect())
     assert n == 0 and rows == []
+
+
+def test_fetch_finds_every_key_of_a_tablet_of_many_files(spark, tmp_path, driver_path):
+    """Three INSERTs append one file per tablet each; a point read of
+    any key finds its row, though pyarrow's filtered read of the
+    tablet gives an empty batch for each file without the key."""
+    wh = TableStore(spark, str(tmp_path / "wh"))
+    sql(wh, "CREATE TABLE t (k BIGINT, v STRING) TBLPROPERTIES ('kudu.key_columns'='k', 'kudu.num_buckets'='4')")
+    for i in range(3):
+        rows = ", ".join(f"({k}, 'v{k}')" for k in range(20 * i, 20 * i + 20))
+        sql(wh, f"INSERT INTO t VALUES {rows}")
+    meta = wh.table_meta("t")
+    per_tablet = {}
+    for rel in wh._head("t")[1]:
+        per_tablet.setdefault(wh._tablet_of(meta, rel), []).append(rel)
+    assert max(len(rels) for rels in per_tablet.values()) == 3
+    for k in range(60):
+        got = [tuple(r) for r in sql(wh, f"SELECT * FROM t WHERE k = {k}").collect()]
+        assert got == [(k, f"v{k}")], k
+
+
+@pytest.mark.parametrize("layout", [[2, 0, 2], [0, 0, 2], [0], []], ids=str)
+def test_arrow_frame_keeps_rows_after_an_empty_batch(spark, layout):
+    """A local frame holds every row of its Arrow table, whatever empty
+    batches the table holds, and a table of no rows gives an empty
+    frame of the given schema."""
+    schema = T.StructType([T.StructField("k", T.LongType())])
+    batches = [pa.record_batch([pa.array(range(n), pa.int64())], names=["k"]) for n in layout]
+    table = pa.Table.from_batches(batches, schema=pa.schema([("k", pa.int64())]))
+    df = tablets.arrow_frame(spark, table, schema)
+    assert df.schema == schema
+    assert sorted(r.k for r in df.collect()) == sorted(k for n in layout for k in range(n))
 
 
 FALL_THROUGH = [

@@ -3,6 +3,8 @@ ancient-history-mark parity, SURVEY.md §2.1)."""
 
 from __future__ import annotations
 
+import logging
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -171,7 +173,7 @@ def test_version_log_rejections(spark, store, tmp_path, sf_dir):
         store.scan_snapshot("t2", 99).count()
 
 
-def test_diff_reads_only_changed_tablets(spark, store, tmp_path):
+def test_diff_reads_only_changed_tablets(spark, store, tmp_path, spark_path):
     """The diff scan's input files must be exactly the manifests'
     symmetric difference — unchanged tablets are never opened."""
     meta = _mk(store, spark)
@@ -389,7 +391,7 @@ def test_changefeed_error_passthrough(spark, store):
         run_sql(store, "SELECT * FROM t CHANGES BETWEEN 2 AND 1")
 
 
-def test_changefeed_reads_only_changed_tablets(spark, store):
+def test_changefeed_reads_only_changed_tablets(spark, store, spark_path):
     """Each per-commit term must scan only the manifests' symmetric
     difference — tailing a feed never opens untouched buckets."""
     meta = _mk(store, spark)
@@ -406,7 +408,31 @@ def test_changefeed_reads_only_changed_tablets(spark, store):
     assert read == sym, (read, sym)
 
 
-def test_snapshot_and_changefeed_across_add_column(spark, store):
+@pytest.mark.parametrize("read", ["diff", "changefeed"])
+def test_driver_change_read_reads_only_changed_tablets(spark, store, caplog, read):
+    """The driver twin of the two ``*_reads_only_changed_tablets``
+    tests: a change read served on the driver reads exactly the
+    manifests' symmetric difference, as its DEBUG record names."""
+    meta = _mk(store, spark)
+    v1 = store.current_version("t")
+    store.upsert("t", spark.createDataFrame([(1, "one")], meta.schema))
+    v2 = store.current_version("t")
+    a = set(store._read_manifest("t", v1)["files"])
+    b = set(store._read_manifest("t", v2)["files"])
+    sym = (a | b) - (a & b)
+    assert a & b, "expected untouched buckets to share files"
+    caplog.set_level(logging.DEBUG, logger="hivekudu_handler_spark")
+    got = getattr(store, read)("t", v1, v2)
+    (rec,) = [r for r in caplog.records if r.getMessage().startswith("changes t ")]
+    assert rec.change_path == "driver"
+    assert set(rec.files) == sym, (rec.files, sym)
+    assert rec.bytes_read == sum((store._data_dir("t") / f).stat().st_size for f in sym)
+    assert {(r["id"], r["_change_type"]) for r in got.collect()} == {
+        (1, "update_before"), (1, "update_after")
+    }
+
+
+def test_snapshot_and_changefeed_across_add_column(spark, store, driver_path):
     """Version reads across an ALTER ADD COLUMN boundary use the
     CURRENT schema (Delta semantics): pre-evolution files surface the
     new column as NULL, in snapshots and in feed images alike."""
@@ -632,7 +658,7 @@ def _jobs_of(spark, group, action):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
-def test_changefeed_equals_per_commit_diffs(spark, store):
+def test_changefeed_equals_per_commit_diffs(spark, store, driver_path):
     meta = _mk(store, spark)
     store.upsert("t", spark.createDataFrame([(2, "X"), (9, "nine")], meta.schema))
     store.delete_where("t", "id <= 3")
@@ -677,7 +703,7 @@ def test_changefeed_bounds_plan_width(spark, store):
         assert steady < 5, f"steady-state re-read took {steady:.1f}s"
 
 
-def test_changefeed_plan_is_one_scan_and_one_window(spark, store):
+def test_changefeed_plan_is_one_scan_and_one_window(spark, store, spark_path):
     """Every range size — one commit, a few, and a deep range — plans
     one parquet scan under one window: no per-commit diff join and no
     union of per-commit or per-run reads."""
@@ -692,7 +718,7 @@ def test_changefeed_plan_is_one_scan_and_one_window(spark, store):
         assert plan.collectLeaves().size() == 1, (frm, to)
 
 
-def test_diff_plan_is_one_scan_and_one_window(spark, store):
+def test_diff_plan_is_one_scan_and_one_window(spark, store, spark_path):
     """diff is the changefeed's reader over two manifests: one parquet
     scan under one window and no join, in either direction and over
     non-adjacent versions."""
@@ -731,6 +757,41 @@ def test_changes_between_starts_at_most_two_jobs(spark, store):
         assert len(jobs) <= 2, (span, jobs)
 
 
+def test_keyed_rw_changes_between_starts_no_job_on_driver(spark, store):
+    """A CHANGES BETWEEN read shaped like the keyed_rw workload's (a
+    projection over the feed of the last two small commits) is served
+    on the driver: building and collecting it starts no Spark job."""
+    from hivekudu_handler_spark.sources.sql_ddl import sql as run_sql
+
+    run_sql(
+        store,
+        "CREATE TABLE kv (k BIGINT, cust BIGINT, status STRING, price DOUBLE, "
+        "prio STRING) TBLPROPERTIES ('kudu.key_columns'='k')",
+    )
+    store.insert(
+        "kv",
+        spark.range(300).selectExpr(
+            "id AS k", "id % 7 AS cust", "'O' AS status", "id * 1.5 AS price",
+            "'1-URGENT' AS prio",
+        ),
+    )
+    run_sql(store, "UPSERT INTO kv VALUES (1, 1, 'F', 2.5, '2-HIGH'), (400, 3, 'O', 9.0, '5-LOW')")
+    run_sql(store, "UPDATE kv SET price = price + 1 WHERE k BETWEEN 10 AND 20")
+    run_sql(store, "DELETE FROM kv WHERE k = 7")
+    to_v = store.current_version("kv")
+    stmt = (
+        "SELECT k, _change_type, _commit_version, price FROM kv "
+        f"CHANGES BETWEEN {to_v - 2} AND {to_v}"
+    )
+    rows = []
+    jobs = _jobs_of(
+        spark, "cdc-driver", lambda: rows.extend(run_sql(store, stmt).collect())
+    )
+    # 11 updated keys (a before and an after row each) and one delete
+    assert len(rows) == 2 * 11 + 1
+    assert jobs == []
+
+
 def _explain_jobs(spark, store, stmt):
     """The plan text of an EXPLAIN statement and the Spark jobs it started."""
     from hivekudu_handler_spark.sources.sql_ddl import sql as run_sql
@@ -742,7 +803,7 @@ def _explain_jobs(spark, store, stmt):
     return text[0], jobs
 
 
-def test_explain_changes_between_starts_no_job(spark, store):
+def test_explain_changes_between_starts_no_job(spark, store, spark_path):
     """EXPLAIN over a deep range builds the feed from the manifests and
     shows its plan without reading a file."""
     to_v = _deep_history(store, spark, 70)
@@ -753,7 +814,7 @@ def test_explain_changes_between_starts_no_job(spark, store):
     assert jobs == []
 
 
-def test_explain_behind_leading_comment_starts_no_job(spark, store):
+def test_explain_behind_leading_comment_starts_no_job(spark, store, spark_path):
     """A leading comment must not hide the EXPLAIN keyword: the plan
     comes back and no Spark job runs, for both comment forms."""
     to_v = _deep_history(store, spark, 70)
@@ -784,7 +845,7 @@ def test_sql_changes_between_deep_range(spark, store):
     }
 
 
-def test_sql_changefeed_small_range_skips_checkpoint(spark, store):
+def test_sql_changefeed_small_range_skips_checkpoint(spark, store, spark_path):
     """The common incremental tail is read directly: the rewrite binds
     the lazy feed, whose plan carries the update→(before, after)
     explode over the parquet tablet scan, not a checkpointed
@@ -820,7 +881,7 @@ def test_changefeed_surfaces_vacuumed_manifest_error(spark, store):
         store.changefeed("t", 0, to_v).count()
 
 
-def test_random_ranges_equal_per_commit_diffs(spark, store):
+def test_random_ranges_equal_per_commit_diffs(spark, store, driver_path):
     """Randomized differential over range endpoints: for random
     (from, to) — one commit, a few, the whole history — the feed's rows
     are the per-commit diffs' events.  Deterministic seed."""
