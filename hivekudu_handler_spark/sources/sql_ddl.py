@@ -129,10 +129,15 @@ a fetch task instead of a job.
 from __future__ import annotations
 
 import re
+from functools import reduce
+from typing import Callable, NamedTuple
 
+from pyspark.errors import ParseException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
+from hivekudu_handler_spark.sources import tablets
 from hivekudu_handler_spark.sources.sql_lex import (
     skip_blank,
     sql_char_states,
@@ -725,8 +730,7 @@ def sql(store: TableStore, text: str) -> DataFrame | None:
         served = _point_select(store, stmt)
         if served is not None:
             return served
-        store.register_views()
-        return store.spark.sql(_rewrite_version_clauses(store, stmt))
+        return _query(store, stmt)
     return execute(store, text)
 
 
@@ -1033,6 +1037,44 @@ def _rewrite_version_clauses(store: TableStore, stmt: str) -> str:
     )
 
 
+_CF_VIEW_RE = re.compile(r"\b__cf_\w+")
+
+
+def _query(store: TableStore, text: str) -> DataFrame:
+    """The query ``text`` planned by Spark SQL after the version-clause
+    rewrites: the one path of a SELECT, a CTAS or ``INSERT … SELECT``
+    query and a MERGE subquery source.  Every store table and view is
+    registered as a temp view first (:meth:`TableStore.register_views`,
+    a scan per table) unless :func:`_names_relation` shows the query
+    reads none.  The ``__cf_`` views a ``CHANGES BETWEEN`` rewrite bound
+    hold their change rows in the JVM; they are dropped once Spark has
+    analyzed the statement, and the returned frame still reads them."""
+    stmt = _rewrite_version_clauses(store, text)
+    if _names_relation(store.spark, stmt):
+        store.register_views()
+    try:
+        return store.spark.sql(stmt)
+    finally:
+        for view in set(_CF_VIEW_RE.findall(stmt)) - set(_CF_VIEW_RE.findall(text)):
+            store.spark.catalog.dropTempView(view)
+
+
+def _names_relation(spark, stmt: str) -> bool:
+    """Whether the query ``stmt`` may read a table or view by name, by
+    Spark's own parser (used to classify only, never for its ``.sql()``
+    text): its plan holds an ``UnresolvedRelation`` anywhere, subqueries
+    included, or a CTE or a command (EXPLAIN), whose inner plans the
+    pattern bits do not cover.  A text the parser rejects counts as
+    naming one."""
+    patterns = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    try:
+        plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(stmt)
+    except ParseException:
+        return True
+    names = ("UNRESOLVED_RELATION", "UNRESOLVED_WITH", "COMMAND")
+    return any(plan.containsPattern(getattr(patterns, p)()) for p in names)
+
+
 def _split_top(text: str) -> list[str]:
     """Split on comma tokens at paren depth 0 (:func:`sql_lex.tokens`);
     a blank last part is dropped."""
@@ -1103,6 +1145,12 @@ _MERGE_ALIAS_RE = re.compile(
     r"(?:\s*\((?P<cols>[A-Za-z_][\w\s,]*)\))?",
     re.IGNORECASE,
 )
+# each side of a MERGE's WHEN clauses, as the statement spells it
+_CLAUSE_NAMES = {
+    "matched": "MATCHED",
+    "not_target": "NOT MATCHED",
+    "not_source": "NOT MATCHED BY SOURCE",
+}
 _CLAUSE_HEAD_RE = re.compile(
     r"^(?P<not>NOT\s+)?MATCHED"
     r"(?:\s+BY\s+(?P<by>SOURCE|TARGET))?"
@@ -1222,6 +1270,70 @@ def _split_keyword(text: str, pattern: str) -> list[str]:
     return parts
 
 
+class MergeSpec(NamedTuple):
+    """A MERGE as :meth:`TableStore.upsert` takes it (built by
+    :func:`_merge`).  ``clauses(matched, unmatched, unmatched_tgt=None)``
+    is the one clause builder: over the frames it is handed it returns
+    the batches to upsert and the key frames to delete.  ``spark()``
+    builds those frames by the relational plan and returns the batch
+    and the delete keys as :meth:`TableStore.upsert` takes them; the
+    store calls it when the driver may not serve the statement.  The
+    driver needs the rest: ``pairs``, the (target key, source column)
+    pairs of the ON condition in key order, or None with ``reason``,
+    why the statement's shape keeps it on Spark; ``claims``, the
+    disjunction of the MATCHED clause conditions (None without a
+    MATCHED clause)."""
+
+    source: DataFrame
+    aliases: tuple[str, str]
+    pairs: list[tuple[str, str]] | None
+    reason: str | None
+    claims: Column | None
+    clauses: Callable[..., tuple[list[DataFrame], list[DataFrame]]]
+    spark: Callable[[], tuple[DataFrame, DataFrame | None]]
+
+
+def _driver_merge(
+    meta, on: str, aliases: tuple[str, str], src: DataFrame, sides: set[str]
+) -> tuple[list[tuple[str, str]] | None, str | None]:
+    """The (target key, source column) pairs, in key order, of a MERGE
+    whose shape lets the driver serve it, and None; else None and why
+    not: a NOT MATCHED BY SOURCE clause needs the whole target
+    (``"by source clause"``); the driver's frames name columns after
+    the aliases, so an alias may not equal the other or a column name,
+    and neither side may repeat a name (``"column names"``); a source
+    column must be of a type :data:`.tablets.FLAT` carries (``"source
+    type"``); ON must be a conjunction of ``t.k = s.c`` over the whole
+    key, each pair both integral or both STRING, so that Spark's ``=``
+    is Arrow's equality once the source value is cast to the key's type
+    (``"on clause"``).  Names match case-insensitively."""
+    if "not_source" in sides:
+        return None, "by source clause"
+    lower = [a.lower() for a in aliases]
+    names = [[f.name.lower() for f in meta.schema.fields], [c.lower() for c in src.columns]]
+    if lower[0] == lower[1] or any(len(set(n)) < len(n) or set(n) & set(lower) for n in names):
+        return None, "column names"
+    if not all(isinstance(f.dataType, tablets.FLAT) for f in src.schema.fields):
+        return None, "source type"
+    keys = {k.lower(): k for k in meta.key_columns}
+    types = {f.name: f.dataType for f in meta.schema.fields}
+    scols = {f.name.lower(): f for f in src.schema.fields}
+    pairs: dict[str, str] = {}
+    for part in _split_keyword(on, r"AND\b"):
+        m = re.fullmatch(r"\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*", part)
+        ends = dict((a.lower(), c.lower()) for a, c in (m.group(1, 2), m.group(3, 4))) if m else {}
+        k, s = keys.get(ends.get(lower[0])), scols.get(ends.get(lower[1]))
+        if k is None or s is None or k in pairs or not (
+            s.dataType == types[k] == T.StringType()
+            or isinstance(s.dataType, T.IntegralType) and isinstance(types[k], T.IntegralType)
+        ):
+            return None, "on clause"
+        pairs[k] = s.name
+    if len(pairs) < len(keys):
+        return None, "on clause"
+    return [(k, pairs[k]) for k in meta.key_columns], None
+
+
 def _merge(store: TableStore, stmt: str) -> None:
     """``MERGE INTO`` — the ANSI/Hive-ACID spelling of the reference's
     declared upsert goal (``doc/DesignDocument.md:9``; TODO
@@ -1243,26 +1355,35 @@ def _merge(store: TableStore, stmt: str) -> None:
     a cardinality violation and raises — multiple source matches where
     at most one satisfies the MATCHED clause conditions are valid, per
     ANSI/SQL Server (r16 advice).  The check rides INSIDE the single
-    upsert execution as a per-target-key windowed claim count guarding
-    the key columns of every matched clause frame (``F.raise_error``),
-    so no separate probe action runs and a violation aborts at the
-    upsert's first action (the tablet probe) — before any file is
-    staged or committed.  A NOT MATCHED INSERT whose key
+    upsert execution as a per-target-key claim count, ``__merge_claims``
+    on each matched row, guarding the key columns of every matched
+    clause frame (``F.raise_error``), so no separate probe action runs
+    and a violation aborts at the upsert's first action — before any
+    file is staged or committed.  A NOT MATCHED INSERT whose key
     expression evaluates to NULL raises the same way (ANSI constraint
     violation) instead of being silently dropped by batch validation
-    (r16 advice).  Execution is fully relational and single-commit: matched
-    rows come from one target⋈source join, each UPDATE clause projects
-    its SET expressions against the pre-update row (both aliases in
-    scope), DELETE clauses contribute key frames, NOT MATCHED clauses
-    project inserts from the source side of an anti-join — and the whole
-    outcome lands through ONE ``store.upsert(batch,
-    delete_keys=...)``, so only the buckets the merge touches are
-    rewritten and the version history gains ONE commit.  Key columns
-    may not be SET (primary key immutable, as in Kudu); an INSERT that
-    omits a key column is rejected.  The ON condition is normally key
-    equality; a non-key ON is accepted, but inserted rows whose key
-    collides with an existing (unmatched) row follow the store's PK
-    semantics and replace it.
+    (r16 advice).
+
+    Execution is single-commit: the whole outcome lands through ONE
+    ``store.upsert`` of a :class:`MergeSpec`, so only the tablets the
+    merge touches are rewritten and the version history gains ONE
+    commit.  Its one clause builder, ``clauses``, projects each UPDATE
+    clause's SET expressions against the pre-update row (both aliases
+    in scope), DELETE clauses contribute key frames, and NOT MATCHED
+    clauses project inserts from the unmatched source rows — over
+    whatever frames the store hands it.  A MERGE whose source optimizes
+    to a local relation (VALUES), whose ON is a whole-key equality
+    (:func:`_driver_merge`) and whose source keys' tablets fit the
+    driver budget runs on the driver: the store joins in pyarrow and
+    hands local relations, so no Spark job starts.  Every other MERGE
+    runs the relational plan (``on_spark``): one target⋈source join
+    with the claim count as a window, and the anti-joins, with the
+    source persisted for the write.  Key columns may not be SET
+    (primary key immutable, as in Kudu); an INSERT that omits a key
+    column is rejected.  The ON condition is normally key equality; a
+    non-key ON is accepted, but inserted rows whose key collides with an
+    existing (unmatched) row follow the store's PK semantics and replace
+    it.
 
     Parser limitation (heuristic, documented per r16 advice): clause
     splitting looks ahead for ``WHEN [NOT] MATCHED``, so a column
@@ -1279,8 +1400,7 @@ def _merge(store: TableStore, stmt: str) -> None:
     # source: (subquery) or a store table/view name
     if rest.startswith("("):
         inner, after = _match_paren_block(rest, 0)
-        store.register_views()
-        src = store.spark.sql(_rewrite_version_clauses(store, inner))
+        src = _query(store, inner)
         salias_required = True
         rest = rest[after:]
     else:
@@ -1288,11 +1408,7 @@ def _merge(store: TableStore, stmt: str) -> None:
         if not m:
             raise SqlDdlError(f"cannot parse MERGE source: {stmt!r}")
         src_name = m.group("name")
-        src = (
-            store.view_df(src_name)
-            if store.has_view(src_name)
-            else store.scan(src_name)
-        )
+        src = store.view_df(src_name) if store.has_view(src_name) else store.scan(src_name)
         salias_required = False
         salias = src_name
         rest = rest[m.end():]
@@ -1310,46 +1426,27 @@ def _merge(store: TableStore, stmt: str) -> None:
         raise SqlDdlError(f"cannot parse MERGE ON condition: {stmt!r}")
     # split only on WHEN followed by [NOT] MATCHED, so a CASE WHEN
     # inside the ON condition or a SET expression never breaks a clause
-    segments = _split_keyword(
-        rest[m.end():], r"\bWHEN\s+(?=(?:NOT\s+)?MATCHED\b)"
-    )
+    segments = _split_keyword(rest[m.end():], r"\bWHEN\s+(?=(?:NOT\s+)?MATCHED\b)")
     on_cond = segments[0].strip()
     if not on_cond or len(segments) < 2:
-        raise SqlDdlError(
-            "MERGE requires an ON condition and at least one WHEN clause"
-        )
+        raise SqlDdlError("MERGE requires an ON condition and at least one WHEN clause")
+    if _has_subquery(rest):  # ON or a clause reads tables by name, as in UPDATE
+        store.register_views()
 
     meta = store.table_meta(target)
     types = {f.name: f.dataType for f in meta.schema.fields}
     tcols = [f.name for f in meta.schema.fields]
-    tgt = store.scan(target)
-    cond = F.expr(on_cond)
-    # The matched join is consumed by each MATCHED clause frame inside
-    # the final upsert (the cardinality check rides inside those frames
-    # as a windowed claim count — no separate probe action).  It is
-    # deliberately NOT checkpointed/cached: localCheckpoint flattens the
-    # plan to a LogicalRDD, which drops the subquery aliases every
-    # clause expression (t.c / s.c) resolves against and leaves
-    # duplicate bare column names from the two sides; and a persist()
-    # here could never be unpersisted by the caller (the r7
-    # CacheManager-pinning advice).  Within the single upsert action all
-    # clause frames share one plan where Spark's ReusedExchange already
-    # folds the identical join shuffles.
-    matched = tgt.alias(talias).join(src.alias(salias), cond, "inner")
-    unmatched = src.alias(salias).join(tgt.alias(talias), cond, "left_anti")
+    keys = meta.key_columns
 
     def tcol(c: str) -> Column:
         return F.col(f"{talias}.{c}")
 
-    def _ident(col: Column) -> Column:
-        return col
-
-    def _parse_sets(action: str) -> dict[str, str]:
+    def _parse_sets(action: str) -> dict[str, Column]:
         sm = re.match(r"^UPDATE\s+SET\s+(?P<sets>.+)$", action,
                       re.IGNORECASE | re.DOTALL)
         if not sm:
             raise SqlDdlError(f"cannot parse MERGE UPDATE action: {action!r}")
-        assignments: dict[str, str] = {}
+        assignments: dict[str, Column] = {}
         for part in _split_top(sm.group("sets")):
             col, eq, expr_text = part.partition("=")
             col, expr_text = col.strip(), expr_text.strip()
@@ -1370,51 +1467,74 @@ def _merge(store: TableStore, stmt: str) -> None:
                     f"cannot parse SET assignment: {part.strip()!r}")
             if col not in types:
                 raise SqlDdlError(f"unknown column in SET: {col!r}")
-            if col in meta.key_columns:
+            if col in keys:
                 raise SqlDdlError(
                     f"key column {col!r} may not be updated (primary "
                     "key is immutable; DELETE + INSERT to change "
                     "identity)"
                 )
-            assignments[col] = expr_text
+            assignments[col] = F.expr(expr_text)
         return assignments
 
-    def _apply_sets(
-        rows: DataFrame, assignments: dict[str, str], key_guard
-    ) -> DataFrame:
-        # key columns are never SET targets, so the cardinality guard
-        # wraps their pass-through projection
-        return rows.select(
-            *[
-                F.expr(assignments[c]).cast(types[c]).alias(c)
-                if c in assignments
-                else (
-                    key_guard(tcol(c)) if c in meta.key_columns else tcol(c)
-                ).alias(c)
-                for c in tcols
-            ]
+    def _parse_insert(action: str) -> dict[str, Column]:
+        im = _INSERT_ACTION_RE.match(action)
+        if not im:
+            raise SqlDdlError(f"cannot parse MERGE INSERT action: {action!r}")
+        if im.group("vals") is None:  # INSERT * — source cols by name
+            return {c: F.col(c) for c in tcols}
+        cols = (
+            [c.strip() for c in im.group("cols").split(",")]
+            if im.group("cols")
+            else list(tcols)
         )
+        if len(set(c.lower() for c in cols)) != len(cols):
+            # a dict build would silently keep only the last
+            # value for a repeated column (r16 review)
+            raise SqlDdlError(
+                f"duplicate column in MERGE INSERT list: {cols}"
+            )
+        vals_text = im.group("vals").strip()
+        inner_vals, after = _match_paren_block(vals_text, 0)
+        if vals_text[after:].strip():
+            # the greedy VALUES capture would otherwise strip
+            # the outer parens of a multi-row list and surface
+            # an opaque Spark expression-parse error (r16 advice)
+            raise SqlDdlError(
+                "MERGE INSERT accepts a single VALUES row; got "
+                f"trailing content: {vals_text[after:].strip()!r}"
+            )
+        exprs = _split_top(inner_vals)
+        if len(cols) != len(exprs):
+            raise SqlDdlError(
+                "MERGE INSERT column/value count mismatch: "
+                f"{len(cols)} columns, {len(exprs)} values"
+            )
+        mapping = {c: F.expr(e.strip()) for c, e in zip(cols, exprs)}
+        for c in mapping:
+            if c not in types:
+                raise SqlDdlError(f"unknown column in INSERT: {c!r}")
+        missing_keys = [k for k in keys if k not in mapping]
+        if missing_keys:
+            raise SqlDdlError(
+                f"MERGE INSERT must provide key column(s) {missing_keys}"
+            )
+        # same rule as plain INSERT with a column list: the declared
+        # DEFAULT fills an omitted column (r17 review — the two INSERT
+        # spellings must agree)
+        defaults = meta.defaults or {}
+        omitted = {c: F.expr(defaults.get(c, "NULL")) for c in tcols if c not in mapping}
+        return {**mapping, **omitted}
 
-    # NOT MATCHED BY SOURCE (ANSI 2023): target rows with no source
-    # match — built lazily since most statements never use it
-    unmatched_tgt = tgt.alias(talias).join(src.alias(salias), cond, "left_anti")
-
-    batches: list[DataFrame] = []
-    delete_frames: list[DataFrame] = []
     # first-true-claims chains, tracked separately per side; a NULL
     # clause condition means "not satisfied" (the delete_where coalesce
     # idiom), never "poison every later clause"
-    prior = {
-        "matched": F.lit(False),
-        "not_target": F.lit(False),
-        "not_source": F.lit(False),
-    }
+    prior = dict.fromkeys(_CLAUSE_NAMES, F.lit(False))
     # (len(segments) >= 2 was enforced above, so at least one WHEN
     # clause always parses — no separate saw_any flag needed)
-    # pass 1 parses every clause (building the first-true-claims chains
-    # and, crucially, the FULL matched-condition disjunction the
-    # cardinality guard needs); pass 2 builds the frames
-    specs: list[tuple[str, Column, str, str]] = []
+    # every clause is parsed here, so a malformed statement raises
+    # before the store runs anything, and the chains end as the FULL
+    # matched-condition disjunction the cardinality guard needs
+    specs: list[tuple[str, Column, str, dict[str, Column] | None]] = []
     for seg in segments[1:]:
         cm = _CLAUSE_HEAD_RE.match(seg.strip())
         if not cm:
@@ -1440,51 +1560,41 @@ def _merge(store: TableStore, stmt: str) -> None:
                     f"empty AND condition in MERGE WHEN clause: {seg.strip()!r}")
         else:  # rest starts with THEN (the head regex guarantees it)
             cond_text, action = None, rest[4:].strip()
-        this = (
-            F.coalesce(F.expr(cond_text), F.lit(False))
-            if cond_text
-            else F.lit(True)
-        )
+        this = F.coalesce(F.expr(cond_text), F.lit(False)) if cond_text else F.lit(True)
         take = this & ~prior[side]
         prior[side] = prior[side] | this
         verb = action.split(None, 1)[0].upper() if action else ""
-        specs.append((side, take, verb, action))
-    saw_matched = any(s[0] == "matched" for s in specs)
+        if side != "not_target" and verb in ("DELETE", "UPDATE"):
+            payload = _parse_sets(action) if verb == "UPDATE" else None
+        elif side == "not_target" and verb == "INSERT":
+            payload = _parse_insert(action)
+        else:
+            raise SqlDdlError(
+                f"unsupported MERGE action for WHEN {_CLAUSE_NAMES[side]}: {action!r}"
+            )
+        specs.append((side, take, verb, payload))
 
     # ANSI cardinality rule: a target row may be CLAIMED (updated or
     # deleted) by at most one source row — enforced only when a MATCHED
     # clause exists (an insert-only MERGE leaves matched rows untouched,
     # so duplicate source matches are then harmless; Delta draws the
-    # same line), and condition-aware: prior["matched"] is the
-    # disjunction of every MATCHED clause condition, so extra source
-    # matches that no clause claims are valid (ANSI: only an actual
-    # double update/delete is an error — r16 advice).  No separate probe
-    # action: the claim count is a window over the matched join
-    # partitioned by target key (an equi-key join output is already
-    # hash-partitioned on the key, so typically sort-only), and a
-    # raise_error guard on the key columns of every matched clause frame
-    # fires inside the ONE upsert execution — at its first action, the
-    # tablet probe, before any file is staged or committed.
-    if saw_matched:
-        if any(
-            c.lower() == "__merge_claims" for c in (*tcols, *src.columns)
-        ):
-            # the guard column must resolve unambiguously over the join
-            raise SqlDdlError(
-                "column name '__merge_claims' is reserved by MERGE"
-            )
-        n_claims = F.sum(
-            F.when(prior["matched"], F.lit(1)).otherwise(F.lit(0))
-        ).over(Window.partitionBy(*[tcol(k) for k in meta.key_columns]))
-        matched = matched.withColumn("__merge_claims", n_claims)
+    # same line), and condition-aware: ``claims`` is the disjunction of
+    # every MATCHED clause condition, so extra source matches that no
+    # clause claims are valid (ANSI: only an actual double update/delete
+    # is an error — r16 advice).  The store counts the claims of each
+    # target key as ``__merge_claims`` on the matched rows.
+    claims = prior["matched"] if any(s[0] == "matched" for s in specs) else None
+    if claims is not None and any(
+        c.lower() == "__merge_claims" for c in (*tcols, *src.columns)
+    ):
+        # the guard column must resolve unambiguously over the join
+        raise SqlDdlError("column name '__merge_claims' is reserved by MERGE")
 
-        def card_guard(col: Column) -> Column:
-            return F.when(
-                F.col("__merge_claims") > 1,
-                F.raise_error(F.lit(_MERGE_CARDINALITY_MSG)),
-            ).otherwise(col)
-    else:
-        card_guard = _ident
+    def card_guard(col: Column) -> Column:
+        return F.when(
+            F.col("__merge_claims") > 1,
+            F.raise_error(F.lit(_MERGE_CARDINALITY_MSG)),
+        ).otherwise(col)
 
     def null_key_guard(col: Column) -> Column:
         # ANSI: NULL in an inserted key column is a constraint
@@ -1494,128 +1604,66 @@ def _merge(store: TableStore, stmt: str) -> None:
             col.isNull(), F.raise_error(F.lit(_NULL_KEY_MSG))
         ).otherwise(col)
 
-    for side, take, verb, action in specs:
-        if side in ("matched", "not_source") and verb == "DELETE":
-            rows = matched if side == "matched" else unmatched_tgt
-            guard = card_guard if side == "matched" else _ident
-            delete_frames.append(
-                rows.filter(take).select(
-                    *[guard(tcol(k)).alias(k) for k in meta.key_columns]
-                )
-            )
-        elif side in ("matched", "not_source") and verb == "UPDATE":
-            # BY SOURCE SET expressions see only the target alias (no
-            # source row exists); Spark's analyzer rejects a stray
-            # source reference naturally since the anti-join dropped it
-            rows = matched if side == "matched" else unmatched_tgt
-            guard = card_guard if side == "matched" else _ident
-            batches.append(
-                _apply_sets(rows.filter(take), _parse_sets(action), guard)
-            )
-        elif side == "not_target" and verb == "INSERT":
-            im = _INSERT_ACTION_RE.match(action)
-            if not im:
-                raise SqlDdlError(f"cannot parse MERGE INSERT action: {action!r}")
-            rows = unmatched.filter(take)
-            if im.group("vals") is None:  # INSERT * — source cols by name
-                projected = rows.select(
-                    *[
-                        (
-                            null_key_guard(F.col(c).cast(types[c]))
-                            if c in meta.key_columns
-                            else F.col(c).cast(types[c])
-                        ).alias(c)
-                        for c in tcols
-                    ]
-                )
-            else:
-                cols = (
-                    [c.strip() for c in im.group("cols").split(",")]
-                    if im.group("cols")
-                    else list(tcols)
-                )
-                if len(set(c.lower() for c in cols)) != len(cols):
-                    # a dict build would silently keep only the last
-                    # value for a repeated column (r16 review)
-                    raise SqlDdlError(
-                        f"duplicate column in MERGE INSERT list: {cols}"
-                    )
-                vals_text = im.group("vals").strip()
-                inner_vals, after = _match_paren_block(vals_text, 0)
-                if vals_text[after:].strip():
-                    # the greedy VALUES capture would otherwise strip
-                    # the outer parens of a multi-row list and surface
-                    # an opaque Spark expression-parse error (r16 advice)
-                    raise SqlDdlError(
-                        "MERGE INSERT accepts a single VALUES row; got "
-                        f"trailing content: {vals_text[after:].strip()!r}"
-                    )
-                exprs = _split_top(inner_vals)
-                if len(cols) != len(exprs):
-                    raise SqlDdlError(
-                        "MERGE INSERT column/value count mismatch: "
-                        f"{len(cols)} columns, {len(exprs)} values"
-                    )
-                mapping = {c: e.strip() for c, e in zip(cols, exprs)}
-                for c in mapping:
-                    if c not in types:
-                        raise SqlDdlError(f"unknown column in INSERT: {c!r}")
-                missing_keys = [k for k in meta.key_columns if k not in mapping]
-                if missing_keys:
-                    raise SqlDdlError(
-                        f"MERGE INSERT must provide key column(s) {missing_keys}"
-                    )
-                defaults = meta.defaults or {}
+    def clauses(matched, unmatched, unmatched_tgt=None):
+        # each clause's frame over the rows of its side (BY SOURCE
+        # clauses see only the target alias: the anti-join dropped the
+        # source); key columns are never SET targets, so the
+        # cardinality guard wraps their pass-through projection
+        sides = dict(zip(_CLAUSE_NAMES, (matched, unmatched, unmatched_tgt)))
+        batches, deletes = [], []
+        for side, take, verb, payload in specs:
+            rows = sides[side].filter(take)
+            guard = card_guard if side == "matched" else (lambda c: c)
+            if verb == "DELETE":
+                deletes.append(rows.select(*[guard(tcol(k)).alias(k) for k in keys]))
+                continue
+            if verb == "INSERT":
+                cols = {c: payload[c].cast(types[c]) for c in tcols}
+                cols.update({k: null_key_guard(cols[k]) for k in keys})
+            else:  # a column no SET names passes through by name
+                cols = {c: f"{talias}.{c}" for c in tcols}
+                cols.update({c: e.cast(types[c]) for c, e in payload.items()})
+                cols.update({k: guard(tcol(k)) for k in keys})
+            cols = [e if isinstance(e, str) else e.alias(c) for c, e in cols.items()]
+            batches.append(rows.select(*cols))
+        return batches or [local_frame(store.spark, [], meta.schema)], deletes
 
-                def omitted(c: str):
-                    # same rule as plain INSERT with a column list: the
-                    # declared DEFAULT fills an omitted column (r17
-                    # review — the two INSERT spellings must agree)
-                    if c in defaults:
-                        return F.expr(defaults[c]).cast(types[c])
-                    return F.lit(None).cast(types[c])
-
-                projected = rows.select(
-                    *[
-                        (
-                            null_key_guard(F.expr(mapping[c]).cast(types[c]))
-                            if c in meta.key_columns
-                            else F.expr(mapping[c]).cast(types[c])
-                        ).alias(c)
-                        if c in mapping
-                        else omitted(c).alias(c)
-                        for c in tcols
-                    ]
-                )
-            batches.append(projected)
-        else:
-            clause = {
-                "matched": "MATCHED",
-                "not_target": "NOT MATCHED",
-                "not_source": "NOT MATCHED BY SOURCE",
-            }[side]
-            raise SqlDdlError(
-                f"unsupported MERGE action for WHEN {clause}: {action!r}"
+    def on_spark() -> tuple[DataFrame, DataFrame | None]:
+        # The relational plan.  The SOURCE is persisted for the upsert's
+        # duration: every clause frame (batches AND delete-key frames)
+        # re-embeds it, so an unpersisted source — often an expensive
+        # subquery (a CHANGES feed, a staging join) — executed once per
+        # upsert action; measured 1.1 s of pure source re-execution on
+        # the sql_merge_cdc_apply merge leg at sf0.1 (r21).
+        # MEMORY_AND_DISK (the default) spills rather than OOMs if a
+        # production source is large; released when _merge returns.  The
+        # matched join is deliberately NOT checkpointed/cached:
+        # localCheckpoint flattens the plan to a LogicalRDD, which drops
+        # the subquery aliases every clause expression (t.c / s.c)
+        # resolves against; within the single upsert action all clause
+        # frames share one plan where Spark's ReusedExchange already
+        # folds the identical join shuffles.
+        src.persist()
+        tgt, s, cond = store.scan(target).alias(talias), src.alias(salias), F.expr(on_cond)
+        matched = tgt.join(s, cond, "inner")
+        if claims is not None:
+            # a window partitioned by target key: an equi-key join
+            # output is already hash-partitioned on the key, so
+            # typically sort-only
+            n_claims = F.sum(F.when(claims, F.lit(1)).otherwise(F.lit(0))).over(
+                Window.partitionBy(*[tcol(k) for k in keys])
             )
-    batch: DataFrame | None = None
-    for b in batches:
-        batch = b if batch is None else batch.unionByName(b)
-    if batch is None:
-        batch = local_frame(store.spark, [], meta.schema)
-    dk: DataFrame | None = None
-    for d in delete_frames:
-        dk = d if dk is None else dk.unionByName(d)
-    # persist the SOURCE for the upsert's duration: every clause frame
-    # (update/insert batches AND delete-key frames) re-embeds the
-    # source query, so an unpersisted source — often an expensive
-    # subquery (a CHANGES feed, a staging join) — executed once per
-    # upsert action; measured 1.1 s of pure source re-execution on the
-    # sql_merge_cdc_apply merge leg at sf0.1 (r21).  MEMORY_AND_DISK
-    # (the default) spills rather than OOMs if a production source is
-    # large; released in the finally.
-    src = src.persist()
+            matched = matched.withColumn("__merge_claims", n_claims)
+        batches, deletes = clauses(
+            matched, s.join(tgt, cond, "left_anti"), tgt.join(s, cond, "left_anti")
+        )
+        union = DataFrame.unionByName
+        return reduce(union, batches), reduce(union, deletes) if deletes else None
+
+    pairs, reason = _driver_merge(meta, on_cond, (talias, salias), src, {s[0] for s in specs})
+    spec = MergeSpec(src, (talias, salias), pairs, reason, claims, clauses, on_spark)
     try:
-        _run_guarded(lambda: store.upsert(target, batch, delete_keys=dk))
+        _run_guarded(lambda: store.upsert(target, spec))
     finally:
         src.unpersist()
 
@@ -1783,8 +1831,7 @@ def _ctas(store: TableStore, name: str, clauses: str, select: str) -> None:
     columns and layout come from TBLPROPERTIES, exactly like a plain
     CREATE."""
     kwargs = _create_kwargs(clauses, "CREATE TABLE AS SELECT")
-    store.register_views()
-    df = store.spark.sql(_rewrite_version_clauses(store, select))
+    df = _query(store, select)
     store.create_table(name, df.schema, **kwargs)
     store.insert(name, df)
 
@@ -1996,8 +2043,7 @@ def _insert_select(store: TableStore, stmt: str) -> None:
     # merge semantics vs replace semantics)
     verb = _overwrite_verb(m)
     meta = store.table_meta(name)
-    store.register_views()
-    df = store.spark.sql(_rewrite_version_clauses(store, m.group("query")))
+    df = _query(store, m.group("query"))
     _aligned_write(
         store, name, meta, df, m.group("cols"), verb,
         driver_literals=False,

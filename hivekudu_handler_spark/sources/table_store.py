@@ -103,8 +103,10 @@ import time
 import uuid
 from collections import Counter
 from dataclasses import dataclass, fields
+from functools import reduce
 from pathlib import Path
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -1382,16 +1384,8 @@ class TableStore:
         columns — deterministic boolean over partition cols, so Catalyst
         folds it into directory pruning for any layout depth."""
         cols = [F.col(c) for c in self._part_cols(meta)]
-        conds = []
-        for tup in ids:
-            c = F.lit(True)
-            for col, v in zip(cols, tup):
-                c = c & (col == F.lit(v))
-            conds.append(c)
-        out = F.lit(False)
-        for c in conds:
-            out = out | c
-        return out
+        conds = [reduce(Column.__and__, [c == v for c, v in zip(cols, t)]) for t in ids]
+        return reduce(Column.__or__, conds, F.lit(False))
 
     def _read_schema(self, meta: TableMeta) -> T.StructType:
         """PHYSICAL read schema: parquet footers store the stable physical
@@ -1409,14 +1403,11 @@ class TableStore:
         )
 
     def _to_logical(self, df: DataFrame, meta: TableMeta) -> DataFrame:
-        for lg, ph in (meta.physical or {}).items():
-            df = df.withColumnRenamed(ph, lg)
-        return df
+        renamed = {ph: lg for lg, ph in (meta.physical or {}).items()}
+        return df.withColumnsRenamed(renamed) if renamed else df
 
     def _to_physical(self, df: DataFrame, meta: TableMeta) -> DataFrame:
-        for lg, ph in (meta.physical or {}).items():
-            df = df.withColumnRenamed(lg, ph)
-        return df
+        return df.withColumnsRenamed(meta.physical) if meta.physical else df
 
     def _read_files(self, meta: TableMeta, rels: list[str]) -> DataFrame:
         """The one read path: exactly the data-relative files ``rels``
@@ -2075,9 +2066,8 @@ class TableStore:
         tablet = tablets.tablet_py(
             meta, [vals[k] for k in meta.key_columns], self.num_buckets
         )
-        rels = [r for r in self._head(meta.name)[1] if self._tablet_of(meta, r) == tablet]
         data = self._data_dir(meta.name)
-        nbytes = sum((data / r).stat().st_size for r in rels)
+        rels, nbytes = tablets.tablet_files(meta, data, self._head(meta.name)[1], {tablet})
         reason = tablets.driver_reason(meta, nbytes, budget)
         path = "spark" if reason else "driver"
         _log.debug(
@@ -2377,16 +2367,20 @@ class TableStore:
         errors (MERGE INSERT) guard key expressions with raise_error
         UPSTREAM so a NULL key never reaches this filter (r16 advice)."""
         expected = [f.name for f in meta.schema.fields]
-        got = df.columns
+        got = {f.name: f.dataType for f in df.schema.fields}
         if set(got) != set(expected):
             raise TableStoreError(
-                f"schema mismatch writing {meta.name!r}: expected {expected}, got {got}"
+                f"schema mismatch writing {meta.name!r}: expected {expected}, got {list(got)}"
             )
+        # a column of its type already is selected by name: each Column
+        # built costs a PySpark call-site capture (tablets._collect)
         df = df.select(
-            *[F.col(f.name).cast(f.dataType) for f in meta.schema.fields]
+            *[
+                f.name if got[f.name] == f.dataType else F.col(f.name).cast(f.dataType)
+                for f in meta.schema.fields
+            ]
         )
-        for k in meta.key_columns:
-            df = df.filter(F.col(k).isNotNull())
+        df = df.filter(" AND ".join(f"{_quoted(k)} IS NOT NULL" for k in meta.key_columns))
         # Kudu column-schema parity: a declared NOT NULL non-key column
         # rejects NULL loudly at write time.  The guard is an expression
         # riding the write's own action (no extra pass over the batch)
@@ -2549,7 +2543,7 @@ class TableStore:
         meta: TableMeta,
         head: tuple[int, list[str]],
         op: str,
-        batch: DataFrame,
+        batch: DataFrame | pa.Table,
         keep: tuple,
         rest: DataFrame | None = None,
     ) -> None:
@@ -2572,7 +2566,9 @@ class TableStore:
         (:func:`.tablets.merge_on_driver`) and written one file per
         tablet (:func:`.tablets.write_tablets`) through the same staging
         directory and commit as a Spark write.  A local batch (VALUES)
-        thus commits with no Spark job at all.
+        thus commits with no Spark job at all.  A driver MERGE
+        (:meth:`upsert`) passes its rows already collected, as the
+        pyarrow table :func:`.tablets.collect_batch` returns.
 
         **Through Spark** otherwise: the staged write of
         :meth:`_write_partitioned`, merging in its tablet shuffle.  When
@@ -2589,17 +2585,15 @@ class TableStore:
         pcs = self._part_cols(meta)
         budget = self._driver_budget()
         reason = tablets.driver_reason(meta, 0, budget)
-        local = reason is None and tablets.is_local(batch)
+        rows = None if isinstance(batch, DataFrame) else batch  # collected by a MERGE
+        local = reason is None and rows is None and tablets.is_local(batch)
         held = batch
         cached = None
         try:
-            rows = ids = None
-            if reason is None:
+            if reason is None and rows is None:
                 rows = tablets.collect_batch(meta, batch, budget, local, self._part_exprs(meta))
-                if rows is None:
-                    reason = "batch over budget"
-                else:
-                    ids = sorted(t for t, _ in tablets.tablet_counts(meta, rows))
+                reason = None if rows is not None else "batch over budget"
+            ids = None if rows is None else sorted(t for t, _ in tablets.tablet_counts(meta, rows))
             if ids is None and (files or op != "insert"):
                 # persist: the probe and the staged write both read the
                 # batch, and unpersisted the caller's upstream plan would
@@ -2610,10 +2604,8 @@ class TableStore:
                 if not local and rest is None:
                     held = cached = batch.persist()
                 ids = self._affected_buckets(meta, held)
-            touched = set(ids or ())
-            rels = [f for f in files if self._tablet_of(meta, f) in touched]
             data = self._data_dir(meta.name)
-            bytes_read = sum((data / f).stat().st_size for f in rels)
+            rels, bytes_read = tablets.tablet_files(meta, data, files, set(ids or ()))
             if reason is None:
                 reason = tablets.driver_reason(meta, bytes_read, budget)
                 if reason:
@@ -2711,13 +2703,73 @@ class TableStore:
         existing 2 — on the driver with pyarrow when the write is small,
         else in one staged Spark write after one tablet probe
         (:meth:`_keyed_write`).  Guards (NOT NULL, MERGE cardinality)
-        fire at the batch's first action, before any file is staged."""
+        fire at the batch's first action, before any file is staged.
+
+        SQL MERGE passes a ``sql_ddl.MergeSpec`` as ``df``.  A MERGE the
+        driver may serve (:meth:`_merge_on_driver`) is joined in pyarrow,
+        and its clause frames, built over local relations, are collected
+        with no Spark job into the batch and delete keys; any other takes
+        its batch and delete keys from the spec's relational plan."""
         meta = self._writable_meta(name)
         head = self._head(meta.name)
+        if not isinstance(df, DataFrame):  # a MERGE (sql_ddl.MergeSpec)
+            rows = self._merge_on_driver(meta, head, df)
+            if rows is not None:
+                return self._keyed_write(meta, head, "upsert", rows, (0, 2))
+            df, delete_keys = df.spark()
         batch = self._validate_batch(meta, df).withColumn(_SRC, F.lit(0))
         if delete_keys is not None:
             batch = batch.unionByName(self._as_keys(meta, delete_keys, 1))
         self._keyed_write(meta, head, "upsert", batch, (0, 2))
+
+    def _merge_on_driver(self, meta: TableMeta, head: tuple, spec) -> pa.Table | None:
+        """The write-merge rows of the MERGE ``spec`` built on the driver
+        (no Spark job), or None when it must run on Spark.  The driver
+        serves it when its shape allows (``spec.reason`` is None), the
+        gate (:func:`.tablets.driver_reason`) passes for the table, its
+        source optimizes to a local relation and fits the budget, and the
+        gate passes for the bytes of the tablets the source keys land in.
+        The source is collected, those tablets are read and joined with
+        it in pyarrow (:func:`.tablets.merge_join`), and the clause frames
+        ``spec.clauses`` builds over the local relations of
+        :func:`.tablets.merge_frames` are collected one by one with their
+        guards, ranks and tablets (:func:`.tablets.collect_batch`): no
+        Union, whose local relations would cost a job.  Logs one DEBUG
+        record: the path, why not the driver, the source rows and the
+        matched rows."""
+        budget = self._driver_budget()
+        reason = spec.reason or tablets.driver_reason(meta, 0, budget)
+        if reason is None and not tablets.is_local(spec.source):
+            reason = "source not local"
+        src = joined = rows = None
+        if reason is None:
+            src = tablets.collect_source(meta, spec.source, spec.pairs, budget, self._part_exprs)
+            reason = "source over budget" if src is None else None
+        data = self._data_dir(meta.name)
+        if reason is None:
+            touched = tablets.source_tablets(meta, src)
+            rels, nbytes = tablets.tablet_files(meta, data, head[1], touched)
+            reason = tablets.driver_reason(meta, nbytes, budget)
+        if reason is None:
+            joined, unmatched = tablets.merge_join(meta, data, rels, src)
+            frames = tablets.merge_frames(self.spark, meta, spec, joined, unmatched)
+            batches, deletes = spec.clauses(*frames)
+            frames = [self._validate_batch(meta, b).withColumn(_SRC, F.lit(0)) for b in batches]
+            frames += [self._as_keys(meta, d, 1) for d in deletes]
+            exprs = self._part_exprs(meta)
+            parts = [tablets.collect_batch(meta, f, budget, True, exprs) for f in frames]
+            rows = None if any(p is None for p in parts) else pa.concat_tables(parts)
+            reason = "batch over budget" if rows is None else None
+        path = "spark" if reason else "driver"
+        _log.debug(
+            "merge %s on the %s%s", meta.name, path, f" ({reason})" if reason else "",
+            extra={
+                "table": meta.name, "merge_path": path, "reason": reason,
+                "source_rows": None if src is None else src.num_rows,
+                "matched": None if joined is None else joined.num_rows,
+            },
+        )
+        return rows
 
     def truncate(self, name: str) -> int:
         """TRUNCATE TABLE: commit ONE new version listing no files — even
@@ -2837,6 +2889,11 @@ class TableStore:
         batch = self._validate_batch(meta, df).withColumn(_SRC, F.lit(0))
         added, rows = self._stage(meta, batch, (0,))
         self._commit_version(meta, base, "insert_overwrite", added, rows)
+
+
+def _quoted(name: str) -> str:
+    """``name`` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def signed(c: str | Column) -> Column:

@@ -17,6 +17,14 @@ store's staging directory and commit.  A change read
 SQL ``CHANGES BETWEEN``) is Kudu's diff scan served to its client: the
 files that changed across the range are read and turned into change
 events here (:func:`change_events`, the twin of the Spark path's window).
+A MERGE from a local source (VALUES) whose ON is a whole-key equality
+(:meth:`TableStore.upsert`) is the upsert the reference's session
+applies with no batch job: the source is collected
+(:func:`collect_source`), the tablets its keys land in are read and
+joined with it here (:func:`merge_join`), and the clause conditions and
+SET expressions are Projects over local relations
+(:func:`merge_frames`), which fold and start no job; the winners then
+take the keyed write's driver path.
 
 **The gate** (:func:`driver_reason`) returns None when the driver may
 serve a table and a byte count, else why not:
@@ -37,12 +45,15 @@ serve a table and a byte count, else why not:
   request reads exceed the budget.
 
 The first four are the table's shape: a fetch of such a table raises
-:class:`NotFetchable`, and a write or a change read takes the Spark
-path.  The last two are size: a fetch then reads the same rows through
-Spark (:meth:`TableStore.lookup`), a write stages through Spark and a
-change read plans its one scan and one window.  A write
-also leaves the driver when its batch holds more rows than the budget
-allows (``"batch over budget"``, :func:`collect_batch`).
+:class:`NotFetchable`, and a write, a change read or a MERGE takes the
+Spark path.  The last two are size: a fetch then reads the same rows
+through Spark (:meth:`TableStore.lookup`), a write stages through Spark,
+a change read plans its one scan and one window, and a MERGE plans its
+joins.  A write also leaves the driver when its batch holds more rows
+than the budget allows (``"batch over budget"``, :func:`collect_batch`),
+and a MERGE when its source does (``"source over budget"``) or its
+statement does not fit the driver's join (``sql_ddl._driver_merge``) or
+its source is not local (``"source not local"``).
 
 **The budget** (:meth:`TableStore._driver_budget`) is Spark's own bound
 on what may be pulled to the driver,
@@ -359,20 +370,39 @@ def collect_batch(
     batch's first action it fires the guards (NOT NULL, NULL key, MERGE
     cardinality) of every row it reads — all of them when the batch
     fits."""
-    n = min(budget // (8 + batch._jdf.schema().defaultSize()), (1 << 31) - 2)
-    fields = meta.schema.fields
-    pcs = part_cols(meta)
-    schema = [T.StructField(f.name, f.dataType) for f in fields]
-    schema += [T.StructField(c, T.IntegerType()) for c in [SRC, *pcs]]
-    schema = to_arrow_schema(T.StructType(schema))
+    ranks = [T.StructField(c, T.IntegerType()) for c in [SRC, *part_cols(meta)]]
+    fields = [*meta.schema.fields, *ranks]
+    cols = [*[f.name for f in meta.schema.fields], SRC, *tablet_exprs]
+    return _collect(batch, fields, cols, budget, local)
+
+
+def _collect(
+    frame: DataFrame,
+    fields: list[T.StructField],
+    cols: list[str | Column],
+    budget: int,
+    local: bool,
+) -> pa.Table | None:
+    """The columns ``cols`` of ``frame``, of the types of ``fields`` and
+    named after them (all nullable), as a pyarrow table, if ``frame``
+    holds at most the rows ``budget`` bytes allow (see
+    :func:`collect_batch`); else None.  A name in ``cols`` is a column
+    of ``frame`` already named after its field: selecting it by name
+    builds no Column, each of which PySpark charges a call-site capture
+    of about 1 ms (4-core host)."""
+    n = min(budget // (8 + frame._jdf.schema().defaultSize()), (1 << 31) - 2)
+    schema = to_arrow_schema(T.StructType([T.StructField(f.name, f.dataType) for f in fields]))
     cols = [
-        F.unix_micros(f.name) if isinstance(f.dataType, T.TimestampType) else F.col(f.name)
-        for f in fields
+        F.unix_micros(c).alias(f.name) if isinstance(f.dataType, T.TimestampType)
+        else c if isinstance(c, str) else c.alias(f.name)
+        for c, f in zip(cols, fields)
     ]
-    cols = [c.alias(name) for c, name in zip([*cols, F.col(SRC), *tablet_exprs], schema.names)]
-    frame = batch.select(*cols).limit(n + 1)
+    frame = frame.select(*cols).limit(n + 1)
     wire = pa.schema(
-        [f.with_type(pa.int64()) if pa.types.is_timestamp(f.type) else f for f in schema]
+        [
+            a.with_type(pa.int64()) if isinstance(f.dataType, T.TimestampType) else a
+            for a, f in zip(schema, fields)
+        ]
     )
     table = _arrow_rows(frame.collect(), wire) if local else frame.toArrow()
     if table.num_rows > n:
@@ -420,6 +450,134 @@ def merge_on_driver(
         pos.group_by(keys, use_threads=False).aggregate([("__pos", "min")])["__pos_min"]
     )
     return won.filter(pc.is_in(won[SRC], pa.array(keep, pa.int32())))
+
+
+# ------------------------------------------------------------------- MERGE
+# the source column types a driver MERGE carries: each has an exact
+# round trip through collected rows
+FLAT = (
+    T.NumericType, T.StringType, T.BinaryType, T.BooleanType, T.DateType,
+    T.TimestampType, T.TimestampNTZType,
+)
+
+
+def collect_source(
+    meta: TableMeta, source: DataFrame, pairs: list[tuple[str, str]], budget: int, tablet_exprs
+) -> pa.Table | None:
+    """A MERGE's local ``source`` as a pyarrow table (no Spark job), if
+    it holds at most the rows ``budget`` allows (:func:`collect_batch`);
+    else None.  Its columns are ``s0``, ``s1``, … (the source's, by
+    position); then ``k0``, ``k1``, …, the source column of each
+    (target key, source column) pair of ``pairs`` (key order) as the
+    key's type, NULL where the value does not fit it (Spark's ``=``
+    widens the narrower side, so such a value matches no key); then the
+    tablet those keys land in, by the write path's own expressions
+    (``tablet_exprs(meta, keys)``, :meth:`TableStore._part_exprs`)."""
+    types = {f.name: f.dataType for f in meta.schema.fields}
+    names = [f"s{i}" for i in range(len(source.columns))]
+    keys = [F.col(names[source.columns.index(c)]).try_cast(types[k]) for k, c in pairs]
+    fields = [T.StructField(n, f.dataType) for n, f in zip(names, source.schema.fields)]
+    fields += [T.StructField(f"k{j}", types[k]) for j, (k, _) in enumerate(pairs)]
+    fields += [T.StructField(c, T.IntegerType()) for c in part_cols(meta)]
+    cols = [*names, *keys, *tablet_exprs(meta, keys)]
+    return _collect(source.toDF(*names), fields, cols, budget, True)
+
+
+def tablet_files(
+    meta: TableMeta, data: Path, files: list[str], touched: set[tuple]
+) -> tuple[list[str], int]:
+    """The data-relative ``files`` (under ``data``) of the tablets
+    ``touched``, and their bytes on disk: what a request reading those
+    tablets asks :func:`driver_reason` with."""
+    rels = [f for f in files if tablet_of(meta, f) in touched]
+    return rels, sum((data / f).stat().st_size for f in rels)
+
+
+def source_tablets(meta: TableMeta, source: pa.Table) -> set[tuple]:
+    """The tablets the keys of a collected MERGE ``source``
+    (:func:`collect_source`) land in; a row with a NULL key matches no
+    row and reads no tablet."""
+    valid = [pc.is_valid(source[f"k{j}"]) for j in range(len(meta.key_columns))]
+    return {t for t, _ in tablet_counts(meta, source.filter(reduce(pc.and_, valid)))}
+
+
+def merge_join(
+    meta: TableMeta, data: Path, rels: list[str], source: pa.Table
+) -> tuple[pa.Table, pa.Table]:
+    """The two joins of a MERGE whose ON is whole-key equality, in
+    pyarrow: the rows of the files ``rels`` under ``data`` joined with
+    the rows of ``source`` (:func:`collect_source`) whose keys equal
+    theirs — the target's columns, named by position (``0``, ``1``, …),
+    then the source's ``s*`` — and the ``s*`` columns of the source
+    rows that match none.  Arrow's join matches no NULL key, as Spark's
+    ``=`` does not, and a target key is unique, so a source row matches
+    at most one row."""
+    fields = meta.schema.fields
+    target = read_tablet(meta, data, rels, fields)
+    tkeys = [str([f.name for f in fields].index(k)) for k in meta.key_columns]
+    skeys = [f"k{j}" for j in range(len(tkeys))]
+    scols = [c for c in source.column_names if c[0] == "s"]
+    joined = target.join(
+        source.select(scols + skeys), tkeys, skeys, join_type="inner", use_threads=False
+    )
+    unmatched = source.join(
+        target.select(tkeys), skeys, tkeys, join_type="left anti", use_threads=False
+    )
+    return joined, unmatched.select(scols)
+
+
+def merge_frames(
+    spark: SparkSession, meta: TableMeta, spec, joined: pa.Table, unmatched: pa.Table
+) -> tuple[DataFrame, DataFrame]:
+    """The matched and the unmatched rows of a driver MERGE
+    (:func:`merge_join`) as local relations over which the MERGE's
+    clause expressions resolve as over Spark's joins.  The matched frame
+    has one struct column per alias of ``spec.aliases`` (the target's
+    row, the source's row) and, at top level, each column name only one
+    side has, so ``t.c``, ``s.c`` and unambiguous bare names resolve.
+    The unmatched frame is the source's columns under the source alias.
+
+    With ``spec.claims`` (the MATCHED clause conditions' disjunction),
+    each matched row carries ``__merge_claims``, the count of its target
+    key's matched rows that a MATCHED clause claims, which the Spark plan
+    counts in a window: a first local projection evaluates the claims
+    per row (no job), and pyarrow sums them per key.  When no key matched
+    two source rows no count can pass 1, which is all the guard tests,
+    so the projection is skipped and every row carries 1."""
+    talias, salias = spec.aliases
+    tf = [T.StructField(f.name, f.dataType) for f in meta.schema.fields]
+    sf = [T.StructField(f.name, f.dataType) for f in spec.source.schema.fields]
+    n, names = len(tf), [{f.name.lower() for f in fs} for fs in (tf, sf)]
+    single = [(i, f) for i, f in enumerate(tf) if f.name.lower() not in names[1]]
+    single += [(n + i, f) for i, f in enumerate(sf) if f.name.lower() not in names[0]]
+
+    def frame(rows: pa.Table) -> DataFrame:
+        sides = [T.StructField(talias, T.StructType(tf)), T.StructField(salias, T.StructType(sf))]
+        schema = T.StructType(sides + [f for _, f in single])
+        arrow = to_arrow_schema(schema)
+        cols = [rows.column(i).combine_chunks() for i in range(n + len(sf))]
+        cols = [
+            pa.StructArray.from_arrays(cols[:n], fields=list(arrow[0].type)),
+            pa.StructArray.from_arrays(cols[n:], fields=list(arrow[1].type)),
+            *[rows.column(i) for i, _ in single],
+        ]
+        table = pa.Table.from_arrays([c.cast(f.type) for c, f in zip(cols, arrow)], schema=arrow)
+        return arrow_frame(spark, table, schema)
+
+    if spec.claims is not None:
+        keys = [str(i) for i, f in enumerate(tf) if f.name in meta.key_columns]
+        by_key = joined.select(keys).group_by(keys, use_threads=False)
+        if by_key.aggregate([]).num_rows < joined.num_rows:
+            flags = [r[0] for r in frame(joined).select(spec.claims).collect()]
+            flags = pa.array(flags, pa.bool_()).cast(pa.int64())
+            claims = joined.select(keys).append_column("c", flags)
+            claims = claims.group_by(keys, use_threads=False).aggregate([("c", "sum")])
+            joined = joined.join(claims, keys, use_threads=False)
+        else:  # each key matched once, so at most one claim: no projection
+            joined = joined.append_column("c_sum", pa.array(np.ones(joined.num_rows, np.int64)))
+        single.append((joined.num_columns - 1, T.StructField("__merge_claims", T.LongType())))
+    source = arrow_frame(spark, unmatched.rename_columns([f.name for f in sf]), T.StructType(sf))
+    return frame(joined), source.alias(salias)
 
 
 def change_schema(meta: TableMeta) -> T.StructType:
