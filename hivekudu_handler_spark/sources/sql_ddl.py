@@ -135,9 +135,7 @@ from typing import Callable, NamedTuple
 from pyspark.errors import ParseException
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-from hivekudu_handler_spark.sources import tablets
 from hivekudu_handler_spark.sources.sql_lex import (
     skip_blank,
     sql_char_states,
@@ -1063,7 +1061,8 @@ def _names_relation(spark, stmt: str) -> bool:
     """Whether the query ``stmt`` may read a table or view by name, by
     Spark's own parser (used to classify only, never for its ``.sql()``
     text): its plan holds an ``UnresolvedRelation`` anywhere, subqueries
-    included, or a CTE or a command (EXPLAIN), whose inner plans the
+    included, or an ``IDENTIFIER(…)`` name, which the parser leaves to
+    analysis, or a CTE or a command (EXPLAIN), whose inner plans the
     pattern bits do not cover.  A text the parser rejects counts as
     naming one."""
     patterns = spark._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
@@ -1071,7 +1070,10 @@ def _names_relation(spark, stmt: str) -> bool:
         plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(stmt)
     except ParseException:
         return True
-    names = ("UNRESOLVED_RELATION", "UNRESOLVED_WITH", "COMMAND")
+    names = (
+        "UNRESOLVED_RELATION", "PLAN_WITH_UNRESOLVED_IDENTIFIER", "UNRESOLVED_IDENTIFIER",
+        "UNRESOLVED_WITH", "COMMAND",
+    )
     return any(plan.containsPattern(getattr(patterns, p)()) for p in names)
 
 
@@ -1277,61 +1279,34 @@ class MergeSpec(NamedTuple):
     the batches to upsert and the key frames to delete.  ``spark()``
     builds those frames by the relational plan and returns the batch
     and the delete keys as :meth:`TableStore.upsert` takes them; the
-    store calls it when the driver may not serve the statement.  The
-    driver needs the rest: ``pairs``, the (target key, source column)
-    pairs of the ON condition in key order, or None with ``reason``,
-    why the statement's shape keeps it on Spark; ``claims``, the
-    disjunction of the MATCHED clause conditions (None without a
-    MATCHED clause)."""
+    store calls it when the driver may not serve the statement
+    (:func:`.tablets.merge_pairs` decides from the rest).  ``on`` is the
+    ON condition's ``((alias, column), (alias, column))`` pairs when it
+    is a conjunction of ``a.c = b.d`` terms (:func:`_on_equalities`),
+    else None; ``sides`` the sides of its WHEN clauses (the keys of
+    ``_CLAUSE_NAMES``); ``claims`` the disjunction of the MATCHED clause
+    conditions (None without a MATCHED clause)."""
 
     source: DataFrame
     aliases: tuple[str, str]
-    pairs: list[tuple[str, str]] | None
-    reason: str | None
+    on: list[tuple[tuple[str, str], tuple[str, str]]] | None
+    sides: set[str]
     claims: Column | None
     clauses: Callable[..., tuple[list[DataFrame], list[DataFrame]]]
     spark: Callable[[], tuple[DataFrame, DataFrame | None]]
 
 
-def _driver_merge(
-    meta, on: str, aliases: tuple[str, str], src: DataFrame, sides: set[str]
-) -> tuple[list[tuple[str, str]] | None, str | None]:
-    """The (target key, source column) pairs, in key order, of a MERGE
-    whose shape lets the driver serve it, and None; else None and why
-    not: a NOT MATCHED BY SOURCE clause needs the whole target
-    (``"by source clause"``); the driver's frames name columns after
-    the aliases, so an alias may not equal the other or a column name,
-    and neither side may repeat a name (``"column names"``); a source
-    column must be of a type :data:`.tablets.FLAT` carries (``"source
-    type"``); ON must be a conjunction of ``t.k = s.c`` over the whole
-    key, each pair both integral or both STRING, so that Spark's ``=``
-    is Arrow's equality once the source value is cast to the key's type
-    (``"on clause"``).  Names match case-insensitively."""
-    if "not_source" in sides:
-        return None, "by source clause"
-    lower = [a.lower() for a in aliases]
-    names = [[f.name.lower() for f in meta.schema.fields], [c.lower() for c in src.columns]]
-    if lower[0] == lower[1] or any(len(set(n)) < len(n) or set(n) & set(lower) for n in names):
-        return None, "column names"
-    if not all(isinstance(f.dataType, tablets.FLAT) for f in src.schema.fields):
-        return None, "source type"
-    keys = {k.lower(): k for k in meta.key_columns}
-    types = {f.name: f.dataType for f in meta.schema.fields}
-    scols = {f.name.lower(): f for f in src.schema.fields}
-    pairs: dict[str, str] = {}
+def _on_equalities(on: str) -> list[tuple[tuple[str, str], tuple[str, str]]] | None:
+    """The ``((alias, column), (alias, column))`` pair of each term of
+    the ON condition ``on`` when it is a conjunction of ``a.c = b.d``
+    terms, else None."""
+    pairs = []
     for part in _split_keyword(on, r"AND\b"):
         m = re.fullmatch(r"\s*(\w+)\.(\w+)\s*=\s*(\w+)\.(\w+)\s*", part)
-        ends = dict((a.lower(), c.lower()) for a, c in (m.group(1, 2), m.group(3, 4))) if m else {}
-        k, s = keys.get(ends.get(lower[0])), scols.get(ends.get(lower[1]))
-        if k is None or s is None or k in pairs or not (
-            s.dataType == types[k] == T.StringType()
-            or isinstance(s.dataType, T.IntegralType) and isinstance(types[k], T.IntegralType)
-        ):
-            return None, "on clause"
-        pairs[k] = s.name
-    if len(pairs) < len(keys):
-        return None, "on clause"
-    return [(k, pairs[k]) for k in meta.key_columns], None
+        if not m:
+            return None
+        pairs.append((m.group(1, 2), m.group(3, 4)))
+    return pairs
 
 
 def _merge(store: TableStore, stmt: str) -> None:
@@ -1373,7 +1348,7 @@ def _merge(store: TableStore, stmt: str) -> None:
     clauses project inserts from the unmatched source rows — over
     whatever frames the store hands it.  A MERGE whose source optimizes
     to a local relation (VALUES), whose ON is a whole-key equality
-    (:func:`_driver_merge`) and whose source keys' tablets fit the
+    (:func:`.tablets.merge_pairs`) and whose source keys' tablets fit the
     driver budget runs on the driver: the store joins in pyarrow and
     hands local relations, so no Spark job starts.  Every other MERGE
     runs the relational plan (``on_spark``): one target⋈source join
@@ -1408,7 +1383,11 @@ def _merge(store: TableStore, stmt: str) -> None:
         if not m:
             raise SqlDdlError(f"cannot parse MERGE source: {stmt!r}")
         src_name = m.group("name")
-        src = store.view_df(src_name) if store.has_view(src_name) else store.scan(src_name)
+        src = (
+            store.view_df(src_name)
+            if store.has_view(src_name)
+            else store.scan(src_name)
+        )
         salias_required = False
         salias = src_name
         rest = rest[m.end():]
@@ -1426,10 +1405,14 @@ def _merge(store: TableStore, stmt: str) -> None:
         raise SqlDdlError(f"cannot parse MERGE ON condition: {stmt!r}")
     # split only on WHEN followed by [NOT] MATCHED, so a CASE WHEN
     # inside the ON condition or a SET expression never breaks a clause
-    segments = _split_keyword(rest[m.end():], r"\bWHEN\s+(?=(?:NOT\s+)?MATCHED\b)")
+    segments = _split_keyword(
+        rest[m.end():], r"\bWHEN\s+(?=(?:NOT\s+)?MATCHED\b)"
+    )
     on_cond = segments[0].strip()
     if not on_cond or len(segments) < 2:
-        raise SqlDdlError("MERGE requires an ON condition and at least one WHEN clause")
+        raise SqlDdlError(
+            "MERGE requires an ON condition and at least one WHEN clause"
+        )
     if _has_subquery(rest):  # ON or a clause reads tables by name, as in UPDATE
         store.register_views()
 
@@ -1560,7 +1543,11 @@ def _merge(store: TableStore, stmt: str) -> None:
                     f"empty AND condition in MERGE WHEN clause: {seg.strip()!r}")
         else:  # rest starts with THEN (the head regex guarantees it)
             cond_text, action = None, rest[4:].strip()
-        this = F.coalesce(F.expr(cond_text), F.lit(False)) if cond_text else F.lit(True)
+        this = (
+            F.coalesce(F.expr(cond_text), F.lit(False))
+            if cond_text
+            else F.lit(True)
+        )
         take = this & ~prior[side]
         prior[side] = prior[side] | this
         verb = action.split(None, 1)[0].upper() if action else ""
@@ -1588,7 +1575,9 @@ def _merge(store: TableStore, stmt: str) -> None:
         c.lower() == "__merge_claims" for c in (*tcols, *src.columns)
     ):
         # the guard column must resolve unambiguously over the join
-        raise SqlDdlError("column name '__merge_claims' is reserved by MERGE")
+        raise SqlDdlError(
+            "column name '__merge_claims' is reserved by MERGE"
+        )
 
     def card_guard(col: Column) -> Column:
         return F.when(
@@ -1660,8 +1649,10 @@ def _merge(store: TableStore, stmt: str) -> None:
         union = DataFrame.unionByName
         return reduce(union, batches), reduce(union, deletes) if deletes else None
 
-    pairs, reason = _driver_merge(meta, on_cond, (talias, salias), src, {s[0] for s in specs})
-    spec = MergeSpec(src, (talias, salias), pairs, reason, claims, clauses, on_spark)
+    sides = {s[0] for s in specs}
+    spec = MergeSpec(
+        src, (talias, salias), _on_equalities(on_cond), sides, claims, clauses, on_spark
+    )
     try:
         _run_guarded(lambda: store.upsert(target, spec))
     finally:

@@ -103,7 +103,6 @@ import time
 import uuid
 from collections import Counter
 from dataclasses import dataclass, fields
-from functools import reduce
 from pathlib import Path
 
 import pyarrow as pa
@@ -1384,8 +1383,16 @@ class TableStore:
         columns — deterministic boolean over partition cols, so Catalyst
         folds it into directory pruning for any layout depth."""
         cols = [F.col(c) for c in self._part_cols(meta)]
-        conds = [reduce(Column.__and__, [c == v for c, v in zip(cols, t)]) for t in ids]
-        return reduce(Column.__or__, conds, F.lit(False))
+        conds = []
+        for tup in ids:
+            c = F.lit(True)
+            for col, v in zip(cols, tup):
+                c = c & (col == F.lit(v))
+            conds.append(c)
+        out = F.lit(False)
+        for c in conds:
+            out = out | c
+        return out
 
     def _read_schema(self, meta: TableMeta) -> T.StructType:
         """PHYSICAL read schema: parquet footers store the stable physical
@@ -1403,11 +1410,14 @@ class TableStore:
         )
 
     def _to_logical(self, df: DataFrame, meta: TableMeta) -> DataFrame:
-        renamed = {ph: lg for lg, ph in (meta.physical or {}).items()}
-        return df.withColumnsRenamed(renamed) if renamed else df
+        for lg, ph in (meta.physical or {}).items():
+            df = df.withColumnRenamed(ph, lg)
+        return df
 
     def _to_physical(self, df: DataFrame, meta: TableMeta) -> DataFrame:
-        return df.withColumnsRenamed(meta.physical) if meta.physical else df
+        for lg, ph in (meta.physical or {}).items():
+            df = df.withColumnRenamed(lg, ph)
+        return df
 
     def _read_files(self, meta: TableMeta, rels: list[str]) -> DataFrame:
         """The one read path: exactly the data-relative files ``rels``
@@ -2725,12 +2735,11 @@ class TableStore:
     def _merge_on_driver(self, meta: TableMeta, head: tuple, spec) -> pa.Table | None:
         """The write-merge rows of the MERGE ``spec`` built on the driver
         (no Spark job), or None when it must run on Spark.  The driver
-        serves it when its shape allows (``spec.reason`` is None), the
-        gate (:func:`.tablets.driver_reason`) passes for the table, its
-        source optimizes to a local relation and fits the budget, and the
-        gate passes for the bytes of the tablets the source keys land in.
-        The source is collected, those tablets are read and joined with
-        it in pyarrow (:func:`.tablets.merge_join`), and the clause frames
+        serves it when its shape, the table and its source allow
+        (:func:`.tablets.merge_pairs`), the source fits the budget, and the
+        gate (:func:`.tablets.driver_reason`) passes for the bytes of the
+        tablets the source keys land in.  The source is collected, those
+        tablets are read and joined with it in pyarrow (:func:`.tablets.merge_join`), and the clause frames
         ``spec.clauses`` builds over the local relations of
         :func:`.tablets.merge_frames` are collected one by one with their
         guards, ranks and tablets (:func:`.tablets.collect_batch`): no
@@ -2738,12 +2747,10 @@ class TableStore:
         record: the path, why not the driver, the source rows and the
         matched rows."""
         budget = self._driver_budget()
-        reason = spec.reason or tablets.driver_reason(meta, 0, budget)
-        if reason is None and not tablets.is_local(spec.source):
-            reason = "source not local"
+        pairs, reason = tablets.merge_pairs(meta, spec, budget)
         src = joined = rows = None
         if reason is None:
-            src = tablets.collect_source(meta, spec.source, spec.pairs, budget, self._part_exprs)
+            src = tablets.collect_source(meta, spec.source, pairs, budget, self._part_exprs)
             reason = "source over budget" if src is None else None
         data = self._data_dir(meta.name)
         if reason is None:

@@ -52,8 +52,8 @@ a change read plans its one scan and one window, and a MERGE plans its
 joins.  A write also leaves the driver when its batch holds more rows
 than the budget allows (``"batch over budget"``, :func:`collect_batch`),
 and a MERGE when its source does (``"source over budget"``) or its
-statement does not fit the driver's join (``sql_ddl._driver_merge``) or
-its source is not local (``"source not local"``).
+statement does not fit the driver's join (:func:`merge_pairs`) or its
+source is not local (``"source not local"``).
 
 **The budget** (:meth:`TableStore._driver_budget`) is Spark's own bound
 on what may be pulled to the driver,
@@ -461,6 +461,53 @@ FLAT = (
 )
 
 
+def merge_pairs(
+    meta: TableMeta, spec, budget: int
+) -> tuple[list[tuple[str, str]] | None, str | None]:
+    """The (target key, source column) pairs, in key order, of a MERGE
+    (``sql_ddl.MergeSpec``) into ``meta`` whose shape the driver's join
+    serves, and None; else None and why not.  A NOT MATCHED BY SOURCE
+    clause needs the whole target (``"by source clause"``).
+    :func:`merge_frames` names columns after the aliases, so an alias
+    may not equal the other or a column name, and neither side may
+    repeat a name (``"column names"``).  A source column must be of a
+    type :data:`FLAT` carries (``"source type"``).  ON must be a
+    conjunction of ``t.k = s.c`` over the whole key, each pair both
+    integral or both STRING, so that Spark's ``=`` is Arrow's equality
+    once the source value is cast to the key's type (``"on clause"``).
+    Names match case-insensitively.  Then the table must pass the gate
+    (:func:`driver_reason`, before its tablets are known) and the source
+    must optimize to a local relation (``"source not local"``)."""
+    if "not_source" in spec.sides:
+        return None, "by source clause"
+    lower = [a.lower() for a in spec.aliases]
+    sfields = spec.source.schema.fields
+    names = [[f.name.lower() for f in meta.schema.fields], [f.name.lower() for f in sfields]]
+    if lower[0] == lower[1] or any(len(set(n)) < len(n) or set(n) & set(lower) for n in names):
+        return None, "column names"
+    if not all(isinstance(f.dataType, FLAT) for f in sfields):
+        return None, "source type"
+    keys = {k.lower(): k for k in meta.key_columns}
+    types = {f.name: f.dataType for f in meta.schema.fields}
+    scols = {f.name.lower(): f for f in sfields}
+    pairs: dict[str, str] = {}
+    for ends in spec.on or [()]:
+        ends = {a.lower(): c.lower() for a, c in ends}
+        k, s = keys.get(ends.get(lower[0])), scols.get(ends.get(lower[1]))
+        if k is None or s is None or k in pairs or not (
+            s.dataType == types[k] == T.StringType()
+            or isinstance(s.dataType, T.IntegralType) and isinstance(types[k], T.IntegralType)
+        ):
+            return None, "on clause"
+        pairs[k] = s.name
+    if len(pairs) < len(keys):
+        return None, "on clause"
+    reason = driver_reason(meta, 0, budget)
+    if reason is None and not is_local(spec.source):
+        reason = "source not local"
+    return (None, reason) if reason else ([(k, pairs[k]) for k in meta.key_columns], None)
+
+
 def collect_source(
     meta: TableMeta, source: DataFrame, pairs: list[tuple[str, str]], budget: int, tablet_exprs
 ) -> pa.Table | None:
@@ -541,9 +588,7 @@ def merge_frames(
     each matched row carries ``__merge_claims``, the count of its target
     key's matched rows that a MATCHED clause claims, which the Spark plan
     counts in a window: a first local projection evaluates the claims
-    per row (no job), and pyarrow sums them per key.  When no key matched
-    two source rows no count can pass 1, which is all the guard tests,
-    so the projection is skipped and every row carries 1."""
+    per row (no job), and pyarrow sums them per key."""
     talias, salias = spec.aliases
     tf = [T.StructField(f.name, f.dataType) for f in meta.schema.fields]
     sf = [T.StructField(f.name, f.dataType) for f in spec.source.schema.fields]
@@ -566,15 +611,11 @@ def merge_frames(
 
     if spec.claims is not None:
         keys = [str(i) for i, f in enumerate(tf) if f.name in meta.key_columns]
-        by_key = joined.select(keys).group_by(keys, use_threads=False)
-        if by_key.aggregate([]).num_rows < joined.num_rows:
-            flags = [r[0] for r in frame(joined).select(spec.claims).collect()]
-            flags = pa.array(flags, pa.bool_()).cast(pa.int64())
-            claims = joined.select(keys).append_column("c", flags)
-            claims = claims.group_by(keys, use_threads=False).aggregate([("c", "sum")])
-            joined = joined.join(claims, keys, use_threads=False)
-        else:  # each key matched once, so at most one claim: no projection
-            joined = joined.append_column("c_sum", pa.array(np.ones(joined.num_rows, np.int64)))
+        flags = [r[0] for r in frame(joined).select(spec.claims).collect()]
+        flags = pa.array(flags, pa.bool_()).cast(pa.int64())
+        claims = joined.select(keys).append_column("c", flags)
+        claims = claims.group_by(keys, use_threads=False).aggregate([("c", "sum")])
+        joined = joined.join(claims, keys, use_threads=False)
         single.append((joined.num_columns - 1, T.StructField("__merge_claims", T.LongType())))
     source = arrow_frame(spark, unmatched.rename_columns([f.name for f in sf]), T.StructType(sf))
     return frame(joined), source.alias(salias)

@@ -251,12 +251,27 @@ def test_clause_subquery_reads_the_table_as_it_is_now(spark, store, monkeypatch,
     assert _rows(store) == [(1, "a"), (2, "y"), (3, "c")]
 
 
+def test_identifier_read_sees_a_later_write(spark, store):
+    """``IDENTIFIER('kv')`` names its table only at analysis; the query
+    path still registers the views, so the read is not served by a view
+    registered before the last write."""
+    sql(store, "CREATE TABLE kv (k INT, label STRING) TBLPROPERTIES ('kudu.key_columns'='k')")
+    sql(store, "INSERT INTO kv VALUES (1, 'one')")
+    assert sql(store, "SELECT count(*) FROM kv").collect() == [(1,)]  # registers kv
+    sql(store, "INSERT INTO kv VALUES (2, 'two')")
+    got = sql(store, "SELECT k, label FROM IDENTIFIER('kv')").collect()
+    assert sorted(tuple(r) for r in got) == [(1, "one"), (2, "two")]
+
+
 def test_names_relation_by_spark_parser(spark):
     """Registration is skipped only for a query the parser reads as naming
     no relation; a CTE, a command and a text it rejects all register."""
     assert not _names_relation(spark, "SELECT * FROM VALUES (1) AS v(x) WHERE x > 0")
     assert _names_relation(spark, "SELECT * FROM VALUES (1) AS v(x), kv y")
     assert _names_relation(spark, "WITH c AS (SELECT 1 AS x) SELECT * FROM VALUES (2) AS v(x)")
+    assert _names_relation(spark, "SELECT * FROM IDENTIFIER('kv')")
+    assert _names_relation(spark, "SELECT 1 WHERE 1 IN (SELECT k FROM IDENTIFIER('kv'))")
+    assert _names_relation(spark, "SELECT * FROM TABLE(IDENTIFIER('kv'))")
     assert _names_relation(spark, "EXPLAIN SELECT 1")
     assert _names_relation(spark, "SELECT FROM WHERE (")
 
